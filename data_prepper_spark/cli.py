@@ -25,6 +25,8 @@ import os
 import sys
 import time
 
+from data_prepper_spark.index.layout import IndexExistsError
+
 
 def _analyzer_spec(s: str) -> str:
     """argparse type for analyzer specs ('<mode>[+stop][+stem]'):
@@ -1853,7 +1855,14 @@ def main(argv: list[str] | None = None) -> int:
     be.set_defaults(fn=cmd_bench)
 
     args = p.parse_args(argv)
-    return args.fn(args)
+    if args.fn is cmd_pq_query and not (args.queries or args.vector):
+        pk.error("one of the arguments --queries --vector is required")
+    try:
+        return args.fn(args)
+    except IndexExistsError as e:
+        if args.fn is not cmd_build_index:
+            raise
+        b.error(str(e))
 
 
 if __name__ == "__main__":

@@ -157,7 +157,7 @@ def probe_bloom(
         F.col(id_col).alias("_id"), "part", "_h1", "_h2"
     )
 
-    def _test(key, probes: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
+    def _test(key: tuple, probes: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
         if probes.empty:
             return pd.DataFrame(
                 {"_id": probes["_id"], "maybe_dup": pd.Series([], dtype=bool)}

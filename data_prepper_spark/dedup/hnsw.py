@@ -392,7 +392,7 @@ def hnsw_build(
     table at `out_path`. One graph per shard; zero shuffles beyond the
     sharding repartition; insert order pinned for determinism."""
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col)
         mat = np.array(pdf[vec_col].tolist(), dtype=np.float32)
         g = HNSWGraph(mat.shape[1], m=m, ef_construction=ef_construction,

@@ -199,14 +199,15 @@ def pq_topk(
             out = []
             for qi, qid in enumerate(qids):
                 flat = luts[qi].ravel()
-                s = flat[cols].sum(1)
-                # (score desc, id asc) — same tiebreak as the global
-                # merge window, so the partition cut is deterministic
+                # rounded BEFORE the cut: the partition cut and the
+                # global merge window rank on the same (score desc,
+                # id asc) key, so the answer is partition-independent
+                s = np.round(flat[cols].sum(1), 6)
                 top = np.lexsort((ids, -s))[: min(k, n)]
                 out.append(pd.DataFrame({
                     qid_col: qid,
                     id_col: ids[top],
-                    "adc_score": np.round(s[top], 6),
+                    "adc_score": s[top],
                 }))
             yield pd.concat(out, ignore_index=True)
 

@@ -417,7 +417,12 @@ def build_index(
     coordinator. ``shards_subset`` limits this invocation (used by tests
     to simulate a crash between shard batches). ``assign_ids=False``
     indexes any table that already has (doc_id, text) columns; a
-    conv_id lineage column is synthesized from doc_id if absent."""
+    conv_id lineage column is synthesized from doc_id if absent.
+
+    A fresh build (neither resume nor incremental) raises
+    layout.IndexExistsError when index_dir already holds an index."""
+    if not (resume or incremental):
+        layout.check_fresh(index_dir)
     # external-id corpora without a conv_id shard by doc_id-string; the
     # choice is RECORDED in stats.json (shard_key) so query-side shard
     # derivation (engine.sharded_docs) can mirror it instead of guessing

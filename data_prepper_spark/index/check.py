@@ -21,21 +21,17 @@ Returns a JSON-able report; `ok` is True iff no violations.
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout
+from data_prepper_spark.index import codec
+from data_prepper_spark.index.reader import MATCH_COLS, IndexReader
 
 
 def _check_kernel():
-    from data_prepper_spark.index import codec
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         violations = []
         term_counts: dict[str, int] = {}
@@ -95,14 +91,8 @@ def _check_kernel():
 
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
-    stats = json.load(open(os.path.join(index_dir, "stats.json")))
-    blocks = spark.read.parquet(layout.resolve(index_dir, "blocks"))
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    per_shard = blocks.select(
-        "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-        "gaps", "tfs", "dls",
-    ).filter(
+    reader = IndexReader(spark, index_dir)
+    per_shard = reader.blocks.select(*MATCH_COLS).filter(
         # the \x00shard_meta sentinel carries per-shard build lineage,
         # not postings (index/build.py _META_TERM)
         F.col("term") != "\x00shard_meta"
@@ -125,8 +115,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
                    (F.col("term") != "\x00distinct_docs"))
         .groupBy("term").agg(F.sum("n").alias("n"))
     )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    joined = counts.join(dictionary, "term", "full").select(
+    joined = counts.join(reader.dictionary, "term", "full").select(
         "term",
         F.coalesce("n", F.lit(0)).alias("postings"),
         F.coalesce("df", F.lit(0)).alias("df"),
@@ -136,18 +125,16 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         for r in joined.filter(F.col("postings") != F.col("df"))
         .orderBy("term").limit(100).collect()
     ]
-    n_terms = int(dictionary.count())
+    n_terms = int(reader.dictionary.count())
     agg.unpersist()
-    from data_prepper_spark.index import tombstones as tb
-
-    tomb = tb.load_tombstones(spark, index_dir)
     report = {
-        "ok": not violations and not mism and docs_seen == stats["n_docs"],
+        "ok": not violations and not mism and docs_seen == reader.n_docs,
         "terms_checked": n_terms,
         "df_mismatches": mism,
         "block_violations": violations[:100],
         "docs_seen": docs_seen,
-        "stats_n_docs": stats["n_docs"],
-        "tombstone_ranges": 0 if tomb is None else int(len(tomb.starts)),
+        "stats_n_docs": reader.n_docs,
+        "tombstone_ranges": (0 if reader.tomb is None
+                             else int(len(reader.tomb.starts))),
     }
     return report

@@ -38,6 +38,31 @@ import shutil
 from typing import Callable
 
 
+class IndexExistsError(FileExistsError):
+    """A fresh build into a directory that already holds an index. The
+    blocks table is written in append mode, so building over it would
+    leave a second copy of every posting (doubled df, wrong scores)."""
+
+
+def check_fresh(index_dir: str) -> None:
+    """Raise IndexExistsError when `index_dir` holds stats.json, a
+    build manifest or a blocks table. Local paths only, like every
+    existence check in the engine."""
+    if "://" in index_dir:
+        return
+    found = [
+        p for p in (os.path.join(index_dir, "stats.json"),
+                    os.path.join(index_dir, "manifest"),
+                    resolve(index_dir, "blocks"))
+        if os.path.exists(p)
+    ]
+    if found:
+        raise IndexExistsError(
+            f"{index_dir} already holds an index ({', '.join(found)}); "
+            "build into an empty directory, or pass resume=True / "
+            "incremental=True to continue or extend it")
+
+
 def _ptr_path(index_dir: str, name: str) -> str:
     return os.path.join(index_dir, f"{name}.ptr")
 

@@ -1,0 +1,101 @@
+"""IndexReader: everything a query needs to know about one index dir.
+
+Every query over the index — score_topk and its siblings in query/,
+the integrity checker and reindex's live-doc view — opens ONE reader
+per call and takes the index state from it:
+
+- eagerly: ``stats.json`` (corpus statistics n_docs / avgdl, the
+  tokenizer mode, the shard count), and the values derived from it;
+- lazily, on first use: the tombstones (the only state that needs a
+  Spark read), the decode-cache namespace that pins them, the blocks
+  DataFrame with its single pre-segment ``seg`` fallback, the
+  dictionary and its slice for a term list.
+
+The reader runs no Spark action of its own: reading the tombstones is
+the one action a query already paid for, and it happens only when a
+kernel asks for them. A reader is not cached across calls — an index
+rebuilt or mutated in place would be served stale.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+from functools import cached_property
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from data_prepper_spark.index import layout, tombstones
+
+
+# blocks-table projections, one per kernel family: explicit, so the
+# streams a kernel never reads — above all the position stream `poss`,
+# roughly half the block bytes — never reach the scan (ReadSchema)
+COUNT_COLS = ("shard", "seg", "term", "block_ord", "first_doc", "gaps")
+MATCH_COLS = COUNT_COLS[:5] + ("last_doc", "gaps", "tfs", "dls")
+SCORE_COLS = MATCH_COLS + ("max_partial",)
+POS_COLS = MATCH_COLS + ("poss",)
+
+
+def load_stats(index_dir: str) -> dict:
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        return json.load(f)
+
+
+class IndexReader:
+    def __init__(self, spark: SparkSession, index_dir: str):
+        self.spark = spark
+        self.index_dir = index_dir
+        self.stats = load_stats(index_dir)
+        self.mode = self.stats.get("tokenizer", "ascii")
+        self.n_docs = self.stats["n_docs"]
+        self.avgdl = self.stats["avgdl"]
+
+    def require_positions(self, what: str) -> None:
+        if not self.stats.get("positions", False):
+            raise ValueError(
+                f"index at {self.index_dir} was built without positions "
+                f"(store_positions=False) — cannot {what}")
+
+    @property
+    def ub_scale(self) -> float:
+        """Scale for block-max bounds written under an older avgdl
+        (incremental builds, see build_index). Read only once there are
+        blocks: an empty corpus has avgdl 0."""
+        return max(1.0, self.avgdl / self.stats.get("avgdl_min", self.avgdl))
+
+    @property
+    def empty(self) -> bool:
+        """No blocks were ever written. Only checked on local paths:
+        remote (s3://, hdfs://) indexes always attempt the read."""
+        return "://" not in self.index_dir and not os.path.exists(
+            layout.resolve(self.index_dir, "blocks"))
+
+    @cached_property
+    def tomb(self) -> tombstones.Tombstones | None:
+        return tombstones.load_tombstones(self.spark, self.index_dir)
+
+    @cached_property
+    def cache_ns(self) -> tuple:
+        """Decode-cache namespace. Cached partials embed idf(n_docs, df)
+        and avgdl and exclude tombstoned docs, so a new corpus or
+        tombstone state gets a fresh namespace."""
+        return (os.path.abspath(self.index_dir), self.n_docs,
+                round(self.avgdl, 9), tombstones.fingerprint(self.tomb))
+
+    @cached_property
+    def blocks(self) -> DataFrame:
+        blocks = self.spark.read.parquet(
+            layout.resolve(self.index_dir, "blocks"))
+        if "seg" not in blocks.columns:  # pre-segment index layout
+            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
+        return blocks
+
+    @cached_property
+    def dictionary(self) -> DataFrame:
+        return self.spark.read.parquet(
+            layout.resolve(self.index_dir, "dictionary"))
+
+    def dict_slice(self, terms: list[str]) -> DataFrame:
+        return self.dictionary.filter(F.col("term").isin(terms))

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_prepper_spark.index.reader import IndexReader, load_stats
+
 
 def live_docs(
     spark: SparkSession, index_dir: str, docs: DataFrame,
@@ -37,17 +39,13 @@ def live_docs(
         )
         m = match_docs(spark, index_dir, q).select("doc_id").distinct()
         return docs.join(m, "doc_id")
-    from data_prepper_spark.index import tombstones as tb
-    from data_prepper_spark.query.engine import load_stats
-
-    tomb = tb.load_tombstones(spark, index_dir)
-    if tomb is None:
+    r = IndexReader(spark, index_dir)
+    if r.tomb is None:
         return docs
     # liveDocs of the NEWEST segment: true deletes apply to every
     # segment incl. the current one; upsert tombstones stop at the old
     # generation, so replacement rows stay live
-    cur = int(load_stats(index_dir).get("snapshot_id", 0))
-    rng = tomb.for_seg(cur)
+    rng = r.tomb.for_seg(int(r.stats.get("snapshot_id", 0)))
     if rng is None:
         return docs
     cond = F.lit(False)
@@ -73,7 +71,6 @@ def reindex(
     (ascii -> unicode analyzer, reshard, drop positions). doc_ids are
     preserved. Returns the new index's stats dict."""
     from data_prepper_spark.index.build import build_index
-    from data_prepper_spark.query.engine import load_stats
 
     src = load_stats(src_index)
     live = live_docs(spark, src_index, docs, query=query)

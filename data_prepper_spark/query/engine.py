@@ -1,43 +1,65 @@
 """Shard-parallel BM25 top-k over the persisted compressed index.
 
-Execution model (mirrors how OpenSearch serves the reference's BM25
-queries — scatter to doc-partitioned shards, top-k per shard, gather):
+Every query over the index runs ONE plan — OpenSearch's
+dfs_query_then_fetch, rebuilt on Spark — as reader -> scatter ->
+kernel -> gather:
 
-    blocks (parquet, partitioned by shard, sorted by term)
-      |> filter term IN query_terms        <- pushed to parquet scan:
-      |                                        partition pruning is free,
-      |                                        row-group pruning via the
-      |                                        term sort order
-      |> broadcast-join tiny (query_id, term, idf, k) table
-      |> groupBy(query_id, shard).applyInPandas(kernel)   # WAND or
-      |                                                   # exhaustive
-      |> per-query global top-k (Window over the small per-shard top-ks)
+    IndexReader(index_dir)         stats.json, tombstones, decode-cache
+      |                            namespace (index/reader.py)
+    scatter(reader, per_term, kernel)
+      |> blocks.select(<the kernel's streams>)   <- ReadSchema pruning:
+      |                                            positions only for
+      |                                            kernels that read them
+      |> filter term IN query_terms  <- pushed to the parquet scan:
+      |                                 partition pruning is free,
+      |                                 row-group pruning via the term
+      |                                 sort order
+      |> broadcast-join the tiny qmap (term -> interested queries) and
+      |  the dictionary slice (GLOBAL df of the query terms)
+      |> spread_by_shard |> groupBy(shard).applyInPandas(kernel)
+      |                     (.cogroup(right) for a filter context)
+    kernel, per shard (numpy)      idf from the global df (_idf), exact
+      |                            per-shard top-k (_Hits.topk)
+    gather                         global top-k per query: a Window over
+                                   the small per-shard top-ks,
+                                   (score desc, doc_id asc)
 
-No stage ever materializes a full per-term posting list; the widest
-data in flight is `sum over query terms of their block rows in one
-shard`, bounded by block_size x blocks-per-term-per-shard. idf uses the
-GLOBAL dictionary (df summed across shards) so scores are identical to
-a single-node oracle — same contract OpenSearch's dfs_query_then_fetch
-provides.
+The pruned slice crosses exactly one exchange into the kernels; the
+gather's window sees at most k x shards rows per query. No stage ever
+materializes a full per-term posting list; the widest data in flight
+is `sum over query terms of their block rows in one shard`. idf uses
+the GLOBAL dictionary (df summed across shards) so scores are
+identical to a single-node oracle — the dfs_query_then_fetch contract.
 """
 
 from __future__ import annotations
 
-import json
 import os
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import codec, tombstones
+from data_prepper_spark.index.reader import (  # noqa: F401 (load_stats re-export)
+    COUNT_COLS,
+    MATCH_COLS,
+    POS_COLS,
+    SCORE_COLS,
+    IndexReader,
+    load_stats,
+)
 from data_prepper_spark.query import wand as wand_mod
 from data_prepper_spark.query import prep
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
 from data_prepper_spark.query.exchange import spread_by_shard
 
 _KERNEL_OUT = "query_id string, doc_id long, score double"
+_TYPES = {"query_id": "string", "rank": "long", "conv": "long",
+          "index": "int", "doc_id": "long", "score": "double"}
+_TOPK_COLS = ("query_id", "rank", "doc_id", "score")
 
 
 class _DecodeLRU:
@@ -91,14 +113,287 @@ class _NsCache:
         _DECODE_CACHE[(self.ns, k)] = v
 
 
-def load_stats(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        return json.load(f)
+# ------------------------------------------------------ scatter / gather
 
+def scatter(
+    reader: IndexReader | dict[str, IndexReader],
+    per_term: dict[str, list[tuple]] | DataFrame,
+    fields: str,
+    kernel: Callable[[], Callable],
+    schema: str = _KERNEL_OUT,
+    cols: tuple = SCORE_COLS,
+    dictionary: bool | DataFrame = True,
+    right: Callable[[], DataFrame] | None = None,
+    qmap: DataFrame | None = None,
+) -> DataFrame | None:
+    """The scatter half of every query over the index (module
+    docstring): pruned block scan -> one exchange -> per-shard kernel.
+
+    - reader: one index, or {field: reader} whose pruned scans (tagged
+      with a `field` column) union before the one exchange;
+    - per_term: query prep, query/prep.py (term -> entries with struct
+      `fields`); the sorted terms are pushed as `term IN (...)` into the
+      blocks and dictionary scans and the entries broadcast as the
+      qmap. A DataFrame is a distributed qmap instead (batches above
+      prep.PREP_DISTRIBUTED_THRESHOLD): shuffle-joined on term, no
+      In-list;
+    - kernel / right: factories, called only when there is something to
+      scan (the kernel factory is what reads the tombstones); right's
+      rows are cogrouped with the blocks by shard (filter context);
+    - dictionary: True joins each reader's global df, False skips it
+      (kernels that need no idf), a DataFrame replaces it (alias search
+      over the union statistics of several indexes);
+    - qmap: per_term's qmap, prebuilt by a caller running one scatter
+      per index (alias search) so that all of them reuse one broadcast.
+
+    Returns None when no query has a term or no index has blocks."""
+    readers = reader if isinstance(reader, dict) else {None: reader}
+    readers = {tag: r for tag, r in readers.items() if not r.empty}
+    distributed = isinstance(per_term, DataFrame)
+    if not readers or not (distributed or per_term):
+        return None
+    if distributed:
+        qmap, terms = per_term, None
+    else:
+        terms = sorted(per_term)
+        if qmap is None:
+            spark = next(iter(readers.values())).spark
+            qmap = prep.qmap_df(spark, per_term, fields)
+        qmap = F.broadcast(qmap)
+    needed = None
+    for tag, r in readers.items():
+        part = r.blocks.select(*cols)
+        if terms is not None:
+            part = part.filter(F.col("term").isin(terms))
+        part = part.join(qmap, "term")
+        if isinstance(dictionary, DataFrame):
+            part = part.join(F.broadcast(dictionary), "term")
+        elif dictionary:
+            part = part.join(
+                r.dictionary if distributed
+                else F.broadcast(r.dict_slice(terms)), "term")
+        if tag is not None:
+            part = part.withColumn("field", F.lit(tag))
+        needed = part if needed is None else needed.unionByName(part)
+    grouped = spread_by_shard(needed).groupBy("shard")
+    if right is not None:
+        grouped = grouped.cogroup(spread_by_shard(right()).groupBy("shard"))
+    return grouped.applyInPandas(kernel(), schema=schema)
+
+
+def gather(
+    per_shard: DataFrame | None, queries: DataFrame,
+    cols: tuple = _TOPK_COLS, tie: tuple = (), broadcast: bool = True,
+) -> DataFrame:
+    """The gather half: each query's global top-k over the per-shard
+    winners, ranked (score desc, doc_id asc, *tie); the empty answer
+    when the scatter had nothing to scan."""
+    if per_shard is None:
+        return queries.sparkSession.createDataFrame(
+            [], ", ".join(f"{c} {_TYPES[c]}" for c in cols))
+    qk = queries.select("query_id", "k")
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id"), *tie)
+    return (
+        per_shard.join(F.broadcast(qk) if broadcast else qk, "query_id")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= F.col("k"))
+        .select(*cols)
+    )
+
+
+# ------------------------------------------------------- kernel helpers
+
+def _idf(n_docs: int, df: int) -> float:
+    """BM25 idf over the GLOBAL df (dfs_query_then_fetch statistics)."""
+    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+
+
+class _Hits:
+    """A kernel's output rows (query_id, doc_id, score)."""
+
+    def __init__(self):
+        self.q, self.d, self.s = [], [], []
+
+    def add(self, qid, docs, scores) -> None:
+        self.q += [qid] * len(docs)
+        self.d += list(docs)
+        self.s += list(scores)
+
+    def topk(self, qid, docs: np.ndarray, scores: np.ndarray, k: int) -> None:
+        """Exact per-shard cut (score desc, doc_id asc): every doc tied
+        with the kth score survives the partition, so the doc_id sort
+        breaks boundary ties the way the global merge does."""
+        if len(docs) > k:
+            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+            keep = np.flatnonzero(scores >= kth)
+            keep = keep[np.lexsort((docs[keep], -scores[keep]))][:k]
+        else:
+            keep = np.lexsort((docs, -scores))
+        self.add(qid, docs[keep], scores[keep])
+
+    def frame(self) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"query_id": self.q, "doc_id": self.d, "score": self.s})
+
+
+class _ShardTerms:
+    """One shard's block rows for the query terms, grouped by term
+    (sorted by (seg, block_ord)) with each term's global df and idf and
+    its query entries. Term runs decode on demand through a block memo
+    shared by every query in the kernel call: fully while a query has
+    no candidate set, block-range-pruned to the candidates after."""
+
+    def __init__(self, pdf: pd.DataFrame, n_docs: int = 0, tomb=None,
+                 positions: bool = False):
+        self.tomb, self.positions, self.memo = tomb, positions, {}
+        self.blocks, self.df, self.idf, self.entries = {}, {}, {}, {}
+        for term, tg in pdf.groupby("term", sort=True):
+            self.blocks[term] = tg.sort_values(["seg", "block_ord"])
+            self.entries[term] = tg["queries"].iloc[0]
+            if "df" in tg.columns:
+                self.df[term] = int(tg["df"].iloc[0])
+                self.idf[term] = _idf(n_docs, self.df[term])
+
+    def runs(self, term: str, cand: np.ndarray | None = None) -> dict | None:
+        if cand is None:
+            return _decode_term_runs(self.blocks[term], self.tomb,
+                                     self.positions, self.memo, term)
+        return _pruned_runs(self.blocks[term], cand, self.tomb,
+                            self.positions, self.memo, term)
+
+    def rarest_first(self, terms) -> list[str]:
+        return sorted(terms, key=lambda t: (self.df[t], t))
+
+    def conjunction(self, terms, decoded: dict) -> np.ndarray | None:
+        """Docs holding every term (None for no terms), intersected
+        RAREST-df-FIRST so the candidate set collapses before the hot
+        terms, whose blocks are then range-pruned instead of fully
+        decoded. Fills `decoded` with each term's runs."""
+        cand = None
+        for t in self.rarest_first(terms):
+            r = self.runs(t, cand)
+            if r is None or not len(r["docs"]):
+                return np.empty(0, np.int64)
+            decoded[t] = r
+            cand = r["docs"] if cand is None else np.intersect1d(
+                cand, r["docs"], assume_unique=True)
+            if not len(cand):
+                break
+        return cand
+
+    def bm25(self, cand: np.ndarray, terms, decoded: dict,
+             avgdl: float) -> np.ndarray:
+        """Exact BM25 of `cand` over the decoded `terms` each doc holds,
+        sorted-term accumulation order (the float-identity contract)."""
+        scores = np.zeros(len(cand), dtype=np.float64)
+        for t in sorted(terms):
+            d = decoded.get(t)
+            if d is None or not len(d["docs"]):
+                continue
+            di = np.clip(np.searchsorted(d["docs"], cand), 0,
+                         len(d["docs"]) - 1)
+            part = self.idf[t] * codec.bm25_partial(
+                d["tfs"][di], d["dls"][di], avgdl)
+            scores += np.where(d["docs"][di] == cand, part, 0.0)
+        return scores
+
+
+def _decode_term_runs(
+    tg: pd.DataFrame, tomb=None, need_positions=True,
+    block_cache: dict | None = None, cache_ns=None,
+) -> dict:
+    """Decode the given (seg, block) rows of ONE term into doc-sorted
+    posting arrays + (optionally) the flat per-occurrence position
+    stream. Works on any SUBSET of a term's block rows (the block-pruned
+    kernels pass only blocks whose [first_doc, last_doc] contains a
+    candidate). Segments hold disjoint doc sets, so the multi-segment
+    merge is a stable interleave (argsort by doc, position runs gathered
+    along). Tombstoned docs' postings (and their position runs) are
+    dropped.
+
+    ``block_cache`` (optional dict): per-block decode memo shared across
+    queries within one kernel call, keyed by (cache_ns, seg, block_ord,
+    has_pos) — two queries pruning to overlapping block sets decode each
+    block once."""
+    has_pos = need_positions and "poss" in tg.columns
+    d_docs, d_tf, d_dl, d_pos, d_seg = [], [], [], [], []
+    for i, (g, t, l, first, seg, bord) in enumerate(zip(
+        tg["gaps"], tg["tfs"], tg["dls"], tg["first_doc"], tg["seg"],
+        tg["block_ord"],
+    )):
+        key = (cache_ns, int(seg), int(bord), has_pos)
+        hit = block_cache.get(key) if block_cache is not None else None
+        if hit is None:
+            docs = codec.delta_decode(bytes(g), base=int(first))
+            tf = codec.varint_decode(bytes(t))
+            dl = codec.varint_decode(bytes(l))
+            if has_pos:
+                po = tg["poss"].iloc[i]
+                pos = codec.pos_delta_decode(bytes(po or b""), tf)
+            else:
+                pos = None
+            if block_cache is not None:
+                block_cache[key] = (docs, tf, dl, pos)
+        else:
+            docs, tf, dl, pos = hit
+        d_docs.append(docs)
+        d_tf.append(tf)
+        d_dl.append(dl)
+        if has_pos:
+            d_pos.append(pos)
+        d_seg.append(np.full(len(docs), int(seg), dtype=np.int64))
+    docs = np.concatenate(d_docs)
+    tfs = np.concatenate(d_tf).astype(np.int64)
+    dls = np.concatenate(d_dl).astype(np.int64)
+    order = np.argsort(docs, kind="stable")
+    if tomb is not None:
+        segs = np.concatenate(d_seg)
+        del_mask = tombstones.deleted_mask_per_seg(docs, segs, tomb)
+        order = order[~del_mask[order]]
+    out = {"docs": docs[order], "tfs": tfs[order], "dls": dls[order]}
+    if has_pos:
+        pos = np.concatenate(d_pos)
+        if len(pos) != int(tfs.sum()):
+            raise ValueError(
+                "index has no position stream (built with "
+                "store_positions=False) — match_phrase needs positions"
+            )
+        occ_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+        out["pos"] = codec.gather_runs(pos, occ_starts, tfs, order)
+        out["occ"] = np.concatenate(([0], np.cumsum(out["tfs"])))
+    return out
+
+
+def _pruned_runs(
+    tg_sorted: pd.DataFrame, cand: np.ndarray, tomb=None,
+    need_positions=True, block_cache=None, cache_ns=None,
+):
+    """Block-pruned decode: only blocks whose [first_doc, last_doc]
+    range contains at least one candidate are decoded (one searchsorted
+    pair over the block metadata — VERDICT r3 'What's wrong' #3: a hot
+    term ("the", "error") in a phrase/bool no longer decodes its entire
+    per-shard posting+position stream; cost scales with the CANDIDATE
+    set, not the term's df). Exact: any candidate present in the term's
+    postings lies in a block whose range contains it, so kept blocks
+    cover every candidate posting. Returns None when no block overlaps.
+    """
+    firsts = tg_sorted["first_doc"].to_numpy(np.int64)
+    lasts = tg_sorted["last_doc"].to_numpy(np.int64)
+    lo = np.searchsorted(cand, firsts, side="left")
+    hi = np.searchsorted(cand, lasts, side="right")
+    keep = lo < hi
+    if not keep.any():
+        return None
+    sub = tg_sorted if keep.all() else tg_sorted.iloc[np.flatnonzero(keep)]
+    return _decode_term_runs(sub, tomb, need_positions, block_cache, cache_ns)
+
+
+# ------------------------------------------------------------ match / BM25
 
 def _shard_kernel(
     avgdl: float, n_docs: int, algo: str, ub_scale: float = 1.0,
-    cache_ns: str = "", tomb=None, collapse_stride: int | None = None,
+    cache_ns: tuple = (), tomb=None, collapse_stride: int | None = None,
 ):
     """One call per SHARD: block rows arrive ONCE per term (each row
     carries the list of (query_id, k) needing that term — no per-query
@@ -107,7 +402,7 @@ def _shard_kernel(
     query — in this call AND in later jobs hitting a reused python
     worker — reuse decoded postings."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cache = _NsCache((cache_ns, int(key[0])))
         # one cursor per (term, seg): incremental builds append a new
         # SEGMENT of doc-sorted blocks per term (doc sets disjoint across
@@ -117,16 +412,13 @@ def _shard_kernel(
         # qid -> [k, terms, after-cursor]
         queries: dict[str, list] = {}
         for term, tg in pdf.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            idf = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
+            idf = _idf(n_docs, int(tg["df"].iloc[0]))
             for seg, g in tg.groupby("seg", sort=True):
                 g = g.sort_values("block_ord")
                 term_data[(term, int(seg))] = {
                     "idf": idf,
                     "firsts": g["first_doc"].to_numpy(np.int64),
                     "lasts": g["last_doc"].to_numpy(np.int64),
-                    # ub_scale compensates stale block-max metadata after
-                    # incremental builds changed avgdl (see build_index)
                     "maxps": g["max_partial"].to_numpy(np.float64) * ub_scale,
                     "gaps": list(g["gaps"]),
                     "tfs": list(g["tfs"]),
@@ -149,7 +441,7 @@ def _shard_kernel(
                 bst = 1.0 if bst is None or pd.isna(bst) else float(bst)
                 queries.setdefault(qid, [k, [], after])[1].append((term, bst))
 
-        out_q, out_d, out_s = [], [], []
+        out = _Hits()
         for qid, (k, terms, after) in queries.items():
             cursors = [
                 wand_mod.TermCursor(
@@ -181,10 +473,8 @@ def _shard_kernel(
                 topk = wand_mod.blockmax_topk(cursors, k, after)
             else:
                 topk = wand_mod.exhaustive_topk(cursors, k, after)
-            out_q += [qid] * len(topk)
-            out_d += [d for d, _ in topk]
-            out_s += [s for _, s in topk]
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+            out.add(qid, [d for d, _ in topk], [s for _, s in topk])
+        return out.frame()
 
     return run
 
@@ -222,9 +512,8 @@ def score_topk(
     best = max over per-shard bests). Output gains a `conv` column;
     rank orders groups. doc_id // stride is the group key under BOTH
     id schemes (arith and convmap)."""
-    stats = load_stats(index_dir)
-    _stride = int(collapse_stride or DOC_ID_STRIDE)
-    mode = stats.get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
+    stride = int(collapse_stride or DOC_ID_STRIDE)
     cursor_cols = (
         [F.col("after_score").cast("double"), F.col("after_doc").cast("long")]
         if "after_score" in queries.columns
@@ -232,118 +521,42 @@ def score_topk(
               F.lit(None).cast("long").alias("after_doc")]
     )
     queries = queries.select("query_id", "query_text", "k", *cursor_cols)
-    # one row per term carrying its interested queries — block rows are
-    # NOT replicated per query through the shuffle. The distinct
-    # query-term set is tiny and driver-known (the queries ARE a
-    # driver-side input), so the qmap builds in Python and the term set
-    # pushes as an In-filter into BOTH parquet scans: a broadcast join
-    # alone would decompress every block row of every term before
-    # filtering, while `term IN (...)` reaches the scan (PushedFilters)
-    # and prunes row groups via the per-shard term sort order.
     # interactive batches (<= threshold) prep in pure Python and push
     # the term set as an In-filter; LARGE batches (batch scoring) prep
     # distributedly (prep.qmap_df_dist) and join on term instead — the
     # one take() probe is the only driver materialization either way
     head = queries.take(prep.PREP_DISTRIBUTED_THRESHOLD + 1)
     distributed = len(head) > prep.PREP_DISTRIBUTED_THRESHOLD
-    if distributed:
-        per_term, terms = None, None
-    else:
-        per_term = prep.score_entries([r.asDict() for r in head], mode)
-        terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if (not distributed and not terms) or local_missing:
-        # no query terms, or an empty index (no blocks ever written);
-        # the existence check only applies to local paths — remote
-        # (s3://, hdfs://) indexes always attempt the read
-        return spark.createDataFrame(
-            [],
-            "query_id string, rank long, "
-            + ("conv long, " if collapse else "")
-            + "doc_id long, score double",
-        )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:  # pre-segment index layout
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    # explicit projection: BM25 scoring never touches the position
-    # stream, so the (largest) `poss` column must not reach the scan
-    # (ReadSchema pruning — positions roughly double block bytes)
-    slim = blocks.select(
-        "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-        "gaps", "tfs", "dls", "max_partial",
+    per_term = (
+        prep.qmap_df_dist(spark, queries, "score", r.mode) if distributed
+        else prep.score_entries([x.asDict() for x in head], r.mode)
     )
-    if distributed:
-        # shuffle join on term: a batch this size touches most of the
-        # vocabulary, so term In-pushdown would buy little while the
-        # In-list itself would bloat the plan; the dictionary joins on
-        # the same key with no extra driver state
-        qmap = prep.qmap_df_dist(spark, queries, "score", mode)
-        needed = slim.join(qmap, "term").join(dictionary, "term")
-    else:
-        qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
-        dict_slice = dictionary.filter(F.col("term").isin(terms))
-        needed = (
-            slim.filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
-            .join(F.broadcast(dict_slice), "term")
-        )
-    ub_scale = max(1.0, stats["avgdl"] / stats.get("avgdl_min", stats["avgdl"]))
-    tomb = tombstones.load_tombstones(spark, index_dir)
+    per_shard = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
+        r.avgdl, r.n_docs, algo, r.ub_scale, r.cache_ns, r.tomb,
+        collapse_stride=stride if collapse else None,
+    ))
     # rank-join side: forced broadcast only for driver-scale batches
-    qk = queries.select("query_id", "k")
-    qk = qk if distributed else F.broadcast(qk)
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _shard_kernel(
-            stats["avgdl"], stats["n_docs"], algo, ub_scale,
-            # the ns pins idf/avgdl/liveDocs inputs: cached partials
-            # embed idf(n_docs, df) and avgdl and exclude tombstoned
-            # docs — a new corpus/tombstone state gets a fresh namespace
-            cache_ns=(os.path.abspath(index_dir), stats["n_docs"],
-                      round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
-            tomb=tomb,
-            collapse_stride=_stride if collapse else None,
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    if collapse:
+    if not collapse:
+        return gather(per_shard, queries, broadcast=not distributed)
+    if per_shard is not None:
         # cross-shard merge of per-shard collapsed top-k: a group's
         # global best is the max over shards of its per-shard best
         # ((score desc, doc asc) via struct max on (score, -doc_id)),
         # then top-k GROUPS per query. The merge input is bounded by
         # k * n_shards rows per query.
-        best = (
-            per_shard.withColumn("conv", F.expr(f"doc_id div {_stride}"))
+        per_shard = (
+            per_shard.withColumn("conv", F.expr(f"doc_id div {stride}"))
             .groupBy("query_id", "conv")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("score"),
-                        (-F.col("doc_id")).alias("neg_doc"),
-                        F.col("doc_id"),
-                    )
-                ).alias("b")
-            )
-            .select(
-                "query_id", "conv",
-                F.col("b.doc_id").alias("doc_id"),
-                F.col("b.score").alias("score"),
-            )
+            .agg(F.max(F.struct(
+                F.col("score"), (-F.col("doc_id")).alias("neg_doc"),
+                F.col("doc_id"),
+            )).alias("b"))
+            .select("query_id", "conv", F.col("b.doc_id").alias("doc_id"),
+                    F.col("b.score").alias("score"))
         )
-        return (
-            best.join(qk, "query_id")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "conv", "doc_id", "score")
-        )
-    return (
-        per_shard.join(qk, "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(per_shard, queries,
+                  ("query_id", "rank", "conv", "doc_id", "score"),
+                  broadcast=not distributed)
 
 
 def match_scores(
@@ -358,50 +571,18 @@ def match_scores(
     whose reduction over matches is distributive (nested block-join
     scoring aggregates child scores per parent): the match set is
     emitted once per shard and never truncated, so downstream
-    aggregates are exact without any per-shard k heuristic. Same
-    scatter plan as score_topk: term In-filter pushed to both parquet
-    scans, one kernel exchange, positions never read."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    aggregates are exact without any per-shard k heuristic."""
+    r = IndexReader(spark, index_dir)
     queries = queries.select(
         "query_id", "query_text", F.lit(0).alias("k"),
         F.lit(None).cast("double").alias("after_score"),
         F.lit(None).cast("long").alias("after_doc"),
     )
     per_term = prep.score_entries(
-        [r.asDict() for r in queries.collect()], mode
-    )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame([], _KERNEL_OUT)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    slim = blocks.select(
-        "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-        "gaps", "tfs", "dls", "max_partial",
-    )
-    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    needed = (
-        slim.filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    ub_scale = max(1.0, stats["avgdl"] / stats.get("avgdl_min", stats["avgdl"]))
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    return spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _shard_kernel(
-            stats["avgdl"], stats["n_docs"], "all", ub_scale,
-            cache_ns=(os.path.abspath(index_dir), stats["n_docs"],
-                      round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
-            tomb=tomb,
-        ),
-        schema=_KERNEL_OUT,
-    )
+        [x.asDict() for x in queries.collect()], r.mode)
+    out = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
+        r.avgdl, r.n_docs, "all", r.ub_scale, r.cache_ns, r.tomb))
+    return out if out is not None else spark.createDataFrame([], _KERNEL_OUT)
 
 
 # -------------------------------------------------- _count / total hits
@@ -411,9 +592,7 @@ def _count_kernel(tomb=None):
     each term (no tfs/dls/poss/max_partial ever reach the scan), union
     doc ids per query, count live docs."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from data_prepper_spark.index import codec
-
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         term_docs: dict[str, np.ndarray] = {}
         qmap: dict[str, list[str]] = {}
         for term, tg in pdf.groupby("term", sort=False):
@@ -464,32 +643,20 @@ def count_matches(
     posting stream. A doc lives in exactly one shard, so the global
     total is a plain sum of per-shard distinct counts; absent-term
     queries zero-fill via the left join."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
     per_term = prep.count_entries(
-        prep.collect_rows(queries, "query_id", "query_text"), mode
+        prep.collect_rows(queries, "query_id", "query_text"), r.mode
     )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
     base = queries.select("query_id").distinct()
-    if not terms or local_missing:
+    per_shard = scatter(
+        r, per_term, prep.COUNT_FIELDS, lambda: _count_kernel(r.tomb),
+        "query_id string, total_hits long", cols=COUNT_COLS,
+        dictionary=False,
+    )
+    if per_shard is None:
         return base.select(
             "query_id", F.lit(0).cast("long").alias("total_hits")
         )
-    qmap = prep.qmap_df(spark, per_term, prep.COUNT_FIELDS)
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select("shard", "seg", "term", "block_ord", "first_doc", "gaps")
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _count_kernel(tomb=tombstones.load_tombstones(spark, index_dir)),
-        schema="query_id string, total_hits long",
-    )
     counts = per_shard.groupBy("query_id").agg(
         F.sum("total_hits").alias("total_hits")
     )
@@ -500,99 +667,6 @@ def count_matches(
 
 
 # ---------------------------------------------------------- match_phrase
-
-def _decode_term_runs(
-    tg: pd.DataFrame, tomb=None, need_positions=True,
-    block_cache: dict | None = None, cache_ns=None,
-) -> dict:
-    """Decode the given (seg, block) rows of ONE term into doc-sorted
-    posting arrays + (optionally) the flat per-occurrence position
-    stream. Works on any SUBSET of a term's block rows (the block-pruned
-    kernels pass only blocks whose [first_doc, last_doc] contains a
-    candidate). Segments hold disjoint doc sets, so the multi-segment
-    merge is a stable interleave (argsort by doc, position runs gathered
-    along). Tombstoned docs' postings (and their position runs) are
-    dropped.
-
-    ``block_cache`` (optional dict): per-block decode memo shared across
-    queries within one kernel call, keyed by (cache_ns, seg, block_ord,
-    has_pos) — two queries pruning to overlapping block sets decode each
-    block once."""
-    from data_prepper_spark.index import codec
-
-    has_pos = need_positions and "poss" in tg.columns
-    d_docs, d_tf, d_dl, d_pos, d_seg = [], [], [], [], []
-    for i, (g, t, l, first, seg, bord) in enumerate(zip(
-        tg["gaps"], tg["tfs"], tg["dls"], tg["first_doc"], tg["seg"],
-        tg["block_ord"],
-    )):
-        key = (cache_ns, int(seg), int(bord), has_pos)
-        hit = block_cache.get(key) if block_cache is not None else None
-        if hit is None:
-            docs = codec.delta_decode(bytes(g), base=int(first))
-            tf = codec.varint_decode(bytes(t))
-            dl = codec.varint_decode(bytes(l))
-            if has_pos:
-                po = tg["poss"].iloc[i]
-                pos = codec.pos_delta_decode(bytes(po or b""), tf)
-            else:
-                pos = None
-            if block_cache is not None:
-                block_cache[key] = (docs, tf, dl, pos)
-        else:
-            docs, tf, dl, pos = hit
-        d_docs.append(docs)
-        d_tf.append(tf)
-        d_dl.append(dl)
-        if has_pos:
-            d_pos.append(pos)
-        d_seg.append(np.full(len(docs), int(seg), dtype=np.int64))
-    docs = np.concatenate(d_docs)
-    tfs = np.concatenate(d_tf).astype(np.int64)
-    dls = np.concatenate(d_dl).astype(np.int64)
-    order = np.argsort(docs, kind="stable")
-    if tomb is not None:
-        segs = np.concatenate(d_seg)
-        del_mask = tombstones.deleted_mask_per_seg(docs, segs, tomb)
-        order = order[~del_mask[order]]
-    out = {"docs": docs[order], "tfs": tfs[order], "dls": dls[order]}
-    if has_pos:
-        pos = np.concatenate(d_pos)
-        if len(pos) != int(tfs.sum()):
-            raise ValueError(
-                "index has no position stream (built with "
-                "store_positions=False) — match_phrase needs positions"
-            )
-        occ_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
-        out["pos"] = codec.gather_runs(pos, occ_starts, tfs, order)
-        out["occ"] = np.concatenate(([0], np.cumsum(out["tfs"])))
-    return out
-
-
-
-def _pruned_runs(
-    tg_sorted: pd.DataFrame, cand: np.ndarray, tomb=None,
-    need_positions=True, block_cache=None, cache_ns=None,
-):
-    """Block-pruned decode: only blocks whose [first_doc, last_doc]
-    range contains at least one candidate are decoded (one searchsorted
-    pair over the block metadata — VERDICT r3 'What's wrong' #3: a hot
-    term ("the", "error") in a phrase/bool no longer decodes its entire
-    per-shard posting+position stream; cost scales with the CANDIDATE
-    set, not the term's df). Exact: any candidate present in the term's
-    postings lies in a block whose range contains it, so kept blocks
-    cover every candidate posting. Returns None when no block overlaps.
-    """
-    firsts = tg_sorted["first_doc"].to_numpy(np.int64)
-    lasts = tg_sorted["last_doc"].to_numpy(np.int64)
-    lo = np.searchsorted(cand, firsts, side="left")
-    hi = np.searchsorted(cand, lasts, side="right")
-    keep = lo < hi
-    if not keep.any():
-        return None
-    sub = tg_sorted if keep.all() else tg_sorted.iloc[np.flatnonzero(keep)]
-    return _decode_term_runs(sub, tomb, need_positions, block_cache, cache_ns)
-
 
 _POS_STRIDE = np.int64(1) << np.int64(32)  # doc-local key = idx*2^32 + pos
 
@@ -622,20 +696,12 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
     Repeated-term phrases can additionally let one occurrence satisfy
     two offsets under slop (Lucene special-cases repeats); slop=0 is
     exact and unchanged."""
-    from data_prepper_spark.index import codec
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        groups: dict[str, pd.DataFrame] = {}   # term -> block rows (sorted)
-        dfs: dict[str, int] = {}
-        idfs: dict[str, float] = {}
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = _ShardTerms(pdf, n_docs, tomb, positions=True)
         queries: dict[str, dict] = {}
-        block_cache: dict = {}                 # shared across queries
-        for term, tg in pdf.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            dfs[term] = df_t
-            idfs[term] = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            groups[term] = tg.sort_values(["seg", "block_ord"])
-            for q in tg["queries"].iloc[0]:
+        for term, qs in shard.entries.items():
+            for q in qs:
                 ent = queries.setdefault(
                     q["query_id"],
                     {"k": int(q["k"]), "n_terms": int(q["n_terms"]),
@@ -645,43 +711,21 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
                 for off in q["offsets"]:
                     ent["constraints"].append((term, int(off)))
 
-        out_q, out_d, out_s = [], [], []
+        out = _Hits()
         for qid, ent in queries.items():
             terms_here = {t for t, _ in ent["constraints"]}
             if len(terms_here) < ent["n_terms"]:
                 continue  # some phrase term absent from this shard
-            # candidate docs: every distinct term present. Intersect
-            # RAREST-df-FIRST so the candidate set collapses before the
-            # hot terms, whose blocks are then range-pruned instead of
-            # fully decoded (df order, then term for determinism).
+            # candidate docs: every distinct term present
             decoded: dict[str, dict] = {}
-            cand = None
-            for t in sorted(terms_here, key=lambda t: (dfs[t], t)):
-                if cand is None:
-                    runs = _decode_term_runs(
-                        groups[t], tomb, True, block_cache, t
-                    )
-                else:
-                    runs = _pruned_runs(
-                        groups[t], cand, tomb, True, block_cache, t
-                    )
-                if runs is None or not len(runs["docs"]):
-                    cand = np.empty(0, np.int64)
-                    break
-                decoded[t] = runs
-                cand = runs["docs"] if cand is None else np.intersect1d(
-                    cand, runs["docs"], assume_unique=True
-                )
-                if not len(cand):
-                    break
-            if cand is None or not len(cand):
+            cand = shard.conjunction(terms_here, decoded)
+            if not len(cand):
                 continue
             # positional intersection over all (term, offset) constraints
             keys = None
             for t, off in sorted(ent["constraints"], key=lambda c: c[1]):
                 d = decoded[t]
                 pidx = np.searchsorted(d["docs"], cand)
-                ck = []
                 # occurrences of t in candidate docs only (runs gather)
                 occ_sel = codec.gather_runs(
                     d["pos"], d["occ"][:-1], d["tfs"], pidx
@@ -703,8 +747,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
                         adj = occ_sel - off - j
                         ok = adj >= 0
                         parts.append(local[ok] * _POS_STRIDE + adj[ok])
-                    ck = np.unique(np.concatenate(parts)) if parts else \
-                        np.empty(0, np.int64)
+                    ck = np.unique(np.concatenate(parts))
                 keys = ck if keys is None else np.intersect1d(
                     keys, ck, assume_unique=True
                 )
@@ -714,24 +757,10 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
                 continue
             matched = cand[np.unique(keys // _POS_STRIDE)]
             # BM25 over distinct terms, sorted-term accumulation order
-            scores = np.zeros(len(matched), dtype=np.float64)
-            for t in sorted(terms_here):
-                d = decoded[t]
-                mi = np.searchsorted(d["docs"], matched)
-                scores += idfs[t] * codec.bm25_partial(
-                    d["tfs"][mi], d["dls"][mi], avgdl
-                )
-            k = ent["k"]
-            if len(matched) > k:
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = np.flatnonzero(scores >= kth)
-                keep = keep[np.lexsort((matched[keep], -scores[keep]))][:k]
-            else:
-                keep = np.lexsort((matched, -scores))
-            out_q += [qid] * len(keep)
-            out_d += list(matched[keep])
-            out_s += list(scores[keep])
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+            out.topk(qid, matched,
+                     shard.bm25(matched, terms_here, decoded, avgdl),
+                     ent["k"])
+        return out.frame()
 
     return run
 
@@ -748,51 +777,15 @@ def phrase_topk(
     ships the docs, Lucene's position postings answer the query; here
     the `poss` stream in our own blocks does).
 
-    Same scatter-gather plan as score_topk: term In-filter pushed into
-    the block scan (this path DOES read the poss column), one kernel
-    exchange, global top-k over per-shard winners."""
-    stats = load_stats(index_dir)
-    if not stats.get("positions", False):
-        raise ValueError(
-            f"index at {index_dir} was built without positions "
-            "(store_positions=False) — cannot serve match_phrase"
-        )
-    mode = stats.get("tokenizer", "ascii")
-    per_term = prep.phrase_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.PHRASE_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _phrase_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    The score_topk scatter-gather; this path DOES read the poss
+    column."""
+    r = IndexReader(spark, index_dir)
+    r.require_positions("serve match_phrase")
+    per_term = prep.phrase_entries(prep.collect_rows(queries), r.mode)
+    return gather(scatter(
+        r, per_term, prep.PHRASE_FIELDS,
+        lambda: _phrase_kernel(r.avgdl, r.n_docs, r.tomb), cols=POS_COLS,
+    ), queries)
 
 
 # ----------------------------------------------------------- bool query
@@ -811,20 +804,14 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
     (must ∪ should) terms PRESENT per doc, sorted-term accumulation
     order — a should-only msm=1 bool therefore ranks identically to
     `match` on the same terms."""
-    from data_prepper_spark.index import codec
+    empty = {"docs": np.empty(0, np.int64), "tfs": np.empty(0, np.int64),
+             "dls": np.empty(0, np.int64)}
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        groups: dict[str, pd.DataFrame] = {}
-        dfs: dict[str, int] = {}
-        idfs: dict[str, float] = {}
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = _ShardTerms(pdf, n_docs, tomb)
         queries: dict[str, dict] = {}
-        block_cache: dict = {}  # per-block decode memo shared by queries
-        for term, tg in pdf.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            dfs[term] = df_t
-            idfs[term] = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            groups[term] = tg.sort_values(["seg", "block_ord"])
-            for q in tg["queries"].iloc[0]:
+        for term, qs in shard.entries.items():
+            for q in qs:
                 nb = q.get("neg_boost") if hasattr(q, "get") else None
                 ent = queries.setdefault(
                     q["query_id"],
@@ -844,49 +831,25 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
                     else:
                         ent[role].add(term)
 
-        def _runs(t, cand):
-            """Full decode while unconstrained, block-pruned once a
-            candidate set exists (see _pruned_runs). Returns None when
-            no block can contain a candidate."""
-            if cand is None:
-                return _decode_term_runs(
-                    groups[t], tomb, False, block_cache, t
-                )
-            return _pruned_runs(groups[t], cand, tomb, False, block_cache, t)
-
-        out_q, out_d, out_s = [], [], []
+        out = _Hits()
         for qid, ent in queries.items():
             if len(ent["must"]) < ent["n_must"]:
                 continue  # a must term has no postings in this shard
             if len(ent["groups"]) < ent["n_groups"]:
                 continue  # a whole OR-group is absent from this shard
             decoded: dict[str, dict] = {}
-            cand = None
-            # must intersection RAREST-df-FIRST: the candidate set
-            # collapses before hot terms, whose blocks are range-pruned
-            # instead of fully decoded
-            for t in sorted(ent["must"], key=lambda t: (dfs[t], t)):
-                runs = _runs(t, cand)
-                if runs is None or not len(runs["docs"]):
-                    cand = np.empty(0, np.int64)
-                    break
-                decoded[t] = runs
-                cand = runs["docs"] if cand is None else np.intersect1d(
-                    cand, runs["docs"], assume_unique=True
-                )
-                if not len(cand):
-                    break
+            cand = shard.conjunction(ent["must"], decoded)
             if cand is not None and not len(cand):
                 continue
             # conjunctive OR-groups, rarest group first (by summed df):
             # union the group's member postings (block-pruned once cand
             # exists), then intersect with the running candidate set
             dead = False
-            for g in sorted(ent["groups"],
-                            key=lambda g: (sum(dfs[t] for t in ent["groups"][g]), g)):
+            for g in sorted(ent["groups"], key=lambda g: (
+                    sum(shard.df[t] for t in ent["groups"][g]), g)):
                 docs_g = []
                 for t in sorted(ent["groups"][g]):
-                    r = _runs(t, cand)
+                    r = shard.runs(t, cand)
                     if r is None or not len(r["docs"]):
                         continue
                     decoded[t] = r
@@ -906,12 +869,7 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
             should = sorted(ent["should"])
             if should:
                 for t in should:
-                    r = _runs(t, cand)
-                    decoded[t] = r if r is not None else {
-                        "docs": np.empty(0, np.int64),
-                        "tfs": np.empty(0, np.int64),
-                        "dls": np.empty(0, np.int64),
-                    }
+                    decoded[t] = shard.runs(t, cand) or empty
                 s_docs = np.concatenate([decoded[t]["docs"] for t in should])
                 s_uniq, s_cnt = np.unique(s_docs, return_counts=True)
             if cand is None:
@@ -926,9 +884,8 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
                 cand = cand[hit >= ent["msm"]]
             if not len(cand):
                 continue
-            for t in sorted(ent["must_not"], key=lambda t: (dfs[t], t)):
-                r = _runs(t, cand)
-                nd = r["docs"] if r is not None else np.empty(0, np.int64)
+            for t in shard.rarest_first(ent["must_not"]):
+                nd = (shard.runs(t, cand) or empty)["docs"]
                 if not len(nd):
                     continue
                 ni = np.clip(np.searchsorted(nd, cand), 0, len(nd) - 1)
@@ -937,21 +894,10 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
                     break
             if not len(cand):
                 continue
-            scores = np.zeros(len(cand), dtype=np.float64)
             positive = ent["must"] | ent["should"]
             for g in ent["groups"].values():
                 positive |= g
-            for t in sorted(positive):
-                d = decoded.get(t)
-                if d is None or not len(d["docs"]):
-                    continue
-                di = np.clip(np.searchsorted(d["docs"], cand), 0,
-                             len(d["docs"]) - 1)
-                has = d["docs"][di] == cand
-                part = idfs[t] * codec.bm25_partial(
-                    d["tfs"][di], d["dls"][di], avgdl
-                )
-                scores += np.where(has, part, 0.0)
+            scores = shard.bm25(cand, positive, decoded, avgdl)
             # boosting-query demotion (OpenSearch `boosting`): docs
             # holding any negative term keep matching but their FINAL
             # score is scaled by negative_boost BEFORE the shard heap —
@@ -961,11 +907,8 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
             # decodes).
             if ent["negative"] and ent["neg_boost"] is not None:
                 demote = np.zeros(len(cand), dtype=bool)
-                for t in sorted(ent["negative"],
-                                key=lambda t: (dfs[t], t)):
-                    r = decoded.get(t)
-                    if r is None:
-                        r = _runs(t, cand)
+                for t in shard.rarest_first(ent["negative"]):
+                    r = decoded.get(t) or shard.runs(t, cand)
                     if r is None or not len(r["docs"]):
                         continue
                     ni = np.clip(np.searchsorted(r["docs"], cand), 0,
@@ -973,17 +916,8 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
                     demote |= r["docs"][ni] == cand
                 scores = np.where(demote, scores * ent["neg_boost"],
                                   scores)
-            k = ent["k"]
-            if len(cand) > k:
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = np.flatnonzero(scores >= kth)
-                keep = keep[np.lexsort((cand[keep], -scores[keep]))][:k]
-            else:
-                keep = np.lexsort((cand, -scores))
-            out_q += [qid] * len(keep)
-            out_d += list(cand[keep])
-            out_s += list(scores[keep])
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+            out.topk(qid, cand, scores, ent["k"])
+        return out.frame()
 
     return run
 
@@ -1034,54 +968,19 @@ def bool_topk(
     OpenSearch semantics: docs must contain ALL must terms, NONE of the
     must_not terms, and at least minimum_should_match distinct should
     terms (msm defaults to 1 when there is no must clause, 0 — purely
-    score-boosting — when there is). Same scatter-gather plan as
-    score_topk: clause-term In-filter pushed into both parquet scans
-    (positions column never read), one kernel exchange, global top-k
-    over per-shard winners."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    score-boosting — when there is). The score_topk scatter-gather over
+    the clause terms (positions column never read)."""
+    r = IndexReader(spark, index_dir)
     # clause tokenize + role/arity bookkeeping + minimum_should_match
     # spec resolution (Lucene calculateMinShouldMatch) all run driver-
     # side — bool queries are driver-literal in every caller, and the
     # retired SQL prep here cost THREE blocking jobs per call
     # (prep.bool_entries; conjunctive OR-groups ride `must_groups`)
-    per_term = prep.bool_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.BOOL_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _bool_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    per_term = prep.bool_entries(prep.collect_rows(queries), r.mode)
+    return gather(scatter(
+        r, per_term, prep.BOOL_FIELDS,
+        lambda: _bool_kernel(r.avgdl, r.n_docs, r.tomb), cols=MATCH_COLS,
+    ), queries)
 
 
 def boosting_topk(
@@ -1117,7 +1016,8 @@ def boosting_topk(
 # ------------------------------------------------------------ filter context
 
 
-def _filtered_kernel(avgdl: float, n_docs: int, tomb=None):
+def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
+                     boost_mode: str | None = None):
     """Per-shard filter-context scoring (OpenSearch `bool: {must:
     match, filter: [...]}` — the filter restricts candidates BEFORE the
     top-k heap and contributes no score; idf/avgdl stay full-corpus,
@@ -1129,75 +1029,52 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None):
     shard key the index build used). The allowed set acts as the
     candidate set from the first decode on, so hot terms are
     block-range-pruned against it (_pruned_runs) — per-shard cost
-    scales with the FILTERED corpus, not the terms' df."""
-    from data_prepper_spark.index import codec
+    scales with the FILTERED corpus, not the terms' df.
 
-    def run(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    With a boost_mode (function_score), `right` also carries each
+    doc's precomputed `factor`, combined with the BM25 score per
+    boost_mode BEFORE the top-k cut — OpenSearch function_score
+    semantics (the function changes ranking, so it must precede it)."""
+
+    def run(key: tuple, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        out = _Hits()
         if not len(left) or not len(right):
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-        block_cache: dict = {}
-        queries: dict[str, dict] = {}
-        decoded: dict[str, dict | None] = {}
-        idfs: dict[str, float] = {}
-        for term, tg in left.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            idfs[term] = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            decoded[term] = _pruned_runs(
-                tg.sort_values(["seg", "block_ord"]), allowed, tomb,
-                False, block_cache, term,
-            )
-            for q in tg["queries"].iloc[0]:
-                ent = queries.setdefault(
-                    q["query_id"], {"k": int(q["k"]), "terms": set()}
-                )
-                ent["terms"].add(term)
+            return out.frame()
+        allowed, first = np.unique(
+            right["doc_id"].to_numpy(np.int64), return_index=True)
+        if boost_mode is not None:
+            fac = right["factor"].to_numpy(np.float64)[first]
+        shard = _ShardTerms(left, n_docs, tomb)
+        decoded = {t: shard.runs(t, allowed) for t in shard.blocks}
+        queries: dict[str, list] = {}
+        for term, qs in shard.entries.items():
+            for q in qs:
+                queries.setdefault(q["query_id"], [int(q["k"]), set()])[1].add(term)
 
-        out_q, out_d, out_s = [], [], []
-        for qid, ent in queries.items():
-            terms = sorted(ent["terms"])
-            per_term: dict[str, dict] = {}
-            matched = []
-            for t in terms:
-                d = decoded[t]
-                if d is None or not len(d["docs"]):
-                    continue
-                per_term[t] = d
-                matched.append(d["docs"])
+        for qid, (k, terms) in queries.items():
+            matched = [
+                decoded[t]["docs"] for t in sorted(terms)
+                if decoded[t] is not None and len(decoded[t]["docs"])
+            ]
             if not matched:
                 continue
             cand = np.intersect1d(
                 np.unique(np.concatenate(matched)), allowed,
                 assume_unique=True,
             )
-            if not len(cand):
-                continue
-            scores = np.zeros(len(cand), dtype=np.float64)
-            # sorted-term accumulation order (rank-identity determinism)
-            for t in terms:
-                d = per_term.get(t)
-                if d is None:
-                    continue
-                di = np.clip(np.searchsorted(d["docs"], cand), 0,
-                             len(d["docs"]) - 1)
-                has = d["docs"][di] == cand
-                part = idfs[t] * codec.bm25_partial(
-                    d["tfs"][di], d["dls"][di], avgdl
-                )
-                scores += np.where(has, part, 0.0)
+            scores = shard.bm25(cand, terms, decoded, avgdl)
             live = scores > 0.0
             cand, scores = cand[live], scores[live]
-            k = ent["k"]
-            if len(cand) > k:
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = np.flatnonzero(scores >= kth)
-                keep = keep[np.lexsort((cand[keep], -scores[keep]))][:k]
-            else:
-                keep = np.lexsort((cand, -scores))
-            out_q += [qid] * len(keep)
-            out_d += list(cand[keep])
-            out_s += list(scores[keep])
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
+            if boost_mode is not None:
+                cf = fac[np.searchsorted(allowed, cand)]
+                if boost_mode == "multiply":
+                    scores = scores * cf
+                elif boost_mode == "sum":
+                    scores = scores + cf
+                else:  # replace — query matches, function alone ranks
+                    scores = cf
+            out.topk(qid, cand, scores, k)
+        return out.frame()
 
     return run
 
@@ -1230,8 +1107,6 @@ def sharded_docs(
     routing at write time — is trusted as-is: no derivation, no convmap
     join, no xxhash at query time. Only pass such a column if it came
     from THIS index's store (the store is keyed by index_dir)."""
-    from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
-
     n_shards = int(stats["n_shards"])
     if "shard" in docs.columns:
         return docs.select(
@@ -1308,138 +1183,8 @@ def filtered_topk(
         [first_doc, last_doc] overlaps an allowed doc;
       global top-k: per-shard winners only (k rows per shard per
         query) through the final window."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    n_shards = int(stats["n_shards"])
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
-    allowed = sharded_docs(
-        spark, index_dir, docs.filter(F.expr(filter_expr)), stats
-    )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    per_shard = (
-        spread_by_shard(needed).groupBy("shard")
-        .cogroup(spread_by_shard(allowed).groupBy("shard"))
-        .applyInPandas(
-            _filtered_kernel(stats["avgdl"], stats["n_docs"], tomb=tomb),
-            schema=_KERNEL_OUT,
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def _function_score_kernel(avgdl: float, n_docs: int, boost_mode: str,
-                           tomb=None):
-    """Per-shard function_score: BM25 over the match set, then each
-    candidate's precomputed factor (a doc-attribute expression, shipped
-    as the cogroup right side) combines per boost_mode BEFORE the
-    top-k heap — OpenSearch function_score semantics (the function
-    changes ranking, so it must precede the cut)."""
-    from data_prepper_spark.index import codec
-
-    def run(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        r_docs = right["doc_id"].to_numpy(np.int64)
-        r_fac = right["factor"].to_numpy(np.float64)
-        allowed, first = np.unique(r_docs, return_index=True)
-        fac = r_fac[first]
-        block_cache: dict = {}
-        queries: dict[str, dict] = {}
-        decoded: dict[str, dict | None] = {}
-        idfs: dict[str, float] = {}
-        for term, tg in left.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            idfs[term] = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            decoded[term] = _pruned_runs(
-                tg.sort_values(["seg", "block_ord"]), allowed, tomb,
-                False, block_cache, term,
-            )
-            for q in tg["queries"].iloc[0]:
-                ent = queries.setdefault(
-                    q["query_id"], {"k": int(q["k"]), "terms": set()}
-                )
-                ent["terms"].add(term)
-
-        out_q, out_d, out_s = [], [], []
-        for qid, ent in queries.items():
-            terms = sorted(ent["terms"])
-            matched = [
-                decoded[t]["docs"] for t in terms
-                if decoded[t] is not None and len(decoded[t]["docs"])
-            ]
-            if not matched:
-                continue
-            cand = np.intersect1d(
-                np.unique(np.concatenate(matched)), allowed,
-                assume_unique=True,
-            )
-            if not len(cand):
-                continue
-            scores = np.zeros(len(cand), dtype=np.float64)
-            for t in terms:
-                d = decoded[t]
-                if d is None or not len(d["docs"]):
-                    continue
-                di = np.clip(np.searchsorted(d["docs"], cand), 0,
-                             len(d["docs"]) - 1)
-                has = d["docs"][di] == cand
-                part = idfs[t] * codec.bm25_partial(
-                    d["tfs"][di], d["dls"][di], avgdl
-                )
-                scores += np.where(has, part, 0.0)
-            live = scores > 0.0
-            cand, scores = cand[live], scores[live]
-            if not len(cand):
-                continue
-            cf = fac[np.searchsorted(allowed, cand)]
-            if boost_mode == "multiply":
-                scores = scores * cf
-            elif boost_mode == "sum":
-                scores = scores + cf
-            else:  # replace — query matches, function alone ranks
-                scores = cf
-            k = ent["k"]
-            if len(cand) > k:
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = np.flatnonzero(scores >= kth)
-                keep = keep[np.lexsort((cand[keep], -scores[keep]))][:k]
-            else:
-                keep = np.lexsort((cand, -scores))
-            out_q += [qid] * len(keep)
-            out_d += list(cand[keep])
-            out_s += list(scores[keep])
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    return run
+    return _filtered_topk(spark, index_dir, queries, docs.filter(
+        F.expr(filter_expr)), None)
 
 
 def function_score_topk(
@@ -1471,18 +1216,6 @@ def function_score_topk(
     collected or broadcast."""
     if boost_mode not in ("multiply", "sum", "replace"):
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
     src = docs.filter(F.expr(filter_expr)) if filter_expr else docs
     # `missing` (OpenSearch field_value_factor's missing param): a null
     # factor — null attribute, null-propagating expression — would
@@ -1492,39 +1225,22 @@ def function_score_topk(
         F.coalesce(F.expr(factor_expr).cast("double"),
                    F.lit(float(missing))),
     )
-    allowed = sharded_docs(spark, index_dir, src, stats, carry=("factor",))
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    per_shard = (
-        spread_by_shard(needed).groupBy("shard")
-        .cogroup(spread_by_shard(allowed).groupBy("shard"))
-        .applyInPandas(
-            _function_score_kernel(
-                stats["avgdl"], stats["n_docs"], boost_mode, tomb=tomb,
-            ),
-            schema=_KERNEL_OUT,
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _filtered_topk(spark, index_dir, queries, src, boost_mode)
+
+
+def _filtered_topk(spark, index_dir, queries, allowed, boost_mode):
+    """filtered_topk / function_score_topk: the score_topk
+    scatter-gather, cogrouped by shard with the allowed corpus rows."""
+    r = IndexReader(spark, index_dir)
+    queries = queries.select("query_id", "query_text", "k")
+    per_term = prep.simple_entries(prep.collect_rows(queries), r.mode)
+    carry = ("factor",) if boost_mode else ()
+    return gather(scatter(
+        r, per_term, prep.SIMPLE_FIELDS,
+        lambda: _filtered_kernel(r.avgdl, r.n_docs, r.tomb, boost_mode),
+        cols=MATCH_COLS,
+        right=lambda: sharded_docs(spark, index_dir, allowed, r.stats, carry),
+    ), queries)
 
 
 def filtered_topk_multi(

@@ -21,17 +21,13 @@ In-filter pushdown. Cost scales with the target set, not the corpus.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.reader import MATCH_COLS, IndexReader
 from data_prepper_spark.query import engine, prep
 from data_prepper_spark.query.bm25_df import B, K1
-from data_prepper_spark.query.exchange import spread_by_shard
 
 _OUT = (
     "query_id string, doc_id long, term string, tf int, dl int, df long, "
@@ -40,22 +36,19 @@ _OUT = (
 
 
 def _explain_kernel(avgdl: float, n_docs: int, tomb=None):
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [] for c in
                ("query_id", "doc_id", "term", "tf", "dl", "df",
                 "idf", "tf_norm", "boost", "term_score")}
-        for term, tg in pdf.groupby("term", sort=True):
-            qs = tg["queries"].iloc[0]
+        shard = engine._ShardTerms(pdf, n_docs, tomb)
+        for term, qs in shard.entries.items():
             targets_all = np.unique(np.concatenate(
                 [np.asarray(q["targets"], dtype=np.int64) for q in qs]
             ))
-            runs = engine._pruned_runs(
-                tg, targets_all, tomb, need_positions=False
-            )
+            runs = shard.runs(term, targets_all)
             if runs is None:
                 continue
-            df_t = int(tg["df"].iloc[0])
-            idf = float(np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
+            df_t, idf = shard.df[term], shard.idf[term]
             docs, tfs, dls = runs["docs"], runs["tfs"], runs["dls"]
             for q in qs:
                 t = np.asarray(q["targets"], dtype=np.int64)
@@ -91,47 +84,25 @@ def explain_hits(
     """queries(query_id, query_text), hits(query_id, doc_id) ->
     one row per (query_id, doc_id, matched term) with the BM25
     decomposition. hits is expected to be tiny (a top-k result)."""
-    stats = engine.load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
     pairs = hits.select("query_id", "doc_id").collect()
     targets: dict[str, list[int]] = {}
-    for r in pairs:
-        targets.setdefault(r["query_id"], []).append(int(r["doc_id"]))
+    for row in pairs:
+        targets.setdefault(row["query_id"], []).append(int(row["doc_id"]))
     per_term: dict[str, list[tuple]] = {}
     for q in prep.collect_rows(queries, "query_id", "query_text"):
         if q["query_id"] not in targets:
             continue
         tgt = sorted(targets[q["query_id"]])
-        for t, b in prep.boosted_terms(q["query_text"], mode).items():
+        for t, b in prep.boosted_terms(q["query_text"], r.mode).items():
             per_term.setdefault(t, []).append((q["query_id"], b, tgt))
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    if not terms or not targets or (
-        "://" not in index_dir and not os.path.exists(blocks_path)
-    ):
+    out = engine.scatter(
+        r, per_term, "query_id:string,boost:double,targets:array<bigint>",
+        lambda: _explain_kernel(r.avgdl, r.n_docs, r.tomb), _OUT,
+        cols=MATCH_COLS,
+    )
+    if out is None:
         return spark.createDataFrame([], _OUT)
-    qmap = prep.qmap_df(
-        spark, per_term,
-        "query_id:string,boost:double,targets:array<bigint>",
-    )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    out = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _explain_kernel(stats["avgdl"], stats["n_docs"], tomb), schema=_OUT
-    )
     return out.orderBy("query_id", "doc_id", "term")
 
 

@@ -24,17 +24,14 @@ join with zero corpus shuffle. The facet agg itself is two-phase
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.reader import COUNT_COLS, IndexReader
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _decode_term_runs, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import _ShardTerms, scatter
 
 _MATCH_OUT = "query_id string, doc_id long"
 
@@ -43,15 +40,12 @@ def _match_kernel(tomb=None):
     """Per-shard: (query_id, doc_id) for every doc containing ANY of the
     query's terms (OpenSearch `match` / bool-should msm=1 match set)."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded: dict[str, np.ndarray] = {}
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = _ShardTerms(pdf, tomb=tomb)
+        decoded = {t: shard.runs(t)["docs"] for t in shard.blocks}
         queries: dict[str, list[str]] = {}
-        for term, tg in pdf.groupby("term", sort=True):
-            decoded[term] = _decode_term_runs(
-                tg.sort_values(["seg", "block_ord"]), tomb=tomb,
-                need_positions=False,
-            )["docs"]
-            for q in tg["queries"].iloc[0]:
+        for term, qs in shard.entries.items():
+            for q in qs:
                 queries.setdefault(q["query_id"], []).append(term)
         out_q, out_d = [], []
         for qid, terms in queries.items():
@@ -67,34 +61,17 @@ def match_docs(
     spark: SparkSession, index_dir: str, queries: DataFrame,
 ) -> DataFrame:
     """queries(query_id, query_text) -> (query_id, doc_id) match set.
-    Same scatter plan as score_topk: term In-filter pushed to both
-    parquet scans, one kernel exchange, positions column never read."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    The score_topk scatter minus the dictionary (no idf), positions
+    column never read."""
+    r = IndexReader(spark, index_dir)
     per_term = prep.count_entries(
-        prep.collect_rows(queries, "query_id", "query_text"), mode
+        prep.collect_rows(queries, "query_id", "query_text"), r.mode
     )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame([], _MATCH_OUT)
-    qmap = prep.qmap_df(spark, per_term, prep.COUNT_FIELDS)
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
+    out = scatter(
+        r, per_term, prep.COUNT_FIELDS, lambda: _match_kernel(r.tomb),
+        _MATCH_OUT, cols=COUNT_COLS + ("tfs", "dls"), dictionary=False,
     )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    return spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _match_kernel(tomb=tomb), schema=_MATCH_OUT
-    )
+    return out if out is not None else spark.createDataFrame([], _MATCH_OUT)
 
 
 def sort_topk(
@@ -507,16 +484,15 @@ def significant_text(
     tombstoned docs until compaction (documented artifact)."""
     from data_prepper_spark.query.bm25_df import tokens_col
 
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    n_docs = float(stats["n_docs"])
+    r = IndexReader(spark, index_dir)
+    n_docs = float(r.n_docs)
     m = match if match is not None else \
         match_docs(spark, index_dir, queries)
     matched_text = m.join(docs.select("doc_id", text_col), "doc_id")
     fg = (
         matched_text.select(
             "query_id",
-            F.explode(F.array_distinct(tokens_col(text_col, mode)))
+            F.explode(F.array_distinct(tokens_col(text_col, r.mode)))
             .alias("term"),
         )
         .groupBy("query_id", "term")
@@ -526,8 +502,7 @@ def significant_text(
     fg_tot = m.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("fg_total")
     )
-    bg = spark.read.parquet(layout.resolve(index_dir, "dictionary")) \
-        .select("term", F.col("df").alias("bg_count"))
+    bg = r.dictionary.select("term", F.col("df").alias("bg_count"))
     scored = (
         fg.join(fg_tot, "query_id")
         .join(F.broadcast(bg), "term")

@@ -27,15 +27,14 @@ and tie-break (score desc, doc_id asc, index asc).
 
 from __future__ import annotations
 
-import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _KERNEL_OUT, _shard_kernel, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import _shard_kernel, gather, scatter
 
 __all__ = ["multi_index_topk"]
 
@@ -50,19 +49,20 @@ def multi_index_topk(
     (query_id, rank, index, doc_id, score) with union-corpus stats."""
     if not index_dirs:
         raise ValueError("multi_index_topk needs at least one index dir")
-    stats = [load_stats(d) for d in index_dirs]
-    modes = {s.get("tokenizer", "ascii") for s in stats}
+    readers = [IndexReader(spark, d) for d in index_dirs]
+    modes = {r.mode for r in readers}
     if len(modes) > 1:
         raise ValueError(
             f"member indexes use different tokenizers {sorted(modes)} — "
             "their terms are not comparable; rebuild with one analyzer"
         )
     mode = modes.pop()
-    n_docs = sum(int(s["n_docs"]) for s in stats)
+    n_docs = sum(int(r.n_docs) for r in readers)
     avgdl = (
-        sum(float(s["avgdl"]) * int(s["n_docs"]) for s in stats) / n_docs
+        sum(float(r.avgdl) * int(r.n_docs) for r in readers) / n_docs
         if n_docs else 0.0
     )
+    cols = ("query_id", "rank", "index", "doc_id", "score")
 
     # driver-side prep (query/prep.py) — score_entries, so query-time
     # term boosts ('error^2') work identically on alias search
@@ -70,70 +70,34 @@ def multi_index_topk(
         prep.collect_rows(queries.select("query_id", "query_text", "k")),
         mode,
     )
-    terms = sorted(per_term)
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, index int, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
+    if not per_term:
+        return gather(None, queries, cols)
 
     # union df across member dictionaries (driver-known term set -> the
     # slices are tiny; re-aggregated df feeds the kernel's idf)
-    dict_union = None
-    for d in index_dirs:
-        sl = (
-            spark.read.parquet(layout.resolve(d, "dictionary"))
-            .filter(F.col("term").isin(terms))
-            .select("term", "df")
-        )
-        dict_union = sl if dict_union is None else dict_union.unionByName(sl)
-    dict_union = dict_union.groupBy("term").agg(F.sum("df").alias("df"))
+    dict_union = reduce(DataFrame.unionByName, [
+        r.dict_slice(sorted(per_term)).select("term", "df") for r in readers
+    ]).groupBy("term").agg(F.sum("df").alias("df"))
 
     # conservative upper-bound scale: avgdl drift within each member
     # (incremental builds) AND the union-avgdl uplift
-    ub_scale = max(
-        max(1.0, float(s["avgdl"]) / float(s.get("avgdl_min", s["avgdl"])))
-        * max(1.0, avgdl / float(s["avgdl"]))
-        for s in stats
-    )
+    ub_scale = max(r.ub_scale * max(1.0, avgdl / float(r.avgdl))
+                   for r in readers)
 
+    # one kernel pass per member index: shard keys stay per-index
+    # (same exchange class as score_topk), union stats injected; one
+    # qmap, so every member's join reuses its broadcast
+    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
     per_index = []
-    for i, d in enumerate(index_dirs):
-        blocks = spark.read.parquet(layout.resolve(d, "blocks"))
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-        tomb = tombstones.load_tombstones(spark, d)
-        needed = (
-            blocks.select(
-                "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-                "gaps", "tfs", "dls", "max_partial",
-            )
-            .filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
-            .join(F.broadcast(dict_union), "term")
-        )
-        # one kernel pass per member index: shard keys stay per-index
-        # (same exchange class as score_topk), union stats injected
-        res = spread_by_shard(needed).groupBy("shard").applyInPandas(
-            _shard_kernel(
+    for i, r in enumerate(readers):
+        res = scatter(
+            r, per_term, prep.SCORE_FIELDS, lambda r=r: _shard_kernel(
                 avgdl, n_docs, algo, ub_scale,
-                cache_ns=(os.path.abspath(d), "multi", n_docs,
-                          round(avgdl, 9), tombstones.fingerprint(tomb)),
-                tomb=tomb,
-            ),
-            schema=_KERNEL_OUT,
-        ).withColumn("index", F.lit(i))
-        per_index.append(res)
-
-    allres = per_index[0]
-    for r in per_index[1:]:
-        allres = allres.unionByName(r)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("index")
-    )
-    return (
-        allres.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "index", "doc_id", "score")
-    )
+                cache_ns=(r.cache_ns, "multi", n_docs, round(avgdl, 9)),
+                tomb=r.tomb,
+            ), dictionary=dict_union, qmap=qmap,
+        )
+        if res is not None:
+            per_index.append(res.withColumn("index", F.lit(i)))
+    allres = reduce(DataFrame.unionByName, per_index) if per_index else None
+    return gather(allres, queries, cols, tie=(F.asc("index"),))

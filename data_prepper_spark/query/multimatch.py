@@ -39,14 +39,20 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.query import wand as wand_mod
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _KERNEL_OUT, _NsCache, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import (
+    _Hits,
+    _idf,
+    _NsCache,
+    gather,
+    scatter,
+)
 
 __all__ = ["build_fields_index", "multi_match_topk", "parse_field_specs"]
 
@@ -124,7 +130,7 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
     field), field-boost scale, dis_max/sum combine, boundary-exact
     top-k. field_conf: field -> dict(n_docs, avgdl, boost, tomb, ns)."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         xf = mm_type == "cross_fields"
         caches = {
@@ -156,7 +162,7 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
             else:
                 df_t = dfs[term][field]
                 nd = field_conf[field]["n_docs"]
-            return float(np.log(1.0 + (nd - df_t + 0.5) / (df_t + 0.5)))
+            return _idf(nd, df_t)
 
         cursor_memo: dict[tuple[str, str], list] = {}
 
@@ -185,7 +191,7 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
             cursor_memo[(field, term)] = cur
             return cur
 
-        out_q, out_d, out_s = [], [], []
+        out = _Hits()
         for qid, (k, term_fields) in queries.items():
             if xf:
                 # term-centric: per term, dismax the per-field scores
@@ -249,21 +255,8 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
                 else:  # best_fields (dis_max + tie_breaker)
                     best = S.max(axis=0)
                     combined = best + tie_breaker * (S.sum(axis=0) - best)
-            # boundary-exact per-shard cut (ties at the kth score broken
-            # by doc_id — same contract as exhaustive_topk)
-            if len(all_docs) <= k:
-                order = np.lexsort((all_docs, -combined))[:k]
-            else:
-                kth = np.partition(combined, len(combined) - k)[
-                    len(combined) - k]
-                cand = np.flatnonzero(combined >= kth)
-                order = cand[np.lexsort((all_docs[cand], -combined[cand]))][:k]
-            out_q += [qid] * len(order)
-            out_d += list(all_docs[order])
-            out_s += list(combined[order])
-        return pd.DataFrame(
-            {"query_id": out_q, "doc_id": out_d, "score": out_s}
-        )
+            out.topk(qid, all_docs, combined, k)
+        return out.frame()
 
     return run
 
@@ -299,65 +292,25 @@ def multi_match_topk(
         )
     queries = queries.select("query_id", "query_text", "k")
     per_term = prep.simple_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
+    readers = {f: IndexReader(spark, os.path.join(index_dir, "fields", f))
+               for f, _ in specs}
 
-    field_conf: dict[str, dict] = {}
-    blend: dict[str, tuple] = {}
-    needed = None
-    for field, boost in specs:
-        d = os.path.join(index_dir, "fields", field)
-        stats = load_stats(d)
-        tomb = tombstones.load_tombstones(spark, d)
-        field_conf[field] = {
-            "n_docs": int(stats["n_docs"]),
-            "avgdl": float(stats["avgdl"]),
-            "boost": float(boost),
-            "tomb": tomb,
-            "ns": (os.path.abspath(d), stats["n_docs"],
-                   round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
+    def kernel():
+        field_conf = {
+            f: {"n_docs": int(readers[f].n_docs),
+                "avgdl": float(readers[f].avgdl), "boost": float(boost),
+                "tomb": readers[f].tomb, "ns": readers[f].cache_ns}
+            for f, boost in specs
         }
-        dict_slice = (
-            spark.read.parquet(layout.resolve(d, "dictionary"))
-            .filter(F.col("term").isin(terms))
-            .select("term", "df")
-        )
+        blend: dict[str, tuple] = {}
         if mm_type == "cross_fields":
-            for r in dict_slice.groupBy("term").agg(
-                F.sum("df").alias("df")
-            ).collect():
-                cur = blend.get(r["term"], (0, 0))
-                blend[r["term"]] = (
-                    max(cur[0], int(r["df"])),
-                    max(cur[1], int(stats["n_docs"])),
-                )
-        blocks = spark.read.parquet(layout.resolve(d, "blocks"))
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-        nf = (
-            blocks.select(
-                "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-                "gaps", "tfs", "dls", "max_partial",
-            )
-            .filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
-            .join(F.broadcast(dict_slice), "term")
-            .withColumn("field", F.lit(field))
-        )
-        needed = nf if needed is None else needed.unionByName(nf)
+            for f, r in readers.items():
+                for row in r.dict_slice(sorted(per_term)).groupBy("term") \
+                        .agg(F.sum("df").alias("df")).collect():
+                    cur = blend.get(row["term"], (0, 0))
+                    blend[row["term"]] = (max(cur[0], int(row["df"])),
+                                          max(cur[1], int(r.n_docs)))
+        return _mm_kernel(field_conf, mm_type, float(tie_breaker), blend)
 
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _mm_kernel(field_conf, mm_type, float(tie_breaker), blend=blend),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(scatter(readers, per_term, prep.SIMPLE_FIELDS, kernel),
+                  queries)

@@ -40,14 +40,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.reader import POS_COLS, IndexReader
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import (
-    _phrase_kernel,
-    load_stats,
-    spread_by_shard,
-)
+from data_prepper_spark.query.engine import _phrase_kernel, scatter
 from data_prepper_spark.query.suggest import suggest_terms
 
 _DF_FLOOR = 1e-12  # log() floor for out-of-vocabulary terms
@@ -66,55 +62,32 @@ def count_phrase_matches(
     (k = n_docs) and the kernel output collapsed to per-shard counts
     INSIDE the kernel task — the exchange carries one (query_id, n)
     row per (shard, query), never the match list."""
-    import os
-
-    stats = load_stats(index_dir)
-    if not stats.get("positions", False):
-        raise ValueError(
-            f"index at {index_dir} was built without positions "
-            "(store_positions=False) — cannot count phrase matches"
-        )
-    mode = stats.get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
+    r.require_positions("count phrase matches")
     rows = [
-        {"query_id": r["query_id"], "query_text": r["query_text"],
-         "k": int(stats["n_docs"])}
-        for r in queries.select("query_id", "query_text").collect()
+        {"query_id": row["query_id"], "query_text": row["query_text"],
+         "k": int(r.n_docs)}
+        for row in queries.select("query_id", "query_text").collect()
     ]
-    per_term = prep.phrase_entries(rows, mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
+    per_term = prep.phrase_entries(rows, r.mode)
+
+    def kernel():
+        inner = _phrase_kernel(r.avgdl, r.n_docs, r.tomb)
+
+        def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            hits = inner(key, pdf)
+            if len(hits) == 0:
+                return pd.DataFrame({"query_id": pd.Series([], dtype=object),
+                                     "n": pd.Series([], dtype="int64")})
+            g = hits.groupby("query_id", as_index=False).size()
+            return g.rename(columns={"size": "n"})
+
+        return run
+
+    per_shard = scatter(r, per_term, prep.PHRASE_FIELDS, kernel,
+                        "query_id string, n long", cols=POS_COLS)
+    if per_shard is None:
         return spark.createDataFrame([], "query_id string, n long")
-    qmap = prep.qmap_df(spark, per_term, prep.PHRASE_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    inner = _phrase_kernel(
-        stats["avgdl"], stats["n_docs"],
-        tomb=tombstones.load_tombstones(spark, index_dir),
-    )
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        hits = inner(key, pdf)
-        if len(hits) == 0:
-            return pd.DataFrame({"query_id": pd.Series([], dtype=object),
-                                 "n": pd.Series([], dtype="int64")})
-        g = hits.groupby("query_id", as_index=False).size()
-        return g.rename(columns={"size": "n"})
-
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        run, schema="query_id string, n long"
-    )
     return per_shard.groupBy("query_id").agg(F.sum("n").alias("n"))
 
 
@@ -145,10 +118,9 @@ def suggest_phrases(
     per-token correction fan-out, `max_variants` the total
     (deterministic order: fewer errors first, then left-to-right
     best-candidate-first)."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    n_docs = float(stats["n_docs"])
-    tokens = tokenize(text, mode=mode)
+    r = IndexReader(spark, index_dir)
+    n_docs = float(r.n_docs)
+    tokens = tokenize(text, mode=r.mode)
     if not tokens:
         return []
 
@@ -162,15 +134,13 @@ def suggest_phrases(
     ).collect()
     cands: dict[str, list[str]] = {}
     df_term: dict[str, float] = {}
-    for r in cand_rows:
-        cands.setdefault(r["token"], []).append(r["suggestion"])
-        df_term[r["suggestion"]] = float(r["df"])
+    for row in cand_rows:
+        cands.setdefault(row["token"], []).append(row["suggestion"])
+        df_term[row["suggestion"]] = float(row["df"])
     # unigram df for the input's own tokens (suggest_terms excludes
     # the identity match): one In-probe of the term-sorted dictionary
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    for r in d.filter(F.col("term").isin(list(set(tokens)))) \
-            .select("term", "df").collect():
-        df_term[r["term"]] = float(r["df"])
+    for row in r.dict_slice(list(set(tokens))).select("term", "df").collect():
+        df_term[row["term"]] = float(row["df"])
 
     # enumerate variants: <= max_errors substitutions, deterministic
     variants: list[tuple[str, ...]] = []
@@ -211,8 +181,8 @@ def suggest_phrases(
             "query_id string, query_text string",
         )
         got = {
-            r["query_id"]: float(r["n"])
-            for r in count_phrase_matches(spark, index_dir, qdf).collect()
+            row["query_id"]: float(row["n"])
+            for row in count_phrase_matches(spark, index_dir, qdf).collect()
         }
         for i, pair in enumerate(bigrams):
             big_df[pair] = got.get(f"b{i}", 0.0)

@@ -33,22 +33,14 @@ to decode.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.reader import POS_COLS, IndexReader
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import (
-    _KERNEL_OUT,
-    _decode_term_runs,
-    _pruned_runs,
-    load_stats,
-)
+from data_prepper_spark.query.engine import _Hits, _ShardTerms, gather, scatter
 
 __all__ = ["span_near_topk"]
 
@@ -123,21 +115,11 @@ def _min_window_ordered(seqs: list[np.ndarray]) -> int:
 
 
 def _span_kernel(avgdl: float, n_docs: int, tomb=None):
-    from data_prepper_spark.index import codec
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        groups: dict[str, pd.DataFrame] = {}
-        dfs: dict[str, int] = {}
-        idfs: dict[str, float] = {}
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = _ShardTerms(pdf, n_docs, tomb, positions=True)
         queries: dict[str, dict] = {}
-        block_cache: dict = {}
-        for term, tg in pdf.groupby("term", sort=True):
-            df_t = int(tg["df"].iloc[0])
-            dfs[term] = df_t
-            idfs[term] = float(
-                np.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5)))
-            groups[term] = tg.sort_values(["seg", "block_ord"])
-            for q in tg["queries"].iloc[0]:
+        for term, qs in shard.entries.items():
+            for q in qs:
                 ent = queries.setdefault(
                     q["query_id"],
                     {"k": int(q["k"]), "n_terms": int(q["n_terms"]),
@@ -146,34 +128,17 @@ def _span_kernel(avgdl: float, n_docs: int, tomb=None):
                 )
                 ent["clauses"].append((int(q["ord"]), term))
 
-        out_q, out_d, out_s = [], [], []
+        out = _Hits()
         for qid, ent in queries.items():
             if len(ent["clauses"]) < ent["n_terms"]:
                 continue  # some clause term absent from this shard
             terms_in_order = [t for _, t in sorted(ent["clauses"])]
-            # candidate docs contain ALL clause terms: rarest-df-first
-            # intersection with block-range pruning (phrase plan)
+            # candidate docs contain ALL clause terms (phrase plan)
             decoded: dict[str, dict] = {}
-            cand = None
-            for t in sorted(terms_in_order, key=lambda t: (dfs[t], t)):
-                if cand is None:
-                    runs = _decode_term_runs(
-                        groups[t], tomb, True, block_cache, t)
-                else:
-                    runs = _pruned_runs(
-                        groups[t], cand, tomb, True, block_cache, t)
-                if runs is None or not len(runs["docs"]):
-                    cand = np.empty(0, np.int64)
-                    break
-                decoded[t] = runs
-                cand = runs["docs"] if cand is None else np.intersect1d(
-                    cand, runs["docs"], assume_unique=True)
-                if not len(cand):
-                    break
-            if cand is None or not len(cand):
+            cand = shard.conjunction(terms_in_order, decoded)
+            if not len(cand):
                 continue
-            n = ent["n_terms"]
-            width_cap = ent["slop"] + n
+            width_cap = ent["slop"] + ent["n_terms"]
             fn = (_min_window_ordered if ent["in_order"]
                   else _min_window_unordered)
             matched = []
@@ -185,27 +150,11 @@ def _span_kernel(avgdl: float, n_docs: int, tomb=None):
                     seqs.append(d["pos"][d["occ"][pi]:d["occ"][pi + 1]])
                 if fn(seqs) <= width_cap:
                     matched.append(doc)
-            if not matched:
-                continue
             matched = np.asarray(matched, dtype=np.int64)
-            scores = np.zeros(len(matched), dtype=np.float64)
-            for t in sorted(set(terms_in_order)):
-                d = decoded[t]
-                mi = np.searchsorted(d["docs"], matched)
-                scores += idfs[t] * codec.bm25_partial(
-                    d["tfs"][mi], d["dls"][mi], avgdl)
-            k = ent["k"]
-            if len(matched) > k:
-                kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-                keep = np.flatnonzero(scores >= kth)
-                keep = keep[np.lexsort((matched[keep], -scores[keep]))][:k]
-            else:
-                keep = np.lexsort((matched, -scores))
-            out_q += [qid] * len(keep)
-            out_d += list(matched[keep])
-            out_s += list(scores[keep])
-        return pd.DataFrame(
-            {"query_id": out_q, "doc_id": out_d, "score": out_s})
+            out.topk(qid, matched,
+                     shard.bm25(matched, terms_in_order, decoded, avgdl),
+                     ent["k"])
+        return out.frame()
 
     return run
 
@@ -217,50 +166,10 @@ def span_near_topk(
 ) -> DataFrame:
     """queries(query_id, query_text, slop, in_order, k) ->
     (query_id, rank, doc_id, score). See module docstring."""
-    from data_prepper_spark.query.exchange import spread_by_shard
-
-    stats = load_stats(index_dir)
-    if not stats.get("positions", False):
-        raise ValueError(
-            f"index at {index_dir} was built without positions "
-            "(store_positions=False) — cannot serve span_near"
-        )
-    mode = stats.get("tokenizer", "ascii")
-    per_term = _span_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double")
-    qmap = prep.qmap_df(spark, per_term, SPAN_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _span_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(
-            F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    r = IndexReader(spark, index_dir)
+    r.require_positions("serve span_near")
+    per_term = _span_entries(prep.collect_rows(queries), r.mode)
+    return gather(scatter(
+        r, per_term, SPAN_FIELDS,
+        lambda: _span_kernel(r.avgdl, r.n_docs, r.tomb), cols=POS_COLS,
+    ), queries)

@@ -107,3 +107,14 @@ def test_semdedup_and_pq_cli(spark, tmp_path, capsys):
     assert rc == 0
     lines = capsys.readouterr().out.strip().splitlines()
     assert len([l for l in lines if l.startswith("{")]) == 3
+
+
+def test_pq_query_without_queries_or_vector_is_usage_error(tmp_path, capsys):
+    """pq-query needs a query: with neither --queries nor --vector it
+    exits through argparse (status 2) before touching the index."""
+    from data_prepper_spark import cli
+
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["pq-query", "--index", str(tmp_path / "pq")])
+    assert exc.value.code == 2
+    assert "--queries" in capsys.readouterr().err

@@ -99,6 +99,25 @@ def test_topk_partition_invariant(spark, corpus):
     assert sorted(map(key, a)) == sorted(map(key, b))
 
 
+
+def test_topk_partition_cut_uses_rounded_scores(spark):
+    """Two ids whose ADC scores tie at the 6 reported decimals and
+    differ in the 7th: the per-partition cut must rank them like the
+    global merge (score rounded, then id asc), or the answer depends
+    on how the codes are partitioned."""
+    books = np.array([[[0.50000004, 0.0], [0.50000001, 0.0]]])
+    codes = spark.createDataFrame(
+        [(1, [1]), (2, [0])], "vec_id long, codes array<int>")
+    q = spark.createDataFrame(
+        [("q0", [1.0, 0.0])], "query_id string, embedding array<double>")
+    got = [
+        [(r["vec_id"], r["adc_score"])
+         for r in pq_topk(parts, q, books, k=1).collect()]
+        for parts in (codes.repartition(1),
+                      codes.repartitionByRange(2, "vec_id"))
+    ]
+    assert got == [[(1, 0.5)], [(1, 0.5)]]
+
 def test_compression_is_m_codes(spark, corpus):
     _, df = corpus
     books = pq_train(df, m=4, ksub=16, seed=7)
