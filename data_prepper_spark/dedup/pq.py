@@ -51,8 +51,8 @@ def pq_fit(
     """-> codebooks (m, ksub, dsub): per-subspace Lloyd k-means on a
     (by default normalized) training sample. Deterministic: seeded
     init (distinct rows chosen by a seeded permutation), fixed
-    iteration count, empty clusters re-seeded from the farthest
-    points. `normalize=False` for residual training (ivfpq_topk):
+    iteration count, each empty cluster re-seeded from a distinct
+    farthest point. `normalize=False` for residual training (ivfpq_topk):
     residuals are differences of unit vectors and must NOT be
     re-normalized."""
     X = np.asarray(sample, dtype=np.float64)
@@ -71,12 +71,12 @@ def pq_fit(
         for _ in range(iters):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(-1)
             a = d2.argmin(1)
+            # dead centroids re-seed from distinct worst-fit points,
+            # worst first: one shared point would keep them redundant
+            worst = iter(np.argsort(-d2[np.arange(n), a], kind="stable"))
             for c in range(ksub):
                 mask = a == c
-                if mask.any():
-                    C[c] = Xs[mask].mean(0)
-                else:  # re-seed dead centroid from the worst-fit point
-                    C[c] = Xs[d2[np.arange(n), a].argmax()]
+                C[c] = Xs[mask].mean(0) if mask.any() else Xs[next(worst)]
         books[j] = C
     return books
 

@@ -113,3 +113,16 @@ def publish_dir(
     legacy = os.path.join(index_dir, name)
     shutil.rmtree(legacy, ignore_errors=True)
     return new
+
+
+def read_table(path: str, columns: list[str], filters: list | None = None):
+    """A small artifact (dictionary slice, tombstones) read on the
+    driver with pyarrow through the filesystem its URI names — local
+    paths, s3://, hdfs:// alike — so it costs no Spark job. Spark's
+    marker files (_SUCCESS, .crc) are skipped."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, p = pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path))
+    return pq.read_table(p, columns=columns, filters=filters, filesystem=fs)

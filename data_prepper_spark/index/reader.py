@@ -6,15 +6,16 @@ per call and takes the index state from it:
 
 - eagerly: ``stats.json`` (corpus statistics n_docs / avgdl, the
   tokenizer mode, the shard count), and the values derived from it;
-- lazily, on first use: the tombstones (the only state that needs a
-  Spark read), the decode-cache namespace that pins them, the blocks
-  DataFrame with its single pre-segment ``seg`` fallback, the
-  dictionary and its slice for a term list.
+- lazily, on first use: the tombstones, the decode-cache namespace
+  that pins them, the blocks and the dictionary DataFrames, and the
+  dictionary slice (``df_slice``) of a term list.
 
-The reader runs no Spark action of its own: reading the tombstones is
-the one action a query already paid for, and it happens only when a
-kernel asks for them. A reader is not cached across calls — an index
-rebuilt or mutated in place would be served stale.
+The reader runs no Spark job of its own: the blocks scan carries an
+explicit schema (a pre-segment index's null ``seg`` reads as 0), and
+the driver-small tombstones and dictionary slice are read on the
+driver with pyarrow (``layout.read_table``). A reader is not cached
+across calls — an index rebuilt or mutated in place would be served
+stale.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index.build import BLOCK_SCHEMA
 
 
 # blocks-table projections, one per kernel family: explicit, so the
@@ -86,16 +88,20 @@ class IndexReader:
 
     @cached_property
     def blocks(self) -> DataFrame:
-        blocks = self.spark.read.parquet(
-            layout.resolve(self.index_dir, "blocks"))
-        if "seg" not in blocks.columns:  # pre-segment index layout
-            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-        return blocks
+        return self.spark.read.schema(BLOCK_SCHEMA).parquet(
+            layout.resolve(self.index_dir, "blocks"),
+        ).withColumn("seg", F.coalesce("seg", F.lit(0).cast("long")))
 
     @cached_property
     def dictionary(self) -> DataFrame:
         return self.spark.read.parquet(
             layout.resolve(self.index_dir, "dictionary"))
 
-    def dict_slice(self, terms: list[str]) -> DataFrame:
-        return self.dictionary.filter(F.col("term").isin(terms))
+    def df_slice(self, terms: list[str]) -> dict[str, int]:
+        """{term: global df} for the terms the dictionary holds."""
+        if not terms:
+            return {}
+        t = layout.read_table(layout.resolve(self.index_dir, "dictionary"),
+                              ["term", "df"], [("term", "in", list(terms))])
+        return dict(zip(t.column("term").to_pylist(),
+                        t.column("df").to_pylist()))

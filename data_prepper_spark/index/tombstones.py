@@ -264,18 +264,16 @@ class Tombstones:
 
 def load_tombstones(spark, index_dir: str) -> Tombstones | None:
     """-> Tombstones or None. The set is driver-small by construction
-    (one row per delete-call interval)."""
+    (one row per delete-call interval), so it is read on the driver
+    (layout.read_table): no Spark job."""
     path = _tomb_path(index_dir)
     if "://" not in index_dir and not os.path.exists(path):
         return None
-    pdf = spark.read.parquet(path).toPandas()
-    if not len(pdf):
+    t = layout.read_table(path, ["start", "end", "upto_seg"])
+    if not t.num_rows:
         return None
-    return Tombstones(
-        pdf["start"].to_numpy(np.int64),
-        pdf["end"].to_numpy(np.int64),
-        pdf["upto_seg"].to_numpy(np.int64),
-    )
+    return Tombstones(*(t.column(c).to_numpy().astype(np.int64)
+                        for c in ("start", "end", "upto_seg")))
 
 
 def deleted_mask(docs: np.ndarray, ranges) -> np.ndarray:

@@ -4,37 +4,40 @@ Every query over the index runs ONE plan — OpenSearch's
 dfs_query_then_fetch, rebuilt on Spark — as reader -> scatter ->
 kernel -> gather:
 
-    IndexReader(index_dir)         stats.json, tombstones, decode-cache
-      |                            namespace (index/reader.py)
+    IndexReader(index_dir)         stats.json; tombstones and the
+      |                            query terms' dictionary slice, read
+      |                            on the driver (index/reader.py)
     scatter(reader, per_term, kernel)
       |> blocks.select(<the kernel's streams>)   <- ReadSchema pruning:
       |                                            positions only for
       |                                            kernels that read them
-      |> filter term IN query_terms  <- pushed to the parquet scan:
-      |                                 partition pruning is free,
-      |                                 row-group pruning via the term
-      |                                 sort order
-      |> broadcast-join the tiny qmap (term -> interested queries) and
-      |  the dictionary slice (GLOBAL df of the query terms)
+      |> filter term IN known query terms  <- pushed to the parquet
+      |                                       scan: row-group pruning
+      |                                       via the term sort order
       |> spread_by_shard |> groupBy(shard).applyInPandas(kernel)
       |                     (.cogroup(right) for a filter context)
-    kernel, per shard (numpy)      idf from the global df (_idf), exact
+    kernel, per shard (numpy)      the qmap (term -> interested queries)
+      |                            and the GLOBAL df ride the kernel as
+      |                            closure constants; idf (_idf), exact
       |                            per-shard top-k (_Hits.topk)
-    gather                         global top-k per query: a Window over
-                                   the small per-shard top-ks,
-                                   (score desc, doc_id asc)
+    gather                         global top-k per query: the small
+                                   per-shard top-ks collected and ranked
+                                   on the driver, (score desc, doc_id
+                                   asc), returned as a LocalRelation
 
-The pruned slice crosses exactly one exchange into the kernels; the
-gather's window sees at most k x shards rows per query. No stage ever
-materializes a full per-term posting list; the widest data in flight
-is `sum over query terms of their block rows in one shard`. idf uses
-the GLOBAL dictionary (df summed across shards) so scores are
-identical to a single-node oracle — the dfs_query_then_fetch contract.
+A driver-literal request is one pruned scan, one exchange and the
+kernel, all run inside the call. Batches above
+prep.PREP_DISTRIBUTED_THRESHOLD shuffle-join the qmap and dictionary on
+term and rank in a Window instead. No stage materializes a full
+per-term posting list. idf uses the GLOBAL df (summed across shards),
+so scores are identical to a single-node oracle — the
+dfs_query_then_fetch contract.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 from typing import Callable
 
 import numpy as np
@@ -122,9 +125,8 @@ def scatter(
     kernel: Callable[[], Callable],
     schema: str = _KERNEL_OUT,
     cols: tuple = SCORE_COLS,
-    dictionary: bool | DataFrame = True,
+    dictionary: bool | dict[str, int] = True,
     right: Callable[[], DataFrame] | None = None,
-    qmap: DataFrame | None = None,
 ) -> DataFrame | None:
     """The scatter half of every query over the index (module
     docstring): pruned block scan -> one exchange -> per-shard kernel.
@@ -132,74 +134,113 @@ def scatter(
     - reader: one index, or {field: reader} whose pruned scans (tagged
       with a `field` column) union before the one exchange;
     - per_term: query prep, query/prep.py (term -> entries with struct
-      `fields`); the sorted terms are pushed as `term IN (...)` into the
-      blocks and dictionary scans and the entries broadcast as the
-      qmap. A DataFrame is a distributed qmap instead (batches above
-      prep.PREP_DISTRIBUTED_THRESHOLD): shuffle-joined on term, no
-      In-list;
+      `fields`). The entries and the terms' global df ride the kernel
+      as closure constants; the known terms are pushed as `term IN
+      (...)` into the blocks scan. A DataFrame is a distributed qmap
+      instead (batches above prep.PREP_DISTRIBUTED_THRESHOLD): it and
+      the dictionary are shuffle-joined on term;
     - kernel / right: factories, called only when there is something to
-      scan (the kernel factory is what reads the tombstones); right's
-      rows are cogrouped with the blocks by shard (filter context);
-    - dictionary: True joins each reader's global df, False skips it
-      (kernels that need no idf), a DataFrame replaces it (alias search
-      over the union statistics of several indexes);
-    - qmap: per_term's qmap, prebuilt by a caller running one scatter
-      per index (alias search) so that all of them reuse one broadcast.
+      scan; right's rows are cogrouped with the blocks by shard;
+    - dictionary: True gives each reader's global df, False none, a
+      {term: df} dict replaces it (alias search's union statistics).
 
-    Returns None when no query has a term or no index has blocks."""
+    Returns None when no index has blocks or no query term is known."""
     readers = reader if isinstance(reader, dict) else {None: reader}
     readers = {tag: r for tag, r in readers.items() if not r.empty}
     distributed = isinstance(per_term, DataFrame)
     if not readers or not (distributed or per_term):
         return None
-    if distributed:
-        qmap, terms = per_term, None
-    else:
-        terms = sorted(per_term)
-        if qmap is None:
-            spark = next(iter(readers.values())).spark
-            qmap = prep.qmap_df(spark, per_term, fields)
-        qmap = F.broadcast(qmap)
-    needed = None
+    dfs, parts = {}, []
     for tag, r in readers.items():
         part = r.blocks.select(*cols)
-        if terms is not None:
+        if distributed:
+            part = part.join(per_term, "term")
+            if dictionary:
+                part = part.join(r.dictionary, "term")
+        else:
+            if dictionary is True:
+                dfs[tag] = r.df_slice(sorted(per_term))
+            elif dictionary is not False:
+                dfs[tag] = dictionary
+            terms = sorted(dfs.get(tag, per_term))
+            if not terms:
+                continue
             part = part.filter(F.col("term").isin(terms))
-        part = part.join(qmap, "term")
-        if isinstance(dictionary, DataFrame):
-            part = part.join(F.broadcast(dictionary), "term")
-        elif dictionary:
-            part = part.join(
-                r.dictionary if distributed
-                else F.broadcast(r.dict_slice(terms)), "term")
         if tag is not None:
             part = part.withColumn("field", F.lit(tag))
-        needed = part if needed is None else needed.unionByName(part)
-    grouped = spread_by_shard(needed).groupBy("shard")
+        parts.append(part)
+    if not parts:
+        return None
+    run = kernel() if distributed else _with_constants(
+        kernel(), per_term, fields, dfs or None, cogroup=right is not None)
+    grouped = spread_by_shard(reduce(DataFrame.unionByName, parts)) \
+        .groupBy("shard")
     if right is not None:
         grouped = grouped.cogroup(spread_by_shard(right()).groupBy("shard"))
-    return grouped.applyInPandas(kernel(), schema=schema)
+    return grouped.applyInPandas(run, schema=schema)
+
+
+def _with_constants(run: Callable, per_term: dict[str, list[tuple]],
+                    fields: str, dfs: dict | None, cogroup: bool) -> Callable:
+    """`run` fed the `queries` and `df` columns the distributed path
+    joins in, from closure constants: kernels read the same rows."""
+    names = [f.split(":", 1)[0] for f in fields.split(",")]
+    entries = {t: [dict(zip(names, e)) for e in es]
+               for t, es in per_term.items()}
+
+    def add(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.assign(queries=[entries[t] for t in pdf["term"]])
+        if dfs is not None:
+            tags = pdf["field"] if "field" in pdf else [None] * len(pdf)
+            pdf["df"] = [dfs[f][t] for f, t in zip(tags, pdf["term"])]
+        return pdf
+
+    if cogroup:
+        def run_cogroup(key: tuple, left: pd.DataFrame,
+                        right: pd.DataFrame) -> pd.DataFrame:
+            return run(key, add(left), right)
+        return run_cogroup
+
+    def run_grouped(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return run(key, add(pdf))
+    return run_grouped
 
 
 def gather(
-    per_shard: DataFrame | None, queries: DataFrame,
-    cols: tuple = _TOPK_COLS, tie: tuple = (), broadcast: bool = True,
+    per_shard: DataFrame | None, queries: list[dict] | DataFrame,
+    cols: tuple = _TOPK_COLS, tie: tuple = (),
 ) -> DataFrame:
     """The gather half: each query's global top-k over the per-shard
-    winners, ranked (score desc, doc_id asc, *tie); the empty answer
-    when the scatter had nothing to scan."""
+    winners, ranked (score desc, doc_id asc, *tie asc); the empty
+    answer when the scatter had nothing to scan.
+
+    Driver-literal queries (the rows prep collected) merge on the
+    driver: the per-shard top-ks (at most k x shards rows per query)
+    are ranked in pandas and returned as a LocalRelation, which the
+    caller collects with no job. A queries DataFrame (a distributed
+    batch) merges in a Window."""
+    schema = ", ".join(f"{c} {_TYPES[c]}" for c in cols)
+    spark = SparkSession.active()
+    # limit(0) plans as an empty LocalRelation: collecting it runs no job
+    empty = spark.createDataFrame([], schema).limit(0)
     if per_shard is None:
-        return queries.sparkSession.createDataFrame(
-            [], ", ".join(f"{c} {_TYPES[c]}" for c in cols))
-    qk = queries.select("query_id", "k")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"), *tie)
-    return (
-        per_shard.join(F.broadcast(qk) if broadcast else qk, "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select(*cols)
-    )
+        return empty
+    if isinstance(queries, DataFrame):
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("score"), F.asc("doc_id"), *map(F.asc, tie))
+        return (
+            per_shard.join(queries.select("query_id", "k"), "query_id")
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= F.col("k"))
+            .select(*cols)
+        )
+    ks = {q["query_id"]: int(q["k"]) for q in queries}
+    pdf = per_shard.toPandas().sort_values(
+        ["query_id", "score", "doc_id", *tie],
+        ascending=[True, False, True, *[True] * len(tie)], kind="stable")
+    pdf["rank"] = pdf.groupby("query_id").cumcount() + 1
+    pdf = pdf[pdf["rank"] <= pdf["query_id"].map(ks)]
+    return spark.createDataFrame(pdf[list(cols)], schema) if len(pdf) else empty
 
 
 # ------------------------------------------------------- kernel helpers
@@ -426,20 +467,11 @@ def _shard_kernel(
                 }
                 term_segs.setdefault(term, []).append((term, int(seg)))
             for q in tg["queries"].iloc[0]:
-                qid, k = q["query_id"], int(q["k"])
-                a_s = q.get("after_score") if hasattr(q, "get") else q["after_score"]
-                after = (
-                    (float(a_s), int(q["after_doc"]))
-                    if a_s is not None and not pd.isna(a_s) else None
-                )
-                # optional per-(query, term) boost (absent in the bool/
-                # phrase/multi qmaps -> 1.0)
-                try:
-                    bst = q.get("boost") if hasattr(q, "get") else q["boost"]
-                except (KeyError, ValueError):
-                    bst = None
-                bst = 1.0 if bst is None or pd.isna(bst) else float(bst)
-                queries.setdefault(qid, [k, [], after])[1].append((term, bst))
+                a_s = q["after_score"]
+                after = (float(a_s), int(q["after_doc"])) if pd.notna(a_s) \
+                    else None
+                queries.setdefault(q["query_id"], [int(q["k"]), [], after])[1] \
+                    .append((term, float(q["boost"])))
 
         out = _Hits()
         for qid, (k, terms, after) in queries.items():
@@ -521,23 +553,23 @@ def score_topk(
               F.lit(None).cast("long").alias("after_doc")]
     )
     queries = queries.select("query_id", "query_text", "k", *cursor_cols)
-    # interactive batches (<= threshold) prep in pure Python and push
-    # the term set as an In-filter; LARGE batches (batch scoring) prep
-    # distributedly (prep.qmap_df_dist) and join on term instead — the
-    # one take() probe is the only driver materialization either way
-    head = queries.take(prep.PREP_DISTRIBUTED_THRESHOLD + 1)
-    distributed = len(head) > prep.PREP_DISTRIBUTED_THRESHOLD
-    per_term = (
-        prep.qmap_df_dist(spark, queries, "score", r.mode) if distributed
-        else prep.score_entries([x.asDict() for x in head], r.mode)
-    )
+    # interactive batches (<= threshold) prep in pure Python, scatter
+    # with closure constants and merge on the driver; LARGE batches
+    # (batch scoring) prep distributedly (prep.qmap_df_dist), join on
+    # term and merge in a Window instead. One single-task take() is the
+    # only driver materialization either way
+    head = queries.coalesce(1).take(prep.PREP_DISTRIBUTED_THRESHOLD + 1)
+    if len(head) > prep.PREP_DISTRIBUTED_THRESHOLD:
+        per_term = prep.qmap_df_dist(spark, queries, "score", r.mode)
+    else:
+        queries = [x.asDict() for x in head]
+        per_term = prep.score_entries(queries, r.mode)
     per_shard = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
         r.avgdl, r.n_docs, algo, r.ub_scale, r.cache_ns, r.tomb,
         collapse_stride=stride if collapse else None,
     ))
-    # rank-join side: forced broadcast only for driver-scale batches
     if not collapse:
-        return gather(per_shard, queries, broadcast=not distributed)
+        return gather(per_shard, queries)
     if per_shard is not None:
         # cross-shard merge of per-shard collapsed top-k: a group's
         # global best is the max over shards of its per-shard best
@@ -555,8 +587,7 @@ def score_topk(
                     F.col("b.score").alias("score"))
         )
     return gather(per_shard, queries,
-                  ("query_id", "rank", "conv", "doc_id", "score"),
-                  broadcast=not distributed)
+                  ("query_id", "rank", "conv", "doc_id", "score"))
 
 
 def match_scores(
@@ -573,13 +604,9 @@ def match_scores(
     emitted once per shard and never truncated, so downstream
     aggregates are exact without any per-shard k heuristic."""
     r = IndexReader(spark, index_dir)
-    queries = queries.select(
-        "query_id", "query_text", F.lit(0).alias("k"),
-        F.lit(None).cast("double").alias("after_score"),
-        F.lit(None).cast("long").alias("after_doc"),
-    )
     per_term = prep.score_entries(
-        [x.asDict() for x in queries.collect()], r.mode)
+        [dict(x, k=0) for x in prep.collect_rows(
+            queries, "query_id", "query_text")], r.mode)
     out = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
         r.avgdl, r.n_docs, "all", r.ub_scale, r.cache_ns, r.tomb))
     return out if out is not None else spark.createDataFrame([], _KERNEL_OUT)
@@ -705,7 +732,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
                 ent = queries.setdefault(
                     q["query_id"],
                     {"k": int(q["k"]), "n_terms": int(q["n_terms"]),
-                     "slop": int(q["slop"]) if "slop" in q else 0,
+                     "slop": int(q["slop"]),
                      "constraints": []},
                 )
                 for off in q["offsets"]:
@@ -781,11 +808,11 @@ def phrase_topk(
     column."""
     r = IndexReader(spark, index_dir)
     r.require_positions("serve match_phrase")
-    per_term = prep.phrase_entries(prep.collect_rows(queries), r.mode)
+    rows = prep.collect_rows(queries)
     return gather(scatter(
-        r, per_term, prep.PHRASE_FIELDS,
+        r, prep.phrase_entries(rows, r.mode), prep.PHRASE_FIELDS,
         lambda: _phrase_kernel(r.avgdl, r.n_docs, r.tomb), cols=POS_COLS,
-    ), queries)
+    ), rows)
 
 
 # ----------------------------------------------------------- bool query
@@ -812,13 +839,13 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:
-                nb = q.get("neg_boost") if hasattr(q, "get") else None
+                nb = q["neg_boost"]
                 ent = queries.setdefault(
                     q["query_id"],
                     {"k": int(q["k"]), "msm": int(q["msm"]),
                      "n_must": int(q["n_must"]),
-                     "n_groups": int(q["n_groups"]) if "n_groups" in q else 0,
-                     "neg_boost": (float(nb) if nb is not None else None),
+                     "n_groups": int(q["n_groups"]),
+                     "neg_boost": float(nb) if pd.notna(nb) else None,
                      "must": set(), "should": set(), "must_not": set(),
                      "negative": set(), "groups": {}},
                 )
@@ -976,11 +1003,11 @@ def bool_topk(
     # side — bool queries are driver-literal in every caller, and the
     # retired SQL prep here cost THREE blocking jobs per call
     # (prep.bool_entries; conjunctive OR-groups ride `must_groups`)
-    per_term = prep.bool_entries(prep.collect_rows(queries), r.mode)
+    rows = prep.collect_rows(queries)
     return gather(scatter(
-        r, per_term, prep.BOOL_FIELDS,
+        r, prep.bool_entries(rows, r.mode), prep.BOOL_FIELDS,
         lambda: _bool_kernel(r.avgdl, r.n_docs, r.tomb), cols=MATCH_COLS,
-    ), queries)
+    ), rows)
 
 
 def boosting_topk(
@@ -1232,15 +1259,14 @@ def _filtered_topk(spark, index_dir, queries, allowed, boost_mode):
     """filtered_topk / function_score_topk: the score_topk
     scatter-gather, cogrouped by shard with the allowed corpus rows."""
     r = IndexReader(spark, index_dir)
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), r.mode)
+    rows = prep.collect_rows(queries, "query_id", "query_text", "k")
     carry = ("factor",) if boost_mode else ()
     return gather(scatter(
-        r, per_term, prep.SIMPLE_FIELDS,
+        r, prep.simple_entries(rows, r.mode), prep.SIMPLE_FIELDS,
         lambda: _filtered_kernel(r.avgdl, r.n_docs, r.tomb, boost_mode),
         cols=MATCH_COLS,
         right=lambda: sharded_docs(spark, index_dir, allowed, r.stats, carry),
-    ), queries)
+    ), rows)
 
 
 def filtered_topk_multi(
@@ -1273,8 +1299,4 @@ def filtered_topk_multi(
             else filtered_topk(spark, index_dir, qdf, docs, filt)
         )
         out = part if out is None else out.unionByName(part)
-    if out is None:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    return out
+    return out if out is not None else gather(None, [])

@@ -114,14 +114,10 @@ def explain_topk(
 ) -> DataFrame:
     """Run the query, then explain every hit: score_topk's
     (query_id, rank, doc_id, score) joined with the per-term breakdown."""
+    # score_topk merges on the driver: hits is already materialized
     hits = engine.score_topk(spark, index_dir, queries, algo=algo)
-    hits_small = hits.select("query_id", "rank", "doc_id", "score")
-    hits_small.persist()
-    try:
-        parts = explain_hits(spark, index_dir, queries, hits_small)
-        return (
-            hits_small.join(parts, ["query_id", "doc_id"])
-            .orderBy("query_id", "rank", "term")
-        )
-    finally:
-        pass  # caller's action unpersists lazily; tiny df
+    parts = explain_hits(spark, index_dir, queries, hits)
+    return (
+        hits.join(parts, ["query_id", "doc_id"])
+        .orderBy("query_id", "rank", "term")
+    )

@@ -10,7 +10,7 @@ corpus as one index (verified by `tests/test_multi_index.py`).
 
 How the statistics stay exact:
 - n_docs and df(term) are summed across indexes (the dictionary slices
-  for the query terms union + re-aggregate — driver-tiny);
+  for the query terms, read and summed on the driver);
 - avgdl is the doc-weighted mean of the per-index avgdls;
 - per-block max_partial metadata was computed with each INDEX's avgdl;
   scoring with the union avgdl can only RAISE a tf-partial by up to
@@ -66,18 +66,16 @@ def multi_index_topk(
 
     # driver-side prep (query/prep.py) — score_entries, so query-time
     # term boosts ('error^2') work identically on alias search
-    per_term = prep.score_entries(
-        prep.collect_rows(queries.select("query_id", "query_text", "k")),
-        mode,
-    )
-    if not per_term:
-        return gather(None, queries, cols)
+    rows = prep.collect_rows(queries, "query_id", "query_text", "k")
+    per_term = prep.score_entries(rows, mode)
 
-    # union df across member dictionaries (driver-known term set -> the
-    # slices are tiny; re-aggregated df feeds the kernel's idf)
-    dict_union = reduce(DataFrame.unionByName, [
-        r.dict_slice(sorted(per_term)).select("term", "df") for r in readers
-    ]).groupBy("term").agg(F.sum("df").alias("df"))
+    # union df across member dictionaries: each slice is read on the
+    # driver (the query terms only) and the dfs summed for the idf
+    dfs: dict[str, int] = {}
+    for r in readers:
+        if not r.empty:
+            for t, df in r.df_slice(sorted(per_term)).items():
+                dfs[t] = dfs.get(t, 0) + df
 
     # conservative upper-bound scale: avgdl drift within each member
     # (incremental builds) AND the union-avgdl uplift
@@ -85,9 +83,7 @@ def multi_index_topk(
                    for r in readers)
 
     # one kernel pass per member index: shard keys stay per-index
-    # (same exchange class as score_topk), union stats injected; one
-    # qmap, so every member's join reuses its broadcast
-    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
+    # (same exchange class as score_topk), union stats injected
     per_index = []
     for i, r in enumerate(readers):
         res = scatter(
@@ -95,9 +91,9 @@ def multi_index_topk(
                 avgdl, n_docs, algo, ub_scale,
                 cache_ns=(r.cache_ns, "multi", n_docs, round(avgdl, 9)),
                 tomb=r.tomb,
-            ), dictionary=dict_union, qmap=qmap,
+            ), dictionary=dfs,
         )
         if res is not None:
             per_index.append(res.withColumn("index", F.lit(i)))
     allres = reduce(DataFrame.unionByName, per_index) if per_index else None
-    return gather(allres, queries, cols, tie=(F.asc("index"),))
+    return gather(allres, rows, cols, tie=("index",))

@@ -290,8 +290,8 @@ def multi_match_topk(
         raise ValueError(
             f"fields {unknown} not in index (has {manifest['fields']})"
         )
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), mode)
+    rows = prep.collect_rows(queries, "query_id", "query_text", "k")
+    per_term = prep.simple_entries(rows, mode)
     readers = {f: IndexReader(spark, os.path.join(index_dir, "fields", f))
                for f, _ in specs}
 
@@ -305,12 +305,10 @@ def multi_match_topk(
         blend: dict[str, tuple] = {}
         if mm_type == "cross_fields":
             for f, r in readers.items():
-                for row in r.dict_slice(sorted(per_term)).groupBy("term") \
-                        .agg(F.sum("df").alias("df")).collect():
-                    cur = blend.get(row["term"], (0, 0))
-                    blend[row["term"]] = (max(cur[0], int(row["df"])),
-                                          max(cur[1], int(r.n_docs)))
+                for t, df in r.df_slice(sorted(per_term)).items():
+                    cur = blend.get(t, (0, 0))
+                    blend[t] = (max(cur[0], df), max(cur[1], int(r.n_docs)))
         return _mm_kernel(field_conf, mm_type, float(tie_breaker), blend)
 
     return gather(scatter(readers, per_term, prep.SIMPLE_FIELDS, kernel),
-                  queries)
+                  rows)

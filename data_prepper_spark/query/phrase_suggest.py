@@ -22,13 +22,13 @@ our own index with zero extra stored state:
   disables the gate) — the same "must beat the input by a margin"
   contract.
 
-Scale shape: two bounded Spark jobs per call — one dictionary scan
-(the batched term suggester + unigram df probe; term-sorted parquet,
-prefix/In pushdown) and ONE phrase-kernel scatter counting every
-needed bigram in a single batch (pruned posting decode, per-shard
-counts, sum). Candidate-phrase enumeration and scoring are
-driver-side over <= max_variants strings — the coordinator-node cost
-of the API, independent of corpus size.
+Scale shape: two bounded Spark passes per call — one dictionary scan
+(the batched term suggester; term-sorted parquet, prefix pushdown;
+the unigram df probe reads on the driver) and ONE phrase-kernel
+scatter counting every needed bigram in a single batch (pruned
+posting decode, per-shard counts, sum). Candidate-phrase enumeration
+and scoring are driver-side over <= max_variants strings — the
+coordinator-node cost of the API, independent of corpus size.
 """
 
 from __future__ import annotations
@@ -138,9 +138,9 @@ def suggest_phrases(
         cands.setdefault(row["token"], []).append(row["suggestion"])
         df_term[row["suggestion"]] = float(row["df"])
     # unigram df for the input's own tokens (suggest_terms excludes
-    # the identity match): one In-probe of the term-sorted dictionary
-    for row in r.dict_slice(list(set(tokens))).select("term", "df").collect():
-        df_term[row["term"]] = float(row["df"])
+    # the identity match): one driver-side In-probe of the dictionary
+    for t, df in r.df_slice(sorted(set(tokens))).items():
+        df_term[t] = float(df)
 
     # enumerate variants: <= max_errors substitutions, deterministic
     variants: list[tuple[str, ...]] = []

@@ -1,23 +1,16 @@
-"""Driver-side query preparation: LocalRelation qmaps.
+"""Driver-side query preparation: the per-term query map.
 
-Every query path's input is driver-literal — a handful to a few hundred
-query rows the caller just built (the reference serves search requests
-one HTTP call at a time; its opensearch source pages with PIT/scroll —
-opensearch/.../worker/PitWorker.java). Rounds 1-3 prepared them WITH
-SPARK: tokenize-in-SQL + explode + groupBy(term) + collect — three to
-four driver-blocking jobs whose inputs are a few dozen rows, each
-paying full job/shuffle fixed cost. Profiled on local[8] at sf0.01:
-4.8 s of bool_topk's 5.9 s (~80%) was this prep, not scoring. That
-cost is per-CALL driver latency — it does not shrink with more
-executors and it does not grow with corpus size; it is pure overhead
-at every scale, and it dominates interactive-latency queries.
-
-This module does the same prep in pure Python with the SAME analyzer
-(index/tokenizer.py `tokenize` — the Python/Spark-SQL/DuckDB-pinned
-chain, including '+stop'/'+stem' filters), then ships the per-term
-query map as ONE LocalRelation (`spark.createDataFrame`) the engine
-broadcasts into the block scan. Spark's first job on any query path is
-now the kernel scatter itself.
+Every interactive query path's input is driver-literal — a handful to
+a few hundred query rows the caller just built (the reference serves
+search requests one HTTP call at a time). They are prepared in pure
+Python with the SAME analyzer as the index (index/tokenizer.py
+`tokenize`, including '+stop'/'+stem' filters) into a per-term query
+map, term -> entries, which the engine's scatter hands the kernels as
+a closure constant (query/engine.py). Rounds 1-3 prepared them with
+Spark (tokenize-in-SQL + explode + groupBy + collect): three to four
+driver-blocking jobs per call, 4.8 s of bool_topk's 5.9 s on local[8]
+at sf0.01. Batches above PREP_DISTRIBUTED_THRESHOLD run the same
+builders per partition instead (qmap_df_dist).
 
 Semantics are pinned to the retired SQL prep expression-for-expression
 (boost suffix extract vs strip regexes, array_distinct max-boost dedup,
@@ -55,18 +48,6 @@ def collect_rows(queries: DataFrame, *cols: str) -> list[dict]:
     if cols:
         queries = queries.select(*cols)
     return [r.asDict() for r in queries.collect()]
-
-
-def qmap_df(
-    spark: SparkSession,
-    per_term: dict[str, list[tuple]],
-    struct_fields: str,
-) -> DataFrame:
-    """per_term -> LocalRelation (term string, queries array<struct>).
-    Term order is sorted for plan stability."""
-    schema = f"term string, queries array<struct<{struct_fields}>>"
-    data = [(t, per_term[t]) for t in sorted(per_term)]
-    return spark.createDataFrame(data, schema)
 
 
 def units_with_boost(text: str | None) -> list[tuple[str, float]]:

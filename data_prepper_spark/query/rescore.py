@@ -60,45 +60,42 @@ def rescore_topk(
     win_q = queries.select(
         "query_id", "query_text", F.lit(window_size).alias("k")
     )
+    # score_topk merges on the driver: primary is already materialized
     primary = engine.score_topk(spark, index_dir, win_q, algo=algo).select(
         "query_id", "doc_id", F.col("score").alias("primary")
     )
-    primary.persist()
-    try:
-        sec_q = queries.select(
-            "query_id", F.col("rescore_text").alias("query_text")
-        )
-        parts = explain_hits(
-            spark, index_dir, sec_q,
-            primary.select("query_id", "doc_id"),
-        )
-        secondary = parts.groupBy("query_id", "doc_id").agg(
-            F.sum("term_score").alias("secondary")
-        )
-        j = primary.join(secondary, ["query_id", "doc_id"], "left")
-        p = F.col("primary") * F.lit(float(query_weight))
-        s = F.col("secondary") * F.lit(float(rescore_query_weight))
-        combined = {
-            "total": p + s,
-            "multiply": p * s,
-            "avg": (p + s) / F.lit(2.0),
-            "max": F.greatest(p, s),
-            "min": F.least(p, s),
-        }[score_mode]
-        j = j.withColumn(
-            "score", F.when(F.col("secondary").isNull(), p).otherwise(combined)
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        kdf = queries.select("query_id", "k")
-        return (
-            j.join(F.broadcast(kdf), "query_id")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_id", "score",
-                    "primary", F.coalesce("secondary", F.lit(0.0))
-                    .alias("secondary"))
-        )
-    finally:
-        primary.unpersist()
+    sec_q = queries.select(
+        "query_id", F.col("rescore_text").alias("query_text")
+    )
+    parts = explain_hits(
+        spark, index_dir, sec_q,
+        primary.select("query_id", "doc_id"),
+    )
+    secondary = parts.groupBy("query_id", "doc_id").agg(
+        F.sum("term_score").alias("secondary")
+    )
+    j = primary.join(secondary, ["query_id", "doc_id"], "left")
+    p = F.col("primary") * F.lit(float(query_weight))
+    s = F.col("secondary") * F.lit(float(rescore_query_weight))
+    combined = {
+        "total": p + s,
+        "multiply": p * s,
+        "avg": (p + s) / F.lit(2.0),
+        "max": F.greatest(p, s),
+        "min": F.least(p, s),
+    }[score_mode]
+    j = j.withColumn(
+        "score", F.when(F.col("secondary").isNull(), p).otherwise(combined)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    kdf = queries.select("query_id", "k")
+    return (
+        j.join(F.broadcast(kdf), "query_id")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= F.col("k"))
+        .select("query_id", "rank", "doc_id", "score",
+                "primary", F.coalesce("secondary", F.lit(0.0))
+                .alias("secondary"))
+    )

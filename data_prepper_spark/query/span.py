@@ -168,8 +168,8 @@ def span_near_topk(
     (query_id, rank, doc_id, score). See module docstring."""
     r = IndexReader(spark, index_dir)
     r.require_positions("serve span_near")
-    per_term = _span_entries(prep.collect_rows(queries), r.mode)
+    rows = prep.collect_rows(queries)
     return gather(scatter(
-        r, per_term, SPAN_FIELDS,
+        r, _span_entries(rows, r.mode), SPAN_FIELDS,
         lambda: _span_kernel(r.avgdl, r.n_docs, r.tomb), cols=POS_COLS,
-    ), queries)
+    ), rows)

@@ -86,22 +86,23 @@ def test_facet_join_drops_corpus_exchange(spark, built):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_filtered_topk_uses_stored_routing(spark, built):
+def test_filtered_topk_uses_stored_routing(spark, built, executed_plans):
     d, pdf, docs, meta = built
     store = cs.load_corpus(spark, d)
     q = spark.createDataFrame(
         [("f1", "error handling", 10)],
         "query_id string, query_text string, k int",
     )
-    plain = engine.filtered_topk(spark, d, q, docs, "role = 'user'")
-    co = engine.filtered_topk(spark, d, q, store, "role = 'user'")
-    a = [(r.query_id, r.rank, r.doc_id, round(r.score, 9))
-         for r in plain.collect()]
-    b = [(r.query_id, r.rank, r.doc_id, round(r.score, 9))
-         for r in co.collect()]
+    plain = engine.filtered_topk(spark, d, q, docs, "role = 'user'").collect()
+    # filtered_topk runs its scatter inside the call: read the plans
+    # that ran, not the returned (merged, driver-local) answer's
+    co, plan = executed_plans(lambda: engine.filtered_topk(
+        spark, d, q, store, "role = 'user'").collect())
+    a = [(r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in plain]
+    b = [(r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in co]
     assert a == b and len(a) > 0
     # fast path: no xxhash64 derivation in the co-located plan
-    plan = co._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan  # the scatter plan was read
     assert "xxhash64" not in plan
 
 

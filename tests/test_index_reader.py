@@ -75,6 +75,22 @@ def test_legacy_layout_score_and_bool(spark, legacy_index, oracle_idx):
     assert _rows(engine.bool_topk(spark, legacy_index, bq)) == want
 
 
+def test_legacy_null_seg_reads_as_zero(spark, legacy_index, oracle_idx):
+    """The blocks scan reads with an explicit schema, so the missing
+    `seg` column reads null and is coalesced to 0; the driver-merged
+    answer past the hit count is still the oracle's."""
+    from data_prepper_spark.index.reader import IndexReader
+
+    blocks = IndexReader(spark, legacy_index).blocks
+    assert [r["seg"] for r in blocks.select("seg").distinct().collect()] == [0]
+    q = spark.createDataFrame([("q", "rollback migrate", 100_000)],
+                              "query_id string, query_text string, k int")
+    want = _want("q", oracle.score_query(oracle_idx, "rollback migrate",
+                                         100_000))
+    assert 0 < len(want) < 100_000
+    assert _rows(engine.score_topk(spark, legacy_index, q)) == want
+
+
 def test_legacy_layout_phrase(spark, legacy_index, corpus_pdf, oracle_idx):
     phrase, k = "w00000 error", 5
     terms = tokenize(phrase)

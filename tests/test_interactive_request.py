@@ -1,0 +1,264 @@
+"""A driver-literal request is one pruned blocks scan, one shard
+exchange and the kernel: the query map and the dictionary slice ride
+the kernel as closure constants, the tombstones and the dictionary
+slice are read on the driver, and the per-shard top-ks merge on the
+driver into a LocalRelation.
+
+Pinned here: the Spark jobs one request runs (score_topk, bool_topk,
+phrase_topk, and score_topk on an upserted and deleted-from index), and
+rank identity of the driver merge against `oracle.bm25` on its edge
+cases: ties at the kth score, alias search's index tie, collapse,
+search_after cursors, k above the hit count, and empty answers."""
+
+from __future__ import annotations
+
+import itertools
+
+import pandas as pd
+import pytest
+
+from data_prepper_spark.data.transcripts import generate_pandas
+from data_prepper_spark.index import build as ib
+from data_prepper_spark.index import tombstones
+from data_prepper_spark.oracle import bm25 as oracle
+from data_prepper_spark.query import engine
+from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
+from data_prepper_spark.query.multi import multi_index_topk
+
+Q_SCHEMA = "query_id string, query_text string, k int"
+TOPK_DTYPES = [("query_id", "string"), ("rank", "bigint"),
+               ("doc_id", "bigint"), ("score", "double")]
+_groups = itertools.count()
+
+
+def _jobs(spark, fn):
+    """-> (fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    gid = f"interactive-request-{next(_groups)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _doc_ids(pdf: pd.DataFrame) -> pd.Series:
+    return pdf.conv_id.str.slice(5).astype(int) * DOC_ID_STRIDE + pdf.turn_idx
+
+
+def _hits(rows) -> list[tuple[int, float]]:
+    return [(int(r["doc_id"]), float(r["score"]))
+            for r in sorted(rows, key=lambda r: r["rank"])]
+
+
+def _same(got, want) -> bool:
+    return [d for d, _ in got] == [d for d, _ in want] and all(
+        abs(a - b) <= 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def _score(spark, d, text, k, **kw):
+    q = spark.createDataFrame([("q", text, k)], Q_SCHEMA)
+    return engine.score_topk(spark, d, q, **kw).collect()
+
+
+# ------------------------------------------------------------ fixtures
+
+@pytest.fixture(scope="module")
+def corpus_pdf():
+    return generate_pandas(0, 120)
+
+
+@pytest.fixture(scope="module")
+def index(spark, corpus_pdf, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("interactive"))
+    ib.build_index(spark, spark.createDataFrame(corpus_pdf), d, n_shards=4,
+                   block_size=16)
+    return d
+
+
+@pytest.fixture(scope="module")
+def oracle_idx(corpus_pdf):
+    return oracle.build_index(list(zip(_doc_ids(corpus_pdf), corpus_pdf.text)))
+
+
+@pytest.fixture(scope="module")
+def tie_docs():
+    """Twelve identical 'alpha beta' turns (an exact score tie that
+    spans every shard), three higher-tf 'alpha' turns above them, and
+    filler: 'alpha' top-6 cuts through the tie."""
+    texts = (["alpha beta"] * 12 + ["alpha alpha beta"] * 3
+             + ["gamma delta", "beta gamma", "delta epsilon"] * 5)
+    return pd.DataFrame({
+        "doc_id": [(i + 1) * DOC_ID_STRIDE for i in range(len(texts))],
+        "conv_id": [f"conv-{i + 1}" for i in range(len(texts))],
+        "text": texts,
+    })
+
+
+@pytest.fixture(scope="module")
+def tie_index(spark, tie_docs, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("ties"))
+    ib.build_index(spark, spark.createDataFrame(tie_docs), d, n_shards=4,
+                   block_size=4, assign_ids=False)
+    return d
+
+
+@pytest.fixture(scope="module")
+def tie_oracle(tie_docs):
+    return oracle.build_index(list(zip(tie_docs.doc_id, tie_docs.text)))
+
+
+# --------------------------------------------------- Spark jobs per request
+
+def test_score_topk_request_runs_three_jobs(spark, index, oracle_idx):
+    """One take() of the query rows, the scan's shuffle stage and the
+    kernel stage; the returned LocalRelation collects with no job."""
+    for text in ("error handling timeout", "retry deploy"):
+        rows, jobs = _jobs(spark, lambda: _score(spark, index, text, 10))
+        assert jobs <= 3
+        assert _same(_hits(rows), oracle.score_query(oracle_idx, text, 10))
+    q = spark.createDataFrame([("q", "error handling", 5)], Q_SCHEMA)
+    res = engine.score_topk(spark, index, q)
+    _, jobs = _jobs(spark, res.collect)
+    assert jobs == 0
+
+
+def test_bool_topk_request_runs_three_jobs(spark, index, oracle_idx):
+    """collect_rows, the scan's shuffle stage and the kernel stage."""
+    q = spark.createDataFrame(
+        [("b", "", "error handling", "", 0, 7)],
+        "query_id string, must string, should string, must_not string, "
+        "minimum_should_match int, k int")
+    rows, jobs = _jobs(spark, lambda: engine.bool_topk(spark, index, q).collect())
+    assert jobs <= 3
+    # a should-only bool with msm 1 ranks exactly like match
+    assert _same(_hits(rows),
+                 oracle.score_query(oracle_idx, "error handling", 7))
+
+
+def test_phrase_topk_request_runs_three_jobs(spark, index, corpus_pdf):
+    text = corpus_pdf.text.iloc[3]
+    phrase = " ".join(text.split()[:2])
+    q = spark.createDataFrame([("p", phrase, 5)], Q_SCHEMA)
+    rows, jobs = _jobs(spark,
+                       lambda: engine.phrase_topk(spark, index, q).collect())
+    assert jobs <= 3
+    assert rows  # the phrase is taken from a document
+
+
+def test_request_after_upsert_and_delete(spark, corpus_pdf, tmp_path):
+    """Tombstones are read on the driver: a request on an upserted and
+    deleted-from index still runs three jobs, and its answer is the
+    oracle's over the merged statistics with the hidden docs dropped."""
+    d = str(tmp_path / "mutated")
+    ib.build_index(spark, spark.createDataFrame(corpus_pdf), d, n_shards=4,
+                   block_size=16)
+    serials = corpus_pdf.conv_id.str.slice(5).astype(int)
+    rewritten, deleted = serials.isin([5, 12]), serials.isin([3, 44])
+    batch = corpus_pdf[rewritten].copy().reset_index(drop=True)
+    batch["text"] = [f"error handling retry rendezvous {i}"
+                     for i in range(len(batch))]
+    ib.upsert_conversations(spark, spark.createDataFrame(batch), d,
+                            snapshot_id=1)
+    tombstones.delete_conversations(spark, d, [3, 44])
+
+    # pre-compaction statistics count the old generation too: keep it
+    # in the oracle under ids no query can return, then drop it
+    dead = 1 << 52
+    old_ids = _doc_ids(corpus_pdf) + rewritten.astype("int64") * dead
+    idx = oracle.build_index(list(zip(old_ids, corpus_pdf.text))
+                             + list(zip(_doc_ids(batch), batch.text)))
+    hidden = set(old_ids[rewritten | deleted])
+    # a deleted turn's and a replaced turn's own text: each tops the
+    # unfiltered ranking, so the tombstones decide the answer
+    texts = [corpus_pdf.text[deleted].iloc[0],
+             corpus_pdf.text[rewritten].iloc[0], "error handling"]
+    for text in texts:
+        rows, jobs = _jobs(spark, lambda: _score(spark, d, text, 10))
+        assert jobs <= 3
+        full = oracle.score_query(idx, text, idx.n_docs)
+        want = [h for h in full if h[0] not in hidden][:10]
+        assert _same(_hits(rows), want), text
+    for text in texts[:2]:
+        assert oracle.score_query(idx, text, 1)[0][0] in hidden
+
+
+# ------------------------------------------- rank identity of the merge
+
+def test_ties_at_the_kth_score_break_by_doc_id(spark, tie_index, tie_oracle):
+    for k in (4, 6, 9, 15):
+        got = _hits(_score(spark, tie_index, "alpha", k))
+        want = oracle.score_query(tie_oracle, "alpha", k)
+        assert len(want) == k and _same(got, want), k
+    # the cut really falls inside the tie
+    assert want[5][1] == want[6][1]
+
+
+def test_alias_search_breaks_ties_by_index(spark, tie_docs, tie_index):
+    """The same index twice: every hit appears once per member with the
+    same score, ordered (score desc, doc_id asc, index asc). The oracle
+    over the doubled corpus, ids 2 * doc_id + member, orders the same."""
+    idx = oracle.build_index(
+        [(2 * d + i, t) for d, t in zip(tie_docs.doc_id, tie_docs.text)
+         for i in (0, 1)])
+    q = spark.createDataFrame([("q", "alpha", 9)], Q_SCHEMA)
+    rows = sorted(multi_index_topk(spark, [tie_index, tie_index], q).collect(),
+                  key=lambda r: r["rank"])
+    want = oracle.score_query(idx, "alpha", 9)
+    assert [(r["doc_id"], r["index"]) for r in rows] == [
+        (d // 2, d % 2) for d, _ in want]
+    assert all(abs(r["score"] - s) <= 1e-9 for r, (_, s) in zip(rows, want))
+
+
+def test_collapse_merges_on_the_driver(spark, index, oracle_idx):
+    rows = sorted(_score(spark, index, "error handling", 6, collapse=True),
+                  key=lambda r: r["rank"])
+    full = oracle.score_query(oracle_idx, "error handling", oracle_idx.n_docs)
+    best: dict[int, tuple[int, float]] = {}
+    for d, s in full:  # score desc, doc_id asc: the first hit is the best
+        best.setdefault(d // DOC_ID_STRIDE, (d, s))
+    want = list(best.values())[:6]
+    assert [r["conv"] for r in rows] == [d // DOC_ID_STRIDE for d, _ in want]
+    assert _same(_hits(rows), want)
+
+
+def test_search_after_pages_through_a_tie(spark, tie_index, tie_oracle):
+    want = oracle.score_query(tie_oracle, "alpha", 12)
+    got, cursor = [], None
+    for _ in range(3):
+        if cursor is None:
+            q = spark.createDataFrame([("q", "alpha", 4)], Q_SCHEMA)
+        else:
+            q = spark.createDataFrame(
+                [("q", "alpha", 4, cursor[1], cursor[0])],
+                Q_SCHEMA + ", after_score double, after_doc long")
+        page = _hits(engine.score_topk(spark, tie_index, q).collect())
+        assert len(page) == 4
+        got += page
+        cursor = page[-1]
+    assert _same(got, want)
+
+
+def test_k_above_the_hit_count(spark, tie_index, tie_oracle):
+    got = _hits(_score(spark, tie_index, "gamma", 1000))
+    want = oracle.score_query(tie_oracle, "gamma", 1000)
+    assert 0 < len(want) < 1000 and _same(got, want)
+
+
+def test_empty_answers_keep_the_result_schema(spark, index, tmp_path):
+    empty_dir = str(tmp_path / "empty")
+    ib.build_index(spark, spark.createDataFrame(
+        [], "conv_id string, turn_idx int, doc_id long, text string"),
+        empty_dir, n_shards=4, assign_ids=False)
+    q = spark.createDataFrame([("q", "zzqqxx error", 3)], Q_SCHEMA)
+    unknown = spark.createDataFrame([("q", "zzqqxx", 3)], Q_SCHEMA)
+    for res in (engine.score_topk(spark, empty_dir, q),
+                engine.score_topk(spark, index, unknown)):
+        assert res.dtypes == TOPK_DTYPES
+        assert res.collect() == []
+    res = engine.score_topk(spark, index, unknown, collapse=True)
+    assert res.dtypes == TOPK_DTYPES[:2] + [("conv", "bigint")] \
+        + TOPK_DTYPES[2:]
+    assert res.collect() == []

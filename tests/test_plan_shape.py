@@ -1,7 +1,11 @@
 """Plan-shape regression guards: the scale properties EXPLAIN.md
 documents are asserted here so a refactor can't silently lose them.
 Each test checks the OPTIMIZED/physical plan string, not results —
-results are covered by the oracle gates.
+results are covered by the oracle gates. The top-k entry points
+(score_topk, filtered_topk, multi_index_topk) run their scatter inside
+the call and return the merged answer as a LocalRelation, so their
+guards read the executed scatter plan from Spark's status store
+(the `executed_plans` fixture).
 
 Guarded invariants (EXPLAIN.md §2/§7/§9):
   - query scatter: term In-filter reaches the blocks parquet scan
@@ -38,20 +42,23 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_score_topk_scan_pruning(spark, corpus_and_index):
+def test_score_topk_scan_pruning(spark, corpus_and_index, executed_plans):
     _, d = corpus_and_index
     qdf = spark.createDataFrame(
         [("q", "error timeout", 5)],
         "query_id string, query_text string, k int",
     )
-    plan = _physical(engine.score_topk(spark, d, qdf, algo="wand"))
+    _, plan = executed_plans(
+        lambda: engine.score_topk(spark, d, qdf, algo="wand").collect())
+    assert "FlatMapGroupsInPandas" in plan  # the scatter plan was read
     # term In-filter pushed into the blocks scan
     assert "PushedFilters: [In(term" in plan
     # the position stream must not reach the scan (largest column)
     assert "poss" not in plan
 
 
-def test_filtered_topk_corpus_scan_pruning(spark, corpus_and_index, tmp_path):
+def test_filtered_topk_corpus_scan_pruning(spark, corpus_and_index, tmp_path,
+                                           executed_plans):
     pdf, d = corpus_and_index
     qdf = spark.createDataFrame(
         [("q", "error timeout", 5)],
@@ -63,8 +70,9 @@ def test_filtered_topk_corpus_scan_pruning(spark, corpus_and_index, tmp_path):
         pdf[["doc_id", "conv_id", "role", "text"]]
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    plan = _physical(engine.filtered_topk(spark, d, qdf, docs,
-                                          "role = 'user'"))
+    _, plan = executed_plans(lambda: engine.filtered_topk(
+        spark, d, qdf, docs, "role = 'user'").collect())
+    assert "FlatMapCoGroupsInPandas" in plan  # the scatter plan was read
     # blocks scan still term-pruned
     assert "PushedFilters: [In(term" in plan
     # corpus-side filter evaluated at the scan, not post-load
@@ -95,9 +103,12 @@ def test_highlight_docid_pushdown(spark, corpus_and_index, tmp_path):
     assert "In(doc_id" in plan  # top-k doc_id set reaches the scan
 
 
-def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path):
+def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path,
+                                  executed_plans):
     """Alias search keeps the term In-filter pushed into EVERY member
-    index's blocks scan (and still prunes positions out of ReadSchema)."""
+    index's blocks scan (and still prunes positions out of ReadSchema);
+    the dictionary slices are read on the driver, query terms only."""
+    from data_prepper_spark.index.reader import IndexReader
     from data_prepper_spark.query.multi import multi_index_topk
 
     pdf, d = corpus_and_index
@@ -112,8 +123,17 @@ def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path):
         [("q", "error timeout", 3)],
         "query_id string, query_text string, k int",
     )
-    plan = _physical(multi_index_topk(spark, [d, d2], qdf))
-    assert plan.count("In(term") >= 4  # blocks + dictionary scans, both members
+    _, plan = executed_plans(
+        lambda: multi_index_topk(spark, [d, d2], qdf).collect())
+    scans = [node for node in plan.split("\n\n")
+             if "Scan parquet" in node and "/blocks" in node]
+    # one blocks scan per member, each with the term In-filter pushed
+    assert len(scans) >= 2
+    assert all(any(m in node for node in scans) for m in (d, d2))
+    assert all("PushedFilters: [In(term" in node for node in scans)
+    for m in (d, d2):
+        got = IndexReader(spark, m).df_slice(["error", "timeout"])
+        assert got and set(got) <= {"error", "timeout"}
     for line in plan.splitlines():
         if "ReadSchema" in line and "gaps" in line:
             assert "poss" not in line, line

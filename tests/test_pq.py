@@ -38,6 +38,20 @@ def test_fit_deterministic():
     assert not np.array_equal(a, c)
 
 
+@pytest.mark.parametrize("iters", [1, 10])
+def test_fit_reseeds_dead_centroids_from_distinct_points(iters):
+    """Duplicate rows make the seeded init (seed 1) pick one point three
+    times: the copies lose every point to the first and die in the same
+    iteration. Each must be re-seeded from its own worst-fit point, or
+    they land on one spot and stay redundant."""
+    X = np.array([[0.0, 0.0]] * 6 + [[1.0, 0.0]] * 6
+                 + [[5.0, 5.0], [9.0, -3.0], [-4.0, 7.0]])
+    init = X[np.random.RandomState(1).permutation(len(X))[:5]]
+    assert len({tuple(c) for c in init}) == 2  # three dead centroids
+    books = pq_fit(X, m=1, ksub=5, iters=iters, seed=1, normalize=False)[0]
+    assert len({tuple(c) for c in books}) == 5
+
+
 def test_fit_reduces_quantization_error():
     X = _normalize(np.random.RandomState(1).normal(0, 1, (300, 8)))
     books = pq_fit(X, m=4, ksub=16, iters=10, seed=7)

@@ -238,7 +238,9 @@ def test_count_and_simple_entries():
 
 def _qmap_python(spark, builder, rows, fields, mode):
     per_term = builder(rows, mode)
-    return prep.qmap_df(spark, per_term, fields)
+    return spark.createDataFrame(
+        [(t, per_term[t]) for t in sorted(per_term)],
+        f"term string, queries array<struct<{fields}>>")
 
 
 def _norm_qmap(df):
