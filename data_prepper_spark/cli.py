@@ -795,11 +795,12 @@ def cmd_dedup_incremental(args) -> int:
     probe the increment, anti-join the bloom-positive sliver — exact
     without re-shuffling the corpus."""
     from data_prepper_spark.dedup import bloom as bl
+    from data_prepper_spark.index import layout
 
     spark = _get_spark(args)
     new = spark.read.parquet(args.new)
     corpus = spark.read.parquet(args.corpus)
-    reused = args.bloom and os.path.isdir(args.bloom)
+    reused = args.bloom and layout.exists(args.bloom)
     if reused:
         b = spark.read.parquet(args.bloom)
     else:

@@ -6,9 +6,11 @@ shard owns a complete Lucene index; reference:
 data-prepper-plugins/opensearch/.../OpenSearchSink.java:132-141 routing,
 index/AbstractIndexManager.java):
 
-    transcripts --assign doc_id (arithmetic, NO shuffle)
+    transcripts --ONE narrow agg: id scheme + {n_docs, avgdl}
+               --assign doc_id (arithmetic, NO shuffle)
                --shard = xxhash64(conv_id) % n_shards   (conv-sticky)
-               --ONE shuffle: groupBy(shard)
+               --ONE shuffle at the session's shuffle width
+                 (query/exchange.py spread_by_shard), groupBy(shard)
                --applyInPandas SPIMI kernel per shard:
                     tokenize (vectorized) -> (term, doc, tf) -> sort ->
                     128-posting blocks -> delta+varint gaps, varint tf/dl,
@@ -17,7 +19,14 @@ index/AbstractIndexManager.java):
                  (row-group pruning on term at query time)
     dictionary  = per-term global df (term-level agg; partial-agg safe)
     stats.json  = {n_docs, avgdl, ...}
-    manifest/   = per-shard checkpoint: lineage + build metrics + status
+    manifest/   = per-shard checkpoint: lineage + build metrics + status;
+                  the kernel reports its per-shard metrics through a
+                  Spark accumulator, so the blocks table holds postings
+                  only
+
+A fresh build of a conv-N corpus is 7 Spark jobs: the corpus agg (2),
+the kernel stage and its write (2), the manifest append (1) and the
+dictionary (2).
 
 Why this scales to 10^12 turns / 1000 executors:
 - postings for a hot term are split across ALL shards by doc — no
@@ -26,8 +35,11 @@ Why this scales to 10^12 turns / 1000 executors:
   Zipf head terms melt one node);
 - the only wide exchange is the shard groupBy — one shuffle of the doc
   rows, map-side combine not needed since the kernel aggregates;
-- shard count is the parallelism knob: shards ≫ executors gives AQE
-  room and bounds kernel memory (a shard must fit one task);
+- the session's shuffle width sets the kernel tasks, and shards bound
+  kernel memory: each kernel call holds exactly one shard, and a task
+  runs the shards its partition holds one after another. A Python task
+  costs about 170 ms of CPU whatever it holds (query/exchange.py), so a
+  task per shard would be most of a small build's cost;
 - resume skips completed shards entirely (manifest-gated), so a failed
   10-hour build restarts with only missing shards (mirrors the
   reference's LeaseBasedSourceCoordinator per-partition progress,
@@ -47,7 +59,8 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.accumulators import Accumulator, AccumulatorParam
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import codec, layout
@@ -60,22 +73,48 @@ from data_prepper_spark.index.tokenizer import (
 from data_prepper_spark.query.bm25_df import (
     CONV_ID_ARITH_RE,
     DOC_ID_STRIDE,
+    arith_scheme_aggs,
+    arith_scheme_ok,
     assign_doc_ids,
-    conv_scheme_arith_ok,
     packed_doc_id,
     tokens_col,
 )
+from data_prepper_spark.query.exchange import spread_by_shard
 
 BLOCK_SCHEMA = (
     "shard int, seg long, term string, block_ord int, first_doc long, "
     "last_doc long, n int, gaps binary, tfs binary, dls binary, "
     "poss binary, max_partial double"
 )
-_META_TERM = "\x00shard_meta"  # sentinel row carrying per-shard build metrics
+MANIFEST_SCHEMA = (
+    "shard long, status string, rows long, n_postings long, n_tokens long, "
+    "wall_ms long, input_desc string, snapshot_id long"
+)
 
 K1 = 1.2
 B = 0.75
 _TOKEN_RE = r"[a-z0-9]+"
+
+
+class ShardMetrics(AccumulatorParam):
+    """Accumulator of per-shard kernel metrics, {shard: dict}, merged by
+    shard: a retried or speculative task re-reports its shard under the
+    same key, so a shard is never counted twice."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        value1.update(value2)
+        return value1
+
+    @staticmethod
+    def drain(acc: Accumulator) -> dict:
+        """The accumulated {shard: dict}, leaving `acc` empty: pyspark
+        keeps every accumulator registered for the session's life, and
+        a streaming ingest builds once per micro-batch."""
+        value, acc.value = acc.value, {}
+        return value
 
 
 def _encode_posting_blocks(
@@ -143,15 +182,17 @@ def _encode_posting_blocks(
 
 
 def _spimi_kernel(
-    avgdl: float, block_size: int, seg: int = 0, store_positions: bool = True,
-    tokenizer: str = "ascii",
+    avgdl: float, block_size: int, metrics: Accumulator, seg: int = 0,
+    store_positions: bool = True, tokenizer: str = "ascii",
 ):
-    """`seg` tags every block with the build that produced it (Lucene's
+    """Per-shard SPIMI: one pandas DataFrame in (all docs of the shard),
+    compressed block rows out. All vectorized numpy/pandas.
+
+    `seg` tags every block with the build that produced it (Lucene's
     segment concept): incremental builds append a NEW segment per
     (shard, term), and the query engine opens one cursor per (term, seg)
-    so posting blocks stay doc-sorted within a cursor."""
-    """Per-shard SPIMI: one pandas DataFrame in (all docs of the shard),
-    compressed block rows out. All vectorized numpy/pandas."""
+    so posting blocks stay doc-sorted within a cursor. `metrics` (a
+    ShardMetrics accumulator) receives the shard's manifest metrics."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.monotonic()
@@ -235,12 +276,12 @@ def _spimi_kernel(
                 for p in parts:
                     flat.extend(p[k])
                 byte_cols[k] = [flat[i] for i in final]
-            c_term = list(term_all[final])
-            c_ord = list(np.concatenate([p["ord"] for p in parts])[final])
-            c_first = list(np.concatenate([p["first"] for p in parts])[final])
-            c_last = list(np.concatenate([p["last"] for p in parts])[final])
-            c_n = list(np.concatenate([p["n"] for p in parts])[final])
-            c_maxp = list(np.concatenate([p["maxp"] for p in parts])[final])
+            c_term = term_all[final]
+            c_ord = np.concatenate([p["ord"] for p in parts])[final]
+            c_first = np.concatenate([p["first"] for p in parts])[final]
+            c_last = np.concatenate([p["last"] for p in parts])[final]
+            c_n = np.concatenate([p["n"] for p in parts])[final]
+            c_maxp = np.concatenate([p["maxp"] for p in parts])[final]
             c_gaps, c_tfs, c_dls, c_poss = (
                 byte_cols["gaps"], byte_cols["tfs"], byte_cols["dls"],
                 byte_cols["poss"],
@@ -248,25 +289,14 @@ def _spimi_kernel(
         else:
             c_term, c_ord, c_first, c_last, c_n = [], [], [], [], []
             c_gaps, c_tfs, c_dls, c_poss, c_maxp = [], [], [], [], []
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        meta = {
+        metrics.add({shard: {
             "n_docs": int(len(pdf)),
             "n_postings": int(n_postings),
             "n_tokens": n_tok,
-            "wall_ms": wall_ms,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
             "min_conv": str(pdf["conv_id"].min()),
             "max_conv": str(pdf["conv_id"].max()),
-        }
-        c_term.append(_META_TERM)
-        c_ord.append(-1)
-        c_first.append(0)
-        c_last.append(0)
-        c_n.append(0)
-        c_gaps.append(json.dumps(meta).encode())
-        c_tfs.append(b"")
-        c_dls.append(b"")
-        c_poss.append(b"")
-        c_maxp.append(0.0)
+        }})
         return pd.DataFrame(
             {
                 "shard": np.full(len(c_term), shard, dtype=np.int32),
@@ -297,6 +327,12 @@ def compute_stats(
     memory traffic. A '+stop' analyzer changes dl (stopwords don't
     count), so that case pays for the materialized filtered array;
     '+stem' never changes token COUNT and keeps the fast path."""
+    return _stats_of(df_docs.agg(*_stats_aggs(text_col, tokenizer)).first())
+
+
+def _stats_aggs(text_col: str, tokenizer: str) -> list[Column]:
+    """compute_stats' two aggregates, for a fresh build to fold into its
+    id-scheme agg (one narrow pass over the corpus instead of two)."""
     base, stop, _stem = parse_analyzer(tokenizer)
     dl_sql = (
         f"size({spark_tokenize_sql(text_col, base + '+stop')})"
@@ -306,11 +342,10 @@ def compute_stats(
             f"regexp_count(lower({text_col}), '[\\\\p{{L}}\\\\p{{N}}]+')"
         )
     )
-    row = (
-        df_docs.select(F.expr(dl_sql).alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
+    return [F.count(F.lit(1)).alias("n_docs"), F.avg(F.expr(dl_sql)).alias("avgdl")]
+
+
+def _stats_of(row) -> dict:
     return {"n_docs": row["n_docs"], "avgdl": float(row["avgdl"] or 0.0)}
 
 
@@ -431,15 +466,22 @@ def build_index(
         transcripts = transcripts.withColumn("conv_id", F.col("doc_id").cast("string"))
     os.makedirs(index_dir, exist_ok=True)
     stats_path = os.path.join(index_dir, "stats.json")
-    # id scheme: fresh builds detect it with one narrow agg (arithmetic
-    # conv-N packing when it applies, persisted convmap for arbitrary —
-    # UUID — schemes); resume/incremental builds reuse the persisted
-    # decision, since mixing schemes would fork the doc_id space.
+    # id scheme: fresh builds detect it (arithmetic conv-N packing when
+    # it applies, persisted convmap for arbitrary — UUID — schemes) in
+    # the same narrow agg that computes the corpus stats; resume and
+    # incremental builds reuse the persisted decision, since mixing
+    # schemes would fork the doc_id space.
+    corpus_stats = None
     if assign_ids:
         if (resume or incremental) and os.path.exists(stats_path):
             id_scheme = json.load(open(stats_path)).get("id_scheme", "arith")
         else:
-            id_scheme = "arith" if conv_scheme_arith_ok(transcripts) else "convmap"
+            # the convmap join drops rows without a conv_id: they are
+            # not documents of the index
+            row = transcripts.filter(F.col("conv_id").isNotNull()).agg(
+                *arith_scheme_aggs(), *_stats_aggs("text", tokenizer)).first()
+            id_scheme = "arith" if arith_scheme_ok(row) else "convmap"
+            corpus_stats = _stats_of(row)
         docs_assigned = (
             assign_doc_ids(transcripts) if id_scheme == "arith"
             else _assign_doc_ids_convmap(spark, transcripts, index_dir)
@@ -485,7 +527,7 @@ def build_index(
         )
         layout.publish_file(stats_path, json.dumps(stats))
     else:
-        stats = compute_stats(docs_assigned, tokenizer=tokenizer)
+        stats = corpus_stats or compute_stats(docs_assigned, tokenizer=tokenizer)
         stats.update(
             n_shards=n_shards, block_size=block_size, k1=K1, b=B,
             snapshot_id=snapshot_id, avgdl_min=stats["avgdl"],
@@ -518,13 +560,13 @@ def build_index(
         return stats
     docs = docs.filter(F.col("shard").isin(target))
 
+    metrics = spark.sparkContext.accumulator({}, ShardMetrics())
     blocks = (
-        docs.select("shard", "doc_id", "conv_id", "text")
-        .repartition(min(n_shards, 64), "shard")
+        spread_by_shard(docs.select("shard", "doc_id", "conv_id", "text"))
         .groupBy("shard")
         .applyInPandas(
             _spimi_kernel(
-                stats["avgdl"], block_size, seg=snapshot_id,
+                stats["avgdl"], block_size, metrics, seg=snapshot_id,
                 store_positions=store_positions, tokenizer=tokenizer,
             ),
             schema=BLOCK_SCHEMA,
@@ -542,31 +584,20 @@ def build_index(
         .parquet(layout.resolve(index_dir, "blocks"))
     )
 
-    # checkpoint manifest: lineage + metrics per shard (FIXTURES.md §4)
-    all_blocks = spark.read.parquet(layout.resolve(index_dir, "blocks"))
-    meta = (
-        all_blocks.filter(F.col("term") == _META_TERM)
-        .filter(F.col("shard").isin(target) & (F.col("seg") == snapshot_id))
-        .select("shard", F.col("gaps").cast("string").alias("meta_json"))
-        .toPandas()
+    # checkpoint manifest: lineage + metrics per shard (FIXTURES.md §4),
+    # as the kernel tasks reported them to the accumulator. A pandas
+    # frame goes to the JVM through Arrow; a list of rows would run
+    # Python tasks to convert it.
+    mrows = pd.DataFrame(
+        [(shard, "done", m["n_docs"], m["n_postings"], m["n_tokens"],
+          m["wall_ms"],
+          f"conv_id in [{m['min_conv']}, {m['max_conv']}] (hash-sharded)",
+          snapshot_id)
+         for shard, m in sorted(ShardMetrics.drain(metrics).items())],
+        columns=[f.split()[0] for f in MANIFEST_SCHEMA.split(", ")],
     )
-    mrows = []
-    for _, r in meta.iterrows():
-        m = json.loads(r["meta_json"])
-        mrows.append(
-            {
-                "shard": int(r["shard"]),
-                "status": "done",
-                "rows": m["n_docs"],
-                "n_postings": m["n_postings"],
-                "n_tokens": m["n_tokens"],
-                "wall_ms": m["wall_ms"],
-                "input_desc": f"conv_id in [{m['min_conv']}, {m['max_conv']}] (hash-sharded)",
-                "snapshot_id": snapshot_id,
-            }
-        )
-    mdf_new = spark.createDataFrame(pd.DataFrame(mrows))
-    mdf_new.write.mode("append").parquet(manifest_path)
+    spark.createDataFrame(mrows, MANIFEST_SCHEMA).coalesce(1) \
+        .write.mode("append").parquet(manifest_path)
 
     # global dictionary (term -> df). Incremental appends aggregate ONLY
     # the new segment's partition directories (seg is a partition column,
@@ -574,12 +605,13 @@ def build_index(
     # index's CDC append reads zero old blocks) and union-merge with the
     # previous dictionary. Fresh/resume builds rebuild from all blocks
     # (resume may have added shards the old dictionary never saw).
+    all_blocks = spark.read.schema(BLOCK_SCHEMA).parquet(
+        layout.resolve(index_dir, "blocks"))
     dict_path = layout.resolve(index_dir, "dictionary")
     if incremental and os.path.exists(dict_path):
         new_agg = (
             all_blocks
             .filter(F.col("shard").isin(target) & (F.col("seg") == snapshot_id))
-            .filter(F.col("term") != _META_TERM)
             .groupBy("term")
             .agg(F.sum("n").alias("df"))
         )
@@ -597,11 +629,7 @@ def build_index(
             lambda p: merged.write.mode("overwrite").parquet(p),
         )
     else:
-        dic = (
-            all_blocks.filter(F.col("term") != _META_TERM)
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
-        )
+        dic = all_blocks.groupBy("term").agg(F.sum("n").alias("df"))
         layout.publish_dir(
             index_dir, "dictionary",
             lambda p: dic.write.mode("overwrite").parquet(p),
@@ -680,7 +708,8 @@ def delete_conversations_by_id(
     tomb_mod.write_tombstones(spark, index_dir, ranges)
 
 
-def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 0):
+def _compact_kernel(avgdl: float, block_size: int, deleted: Accumulator,
+                    tomb=None, merged_seg: int = 0):
     """Per-shard segment merge (Lucene's merge policy analog): decode
     every (term, seg) posting run, k-way merge to one doc-sorted run per
     term, re-encode as `merged_seg` blocks (a NEW segment id greater
@@ -694,49 +723,23 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
     ``tomb`` (Tombstones): postings whose doc is tombstoned in its own
     segment are PHYSICALLY dropped during the merge (Lucene dropping
     deleted docs at merge time); the per-shard count of deleted (seg,
-    doc) instances and their summed dl ride back in the meta row so the
-    driver can correct (n_docs, avgdl) by the EXACT deltas."""
-
-    def _merged_meta(meta_rows: pd.DataFrame, extra: dict | None = None) -> pd.DataFrame:
-        """Merge every segment's lineage json into one row (counts sum,
-        conv range unions, wall times sum) — the compacted shard's meta
-        must describe the WHOLE shard, not an arbitrary segment's."""
-        metas = [json.loads(bytes(g).decode()) for g in meta_rows["gaps"]]
-        merged = {
-            "n_docs": sum(m["n_docs"] for m in metas),
-            "n_postings": sum(m["n_postings"] for m in metas),
-            "n_tokens": sum(m["n_tokens"] for m in metas),
-            "wall_ms": sum(m["wall_ms"] for m in metas),
-            "min_conv": min(m["min_conv"] for m in metas),
-            "max_conv": max(m["max_conv"] for m in metas),
-            "compacted_segments": len(metas),
-        }
-        merged.update(extra or {})
-        merged["n_docs"] -= merged.get("deleted_docs", 0)
-        m = meta_rows.iloc[0:1].copy()
-        m["seg"] = merged_seg
-        m["gaps"] = [json.dumps(merged).encode()]
-        if "poss" not in m.columns:  # pre-positions index layout
-            m["poss"] = [b""]
-        return m
+    doc) instances and their summed dl reach the driver through
+    `deleted` (a ShardMetrics accumulator), so it can correct (n_docs,
+    avgdl) by the EXACT deltas."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
-        meta_rows = pdf[pdf["term"] == _META_TERM]
-        pdf = pdf[pdf["term"] != _META_TERM]
         # decode every block (one python iteration per BLOCK row; the
         # values inside decode vectorized). pdf is term-sorted, so
         # factorize codes come out already in sorted-term order.
         pdf = pdf.sort_values(["term", "seg", "block_ord"], kind="mergesort")
         term_codes, uniq_terms = pd.factorize(pdf["term"].to_numpy(object))
-        has_pos = "poss" in pdf.columns and any(
-            p is not None and len(p) for p in pdf["poss"]
-        )
+        # a pre-positions index reads `poss` as null
+        has_pos = any(p is not None and len(p) for p in pdf["poss"])
         d_docs, d_tf, d_dl, d_code, d_pos, d_seg = [], [], [], [], [], []
-        pos_iter = pdf["poss"] if "poss" in pdf.columns else [b""] * len(pdf)
         for g, t, l, first, code, po, seg in zip(
             pdf["gaps"], pdf["tfs"], pdf["dls"], pdf["first_doc"], term_codes,
-            pos_iter, pdf["seg"],
+            pdf["poss"], pdf["seg"],
         ):
             docs = codec.delta_decode(bytes(g), base=int(first))
             tf = codec.varint_decode(bytes(t))
@@ -747,9 +750,6 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
             d_seg.append(np.full(len(docs), int(seg), dtype=np.int64))
             if has_pos:
                 d_pos.append(codec.pos_delta_decode(bytes(po or b""), tf))
-        if not d_docs:
-            # meta-only shard (no tokens ever): keep its lineage row
-            return _merged_meta(meta_rows) if len(meta_rows) else pdf.head(0)
         docs = np.concatenate(d_docs)
         tfs = np.concatenate(d_tf).astype(np.int64)
         dls = np.concatenate(d_dl).astype(np.int64)
@@ -757,7 +757,6 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
         # tombstone drop BEFORE the merge: it also restores the
         # across-segment doc-disjointness invariant the interleave
         # relies on (an upserted doc exists in two segments until here)
-        extra_meta: dict = {}
         keep_idx = None
         if tomb is not None:
             from data_prepper_spark.index.tombstones import deleted_mask_per_seg
@@ -774,13 +773,13 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
                 first_i = np.concatenate(
                     ([True], (dd[1:] != dd[:-1]) | (ds[1:] != ds[:-1]))
                 )
-                extra_meta = {
+                deleted.add({shard: {
                     "deleted_docs": int(first_i.sum()),
                     "deleted_dl_sum": int(ddl[first_i].sum()),
-                }
+                }})
                 keep_idx = np.flatnonzero(~del_mask)
         if keep_idx is not None and not len(keep_idx):
-            return _merged_meta(meta_rows, extra_meta) if len(meta_rows) else pdf.head(0)
+            return pdf.head(0)
         docs_f = docs[keep_idx] if keep_idx is not None else docs
         tfs_f = tfs[keep_idx] if keep_idx is not None else tfs
         dls_f = dls[keep_idx] if keep_idx is not None else dls
@@ -806,7 +805,7 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
         enc = _encode_posting_blocks(
             tcg, docs, tfs, dls, partial, block_size, positions=positions
         )
-        out = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "shard": np.full(len(enc["ord"]), shard, dtype=np.int32),
                 "seg": np.full(len(enc["ord"]), merged_seg, dtype=np.int64),
@@ -822,13 +821,6 @@ def _compact_kernel(avgdl: float, block_size: int, tomb=None, merged_seg: int = 
                 "max_partial": enc["maxp"],
             }
         )
-        if len(meta_rows):
-            extra_meta["n_postings"] = int(len(docs))
-            out = pd.concat(
-                [out, _merged_meta(meta_rows, extra_meta)[out.columns]],
-                ignore_index=True,
-            )
-        return out
 
     return run
 
@@ -847,7 +839,8 @@ def compact_index(
     cursor per term instead of one per segment), block-max metadata
     refreshed against the current avgdl (stats.avgdl_min resets, so the
     query engine stops inflating upper bounds). Plan: one narrow read of
-    each shard's blocks -> applyInPandas merge kernel -> rewrite; shards
+    each shard's blocks -> one exchange at the session's shuffle width ->
+    applyInPandas merge kernel, one shard per call -> rewrite; shards
     are independent, so a 1000-executor cluster compacts 1000 shards at
     once.
 
@@ -871,20 +864,20 @@ def compact_index(
     already have; after stats but before clear_tombstones, the stale
     tombstones are inert (their upto_seg predates the merged segment
     id)."""
-    from data_prepper_spark.index import layout
     from data_prepper_spark.index import tombstones as tomb_mod
-    from data_prepper_spark.query.engine import load_stats
+    from data_prepper_spark.index.reader import IndexReader
 
-    stats = load_stats(index_dir)
+    reader = IndexReader(spark, index_dir)
+    stats, tomb = reader.stats, reader.tomb
     bs = block_size or int(stats.get("block_size", 128))
-    tomb = tomb_mod.load_tombstones(spark, index_dir)
     merged_seg = int(stats.get("snapshot_id", 0)) + 1
-    blocks = spark.read.parquet(layout.resolve(index_dir, "blocks"))
+    deleted = spark.sparkContext.accumulator({}, ShardMetrics())
     compacted = (
-        blocks.repartition(int(stats["n_shards"]), "shard")
+        spread_by_shard(reader.postings)
         .groupBy("shard")
         .applyInPandas(
-            _compact_kernel(stats["avgdl"], bs, tomb=tomb, merged_seg=merged_seg),
+            _compact_kernel(stats["avgdl"], bs, deleted, tomb=tomb,
+                            merged_seg=merged_seg),
             schema=BLOCK_SCHEMA,
         )
     )
@@ -893,19 +886,11 @@ def compact_index(
         lambda p: compacted.write.mode("overwrite")
         .partitionBy("shard", "seg").parquet(p),
     )
-    new_blocks = spark.read.parquet(layout.resolve(index_dir, "blocks"))
     if tomb is not None:
-        # exact stats correction from the per-shard deltas in meta rows
-        deleted_docs = deleted_dl = 0
-        meta = (
-            new_blocks.filter(F.col("term") == _META_TERM)
-            .select(F.col("gaps").cast("string").alias("meta_json"))
-            .collect()
-        )
-        for r in meta:
-            m = json.loads(r["meta_json"])
-            deleted_docs += m.get("deleted_docs", 0)
-            deleted_dl += m.get("deleted_dl_sum", 0)
+        # exact stats correction from the per-shard deltas the merge saw
+        per_shard = ShardMetrics.drain(deleted).values()
+        deleted_docs = sum(m["deleted_docs"] for m in per_shard)
+        deleted_dl = sum(m["deleted_dl_sum"] for m in per_shard)
         n_new = max(stats["n_docs"] - deleted_docs, 0)
         avgdl_new = (
             (stats["avgdl"] * stats["n_docs"] - deleted_dl) / n_new
@@ -920,9 +905,9 @@ def compact_index(
         # df changed -> rebuild the dictionary from the compacted blocks
         # (published through the same pointer-flip protocol)
         dic = (
-            new_blocks.filter(F.col("term") != _META_TERM)
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
+            spark.read.schema(BLOCK_SCHEMA)
+            .parquet(layout.resolve(index_dir, "blocks"))
+            .groupBy("term").agg(F.sum("n").alias("df"))
         )
         layout.publish_dir(
             index_dir, "dictionary",

@@ -92,11 +92,8 @@ def _check_kernel():
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
     reader = IndexReader(spark, index_dir)
-    per_shard = reader.blocks.select(*MATCH_COLS).filter(
-        # the \x00shard_meta sentinel carries per-shard build lineage,
-        # not postings (index/build.py _META_TERM)
-        F.col("term") != "\x00shard_meta"
-    ).groupBy("shard").applyInPandas(
+    per_shard = reader.postings.select(*MATCH_COLS).groupBy(
+        "shard").applyInPandas(
         _check_kernel(),
         schema="shard int, term string, n long, seg long, violation string",
     )

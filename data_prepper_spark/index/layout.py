@@ -115,14 +115,31 @@ def publish_dir(
     return new
 
 
+def _filesystem(path: str):
+    """(pyarrow FileSystem, path inside it) for a local path or a URI
+    (file://, s3://, hdfs://)."""
+    import pyarrow.fs as pafs
+
+    return pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path))
+
+
+def exists(path: str) -> bool:
+    """Whether a file or directory exists at a local path or a URI.
+    os.path answers False for every URI, which would make remote state
+    read as absent."""
+    import pyarrow.fs as pafs
+
+    fs, p = _filesystem(path)
+    return fs.get_file_info(p).type != pafs.FileType.NotFound
+
+
 def read_table(path: str, columns: list[str], filters: list | None = None):
     """A small artifact (dictionary slice, tombstones) read on the
     driver with pyarrow through the filesystem its URI names — local
     paths, s3://, hdfs:// alike — so it costs no Spark job. Spark's
     marker files (_SUCCESS, .crc) are skipped."""
-    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    fs, p = pafs.FileSystem.from_uri(
-        path if "://" in path else os.path.abspath(path))
+    fs, p = _filesystem(path)
     return pq.read_table(p, columns=columns, filters=filters, filesystem=fs)

@@ -8,7 +8,8 @@ per call and takes the index state from it:
   tokenizer mode, the shard count), and the values derived from it;
 - lazily, on first use: the tombstones, the decode-cache namespace
   that pins them, the blocks and the dictionary DataFrames, and the
-  dictionary slice (``df_slice``) of a term list.
+  dictionary slice (``df_slice``) of a term list. ``postings`` is the
+  blocks scan for whole-shard readers (check_index, compact_index).
 
 The reader runs no Spark job of its own: the blocks scan carries an
 explicit schema (a pre-segment index's null ``seg`` reads as 0), and
@@ -91,6 +92,14 @@ class IndexReader:
         return self.spark.read.schema(BLOCK_SCHEMA).parquet(
             layout.resolve(self.index_dir, "blocks"),
         ).withColumn("seg", F.coalesce("seg", F.lit(0).cast("long")))
+
+    @property
+    def postings(self) -> DataFrame:
+        """The blocks scan for readers of whole shards: without the
+        per-shard metrics rows (block_ord -1) that indexes built by
+        older versions of build_index carry. Term-filtered scans never
+        match those rows."""
+        return self.blocks.filter(F.col("block_ord") >= 0)
 
     @cached_property
     def dictionary(self) -> DataFrame:

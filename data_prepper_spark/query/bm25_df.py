@@ -102,6 +102,21 @@ def assign_doc_ids(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("doc_id", transcript_doc_id())
 
 
+def arith_scheme_aggs() -> list[Column]:
+    """The two aggregates conv_scheme_arith_ok decides on, for callers
+    that fold them into a wider narrow pass (index/build.py)."""
+    return [
+        F.sum((~F.col("conv_id").rlike(CONV_ID_ARITH_RE)).cast("long")).alias("bad"),
+        F.max("turn_idx").alias("mx"),
+    ]
+
+
+def arith_scheme_ok(row) -> bool:
+    """Decision over a row holding arith_scheme_aggs()' `bad` and `mx`."""
+    mx = row["mx"]
+    return int(row["bad"] or 0) == 0 and (mx is None or int(mx) < DOC_ID_STRIDE)
+
+
 def conv_scheme_arith_ok(df: DataFrame) -> bool:
     """ONE narrow agg over (conv_id, turn_idx) — negligible next to
     tokenization — deciding whether the shuffle-free arithmetic packing
@@ -109,13 +124,7 @@ def conv_scheme_arith_ok(df: DataFrame) -> bool:
     every turn_idx must fit the stride. A UUID corpus (the realistic
     production case) fails both-or-either and routes to the dense /
     convmap paths instead of producing null serials."""
-    row = df.agg(
-        F.sum((~F.col("conv_id").rlike(CONV_ID_ARITH_RE)).cast("long")).alias("bad"),
-        F.max("turn_idx").alias("mx"),
-    ).first()
-    bad = int(row["bad"] or 0)
-    mx = row["mx"]
-    return bad == 0 and (mx is None or int(mx) < DOC_ID_STRIDE)
+    return arith_scheme_ok(df.agg(*arith_scheme_aggs()).first())
 
 
 def assign_doc_ids_auto(df: DataFrame) -> DataFrame:

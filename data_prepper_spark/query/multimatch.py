@@ -86,12 +86,8 @@ def build_fields_index(
     conv_id so the shard map is identical everywhere. Per-field corpus
     stats count only docs that HAVE the field (Lucene per-field norms).
     """
-    from data_prepper_spark.index.build import (
-        _assign_doc_ids_convmap,
-        build_index,
-        conv_scheme_arith_ok,
-    )
-    from data_prepper_spark.query.bm25_df import assign_doc_ids
+    from data_prepper_spark.index.build import _assign_doc_ids_convmap, build_index
+    from data_prepper_spark.query.bm25_df import assign_doc_ids, conv_scheme_arith_ok
 
     missing = [f for f in fields if f not in transcripts.columns]
     if missing:

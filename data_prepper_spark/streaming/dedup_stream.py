@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from data_prepper_spark.dedup import bloom as bl
 from data_prepper_spark.dedup.dedup import normalize_text
+from data_prepper_spark.index import layout
 
 N_PARTITIONS = 64
 
@@ -48,7 +49,7 @@ def _read_state(spark: SparkSession, path: str, epoch: int,
                 schema: str) -> DataFrame:
     """All state partitions with batch_id < epoch (partition-pruned);
     empty frame with the right schema when none exist yet."""
-    if os.path.isdir(path):
+    if layout.exists(path):
         df = spark.read.option("basePath", path).parquet(path)
         return df.filter(F.col("batch_id") < epoch)
     return spark.createDataFrame([], schema + ", batch_id long")

@@ -37,6 +37,18 @@ def test_within_and_cross_batch(spark, tmp_path):
     assert sorted(r.doc_id for r in corpus.collect()) == [1, 3, 11]
 
 
+def test_file_uri_state_is_read(spark, tmp_path):
+    """A state dir named by a URI is found: the second batch repeats a
+    row of the first and must not admit it."""
+    state = (tmp_path / "state").as_uri()
+    assert state.startswith("file://")
+    ds.admit_batch(_docs(spark, [(1, "alpha beta gamma"), (2, "delta")]),
+                   0, state)
+    out1 = ds.admit_batch(
+        _docs(spark, [(10, "alpha beta gamma"), (11, "eta theta")]), 1, state)
+    assert sorted(r.doc_id for r in out1.collect()) == [11]
+
+
 def test_replay_is_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     b0 = _docs(spark, [(1, "first doc"), (2, "second doc")])

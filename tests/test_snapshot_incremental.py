@@ -120,7 +120,6 @@ def test_incremental_dictionary_merge_prunes_old_segments(spark, base_pdf, inc_p
         r["term"]: r["df"]
         for r in (
             spark.read.parquet(layout.resolve(idx, "blocks"))
-            .filter(F.col("term") != ib._META_TERM)
             .groupBy("term").agg(F.sum("n").alias("df"))
             .collect()
         )
@@ -180,6 +179,5 @@ def test_compaction_rank_identity_and_metadata_refresh(spark, base_pdf, inc_pdf,
           spark.read.parquet(layout.resolve(idx, "dictionary")).collect()}
     d2 = {r["term"]: r["df"] for r in (
         spark.read.parquet(layout.resolve(idx, "blocks"))
-        .filter(F.col("term") != ib._META_TERM)
         .groupBy("term").agg(F.sum("n").alias("df")).collect())}
     assert d1 == d2

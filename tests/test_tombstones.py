@@ -140,10 +140,8 @@ def test_compaction_physically_removes_and_corrects_stats(
 
     # physical check: decode every compacted block — no tombstoned doc
     from data_prepper_spark.index import codec
-    from data_prepper_spark.index.build import _META_TERM
 
-    bdf = (spark.read.parquet(layout.resolve(deleted_index, "blocks"))
-           .filter(f"term != '{_META_TERM}'").toPandas())
+    bdf = spark.read.parquet(layout.resolve(deleted_index, "blocks")).toPandas()
     for g, first in zip(bdf.gaps, bdf.first_doc):
         docs = codec.delta_decode(bytes(g), base=int(first))
         assert not np.isin((docs // STRIDE).astype(int), DELETED).any()
