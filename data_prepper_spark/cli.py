@@ -789,24 +789,50 @@ def cmd_knn_query(args) -> int:
     return 0
 
 
+def _write_corpus_fingerprint(spark, path: str, fp: tuple[int, str]) -> None:
+    spark.createDataFrame([fp], "rows long, text_hash string").coalesce(1) \
+        .write.mode("overwrite").parquet(path)
+
+
+def _read_corpus_fingerprint(path: str) -> tuple[int, str] | None:
+    from data_prepper_spark.index import layout
+
+    if not layout.exists(path):
+        return None
+    t = layout.read_table(path, ["rows", "text_hash"])
+    return t.column("rows")[0].as_py(), t.column("text_hash")[0].as_py()
+
+
 def cmd_dedup_incremental(args) -> int:
     """Admit only-new rows of a snapshot against an existing corpus
     (dedup/bloom.py): build or reuse the persisted bloom artifact,
     probe the increment, anti-join the bloom-positive sliver — exact
-    without re-shuffling the corpus."""
+    without re-shuffling the corpus. The artifact is reused only for
+    the corpus it was built from: its fingerprint (bloom.
+    corpus_fingerprint) sits in a one-row sidecar at <bloom>.corpus,
+    and any other corpus rebuilds the artifact."""
     from data_prepper_spark.dedup import bloom as bl
     from data_prepper_spark.index import layout
 
     spark = _get_spark(args)
     new = spark.read.parquet(args.new)
     corpus = spark.read.parquet(args.corpus)
-    reused = args.bloom and layout.exists(args.bloom)
+    fp = bl.corpus_fingerprint(corpus, args.text_col)
+    sidecar = args.bloom.rstrip("/") + ".corpus" if args.bloom else None
+    reused = bool(args.bloom) and layout.exists(args.bloom) \
+        and _read_corpus_fingerprint(sidecar) == fp
     if reused:
         b = spark.read.parquet(args.bloom)
     else:
-        b = bl.build_bloom(corpus, text_col=args.text_col, fpr=args.fpr)
+        b = bl.build_bloom(corpus, text_col=args.text_col, fpr=args.fpr,
+                           expected_items=fp[0])
         if args.bloom:
+            if layout.exists(sidecar):
+                # void the old record first: a crash while the artifact
+                # is rewritten must not leave it naming the old corpus
+                _write_corpus_fingerprint(spark, sidecar, (-1, ""))
             b.write.mode("overwrite").parquet(args.bloom)
+            _write_corpus_fingerprint(spark, sidecar, fp)
             b = spark.read.parquet(args.bloom)
     out = bl.dedup_incremental(
         new, b, corpus, text_col=args.text_col, id_col=args.id_col
@@ -1638,8 +1664,9 @@ def main(argv: list[str] | None = None) -> int:
     di.add_argument("--new", required=True, help="new snapshot parquet")
     di.add_argument("--out", required=True, help="admitted rows output")
     di.add_argument("--bloom", default=None,
-                    help="bloom artifact path: reused if present, "
-                    "written after build otherwise")
+                    help="bloom artifact path: reused if present and "
+                    "built from this corpus (<bloom>.corpus records its "
+                    "fingerprint), rebuilt and written otherwise")
     di.add_argument("--fpr", type=float, default=0.01)
     di.add_argument("--text-col", default="text")
     di.add_argument("--id-col", default="doc_id")

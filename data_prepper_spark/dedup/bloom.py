@@ -118,6 +118,20 @@ def build_bloom(
     return hashed.groupBy("part").applyInPandas(_fold, BLOOM_SCHEMA)
 
 
+def corpus_fingerprint(corpus: DataFrame, text_col: str = "text") -> tuple[int, str]:
+    """(rows, text_hash) of a corpus in one aggregate: its row count and
+    the exact sum of xxhash64 over the normalized text, as a decimal
+    string. Adding, removing or editing a row changes it (up to a hash
+    collision); row order does not. A persisted bloom artifact records
+    the fingerprint of the corpus it was built from."""
+    r = corpus.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.xxhash64(normalize_text(text_col)).cast("decimal(38,0)"))
+        .alias("text_hash"),
+    ).first()
+    return int(r["rows"]), str(r["text_hash"] or 0)
+
+
 def probe_bloom(
     new_docs: DataFrame,
     bloom: DataFrame,

@@ -6,17 +6,18 @@ per call and takes the index state from it:
 
 - eagerly: ``stats.json`` (corpus statistics n_docs / avgdl, the
   tokenizer mode, the shard count), and the values derived from it;
-- lazily, on first use: the tombstones, the decode-cache namespace
-  that pins them, the blocks and the dictionary DataFrames, and the
-  dictionary slice (``df_slice``) of a term list. ``postings`` is the
-  blocks scan for whole-shard readers (check_index, compact_index).
+- lazily, on first use: the tombstones, the blocks and the dictionary
+  DataFrames, and the dictionary slice (``df_slice``) of a term list.
+  ``postings`` is the blocks scan for whole-shard readers
+  (check_index, compact_index).
 
 The reader runs no Spark job of its own: the blocks scan carries an
 explicit schema (a pre-segment index's null ``seg`` reads as 0), and
 the driver-small tombstones and dictionary slice are read on the
-driver with pyarrow (``layout.read_table``). A reader is not cached
-across calls — an index rebuilt or mutated in place would be served
-stale.
+driver with pyarrow (``layout.read_table``). Nothing read or decoded
+outlives the call: a reader is not cached across calls, and the
+kernels memoize decoded blocks in a dict that lives for one kernel
+call, so an index rebuilt or mutated in place is never served stale.
 """
 
 from __future__ import annotations
@@ -78,14 +79,6 @@ class IndexReader:
     @cached_property
     def tomb(self) -> tombstones.Tombstones | None:
         return tombstones.load_tombstones(self.spark, self.index_dir)
-
-    @cached_property
-    def cache_ns(self) -> tuple:
-        """Decode-cache namespace. Cached partials embed idf(n_docs, df)
-        and avgdl and exclude tombstoned docs, so a new corpus or
-        tombstone state gets a fresh namespace."""
-        return (os.path.abspath(self.index_dir), self.n_docs,
-                round(self.avgdl, 9), tombstones.fingerprint(self.tomb))
 
     @cached_property
     def blocks(self) -> DataFrame:

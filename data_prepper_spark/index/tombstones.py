@@ -255,12 +255,6 @@ class Tombstones:
         self._per_seg[seg] = out
         return out
 
-    def fingerprint(self) -> tuple:
-        return (
-            int(len(self.starts)),
-            int(self.starts.sum() * 31 + self.ends.sum() * 7 + self.uptos.sum()),
-        )
-
 
 def load_tombstones(spark, index_dir: str) -> Tombstones | None:
     """-> Tombstones or None. The set is driver-small by construction
@@ -301,12 +295,6 @@ def deleted_mask_per_seg(
         sel = segs == s
         out[sel] = deleted_mask(docs[sel], rng)
     return out
-
-
-def fingerprint(tomb: Tombstones | None) -> tuple:
-    """Cache-namespace component: tombstone state pins decoded-block
-    cache entries (a new delete must invalidate filtered decodes)."""
-    return (0, 0) if tomb is None else tomb.fingerprint()
 
 
 def clear_tombstones(index_dir: str) -> None:

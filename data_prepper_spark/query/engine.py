@@ -65,57 +65,6 @@ _TYPES = {"query_id": "string", "rank": "long", "conv": "long",
 _TOPK_COLS = ("query_id", "rank", "doc_id", "score")
 
 
-class _DecodeLRU:
-    """Byte-bounded LRU for decoded posting blocks, living at MODULE
-    level in the executor python worker: Spark reuses python workers
-    across tasks (spark.python.worker.reuse default), so hot terms stay
-    decoded across queries and jobs — the role of OpenSearch's query
-    cache for the reference. Keys are ((index_dir, shard), (term, seg,
-    block)); index segments are immutable once written (builds append
-    NEW segment ids), so entries never go stale."""
-
-    def __init__(self, max_bytes: int):
-        from collections import OrderedDict
-
-        self.max_bytes = max_bytes
-        self.bytes = 0
-        self.d = OrderedDict()
-
-    def get(self, k):
-        v = self.d.get(k)
-        if v is not None:
-            self.d.move_to_end(k)
-        return v
-
-    def __setitem__(self, k, v):
-        if k in self.d:
-            self.d.move_to_end(k)
-            return
-        self.d[k] = v
-        self.bytes += sum(a.nbytes for a in v)
-        while self.bytes > self.max_bytes and len(self.d) > 1:
-            _, old = self.d.popitem(last=False)
-            self.bytes -= sum(a.nbytes for a in old)
-
-
-_DECODE_CACHE = _DecodeLRU(
-    int(os.environ.get("DPS_DECODE_CACHE_MB", "256")) * 1_000_000
-)
-
-
-class _NsCache:
-    """Namespaced dict-view over the global LRU (TermCursor's cache API)."""
-
-    def __init__(self, ns):
-        self.ns = ns
-
-    def get(self, k):
-        return _DECODE_CACHE.get((self.ns, k))
-
-    def __setitem__(self, k, v):
-        _DECODE_CACHE[(self.ns, k)] = v
-
-
 # ------------------------------------------------------ scatter / gather
 
 def scatter(
@@ -342,7 +291,7 @@ class _ShardTerms:
 
 def _decode_term_runs(
     tg: pd.DataFrame, tomb=None, need_positions=True,
-    block_cache: dict | None = None, cache_ns=None,
+    block_cache: dict | None = None, term: str | None = None,
 ) -> dict:
     """Decode the given (seg, block) rows of ONE term into doc-sorted
     posting arrays + (optionally) the flat per-occurrence position
@@ -354,7 +303,7 @@ def _decode_term_runs(
     dropped.
 
     ``block_cache`` (optional dict): per-block decode memo shared across
-    queries within one kernel call, keyed by (cache_ns, seg, block_ord,
+    queries within one kernel call, keyed by (term, seg, block_ord,
     has_pos) — two queries pruning to overlapping block sets decode each
     block once."""
     has_pos = need_positions and "poss" in tg.columns
@@ -363,7 +312,7 @@ def _decode_term_runs(
         tg["gaps"], tg["tfs"], tg["dls"], tg["first_doc"], tg["seg"],
         tg["block_ord"],
     )):
-        key = (cache_ns, int(seg), int(bord), has_pos)
+        key = (term, int(seg), int(bord), has_pos)
         hit = block_cache.get(key) if block_cache is not None else None
         if hit is None:
             docs = codec.delta_decode(bytes(g), base=int(first))
@@ -408,7 +357,7 @@ def _decode_term_runs(
 
 def _pruned_runs(
     tg_sorted: pd.DataFrame, cand: np.ndarray, tomb=None,
-    need_positions=True, block_cache=None, cache_ns=None,
+    need_positions=True, block_cache=None, term=None,
 ):
     """Block-pruned decode: only blocks whose [first_doc, last_doc]
     range contains at least one candidate are decoded (one searchsorted
@@ -427,24 +376,24 @@ def _pruned_runs(
     if not keep.any():
         return None
     sub = tg_sorted if keep.all() else tg_sorted.iloc[np.flatnonzero(keep)]
-    return _decode_term_runs(sub, tomb, need_positions, block_cache, cache_ns)
+    return _decode_term_runs(sub, tomb, need_positions, block_cache, term)
 
 
 # ------------------------------------------------------------ match / BM25
 
 def _shard_kernel(
     avgdl: float, n_docs: int, algo: str, ub_scale: float = 1.0,
-    cache_ns: tuple = (), tomb=None, collapse_stride: int | None = None,
+    tomb=None, collapse_stride: int | None = None,
 ):
     """One call per SHARD: block rows arrive ONCE per term (each row
     carries the list of (query_id, k) needing that term — no per-query
     row replication through the shuffle). Per-term block data is
-    materialized once; the worker-persistent decode LRU lets every
-    query — in this call AND in later jobs hitting a reused python
-    worker — reuse decoded postings."""
+    materialized once, and each block decodes at most once per call:
+    the decode memo is a plain dict that lives for one call, so nothing
+    decoded under one index state can serve another."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cache = _NsCache((cache_ns, int(key[0])))
+        cache: dict = {}
         # one cursor per (term, seg): incremental builds append a new
         # SEGMENT of doc-sorted blocks per term (doc sets disjoint across
         # segments), mirroring Lucene's per-segment posting lists
@@ -565,7 +514,7 @@ def score_topk(
         queries = [x.asDict() for x in head]
         per_term = prep.score_entries(queries, r.mode)
     per_shard = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
-        r.avgdl, r.n_docs, algo, r.ub_scale, r.cache_ns, r.tomb,
+        r.avgdl, r.n_docs, algo, r.ub_scale, r.tomb,
         collapse_stride=stride if collapse else None,
     ))
     if not collapse:
@@ -608,7 +557,7 @@ def match_scores(
         [dict(x, k=0) for x in prep.collect_rows(
             queries, "query_id", "query_text")], r.mode)
     out = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
-        r.avgdl, r.n_docs, "all", r.ub_scale, r.cache_ns, r.tomb))
+        r.avgdl, r.n_docs, "all", r.ub_scale, r.tomb))
     return out if out is not None else spark.createDataFrame([], _KERNEL_OUT)
 
 

@@ -88,9 +88,7 @@ def multi_index_topk(
     for i, r in enumerate(readers):
         res = scatter(
             r, per_term, prep.SCORE_FIELDS, lambda r=r: _shard_kernel(
-                avgdl, n_docs, algo, ub_scale,
-                cache_ns=(r.cache_ns, "multi", n_docs, round(avgdl, 9)),
-                tomb=r.tomb,
+                avgdl, n_docs, algo, ub_scale, tomb=r.tomb,
             ), dictionary=dfs,
         )
         if res is not None:

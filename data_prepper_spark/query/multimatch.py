@@ -49,7 +49,6 @@ from data_prepper_spark.query import prep
 from data_prepper_spark.query.engine import (
     _Hits,
     _idf,
-    _NsCache,
     gather,
     scatter,
 )
@@ -124,15 +123,11 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
     """Per-shard multi_match: exact per-(query, field) exhaustive BM25
     (same sorted-term accumulation as score_topk — float identity per
     field), field-boost scale, dis_max/sum combine, boundary-exact
-    top-k. field_conf: field -> dict(n_docs, avgdl, boost, tomb, ns)."""
+    top-k. field_conf: field -> dict(n_docs, avgdl, boost, tomb)."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
         xf = mm_type == "cross_fields"
-        caches = {
-            f: _NsCache(((c["ns"], "xf") if xf else c["ns"], shard))
-            for f, c in field_conf.items()
-        }
+        caches = {f: {} for f in field_conf}
         # pass 1: collect per-(field, term) block groups + per-field df
         # (cross_fields needs ALL fields' dfs for a term before any idf
         # is fixed); pass 2 constructs cursors with the mode's idf
@@ -295,7 +290,7 @@ def multi_match_topk(
         field_conf = {
             f: {"n_docs": int(readers[f].n_docs),
                 "avgdl": float(readers[f].avgdl), "boost": float(boost),
-                "tomb": readers[f].tomb, "ns": readers[f].cache_ns}
+                "tomb": readers[f].tomb}
             for f, boost in specs
         }
         blend: dict[str, tuple] = {}

@@ -45,8 +45,9 @@ class TermCursor:
     pi: int = 0            # position within decoded block
     docs: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
     partials: np.ndarray = field(default_factory=lambda: np.empty(0, np.float64))
-    # optional shared decode cache {(term, bi): (docs, partials)} — lets
-    # many queries hitting the same term in one shard decode blocks once
+    # optional decode memo {(term, seg, bi[, boost]): (docs, partials)},
+    # one dict per kernel call — lets many queries hitting the same term
+    # in one shard decode each block once
     cache: dict | None = None
     # query-time term boost ("error^2"): scales this term's idf — and
     # therefore every contribution AND every upper bound — uniformly,
@@ -74,9 +75,9 @@ class TermCursor:
 
     def decode_cached(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
         """Decode block bi -> (docs, idf-scaled partial scores), via the
-        shared per-shard cache when present. Tombstoned docs are removed
-        BEFORE caching (the cache namespace includes the tombstone
-        fingerprint, so stale filtered decodes cannot be reused)."""
+        per-call memo when present. Tombstoned docs are removed BEFORE
+        memoizing: the memo lives for one kernel call, which sees one
+        index state (tombstones, idf, avgdl), so no entry goes stale."""
         key = (
             (self.term, self.seg, bi) if self.boost == 1.0
             else (self.term, self.seg, bi, self.boost)
@@ -508,36 +509,10 @@ def _exhaustive_scores(cursors: list[TermCursor]):
     cursors = sorted(cursors, key=lambda c: c.term)
     doc_arrs, con_arrs = [], []
     for c in cursors:
-        if len(c.firsts) == 0:
-            continue
-        key = (
-            (c.term, c.seg, "full") if c.boost == 1.0
-            else (c.term, c.seg, "full", c.boost)
-        )
-        hit = c.cache.get(key) if c.cache is not None else None
-        if hit is None:
-            per_block = [
-                codec.varint_decode3(g, t, l)
-                for g, t, l in zip(c.gaps, c.tfs, c.dls)
-            ]
-            docs = np.concatenate(
-                [codec.gaps_to_docs(g, base=int(f))
-                 for (g, _, _), f in zip(per_block, c.firsts)]
-            )
-            tf = np.concatenate([t for _, t, _ in per_block])
-            dl = np.concatenate([l for _, _, l in per_block])
-            if c.tomb is not None:
-                from data_prepper_spark.index.tombstones import deleted_mask
-
-                keep = ~deleted_mask(docs, c.tomb)
-                docs, tf, dl = docs[keep], tf[keep], dl[keep]
-            contribs = c.idf * codec.bm25_partial(tf, dl, c.avgdl)
-            if c.cache is not None:
-                c.cache[key] = (docs, contribs)
-        else:
-            docs, contribs = hit
-        doc_arrs.append(docs)
-        con_arrs.append(contribs)
+        for bi in range(len(c.firsts)):
+            docs, contribs = c.decode_cached(bi)
+            doc_arrs.append(docs)
+            con_arrs.append(contribs)
     if not doc_arrs:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     docs_all = np.concatenate(doc_arrs)

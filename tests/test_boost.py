@@ -56,10 +56,20 @@ def test_fractional_boost_reorders(spark, idx):
 
 
 def test_boost_caching_isolated(spark, idx):
-    """A boosted query must not poison the decode cache for a plain
-    query on the same term in the same session (cache key carries the
-    boost)."""
+    """A boosted query must not poison the decode memo for a plain
+    query on the same term (the memo key carries the boost): across
+    calls, and within ONE request, whose plain and boosted queries
+    share one kernel call per shard and so one memo."""
     _ = _full_scores(spark, idx, "error^3")
     plain_after = _full_scores(spark, idx, "error")
     tripled = _full_scores(spark, idx, "error^3")
     assert ((tripled - 3.0 * plain_after).abs() < 1e-9).all()
+    q = spark.createDataFrame([("plain", "error", 100000),
+                               ("tripled", "error^3", 100000)],
+                              "query_id string, query_text string, k int")
+    out = engine.score_topk(spark, idx, q, algo="exhaustive").toPandas()
+    plain = out[out.query_id == "plain"].set_index("doc_id").score
+    tripled = out[out.query_id == "tripled"].set_index("doc_id").score
+    assert len(plain) and set(plain.index) == set(tripled.index)
+    assert ((tripled - 3.0 * plain.reindex(tripled.index)).abs() < 1e-9).all()
+

@@ -118,3 +118,45 @@ def test_pq_query_without_queries_or_vector_is_usage_error(tmp_path, capsys):
         cli.main(["pq-query", "--index", str(tmp_path / "pq")])
     assert exc.value.code == 2
     assert "--queries" in capsys.readouterr().err
+
+
+def test_dedup_incremental_cli_rebuilds_bloom_for_grown_corpus(
+        spark, tmp_path, docs_path, capsys):
+    """A bloom artifact built from corpus A must not be reused against
+    A ∪ B: B's rows would read bloom-negative and be admitted as new
+    without the exact anti-join."""
+    from data_prepper_spark import cli
+
+    b_rows = [
+        (20, "phi chi psi omega", "web"),
+        (21, "one more fresh line", "code"),
+    ]
+    schema = "doc_id long, text string, domain string"
+    b_path = str(tmp_path / "b")
+    spark.createDataFrame(b_rows, schema).write.parquet(b_path)
+    grown = str(tmp_path / "grown")
+    spark.read.parquet(docs_path).unionByName(
+        spark.read.parquet(b_path)).write.parquet(grown)
+    bloom = str(tmp_path / "bloom")
+    rc = cli.main([
+        "dedup-incremental", "--corpus", docs_path, "--new", b_path,
+        "--out", str(tmp_path / "admitted_a"), "--bloom", bloom,
+    ])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["admitted"] == 2 and rep["bloom_reused"] is False
+    rc = cli.main([
+        "dedup-incremental", "--corpus", grown, "--new", b_path,
+        "--out", str(tmp_path / "admitted_ab"), "--bloom", bloom,
+    ])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["admitted"] == 0 and rep["bloom_reused"] is False
+    # the rebuilt artifact now records A ∪ B, so it is reused again
+    rc = cli.main([
+        "dedup-incremental", "--corpus", grown, "--new", b_path,
+        "--out", str(tmp_path / "admitted_ab2"), "--bloom", bloom,
+    ])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["admitted"] == 0 and rep["bloom_reused"] is True

@@ -40,6 +40,10 @@ def index_dir(spark, corpus_pdf, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_results(corpus_pdf, queries_pdf):
+    return _oracle(corpus_pdf, queries_pdf)
+
+
+def _oracle(corpus_pdf, queries_pdf):
     doc_ids = corpus_pdf.conv_id.str.slice(5).astype(int) * STRIDE + corpus_pdf.turn_idx
     idx = oracle.build_index(list(zip(doc_ids, corpus_pdf.text)))
     return (
@@ -213,3 +217,40 @@ def test_search_after_pagination(spark, tmp_path):
             cursor = (rows[-1]["doc_id"], rows[-1]["score"])
         assert [g[0] for g in got_all] == [w[0] for w in want], algo
         assert all(abs(g[1] - w[1]) <= 1e-9 for g, w in zip(got_all, want)), algo
+
+
+REBUILD_CALLS = 10
+
+
+def test_rebuild_in_same_dir_serves_new_index(spark, tmp_path, queries_pdf):
+    """An index deleted and rebuilt in place from the same texts on
+    permuted turns (equal n_docs, avgdl and dfs) answers from its own
+    blocks: no decode kept by a reused Python worker from the old index
+    may serve it. One shard, so each call is one kernel task, and
+    enough calls on each side to pass every worker of the pool."""
+    import shutil
+
+    import numpy as np
+
+    old = generate_pandas(0, 40)
+    perm = np.random.default_rng(0).permutation(len(old))
+    new = old.assign(text=old.text.to_numpy()[perm])
+    qs = queries_pdf.head(8)
+    d = str(tmp_path / "idx")
+
+    def run():
+        return (engine.score_topk(spark, d, spark.createDataFrame(qs))
+                .toPandas().sort_values(["query_id", "rank"])
+                .reset_index(drop=True))
+
+    ib.build_index(spark, spark.createDataFrame(old), d, n_shards=1,
+                   block_size=16)
+    want_old, want_new = _oracle(old, qs), _oracle(new, qs)
+    assert not want_old.equals(want_new)
+    for _ in range(REBUILD_CALLS):
+        _assert_identical(want_old, run())
+    shutil.rmtree(d)
+    ib.build_index(spark, spark.createDataFrame(new), d, n_shards=1,
+                   block_size=16)
+    for _ in range(REBUILD_CALLS):
+        _assert_identical(want_new, run())

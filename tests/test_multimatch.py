@@ -252,3 +252,56 @@ def test_cross_fields_single_field_is_best_fields(spark, fidx):
     b = b.sort_values(["query_id", "rank"]).reset_index(drop=True)
     assert (a.doc_id.values == b.doc_id.values).all()
     assert (a.score.values == b.score.values).all()
+
+
+# tool shares query terms with text, and more tool docs hold "timeout":
+# cross_fields over ["text"] and over ["text", "tool"] blend a different
+# idf for the same text postings
+SHARED_DOCS = [
+    (0, "timeout error in search", "timeout handler"),
+    (1, "slow search timeout", "timeout"),
+    (2, "bulk indexing retry", "timeout retry"),
+    (3, "error cascade", "search"),
+    (4, "cooking recipe", None),
+    (5, "search tuning", "timeout search"),
+]
+# irregular run lengths: with a round-robin pool of reused Python
+# workers, each field list lands on a worker the other one used before
+XF_ORDER = "ABABBABBBAABAAABBA"
+
+
+def test_cross_fields_field_list_does_not_alias(spark, tmp_path):
+    """The text field's decoded partials carry the blended idf, which
+    depends on the queried field list: a second call over another field
+    list must not reuse the first call's decodes."""
+    import shutil
+
+    pdf = pd.DataFrame({
+        "conv_id": [f"conv-{i}" for i, _, _ in SHARED_DOCS],
+        "turn_idx": [0] * len(SHARED_DOCS),
+        "text": [t for _, t, _ in SHARED_DOCS],
+        "tool": [tl for _, _, tl in SHARED_DOCS],
+    })
+    d = str(tmp_path / "idx")
+    build_fields_index(spark, spark.createDataFrame(pdf), d, FIELDS,
+                       n_shards=1, block_size=4)
+    qdf = spark.createDataFrame(
+        [("x1", "timeout search", 6), ("x2", "error retry timeout", 6)],
+        "query_id string, query_text string, k int",
+    )
+    lists = {"A": ["text"], "B": ["text", "tool"]}
+
+    def run(idx, fields):
+        return (multi_match_topk(spark, idx, qdf, fields=fields,
+                                 mm_type="cross_fields").toPandas()
+                .sort_values(["query_id", "rank"]).reset_index(drop=True))
+
+    want = {}
+    for name, fields in lists.items():
+        copy = str(tmp_path / f"copy_{name}")
+        shutil.copytree(d, copy)
+        want[name] = run(copy, fields)
+    assert not want["A"].equals(want["B"])  # the blend matters
+    for i, name in enumerate(XF_ORDER):
+        got = run(d, lists[name])
+        pd.testing.assert_frame_equal(got, want[name], obj=f"call {i} {name}")
