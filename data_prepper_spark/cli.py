@@ -1337,7 +1337,10 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--query", help="single query text")
     q.add_argument("--queries-json", help="JSON file: [{query_id, query_text, k}]")
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--algo", default="bmx", choices=["bmx", "wand", "exhaustive"])
+    q.add_argument("--algo", default="bmx", choices=["bmx", "wand", "exhaustive"],
+                   help="top-k kernel: bmx (block-max WAND, pruned; 'wand' "
+                        "is an alias) or exhaustive (scores every posting); "
+                        "all return the same hits")
     q.add_argument("--phrase", action="store_true",
                    help="match_phrase: consecutive tokens in order")
     q.add_argument("--slop", type=int, default=0,

@@ -491,7 +491,8 @@ def build_index(
         docs_assigned = transcripts
     if resume and os.path.exists(stats_path):
         stats = json.load(open(stats_path))
-        assert stats["n_shards"] == n_shards, "resume with different n_shards"
+        if stats["n_shards"] != n_shards:
+            raise layout.IndexStateError("resume with different n_shards")
         tokenizer = stats.get("tokenizer", "ascii")
     elif incremental:
         # CDC append (snapshots-between semantics of the reference's
@@ -503,11 +504,13 @@ def build_index(
         # stale block's true max partial can exceed its stored one
         # (partial is monotone in avgdl with ratio <= avgdl2/avgdl1).
         old = json.load(open(stats_path))
-        assert old["n_shards"] == n_shards, "incremental with different n_shards"
-        assert snapshot_id > int(old.get("snapshot_id", -1)), (
-            f"incremental snapshot_id {snapshot_id} must exceed the index's "
-            f"current {old.get('snapshot_id')} (compaction consumes an id too)"
-        )
+        if old["n_shards"] != n_shards:
+            raise layout.IndexStateError("incremental with different n_shards")
+        if snapshot_id <= int(old.get("snapshot_id", -1)):
+            raise layout.IndexStateError(
+                f"incremental snapshot_id {snapshot_id} must exceed the index's "
+                f"current {old.get('snapshot_id')} (compaction consumes an id too)"
+            )
         # an index has ONE analyzer for its whole life (same contract as
         # an OpenSearch index mapping): incremental appends reuse it
         tokenizer = old.get("tokenizer", "ascii")
@@ -657,9 +660,10 @@ def upsert_conversations(
 
     stats = json.load(open(os.path.join(index_dir, "stats.json")))
     cur = int(stats.get("snapshot_id", 0))
-    assert snapshot_id > cur, (
-        f"upsert snapshot_id {snapshot_id} must be newer than current {cur}"
-    )
+    if snapshot_id <= cur:
+        raise layout.IndexStateError(
+            f"upsert snapshot_id {snapshot_id} must be newer than current {cur}"
+        )
     scheme = stats.get("id_scheme", "arith")
     if scheme == "arith":
         bad = transcripts.agg(

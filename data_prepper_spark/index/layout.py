@@ -44,6 +44,13 @@ class IndexExistsError(FileExistsError):
     leave a second copy of every posting (doubled df, wrong scores)."""
 
 
+class IndexStateError(ValueError):
+    """A build or upsert whose arguments contradict the index it writes
+    into: a different shard count, or a snapshot id not newer than the
+    index's. A ValueError, so it survives `python -O`, unlike an
+    assert."""
+
+
 def check_fresh(index_dir: str) -> None:
     """Raise IndexExistsError when `index_dir` holds stats.json, a
     build manifest or a blocks table. Local paths only, like every

@@ -127,7 +127,7 @@ def rollover_append(
 
 
 def search_all(
-    spark: SparkSession, base: str, queries: DataFrame, algo: str = "wand",
+    spark: SparkSession, base: str, queries: DataFrame, algo: str = "bmx",
 ) -> DataFrame:
     """Query ACROSS every generation — the alias/data-stream read path
     (query/multi.py union-corpus statistics; rank-identical to a

@@ -211,15 +211,8 @@ class _Hits:
         self.s += list(scores)
 
     def topk(self, qid, docs: np.ndarray, scores: np.ndarray, k: int) -> None:
-        """Exact per-shard cut (score desc, doc_id asc): every doc tied
-        with the kth score survives the partition, so the doc_id sort
-        breaks boundary ties the way the global merge does."""
-        if len(docs) > k:
-            kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-            keep = np.flatnonzero(scores >= kth)
-            keep = keep[np.lexsort((docs[keep], -scores[keep]))][:k]
-        else:
-            keep = np.lexsort((docs, -scores))
+        """Exact per-shard cut (`wand.topk_order`)."""
+        keep = wand_mod.topk_order(docs, scores, k)
         self.add(qid, docs[keep], scores[keep])
 
     def frame(self) -> pd.DataFrame:
@@ -397,25 +390,14 @@ def _shard_kernel(
         # one cursor per (term, seg): incremental builds append a new
         # SEGMENT of doc-sorted blocks per term (doc sets disjoint across
         # segments), mirroring Lucene's per-segment posting lists
-        term_data: dict[tuple[str, int], dict] = {}
-        term_segs: dict[str, list[tuple[str, int]]] = {}
+        runs = wand_mod.block_runs(pdf, ub_scale=ub_scale)
+        dfs, entries = pdf["df"].to_numpy(), pdf["queries"].to_numpy()
+        idf: dict[str, float] = {}
         # qid -> [k, terms, after-cursor]
         queries: dict[str, list] = {}
-        for term, tg in pdf.groupby("term", sort=True):
-            idf = _idf(n_docs, int(tg["df"].iloc[0]))
-            for seg, g in tg.groupby("seg", sort=True):
-                g = g.sort_values("block_ord")
-                term_data[(term, int(seg))] = {
-                    "idf": idf,
-                    "firsts": g["first_doc"].to_numpy(np.int64),
-                    "lasts": g["last_doc"].to_numpy(np.int64),
-                    "maxps": g["max_partial"].to_numpy(np.float64) * ub_scale,
-                    "gaps": list(g["gaps"]),
-                    "tfs": list(g["tfs"]),
-                    "dls": list(g["dls"]),
-                }
-                term_segs.setdefault(term, []).append((term, int(seg)))
-            for q in tg["queries"].iloc[0]:
+        for (term,), (row, _) in runs.items():
+            idf[term] = _idf(n_docs, int(dfs[row]))
+            for q in entries[row]:
                 a_s = q["after_score"]
                 after = (float(a_s), int(q["after_doc"])) if pd.notna(a_s) \
                     else None
@@ -426,14 +408,14 @@ def _shard_kernel(
         for qid, (k, terms, after) in queries.items():
             cursors = [
                 wand_mod.TermCursor(
-                    term=t, seg=seg, avgdl=avgdl, cache=cache, boost=b,
+                    term=t, avgdl=avgdl, cache=cache, boost=b, idf=idf[t],
                     # per-segment liveDocs: a tombstone applies only to
                     # segments that existed when the delete happened
-                    tomb=(tomb.for_seg(seg) if tomb is not None else None),
-                    **term_data[(t, seg)],
+                    tomb=(tomb.for_seg(r["seg"]) if tomb is not None else None),
+                    **r,
                 )
                 for (t, b) in terms
-                for (_, seg) in term_segs[t]
+                for r in runs[(t,)][1]
             ]
             if collapse_stride:
                 # collapse scores every candidate (exhaustive path);
@@ -448,9 +430,8 @@ def _shard_kernel(
                 # shard emits its full local match set once
                 uniq, scores = wand_mod._exhaustive_scores(cursors)
                 topk = list(zip(uniq.tolist(), scores.tolist()))
-            elif algo == "wand":
-                topk = wand_mod.wand_topk(cursors, k, after)
-            elif algo == "bmx":
+            elif algo in ("bmx", "wand"):
+                # one pruned top-k kernel; "wand" is its older name
                 topk = wand_mod.blockmax_topk(cursors, k, after)
             else:
                 topk = wand_mod.exhaustive_topk(cursors, k, after)

@@ -216,7 +216,7 @@ def hybrid_topk(
     n_candidates: int = 50,
     rank_constant: int = 60,
     weights: list[float] | None = None,
-    algo: str = "wand",
+    algo: str = "bmx",
     fusion: str = "rrf",
     method: str = "min_max",
     combination: str = "arithmetic_mean",

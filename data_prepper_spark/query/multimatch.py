@@ -128,16 +128,16 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         xf = mm_type == "cross_fields"
         caches = {f: {} for f in field_conf}
-        # pass 1: collect per-(field, term) block groups + per-field df
+        # pass 1: collect per-(field, term) block runs + per-field df
         # (cross_fields needs ALL fields' dfs for a term before any idf
         # is fixed); pass 2 constructs cursors with the mode's idf
-        groups: dict[tuple[str, str], pd.DataFrame] = {}
+        runs = wand_mod.block_runs(pdf, by=("field", "term"))
+        df_col, entries = pdf["df"].to_numpy(), pdf["queries"].to_numpy()
         dfs: dict[str, dict[str, int]] = {}
         queries: dict[str, list] = {}
-        for (field, term), tg in pdf.groupby(["field", "term"], sort=True):
-            groups[(field, term)] = tg
-            dfs.setdefault(term, {})[field] = int(tg["df"].iloc[0])
-            for q in tg["queries"].iloc[0]:
+        for (field, term), (row, _) in runs.items():
+            dfs.setdefault(term, {})[field] = int(df_col[row])
+            for q in entries[row]:
                 ent = queries.setdefault(q["query_id"], [int(q["k"]), {}])
                 ent[1].setdefault(term, set()).add(field)
 
@@ -164,21 +164,14 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
             conf = field_conf[field]
             tomb = conf["tomb"]
             idf = idf_for(field, term)
-            cur = []
-            for seg, g in groups[(field, term)].groupby("seg", sort=True):
-                g = g.sort_values("block_ord")
-                cur.append(wand_mod.TermCursor(
-                    term=term, seg=int(seg), avgdl=conf["avgdl"],
-                    cache=caches[field], boost=1.0,
-                    tomb=(tomb.for_seg(int(seg)) if tomb is not None else None),
-                    idf=idf,
-                    firsts=g["first_doc"].to_numpy(np.int64),
-                    lasts=g["last_doc"].to_numpy(np.int64),
-                    maxps=g["max_partial"].to_numpy(np.float64),
-                    gaps=list(g["gaps"]),
-                    tfs=list(g["tfs"]),
-                    dls=list(g["dls"]),
-                ))
+            cur = [
+                wand_mod.TermCursor(
+                    term=term, avgdl=conf["avgdl"], cache=caches[field],
+                    tomb=(tomb.for_seg(r["seg"]) if tomb is not None else None),
+                    idf=idf, **r,
+                )
+                for r in runs[(field, term)][1]
+            ]
             cursor_memo[(field, term)] = cur
             return cur
 

@@ -30,7 +30,7 @@ def rank_eval(
     index_dir: str,
     queries: DataFrame,
     ratings: DataFrame,
-    algo: str = "wand",
+    algo: str = "bmx",
     relevant_rating_threshold: int = 1,
 ) -> DataFrame:
     """queries(query_id, query_text, k) + ratings(query_id, doc_id,

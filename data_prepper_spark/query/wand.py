@@ -1,34 +1,41 @@
-"""Block-max WAND top-k kernel over compressed posting blocks.
+"""Exact BM25 top-k over compressed posting blocks, one shard at a time.
 
-Pure-Python/numpy implementation of the classic WAND pointer-movement
-algorithm (Broder et al. 2003) with block-max refinement (Ding & Suel
-2011, "Faster top-k document retrieval using block-max indexes") — the
-same family of skipping OpenSearch/Lucene uses to serve the reference's
-BM25 queries. Exactness contract:
+Two scorers share one cursor type (`TermCursor`, a term's blocks in one
+segment, decoded on demand through a per-call memo):
 
-- skips happen only when the *exact* upper bound (sum of per-block
-  float64 max partial scores x idf) is strictly below the current
-  threshold, and never while the heap is not full -> the returned top-k
-  is identical to exhaustive scoring;
+- `blockmax_topk`, the engine's top-k kernel: block-max WAND (Ding &
+  Suel 2011, "Faster top-k document retrieval using block-max
+  indexes"), the skipping family OpenSearch/Lucene serve BM25 with, run
+  term-at-a-time so each step is a numpy operation over whole blocks;
+- `_exhaustive_scores`, which scores every posting: the reference the
+  tests compare against, and the scorer of collapse, `algo="all"` and
+  multi_match. `exhaustive_topk` is the exact cut over it.
+
+Exactness contract:
+
+- a block is skipped only when its *exact* upper bound (per-block
+  float64 max partial score x idf, plus the other terms' bounds) is
+  below the current threshold -> the returned top-k is identical to
+  exhaustive scoring;
 - per-document scores accumulate contributions in sorted-term order
   (float addition is non-associative; the oracle sums sorted) so scores
   are bit-equal to the oracle's;
-- tie-break: score desc, doc_id asc, via a min-heap keyed (score, -doc).
+- tie-break: score desc, doc_id asc (`topk_order`).
 """
 
 from __future__ import annotations
 
-import heapq
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 
 from data_prepper_spark.index import codec
 
 
 @dataclass
 class TermCursor:
-    """Iterates one term's posting blocks (sorted by first_doc) lazily."""
+    """One term's posting blocks in one segment (sorted by first_doc)."""
 
     term: str
     idf: float
@@ -41,10 +48,6 @@ class TermCursor:
     tfs: list[bytes]
     dls: list[bytes]
     seg: int = 0           # segment id (incremental builds); in cache keys
-    bi: int = 0            # current block index
-    pi: int = 0            # position within decoded block
-    docs: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
-    partials: np.ndarray = field(default_factory=lambda: np.empty(0, np.float64))
     # optional decode memo {(term, seg, bi[, boost]): (docs, partials)},
     # one dict per kernel call — lets many queries hitting the same term
     # in one shard decode each block once
@@ -65,13 +68,6 @@ class TermCursor:
         if self.boost != 1.0:
             self.idf = float(self.idf * self.boost)
         self.global_ub = float(self.idf * self.maxps.max()) if len(self.maxps) else 0.0
-        # LAZY construction: position at block 0 with pending target 0;
-        # nothing decodes until a positional access (doc/score) or
-        # ensure_positioned(). Block-jump skips (next_geq past the
-        # current block) also stay lazy — a skipped window's blocks are
-        # never decoded (41% of wand windows skip on the bench corpus,
-        # and block-max TAAT prunes block 0 outright for most terms).
-        self._pend: int | None = 0 if len(self.firsts) else None
 
     def decode_cached(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
         """Decode block bi -> (docs, idf-scaled partial scores), via the
@@ -97,118 +93,46 @@ class TermCursor:
             self.cache[key] = (docs, partials)
         return docs, partials
 
-    def _decode_block(self, bi: int):
-        # a block may decode EMPTY when every posting in it is
-        # tombstoned — advance until a live block or the end (otherwise
-        # `exhausted` would fire mid-stream)
-        while bi < len(self.firsts):
-            self.bi = bi
-            self.docs, self.partials = self.decode_cached(bi)
-            self.pi = 0
-            if len(self.docs):
-                return
-            bi += 1
-        self.bi = len(self.firsts)
-        self.docs = np.empty(0, np.int64)
 
-    @property
-    def exhausted(self) -> bool:
-        if self.bi >= len(self.firsts):
-            return True
-        if self._pend is not None:
-            return False  # lazy: at worst materializes empty later
-        return len(self.docs) == 0
+def block_runs(
+    pdf: pd.DataFrame, by: tuple[str, ...] = ("term",), ub_scale: float = 1.0,
+) -> dict[tuple, tuple[int, list[dict]]]:
+    """One shard's block rows cut into `TermCursor` inputs.
 
-    def ensure_positioned(self) -> None:
-        """Materialize a lazy cursor: decode the pending block and place
-        pi at the first doc >= the pending target. May advance past
-        tombstone-empty blocks (targets never reach into a LATER block:
-        pending <= lasts[bi] < firsts[bi+1])."""
-        if self._pend is None:
-            return
-        t = self._pend
-        self._pend = None
-        self._decode_block(self.bi)
-        if not self.exhausted:
-            self.pi = int(np.searchsorted(self.docs, t, side="left"))
-            if self.pi >= len(self.docs):
-                self._decode_block(self.bi + 1)
-
-    def doc_lb(self) -> int:
-        """Exact lower bound of the next doc WITHOUT decoding (equals
-        .doc when already decoded). Used by window/active tests; a
-        phantom bound (e.g. tombstoned first_doc) only makes the active
-        set conservatively larger, never smaller."""
-        if self.exhausted:
-            return 1 << 62
-        if self._pend is not None:
-            return max(int(self.firsts[self.bi]), self._pend)
-        return int(self.docs[self.pi])
-
-    @property
-    def doc(self) -> int:
-        self.ensure_positioned()
-        return int(self.docs[self.pi]) if not self.exhausted else 1 << 62
-
-    @property
-    def score(self) -> float:
-        self.ensure_positioned()
-        return float(self.partials[self.pi])
-
-    @property
-    def block_ub(self) -> float:
-        """Exact upper bound of any contribution in the current block.
-        Metadata-only — valid on lazy (undecoded) cursors."""
-        return float(self.idf * self.maxps[self.bi]) if not self.exhausted else 0.0
-
-    @property
-    def block_last(self) -> int:
-        return int(self.lasts[self.bi]) if not self.exhausted else 1 << 62
-
-    def next_geq(self, target: int):
-        """Advance to the first posting with doc >= target. Block jumps
-        are LAZY (metadata-only): the landing block is not decoded until
-        a positional access needs it — so a window skipped by the UB
-        rule never pays decode for the blocks it jumps over or onto."""
-        if self.exhausted:
-            return
-        if self._pend is not None:
-            t = max(self._pend, target)
-            if t > int(self.lasts[self.bi]):
-                nb = int(np.searchsorted(self.lasts, t, side="left"))
-                if nb >= len(self.firsts):
-                    self.bi = len(self.firsts)
-                    self._pend = None
-                    self.docs = np.empty(0, np.int64)
-                    return
-                self.bi = nb
-            self._pend = t
-            return
-        if target > int(self.lasts[self.bi]):
-            nb = int(np.searchsorted(self.lasts, target, side="left"))
-            if nb >= len(self.firsts):
-                self.bi = len(self.firsts)
-                self.docs = np.empty(0, np.int64)
-                return
-            self.bi = nb
-            self._pend = target  # lazy landing
-            return
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-        if self.pi >= len(self.docs):  # target fell in a gap past block end
-            if self.bi + 1 >= len(self.firsts):
-                self.bi = len(self.firsts)
-                self.docs = np.empty(0, np.int64)
-                return
-            self.bi += 1
-            self._pend = target  # lazy landing (target < firsts[bi+1])
-            return
-
-    def advance(self):
-        self.ensure_positioned()
-        self.pi += 1
-        if self.pi >= len(self.docs):
-            self._decode_block(self.bi + 1)
-
+    Rows are sorted once by (*by, seg, block_ord) and cut into runs
+    where the (*by, seg) key changes. Returns {key: (row, runs)} in key
+    order: `row` is the position in `pdf` of one of the key's rows (for
+    per-key columns such as df and the query entries), and `runs` holds
+    one dict of TermCursor keyword arguments per segment, in seg order,
+    with `maxps` scaled by `ub_scale`."""
+    n = len(pdf)
+    if not n:
+        return {}
+    codes = [pd.factorize(pdf[c], sort=True)[0] for c in by]
+    seg = pdf["seg"].to_numpy(np.int64)
+    order = np.lexsort((pdf["block_ord"].to_numpy(np.int64), seg, *codes[::-1]))
+    seg = seg[order]
+    change = seg[1:] != seg[:-1]
+    for c in codes:
+        c = c[order]
+        change |= c[1:] != c[:-1]
+    cut = np.flatnonzero(change) + 1
+    firsts = pdf["first_doc"].to_numpy(np.int64)[order]
+    lasts = pdf["last_doc"].to_numpy(np.int64)[order]
+    maxps = pdf["max_partial"].to_numpy(np.float64)[order] * ub_scale
+    gaps, tfs, dls = (pdf[c].to_numpy(object)[order] for c in ("gaps", "tfs", "dls"))
+    keys = [pdf[c].to_numpy(object)[order] for c in by]
+    out: dict[tuple, tuple[int, list[dict]]] = {}
+    for lo, hi in zip(np.r_[0, cut], np.r_[cut, n]):
+        key = tuple(v[lo] for v in keys)
+        if key not in out:
+            out[key] = (int(order[lo]), [])
+        out[key][1].append({
+            "seg": int(seg[lo]), "firsts": firsts[lo:hi], "lasts": lasts[lo:hi],
+            "maxps": maxps[lo:hi], "gaps": list(gaps[lo:hi]),
+            "tfs": list(tfs[lo:hi]), "dls": list(dls[lo:hi]),
+        })
+    return out
 
 
 def _cursor_mask(docs: np.ndarray, scores: np.ndarray, after) -> np.ndarray:
@@ -218,171 +142,6 @@ def _cursor_mask(docs: np.ndarray, scores: np.ndarray, after) -> np.ndarray:
     equality compare is exact across kernels/pages."""
     a_s, a_d = after
     return (scores < a_s) | ((scores == a_s) & (docs > a_d))
-
-
-def wand_topk(
-    cursors: list[TermCursor], k: int, after: tuple[float, int] | None = None,
-) -> list[tuple[int, float]]:
-    """Exact top-k via WINDOW-BATCHED block-max DAAT.
-
-    Classic WAND moves one posting pointer per iteration — a per-posting
-    Python loop that benched 2.5x slower than the TAAT kernel (VERDICT
-    r1). This kernel keeps WAND's document-at-a-time block-max skipping
-    but processes a whole WINDOW per iteration: the doc range up to the
-    minimum current block_last across live cursors.
-
-    Exactness argument:
-    - every posting with doc <= window_end lies in its cursor's CURRENT
-      block (window_end is the min block_last, and consumed positions
-      are < window start), so window scores are complete;
-    - windows advance monotonically (all active cursors move past
-      window_end), so each doc is scored exactly once;
-    - skip rule: if sum of ACTIVE cursors' exact block UBs < theta (the
-      k-th best score so far) with the heap full, no window doc can
-      qualify — identical bound to classic block-max WAND at block
-      granularity, strict `<` so boundary ties are always evaluated;
-    - contributions accumulate in sorted-term order (cursor list is
-      term-sorted; a doc's contributors are a subsequence), so scores
-      are bit-identical to exhaustive/oracle.
-
-    Each iteration consumes at least one block of one cursor, so the
-    Python-level iteration count is O(total blocks), with all per-doc
-    work vectorized. `wand_topk_classic` below retains the textbook
-    per-posting pivot loop as a cross-check oracle (rank-identity is
-    asserted between the two in tests)."""
-    cursors = sorted(
-        (c for c in cursors if not c.exhausted), key=lambda c: c.term
-    )
-    if not cursors:
-        return []
-    if any(c.idf <= 0 for c in cursors):
-        return exhaustive_topk(cursors, k)
-    top_docs = np.empty(0, np.int64)
-    top_scores = np.empty(0, np.float64)
-    theta = None  # k-th best score once the candidate set is full
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live:
-            break
-        window_end = min(c.block_last for c in live)
-        active = [c for c in live if c.doc_lb() <= window_end]
-        if not active:
-            # every live cursor's next doc is past its own block_last —
-            # impossible by cursor invariants, but advance defensively
-            for c in live:
-                c.next_geq(window_end + 1)
-            continue
-        if theta is not None and sum(c.block_ub for c in active) < theta:
-            for c in active:
-                c.next_geq(window_end + 1)
-            continue
-        doc_arrs, con_arrs = [], []
-        for c in active:  # term-sorted: accumulation order is sorted
-            c.ensure_positioned()  # decode ONLY for scored windows
-            if c.exhausted:
-                continue
-            j = int(np.searchsorted(c.docs, window_end, side="right"))
-            doc_arrs.append(c.docs[c.pi:j])
-            con_arrs.append(c.partials[c.pi:j])
-        docs_all = np.concatenate(doc_arrs) if doc_arrs else np.empty(0, np.int64)
-        if len(docs_all):
-            uniq, inv = np.unique(docs_all, return_inverse=True)
-            scores = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(scores, inv, np.concatenate(con_arrs))
-            if after is not None:
-                # search_after: only docs past the cursor may enter the
-                # top set, so theta becomes the kth best PASSING score —
-                # the skip rule stays exact (a skipped doc's full score
-                # is < theta, hence outside the passing top-k too)
-                keep_m = _cursor_mask(uniq, scores, after)
-                uniq, scores = uniq[keep_m], scores[keep_m]
-            # merge window winners into the running top-k (vectorized)
-            m_docs = np.concatenate([top_docs, uniq])
-            m_scores = np.concatenate([top_scores, scores])
-            if len(m_docs) > k:
-                kth = np.partition(m_scores, len(m_scores) - k)[len(m_scores) - k]
-                cand = np.flatnonzero(m_scores >= kth)
-                cand = cand[np.lexsort((m_docs[cand], -m_scores[cand]))][:k]
-                top_docs, top_scores = m_docs[cand], m_scores[cand]
-            else:
-                top_docs, top_scores = m_docs, m_scores
-            if len(top_docs) >= k:
-                theta = float(top_scores.min())
-        for c in active:
-            c.next_geq(window_end + 1)
-    order = np.lexsort((top_docs, -top_scores))[:k]
-    return [(int(top_docs[i]), float(top_scores[i])) for i in order]
-
-
-def wand_topk_classic(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    """Textbook per-posting block-max WAND (Broder 2003 + Ding & Suel
-    2011) — retained as a cross-check oracle for wand_topk; exact top-k
-    [(doc_id, score)] by (score desc, doc asc)."""
-    cursors = [c for c in cursors if not c.exhausted]
-    heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of current top-k
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else -1.0
-
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda c: c.doc)
-        # pivot: smallest prefix whose term-level UBs could beat theta
-        acc, pivot = 0.0, -1
-        th = theta()
-        for i, c in enumerate(live):
-            acc += c.global_ub
-            if acc >= th:
-                pivot = i
-                break
-        if pivot < 0:
-            break
-        pivot_doc = live[pivot].doc
-        if pivot_doc >= (1 << 62):
-            break
-        if live[0].doc == pivot_doc:
-            # block-max check: exact per-block UB for cursors at pivot_doc
-            bub = sum(c.block_ub for c in live if c.doc == pivot_doc)
-            if len(heap) >= k and bub < theta():
-                # No doc whose only contributions come from the pivot
-                # cursors' current blocks can qualify. Jump past the
-                # tightest block boundary — but never past the next
-                # cursor's doc: docs at/after it gain contributions from
-                # cursors beyond the pivot, so their upper bound is NOT
-                # `bub` and they must still be evaluated.
-                nxt = min(c.block_last for c in live if c.doc == pivot_doc) + 1
-                beyond = [c.doc for c in live if c.doc > pivot_doc]
-                if beyond:
-                    nxt = min(nxt, min(beyond))
-                for c in live:
-                    if c.doc == pivot_doc:
-                        c.next_geq(nxt)
-                continue
-            # full evaluation, summing in SORTED TERM ORDER
-            parts = sorted(
-                (c.term, c.score) for c in live if c.doc == pivot_doc
-            )
-            s = 0.0
-            for _, p in parts:
-                s += p
-            cand = (s, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, cand)
-            elif cand > heap[0]:
-                heapq.heapreplace(heap, cand)
-            for c in live:
-                if c.doc == pivot_doc:
-                    c.advance()
-        else:
-            # advance the cursor with the largest "gap potential":
-            # any cursor before pivot moves to pivot_doc
-            live[0].next_geq(pivot_doc)
-
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out
 
 
 def _segment_max(scores: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -432,7 +191,7 @@ def blockmax_topk(
     full score < theta, so they can never surface in the final top-k and
     their (partial) scores never display. Final scores are re-accumulated
     over surviving postings in sorted-term order, so returned scores are
-    bit-identical to wand/exhaustive/oracle.
+    bit-identical to exhaustive/oracle.
     """
     cursors = [c for c in cursors if len(c.firsts)]
     if not cursors:
@@ -479,27 +238,31 @@ def blockmax_topk(
         )
     # phase 2: exact re-score of surviving postings in sorted-term order
     survivors.sort(key=lambda t: t[0].term)
+    uniq, scores = _score_blocks(survivors)
+    return [(int(uniq[i]), float(scores[i])) for i in topk_order(uniq, scores, k)]
+
+
+# perfbench's kernel probe (`perfbench/layers.py::probe_kernels`) times
+# the kernel under this name; `algo="wand"` selects the same kernel.
+wand_topk = blockmax_topk
+
+
+def _score_blocks(blocks) -> tuple[np.ndarray, np.ndarray]:
+    """Sum the decoded contributions of (cursor, block indices) pairs
+    per doc -> (doc_ids, scores), accumulating in the order given
+    (pairs sorted by term: the float identity contract)."""
     doc_arrs, con_arrs = [], []
-    for c, keep in survivors:
-        for bi in map(int, keep):
-            docs, partials = c.decode_cached(bi)
+    for c, bis in blocks:
+        for bi in bis:
+            docs, contribs = c.decode_cached(int(bi))
             doc_arrs.append(docs)
-            con_arrs.append(partials)
+            con_arrs.append(contribs)
     if not doc_arrs:
-        return []
-    docs_all = np.concatenate(doc_arrs)
-    contribs = np.concatenate(con_arrs)
-    uniq, inv = np.unique(docs_all, return_inverse=True)
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    uniq, inv = np.unique(np.concatenate(doc_arrs), return_inverse=True)
     scores = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(scores, inv, contribs)
-    if len(uniq) <= k:
-        sel = np.lexsort((uniq, -scores))[:k]
-    else:
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        cand = np.flatnonzero(scores >= kth)
-        cand = cand[np.lexsort((uniq[cand], -scores[cand]))]
-        sel = cand[:k]
-    return [(int(uniq[i]), float(scores[i])) for i in sel]
+    np.add.at(scores, inv, np.concatenate(con_arrs))  # in-order accumulation
+    return uniq, scores
 
 
 def _exhaustive_scores(cursors: list[TermCursor]):
@@ -507,45 +270,31 @@ def _exhaustive_scores(cursors: list[TermCursor]):
     pair, sorted-term accumulation order (float identity contract).
     Shared by exhaustive_topk and collapse_exhaustive_topk."""
     cursors = sorted(cursors, key=lambda c: c.term)
-    doc_arrs, con_arrs = [], []
-    for c in cursors:
-        for bi in range(len(c.firsts)):
-            docs, contribs = c.decode_cached(bi)
-            doc_arrs.append(docs)
-            con_arrs.append(contribs)
-    if not doc_arrs:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    docs_all = np.concatenate(doc_arrs)
-    contribs = np.concatenate(con_arrs)
-    uniq, inv = np.unique(docs_all, return_inverse=True)
-    scores = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(scores, inv, contribs)  # in-order accumulation (term-sorted)
-    return uniq, scores
+    return _score_blocks((c, range(len(c.firsts))) for c in cursors)
+
+
+def topk_order(docs: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the top k of (docs, scores) in rank order (score desc,
+    doc_id asc). Exact at the boundary: every doc tied with the kth
+    score survives the partition, so the doc_id sort breaks boundary
+    ties the way the global merge does."""
+    if len(scores) <= k:
+        return np.lexsort((docs, -scores))
+    kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+    cand = np.flatnonzero(scores >= kth)
+    return cand[np.lexsort((docs[cand], -scores[cand]))][:k]
 
 
 def exhaustive_topk(
     cursors: list[TermCursor], k: int, after: tuple[float, int] | None = None,
 ) -> list[tuple[int, float]]:
-    """Vectorized exact scoring of every posting (the fast path in this
-    Python sandbox; WAND wins when posting lists dwarf the candidate set
-    and the kernel is native). Sorted-term accumulation order."""
+    """Exact top-k by scoring every posting (`_exhaustive_scores`, then
+    the `topk_order` cut), after the search_after filter when paging."""
     uniq, scores = _exhaustive_scores(cursors)
-    if len(uniq) == 0:
-        return []
     if after is not None:
         keep_m = _cursor_mask(uniq, scores, after)
         uniq, scores = uniq[keep_m], scores[keep_m]
-    if len(uniq) <= k:
-        order = np.lexsort((uniq, -scores))[:k]
-    else:
-        # exact boundary handling: keep EVERY doc scoring >= the kth
-        # score (ties at the boundary are broken by doc_id, so none may
-        # be dropped before the sort)
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        cand = np.flatnonzero(scores >= kth)
-        cand = cand[np.lexsort((uniq[cand], -scores[cand]))]
-        order = cand[:k]
-    return [(int(uniq[i]), float(scores[i])) for i in order]
+    return [(int(uniq[i]), float(scores[i])) for i in topk_order(uniq, scores, k)]
 
 
 def collapse_exhaustive_topk(

@@ -89,7 +89,8 @@ def test_bmx_prunes_blocks_under_tight_threshold():
 @pytest.mark.parametrize("seed", range(30))
 @pytest.mark.parametrize("k", [1, 5, 100])
 def test_wand_equals_exhaustive(seed, k):
-    """DAAT block-max WAND joins the cross-algo fuzz: identical doc ids
+    """The kernel behind algo="wand" (block-max, `blockmax_topk`) on a
+    second fuzz family (up to 7 terms, k up to 100): identical doc ids
     and bit-identical scores vs exhaustive under random skew."""
     import copy
 
@@ -104,42 +105,65 @@ def test_wand_equals_exhaustive(seed, k):
         )
         for j in range(n_terms)
     ]
-    got = W.wand_topk(copy.deepcopy(cursors), k)
+    got = W.blockmax_topk(copy.deepcopy(cursors), k)
     exp = W.exhaustive_topk(copy.deepcopy(cursors), k)
     assert [d for d, _ in got] == [d for d, _ in exp], (seed, k)
     for (_, sg), (_, se) in zip(got, exp):
         assert sg == se
-    # the textbook per-posting pivot loop stays as a cross-check oracle
-    classic = W.wand_topk_classic(copy.deepcopy(cursors), k)
-    assert [d for d, _ in classic] == [d for d, _ in exp], (seed, k)
-    for (_, sg), (_, se) in zip(classic, exp):
-        assert sg == se
 
 
-def test_wand_window_prunes(capsys):
-    """The batched kernel must actually skip windows under a tight
-    threshold (instrument via block decode counts: pruned windows never
-    decode their blocks)."""
-    import copy
-
-    def mk(with_cache):
+def test_wand_window_prunes():
+    """Block-max pruning must actually engage under a tight threshold:
+    a rare high-idf term sets theta, and most of the hot low-idf term's
+    blocks are never decoded (counted through the decode memo)."""
+    def mk(cache):
         rng = np.random.default_rng(11)
         rare = _make_cursor(rng, "aa_rare", 5000, density=0.002, idf=8.0)
         hot = _make_cursor(rng, "zz_hot", 5000, density=0.8, idf=0.05, block_size=16)
-        cache = {} if with_cache else None
-        if with_cache:
-            # attach AFTER construction so __post_init__'s block-0 decode
-            # is not counted
-            rare.cache = cache
-            hot.cache = cache
-        return [rare, hot], cache
+        rare.cache = hot.cache = cache
+        return [rare, hot]
 
-    cursors, cache = mk(with_cache=True)
+    cache: dict = {}
+    cursors = mk(cache)
     n_hot_blocks = len(cursors[1].firsts)
-    got = W.wand_topk(cursors, 3)
-    exp_cursors, _ = mk(with_cache=False)
-    exp = W.exhaustive_topk(exp_cursors, 3)
-    assert [d for d, _ in got] == [d for d, _ in exp]
+    got = W.blockmax_topk(cursors, 3)
+    exp = W.exhaustive_topk(mk(None), 3)
+    assert got == exp
     # pruning evidence: far fewer hot-term blocks decoded than exist
     hot_blocks_decoded = sum(1 for kk in cache if kk[0] == "zz_hot")
     assert hot_blocks_decoded < n_hot_blocks
+
+
+def test_block_runs_match_grouped_rows():
+    """`block_runs` (one sort, runs cut at key changes) yields, per
+    (field, term) key in key order, one run per seg in seg order with
+    its blocks in block_ord order: the nested groupby + sort_values
+    construction it replaces, on shuffled rows."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    rows = [
+        {"field": f, "term": t, "seg": s, "block_ord": b,
+         "first_doc": 1000 * s + 10 * b, "last_doc": 1000 * s + 10 * b + 9,
+         "max_partial": float(rng.uniform(0.1, 2.0)),
+         "gaps": bytes([b]), "tfs": bytes([s]), "dls": t.encode()}
+        for f in ("text", "tool") for t in ("b", "a", "c")
+        for s in range(int(rng.integers(1, 4)))
+        for b in range(int(rng.integers(1, 5)))
+    ]
+    pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=1).reset_index(drop=True)
+    runs = W.block_runs(pdf, by=("field", "term"), ub_scale=2.0)
+    grouped = pdf.groupby(["field", "term"], sort=True)
+    assert list(runs) == list(grouped.groups)
+    for (f, t), tg in grouped:
+        row, got = runs[(f, t)]
+        assert (pdf.loc[row, "field"], pdf.loc[row, "term"]) == (f, t)
+        want = [g.sort_values("block_ord") for _, g in tg.groupby("seg", sort=True)]
+        assert [r["seg"] for r in got] == [int(g["seg"].iloc[0]) for g in want]
+        for r, g in zip(got, want):
+            assert r["firsts"].tolist() == g["first_doc"].tolist()
+            assert r["lasts"].tolist() == g["last_doc"].tolist()
+            assert r["maxps"].tolist() == (g["max_partial"] * 2.0).tolist()
+            assert r["gaps"] == list(g["gaps"])
+            assert r["tfs"] == list(g["tfs"]) and r["dls"] == list(g["dls"])
+    assert W.block_runs(pdf.iloc[:0]) == {}
