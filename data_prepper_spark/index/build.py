@@ -458,6 +458,23 @@ def build_index(
     layout.IndexExistsError when index_dir already holds an index."""
     if not (resume or incremental):
         layout.check_fresh(index_dir)
+    stats_path = os.path.join(index_dir, "stats.json")
+    # every resume / incremental check runs before the first write (the
+    # convmap append below): a refused build leaves the index as it was
+    old = None
+    if resume and os.path.exists(stats_path):
+        old = json.load(open(stats_path))
+        if old["n_shards"] != n_shards:
+            raise layout.IndexStateError("resume with different n_shards")
+    elif incremental:
+        old = json.load(open(stats_path))
+        if old["n_shards"] != n_shards:
+            raise layout.IndexStateError("incremental with different n_shards")
+        if snapshot_id <= int(old.get("snapshot_id", -1)):
+            raise layout.IndexStateError(
+                f"incremental snapshot_id {snapshot_id} must exceed the index's "
+                f"current {old.get('snapshot_id')} (compaction consumes an id too)"
+            )
     # external-id corpora without a conv_id shard by doc_id-string; the
     # choice is RECORDED in stats.json (shard_key) so query-side shard
     # derivation (engine.sharded_docs) can mirror it instead of guessing
@@ -465,7 +482,6 @@ def build_index(
     if ext_shard_from_doc:
         transcripts = transcripts.withColumn("conv_id", F.col("doc_id").cast("string"))
     os.makedirs(index_dir, exist_ok=True)
-    stats_path = os.path.join(index_dir, "stats.json")
     # id scheme: fresh builds detect it (arithmetic conv-N packing when
     # it applies, persisted convmap for arbitrary — UUID — schemes) in
     # the same narrow agg that computes the corpus stats; resume and
@@ -473,8 +489,8 @@ def build_index(
     # schemes would fork the doc_id space.
     corpus_stats = None
     if assign_ids:
-        if (resume or incremental) and os.path.exists(stats_path):
-            id_scheme = json.load(open(stats_path)).get("id_scheme", "arith")
+        if old is not None:
+            id_scheme = old.get("id_scheme", "arith")
         else:
             # the convmap join drops rows without a conv_id: they are
             # not documents of the index
@@ -489,10 +505,8 @@ def build_index(
     else:
         id_scheme = "external"
         docs_assigned = transcripts
-    if resume and os.path.exists(stats_path):
-        stats = json.load(open(stats_path))
-        if stats["n_shards"] != n_shards:
-            raise layout.IndexStateError("resume with different n_shards")
+    if resume and old is not None:
+        stats = old
         tokenizer = stats.get("tokenizer", "ascii")
     elif incremental:
         # CDC append (snapshots-between semantics of the reference's
@@ -503,14 +517,6 @@ def build_index(
         # avgdl_now / avgdl_min — a provable upper bound on how much any
         # stale block's true max partial can exceed its stored one
         # (partial is monotone in avgdl with ratio <= avgdl2/avgdl1).
-        old = json.load(open(stats_path))
-        if old["n_shards"] != n_shards:
-            raise layout.IndexStateError("incremental with different n_shards")
-        if snapshot_id <= int(old.get("snapshot_id", -1)):
-            raise layout.IndexStateError(
-                f"incremental snapshot_id {snapshot_id} must exceed the index's "
-                f"current {old.get('snapshot_id')} (compaction consumes an id too)"
-            )
         # an index has ONE analyzer for its whole life (same contract as
         # an OpenSearch index mapping): incremental appends reuse it
         tokenizer = old.get("tokenizer", "ascii")

@@ -25,6 +25,13 @@ kernel -> gather:
                                    on the driver, (score desc, doc_id
                                    asc), returned as a LocalRelation
 
+Every kernel reads its blocks one way: `wand.block_runs` cuts the
+shard's rows into per-(term, seg) runs and `wand.TermCursor` decodes a
+block once per kernel call, with the streams the scan projected and
+the segment's tombstoned docs dropped. The top-k kernels score the
+cursors directly; `_ShardTerms` serves the others (bool, phrase, span,
+filtered, explain, count and facets) from the same cursors.
+
 A driver-literal request is one pruned scan, one exchange and the
 kernel, all run inside the call. Batches above
 prep.PREP_DISTRIBUTED_THRESHOLD shuffle-join the qmap and dictionary on
@@ -45,7 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import codec, tombstones
+from data_prepper_spark.index import codec
 from data_prepper_spark.index.reader import (  # noqa: F401 (load_stats re-export)
     COUNT_COLS,
     MATCH_COLS,
@@ -221,29 +228,63 @@ class _Hits:
 
 
 class _ShardTerms:
-    """One shard's block rows for the query terms, grouped by term
-    (sorted by (seg, block_ord)) with each term's global df and idf and
-    its query entries. Term runs decode on demand through a block memo
-    shared by every query in the kernel call: fully while a query has
-    no candidate set, block-range-pruned to the candidates after."""
+    """One shard's posting blocks for the query terms as per-term lists
+    of segment cursors (`wand.block_runs`), with each term's global df
+    and idf and its query entries. Every cursor shares one decode memo,
+    so a block decodes once per kernel call, whichever query or path
+    reads it; the streams decoded are the ones the scan projected."""
 
-    def __init__(self, pdf: pd.DataFrame, n_docs: int = 0, tomb=None,
-                 positions: bool = False):
-        self.tomb, self.positions, self.memo = tomb, positions, {}
-        self.blocks, self.df, self.idf, self.entries = {}, {}, {}, {}
-        for term, tg in pdf.groupby("term", sort=True):
-            self.blocks[term] = tg.sort_values(["seg", "block_ord"])
-            self.entries[term] = tg["queries"].iloc[0]
-            if "df" in tg.columns:
-                self.df[term] = int(tg["df"].iloc[0])
+    def __init__(self, pdf: pd.DataFrame, n_docs: int = 0, tomb=None):
+        self.memo: dict = {}
+        self.cursors, self.df, self.idf, self.entries = {}, {}, {}, {}
+        dfs = pdf["df"].to_numpy() if "df" in pdf else None
+        queries = pdf["queries"].to_numpy()
+        for (term,), (row, runs) in wand_mod.block_runs(pdf).items():
+            self.entries[term] = queries[row]
+            if dfs is not None:
+                self.df[term] = int(dfs[row])
                 self.idf[term] = _idf(n_docs, self.df[term])
+            self.cursors[term] = [
+                wand_mod.TermCursor(
+                    term=term, cache=self.memo,
+                    tomb=tomb.for_seg(r["seg"]) if tomb is not None else None,
+                    **r)
+                for r in runs
+            ]
 
     def runs(self, term: str, cand: np.ndarray | None = None) -> dict | None:
-        if cand is None:
-            return _decode_term_runs(self.blocks[term], self.tomb,
-                                     self.positions, self.memo, term)
-        return _pruned_runs(self.blocks[term], cand, self.tomb,
-                            self.positions, self.memo, term)
+        """The term's live postings sorted by doc: {"docs", "tfs", "dls"}
+        plus, when the scan read positions, the flat position stream
+        "pos" and its per-posting offsets "occ".
+
+        With candidates (sorted doc ids) only blocks whose [first_doc,
+        last_doc] holds one are decoded: any candidate posting lies in
+        such a block, so the cut is exact, and a hot term's cost scales
+        with the candidate set, not its df. None when no block
+        overlaps. Segments hold disjoint live doc sets, so the merge
+        across them is a sort by doc."""
+        blocks = []
+        for c in self.cursors[term]:
+            keep = range(len(c.firsts)) if cand is None else np.flatnonzero(
+                np.searchsorted(cand, c.firsts, side="left")
+                < np.searchsorted(cand, c.lasts, side="right"))
+            blocks += [c.decode(int(bi)) for bi in keep]
+        if not blocks:
+            return None
+        docs = np.concatenate([b[0] for b in blocks])
+        order = np.argsort(docs, kind="stable")
+        out = {"docs": docs[order]}
+        if blocks[0][1] is not None:
+            tfs = np.concatenate([b[1] for b in blocks]).astype(np.int64)
+            out["tfs"] = tfs[order]
+            out["dls"] = np.concatenate([b[2] for b in blocks]).astype(
+                np.int64)[order]
+        if blocks[0][3] is not None:
+            occ_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
+            out["pos"] = codec.gather_runs(
+                np.concatenate([b[3] for b in blocks]), occ_starts, tfs, order)
+            out["occ"] = np.concatenate(([0], np.cumsum(out["tfs"])))
+        return out
 
     def rarest_first(self, terms) -> list[str]:
         return sorted(terms, key=lambda t: (self.df[t], t))
@@ -282,94 +323,21 @@ class _ShardTerms:
         return scores
 
 
-def _decode_term_runs(
-    tg: pd.DataFrame, tomb=None, need_positions=True,
-    block_cache: dict | None = None, term: str | None = None,
-) -> dict:
-    """Decode the given (seg, block) rows of ONE term into doc-sorted
-    posting arrays + (optionally) the flat per-occurrence position
-    stream. Works on any SUBSET of a term's block rows (the block-pruned
-    kernels pass only blocks whose [first_doc, last_doc] contains a
-    candidate). Segments hold disjoint doc sets, so the multi-segment
-    merge is a stable interleave (argsort by doc, position runs gathered
-    along). Tombstoned docs' postings (and their position runs) are
-    dropped.
-
-    ``block_cache`` (optional dict): per-block decode memo shared across
-    queries within one kernel call, keyed by (term, seg, block_ord,
-    has_pos) — two queries pruning to overlapping block sets decode each
-    block once."""
-    has_pos = need_positions and "poss" in tg.columns
-    d_docs, d_tf, d_dl, d_pos, d_seg = [], [], [], [], []
-    for i, (g, t, l, first, seg, bord) in enumerate(zip(
-        tg["gaps"], tg["tfs"], tg["dls"], tg["first_doc"], tg["seg"],
-        tg["block_ord"],
-    )):
-        key = (term, int(seg), int(bord), has_pos)
-        hit = block_cache.get(key) if block_cache is not None else None
-        if hit is None:
-            docs = codec.delta_decode(bytes(g), base=int(first))
-            tf = codec.varint_decode(bytes(t))
-            dl = codec.varint_decode(bytes(l))
-            if has_pos:
-                po = tg["poss"].iloc[i]
-                pos = codec.pos_delta_decode(bytes(po or b""), tf)
-            else:
-                pos = None
-            if block_cache is not None:
-                block_cache[key] = (docs, tf, dl, pos)
-        else:
-            docs, tf, dl, pos = hit
-        d_docs.append(docs)
-        d_tf.append(tf)
-        d_dl.append(dl)
-        if has_pos:
-            d_pos.append(pos)
-        d_seg.append(np.full(len(docs), int(seg), dtype=np.int64))
-    docs = np.concatenate(d_docs)
-    tfs = np.concatenate(d_tf).astype(np.int64)
-    dls = np.concatenate(d_dl).astype(np.int64)
-    order = np.argsort(docs, kind="stable")
-    if tomb is not None:
-        segs = np.concatenate(d_seg)
-        del_mask = tombstones.deleted_mask_per_seg(docs, segs, tomb)
-        order = order[~del_mask[order]]
-    out = {"docs": docs[order], "tfs": tfs[order], "dls": dls[order]}
-    if has_pos:
-        pos = np.concatenate(d_pos)
-        if len(pos) != int(tfs.sum()):
-            raise ValueError(
-                "index has no position stream (built with "
-                "store_positions=False) — match_phrase needs positions"
-            )
-        occ_starts = np.concatenate(([0], np.cumsum(tfs)))[:-1]
-        out["pos"] = codec.gather_runs(pos, occ_starts, tfs, order)
-        out["occ"] = np.concatenate(([0], np.cumsum(out["tfs"])))
-    return out
-
-
-def _pruned_runs(
-    tg_sorted: pd.DataFrame, cand: np.ndarray, tomb=None,
-    need_positions=True, block_cache=None, term=None,
-):
-    """Block-pruned decode: only blocks whose [first_doc, last_doc]
-    range contains at least one candidate are decoded (one searchsorted
-    pair over the block metadata — VERDICT r3 'What's wrong' #3: a hot
-    term ("the", "error") in a phrase/bool no longer decodes its entire
-    per-shard posting+position stream; cost scales with the CANDIDATE
-    set, not the term's df). Exact: any candidate present in the term's
-    postings lies in a block whose range contains it, so kept blocks
-    cover every candidate posting. Returns None when no block overlaps.
-    """
-    firsts = tg_sorted["first_doc"].to_numpy(np.int64)
-    lasts = tg_sorted["last_doc"].to_numpy(np.int64)
-    lo = np.searchsorted(cand, firsts, side="left")
-    hi = np.searchsorted(cand, lasts, side="right")
-    keep = lo < hi
-    if not keep.any():
-        return None
-    sub = tg_sorted if keep.all() else tg_sorted.iloc[np.flatnonzero(keep)]
-    return _decode_term_runs(sub, tomb, need_positions, block_cache, term)
+def _match_sets(pdf: pd.DataFrame, tomb=None):
+    """(query_id, docs) per query of one shard's kernel call: the live
+    docs holding any of the query's terms (match / bool-should msm=1
+    semantics), over the gaps stream alone when that is all the scan
+    read. Shared by `_count_kernel` and `facets._match_kernel`."""
+    shard = _ShardTerms(pdf, tomb=tomb)
+    term_docs = {t: shard.runs(t)["docs"] for t in shard.cursors}
+    terms_of: dict[str, list[str]] = {}
+    for term, qs in shard.entries.items():
+        for q in qs:
+            terms_of.setdefault(q["query_id"], []).append(term)
+    for qid, terms in terms_of.items():
+        # one term's docs are already unique and sorted
+        yield qid, (term_docs[terms[0]] if len(terms) == 1 else
+                    np.unique(np.concatenate([term_docs[t] for t in terms])))
 
 
 # ------------------------------------------------------------ match / BM25
@@ -545,41 +513,15 @@ def match_scores(
 # -------------------------------------------------- _count / total hits
 
 def _count_kernel(tomb=None):
-    """Per-shard exact match counting: decode ONLY the gaps stream of
-    each term (no tfs/dls/poss/max_partial ever reach the scan), union
-    doc ids per query, count live docs."""
+    """Per-shard exact match counting: the live docs of each query's
+    `_match_sets`, counted. Only the gaps stream reaches the scan."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term_docs: dict[str, np.ndarray] = {}
-        qmap: dict[str, list[str]] = {}
-        for term, tg in pdf.groupby("term", sort=False):
-            parts, segs = [], []
-            for g, first, seg in zip(tg["gaps"], tg["first_doc"], tg["seg"]):
-                d = codec.delta_decode(bytes(g), base=int(first))
-                parts.append(d)
-                segs.append(np.full(len(d), int(seg), np.int64))
-            docs = np.concatenate(parts)
-            if tomb is not None:
-                mask = tombstones.deleted_mask_per_seg(
-                    docs, np.concatenate(segs), tomb
-                )
-                docs = docs[~mask]
-            term_docs[term] = docs
-            for q in tg["queries"].iloc[0]:
-                qmap.setdefault(q["query_id"], []).append(term)
-        rows_q, rows_n = [], []
-        for qid, ts in qmap.items():
-            # one term's docs are already unique (per-seg doc-sorted,
-            # segments disjoint); multi-term unions via np.unique
-            n = (
-                len(term_docs[ts[0]]) if len(ts) == 1
-                else len(np.unique(np.concatenate([term_docs[t] for t in ts])))
-            )
-            rows_q.append(qid)
-            rows_n.append(n)
+        sets = dict(_match_sets(pdf, tomb))
         return pd.DataFrame(
-            {"query_id": rows_q,
-             "total_hits": np.array(rows_n, dtype=np.int64)}
+            {"query_id": list(sets),
+             "total_hits": np.array([len(d) for d in sets.values()],
+                                    dtype=np.int64)}
         )
 
     return run
@@ -655,7 +597,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
     exact and unchanged."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, n_docs, tomb, positions=True)
+        shard = _ShardTerms(pdf, n_docs, tomb)
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:
@@ -985,7 +927,7 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
     corpus rows passing the filter, shuffled here on the same
     shard key the index build used). The allowed set acts as the
     candidate set from the first decode on, so hot terms are
-    block-range-pruned against it (_pruned_runs) — per-shard cost
+    block-range-pruned against it (_ShardTerms.runs) — per-shard cost
     scales with the FILTERED corpus, not the terms' df.
 
     With a boost_mode (function_score), `right` also carries each
@@ -1002,7 +944,7 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
         if boost_mode is not None:
             fac = right["factor"].to_numpy(np.float64)[first]
         shard = _ShardTerms(left, n_docs, tomb)
-        decoded = {t: shard.runs(t, allowed) for t in shard.blocks}
+        decoded = {t: shard.runs(t, allowed) for t in shard.cursors}
         queries: dict[str, list] = {}
         for term, qs in shard.entries.items():
             for q in qs:

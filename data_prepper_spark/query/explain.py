@@ -15,7 +15,7 @@ Scale shape: explain targets a handful of (query, doc) pairs — the
 top-k a user is debugging. The pairs are driver-known and tiny, so they
 ride into the shard kernel inside the broadcast query map, the block
 decode is pruned to blocks whose doc range contains a target
-(engine._pruned_runs), and the parquet scan keeps score_topk's term
+(engine._ShardTerms.runs), and the parquet scan keeps score_topk's term
 In-filter pushdown. Cost scales with the target set, not the corpus.
 """
 
@@ -46,8 +46,8 @@ def _explain_kernel(avgdl: float, n_docs: int, tomb=None):
                 [np.asarray(q["targets"], dtype=np.int64) for q in qs]
             ))
             runs = shard.runs(term, targets_all)
-            if runs is None:
-                continue
+            if runs is None or not len(runs["docs"]):
+                continue  # no target's block, or only tombstoned docs
             df_t, idf = shard.df[term], shard.idf[term]
             docs, tfs, dls = runs["docs"], runs["tfs"], runs["dls"]
             for q in qs:

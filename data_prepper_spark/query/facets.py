@@ -24,32 +24,25 @@ join with zero corpus shuffle. The facet agg itself is two-phase
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index.reader import COUNT_COLS, IndexReader
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _ShardTerms, scatter
+from data_prepper_spark.query.engine import _match_sets, scatter
 
 _MATCH_OUT = "query_id string, doc_id long"
 
 
 def _match_kernel(tomb=None):
-    """Per-shard: (query_id, doc_id) for every doc containing ANY of the
-    query's terms (OpenSearch `match` / bool-should msm=1 match set)."""
+    """Per-shard: (query_id, doc_id) for every doc of the query's
+    `engine._match_sets` (OpenSearch `match` / bool-should msm=1 match
+    set)."""
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, tomb=tomb)
-        decoded = {t: shard.runs(t)["docs"] for t in shard.blocks}
-        queries: dict[str, list[str]] = {}
-        for term, qs in shard.entries.items():
-            for q in qs:
-                queries.setdefault(q["query_id"], []).append(term)
         out_q, out_d = [], []
-        for qid, terms in queries.items():
-            docs = np.unique(np.concatenate([decoded[t] for t in terms]))
+        for qid, docs in _match_sets(pdf, tomb):
             out_q += [qid] * len(docs)
             out_d += list(docs)
         return pd.DataFrame({"query_id": out_q, "doc_id": out_d})
@@ -61,15 +54,15 @@ def match_docs(
     spark: SparkSession, index_dir: str, queries: DataFrame,
 ) -> DataFrame:
     """queries(query_id, query_text) -> (query_id, doc_id) match set.
-    The score_topk scatter minus the dictionary (no idf), positions
-    column never read."""
+    The count_matches scatter: no dictionary (no idf), and the scan
+    reads the gaps stream alone."""
     r = IndexReader(spark, index_dir)
     per_term = prep.count_entries(
         prep.collect_rows(queries, "query_id", "query_text"), r.mode
     )
     out = scatter(
         r, per_term, prep.COUNT_FIELDS, lambda: _match_kernel(r.tomb),
-        _MATCH_OUT, cols=COUNT_COLS + ("tfs", "dls"), dictionary=False,
+        _MATCH_OUT, cols=COUNT_COLS, dictionary=False,
     )
     return out if out is not None else spark.createDataFrame([], _MATCH_OUT)
 

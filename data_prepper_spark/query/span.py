@@ -116,7 +116,7 @@ def _min_window_ordered(seqs: list[np.ndarray]) -> int:
 
 def _span_kernel(avgdl: float, n_docs: int, tomb=None):
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, n_docs, tomb, positions=True)
+        shard = _ShardTerms(pdf, n_docs, tomb)
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:

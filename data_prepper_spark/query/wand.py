@@ -1,7 +1,14 @@
-"""Exact BM25 top-k over compressed posting blocks, one shard at a time.
+"""Posting-block cursors and exact BM25 top-k, one shard at a time.
 
-Two scorers share one cursor type (`TermCursor`, a term's blocks in one
-segment, decoded on demand through a per-call memo):
+`block_runs` cuts a shard's block rows into per-(term, seg) runs with
+one sort, and `TermCursor` (a term's blocks in one segment) is the one
+posting decoder of every query kernel: a block decodes once per kernel
+call through a memo, with the streams the scan projected, and its
+tombstoned docs dropped. The scorers below read cursors directly;
+`engine._ShardTerms` serves the bool, phrase, span, filter, explain
+and match-set kernels from the same cursors.
+
+Two scorers:
 
 - `blockmax_topk`, the engine's top-k kernel: block-max WAND (Ding &
   Suel 2011, "Faster top-k document retrieval using block-max
@@ -31,67 +38,105 @@ import numpy as np
 import pandas as pd
 
 from data_prepper_spark.index import codec
+from data_prepper_spark.index.tombstones import deleted_mask
 
 
 @dataclass
 class TermCursor:
-    """One term's posting blocks in one segment (sorted by first_doc)."""
+    """One term's posting blocks in one segment (sorted by first_doc):
+    the per-block metadata and streams the scan projected, `None` for
+    the streams it did not (see `block_runs`)."""
 
     term: str
-    idf: float
-    avgdl: float
-    # per block: first_doc, last_doc, max_partial, gaps, tfs, dls
+    # per block: first_doc, the doc-gap stream, and when projected
+    # last_doc, max_partial, tfs, dls and the position stream
     firsts: np.ndarray
-    lasts: np.ndarray
-    maxps: np.ndarray
     gaps: list[bytes]
-    tfs: list[bytes]
-    dls: list[bytes]
-    seg: int = 0           # segment id (incremental builds); in cache keys
-    # optional decode memo {(term, seg, bi[, boost]): (docs, partials)},
-    # one dict per kernel call — lets many queries hitting the same term
-    # in one shard decode each block once
+    lasts: np.ndarray | None = None
+    maxps: np.ndarray | None = None
+    tfs: list[bytes] | None = None
+    dls: list[bytes] | None = None
+    poss: list[bytes | None] | None = None
+    idf: float = 0.0
+    avgdl: float = 0.0
+    seg: int = 0           # segment id (incremental builds); in memo keys
+    # optional decode memo {(term, seg, bi): (docs, tfs, dls, pos,
+    # {idf: partials})}, one dict per kernel call: every query and every
+    # kernel path hitting a block in one call decodes it once
     cache: dict | None = None
     # query-time term boost ("error^2"): scales this term's idf — and
     # therefore every contribution AND every upper bound — uniformly,
-    # so all pruning rules stay exact. boost != 1 enters the decode
-    # cache key (cached partials are idf-scaled).
+    # so all pruning rules stay exact
     boost: float = 1.0
-    # optional tombstone ranges (starts, ends): deleted docs are dropped
-    # at decode time (Lucene liveDocs semantics — results exclude them
-    # immediately; df/avgdl stay full-corpus until compaction). Block
-    # bounds (firsts/lasts/maxps) stay conservative upper bounds, so
-    # every skip rule remains exact.
+    # optional tombstone ranges (starts, ends) of this cursor's segment:
+    # deleted docs are dropped at decode time (Lucene liveDocs semantics
+    # — results exclude them immediately; df/avgdl stay full-corpus
+    # until compaction). Block bounds (firsts/lasts/maxps) stay
+    # conservative upper bounds, so every skip rule remains exact.
     tomb: tuple | None = None
 
     def __post_init__(self):
         if self.boost != 1.0:
             self.idf = float(self.idf * self.boost)
-        self.global_ub = float(self.idf * self.maxps.max()) if len(self.maxps) else 0.0
+        self.global_ub = (float(self.idf * self.maxps.max())
+                          if self.maxps is not None and len(self.maxps) else 0.0)
 
-    def decode_cached(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
-        """Decode block bi -> (docs, idf-scaled partial scores), via the
-        per-call memo when present. Tombstoned docs are removed BEFORE
-        memoizing: the memo lives for one kernel call, which sees one
-        index state (tombstones, idf, avgdl), so no entry goes stale."""
-        key = (
-            (self.term, self.seg, bi) if self.boost == 1.0
-            else (self.term, self.seg, bi, self.boost)
-        )
+    def decode(self, bi: int) -> tuple:
+        """Block bi's live postings -> (docs, tfs, dls, pos, partials),
+        None for a stream the scan did not project, through the memo:
+        one entry per block, whose `partials` ({idf: array}) dict
+        `decode_cached` fills in place. Tombstoned docs are removed
+        BEFORE memoizing: the memo lives for one kernel call, which sees
+        one index state (tombstones, idf, avgdl), so no entry goes
+        stale."""
+        key = (self.term, self.seg, bi)
         hit = self.cache.get(key) if self.cache is not None else None
         if hit is not None:
             return hit
-        g, tf, dl = codec.varint_decode3(self.gaps[bi], self.tfs[bi], self.dls[bi])
-        docs = codec.gaps_to_docs(g, base=int(self.firsts[bi]))
+        base = int(self.firsts[bi])
+        if self.tfs is None:
+            docs, tf, dl = codec.delta_decode(self.gaps[bi], base), None, None
+        else:
+            g, tf, dl = codec.varint_decode3(self.gaps[bi], self.tfs[bi], self.dls[bi])
+            docs = codec.gaps_to_docs(g, base)
+        pos = None
+        if self.poss is not None:
+            pos = codec.pos_delta_decode(self.poss[bi] or b"", tf)
+            if len(pos) != int(tf.sum()):
+                raise ValueError(
+                    "index has no position stream (built with "
+                    "store_positions=False) — match_phrase needs positions"
+                )
         if self.tomb is not None:
-            from data_prepper_spark.index.tombstones import deleted_mask
-
             keep = ~deleted_mask(docs, self.tomb)
-            docs, tf, dl = docs[keep], tf[keep], dl[keep]
-        partials = self.idf * codec.bm25_partial(tf, dl, self.avgdl)
+            if pos is not None:
+                pos = pos[np.repeat(keep, tf.astype(np.int64))]
+            docs = docs[keep]
+            if tf is not None:
+                tf, dl = tf[keep], dl[keep]
+        out = (docs, tf, dl, pos, {})
         if self.cache is not None:
-            self.cache[key] = (docs, partials)
-        return docs, partials
+            self.cache[key] = out
+        return out
+
+    def decode_cached(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
+        """Block bi -> (docs, idf-scaled partial scores), through the
+        memo entry `decode` made for the block."""
+        docs, tf, dl, _, partials = self.decode(bi)
+        got = partials.get(self.idf)
+        if got is None:
+            got = partials[self.idf] = self.idf * codec.bm25_partial(
+                tf, dl, self.avgdl)
+        return docs, got
+
+
+# block_runs output name -> (blocks column, dtype); first_doc and gaps
+# are always projected, the others only by some kernels
+_RUN_COLS = {
+    "firsts": ("first_doc", np.int64), "lasts": ("last_doc", np.int64),
+    "maxps": ("max_partial", np.float64), "gaps": ("gaps", object),
+    "tfs": ("tfs", object), "dls": ("dls", object), "poss": ("poss", object),
+}
 
 
 def block_runs(
@@ -104,7 +149,8 @@ def block_runs(
     order: `row` is the position in `pdf` of one of the key's rows (for
     per-key columns such as df and the query entries), and `runs` holds
     one dict of TermCursor keyword arguments per segment, in seg order,
-    with `maxps` scaled by `ub_scale`."""
+    with `maxps` scaled by `ub_scale`. A stream or column the frame
+    does not carry is None in every run."""
     n = len(pdf)
     if not n:
         return {}
@@ -117,21 +163,21 @@ def block_runs(
         c = c[order]
         change |= c[1:] != c[:-1]
     cut = np.flatnonzero(change) + 1
-    firsts = pdf["first_doc"].to_numpy(np.int64)[order]
-    lasts = pdf["last_doc"].to_numpy(np.int64)[order]
-    maxps = pdf["max_partial"].to_numpy(np.float64)[order] * ub_scale
-    gaps, tfs, dls = (pdf[c].to_numpy(object)[order] for c in ("gaps", "tfs", "dls"))
+    cols = {name: pdf[c].to_numpy(dt)[order]
+            for name, (c, dt) in _RUN_COLS.items() if c in pdf}
+    if "maxps" in cols:
+        cols["maxps"] = cols["maxps"] * ub_scale
     keys = [pdf[c].to_numpy(object)[order] for c in by]
     out: dict[tuple, tuple[int, list[dict]]] = {}
     for lo, hi in zip(np.r_[0, cut], np.r_[cut, n]):
         key = tuple(v[lo] for v in keys)
         if key not in out:
             out[key] = (int(order[lo]), [])
-        out[key][1].append({
-            "seg": int(seg[lo]), "firsts": firsts[lo:hi], "lasts": lasts[lo:hi],
-            "maxps": maxps[lo:hi], "gaps": list(gaps[lo:hi]),
-            "tfs": list(tfs[lo:hi]), "dls": list(dls[lo:hi]),
-        })
+        run = dict.fromkeys(_RUN_COLS)
+        for name, v in cols.items():
+            run[name] = list(v[lo:hi]) if v.dtype == object else v[lo:hi]
+        run["seg"] = int(seg[lo])
+        out[key][1].append(run)
     return out
 
 

@@ -138,7 +138,9 @@ def test_block_runs_match_grouped_rows():
     """`block_runs` (one sort, runs cut at key changes) yields, per
     (field, term) key in key order, one run per seg in seg order with
     its blocks in block_ord order: the nested groupby + sort_values
-    construction it replaces, on shuffled rows."""
+    construction it replaces, on shuffled rows. It carries the streams
+    the frame holds — the scoring projection, the gaps-only counting
+    projection, and one with positions — and None for the others."""
     import pandas as pd
 
     rng = np.random.default_rng(3)
@@ -146,24 +148,66 @@ def test_block_runs_match_grouped_rows():
         {"field": f, "term": t, "seg": s, "block_ord": b,
          "first_doc": 1000 * s + 10 * b, "last_doc": 1000 * s + 10 * b + 9,
          "max_partial": float(rng.uniform(0.1, 2.0)),
-         "gaps": bytes([b]), "tfs": bytes([s]), "dls": t.encode()}
+         "gaps": bytes([b]), "tfs": bytes([s]), "dls": t.encode(),
+         "poss": bytes([b, s])}
         for f in ("text", "tool") for t in ("b", "a", "c")
         for s in range(int(rng.integers(1, 4)))
         for b in range(int(rng.integers(1, 5)))
     ]
-    pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=1).reset_index(drop=True)
-    runs = W.block_runs(pdf, by=("field", "term"), ub_scale=2.0)
-    grouped = pdf.groupby(["field", "term"], sort=True)
-    assert list(runs) == list(grouped.groups)
-    for (f, t), tg in grouped:
-        row, got = runs[(f, t)]
-        assert (pdf.loc[row, "field"], pdf.loc[row, "term"]) == (f, t)
-        want = [g.sort_values("block_ord") for _, g in tg.groupby("seg", sort=True)]
-        assert [r["seg"] for r in got] == [int(g["seg"].iloc[0]) for g in want]
-        for r, g in zip(got, want):
-            assert r["firsts"].tolist() == g["first_doc"].tolist()
-            assert r["lasts"].tolist() == g["last_doc"].tolist()
-            assert r["maxps"].tolist() == (g["max_partial"] * 2.0).tolist()
-            assert r["gaps"] == list(g["gaps"])
-            assert r["tfs"] == list(g["tfs"]) and r["dls"] == list(g["dls"])
-    assert W.block_runs(pdf.iloc[:0]) == {}
+    full = pd.DataFrame(rows).sample(frac=1.0, random_state=1).reset_index(drop=True)
+    keys = ["field", "term", "seg", "block_ord", "first_doc"]
+    for pdf in (
+        full.drop(columns="poss"),
+        full[keys + ["gaps"]],
+        full.drop(columns="max_partial"),
+    ):
+        runs = W.block_runs(pdf, by=("field", "term"), ub_scale=2.0)
+        grouped = pdf.groupby(["field", "term"], sort=True)
+        assert list(runs) == list(grouped.groups)
+        for (f, t), tg in grouped:
+            row, got = runs[(f, t)]
+            assert (pdf.loc[row, "field"], pdf.loc[row, "term"]) == (f, t)
+            want = [g.sort_values("block_ord")
+                    for _, g in tg.groupby("seg", sort=True)]
+            assert [r["seg"] for r in got] == [int(g["seg"].iloc[0]) for g in want]
+            for r, g in zip(got, want):
+                for name, (col, _) in W._RUN_COLS.items():
+                    if col not in pdf:
+                        assert r[name] is None, name
+                    elif col == "max_partial":
+                        assert r[name].tolist() == (g[col] * 2.0).tolist()
+                    else:
+                        assert list(r[name]) == list(g[col]), name
+    assert W.block_runs(full.iloc[:0]) == {}
+
+
+def test_one_memo_insert_per_block():
+    """Within one kernel call, a block that `_ShardTerms.runs` and a
+    scoring cursor's `decode_cached` both read is decoded and inserted
+    into the memo once, and both see the same postings."""
+    import dataclasses
+
+    import pandas as pd
+
+    from data_prepper_spark.query.engine import _ShardTerms
+
+    ref = _make_cursor(np.random.default_rng(5), "t", 600, density=0.3)
+    n = len(ref.firsts)
+    pdf = pd.DataFrame({
+        "term": "t", "seg": 0, "block_ord": np.arange(n),
+        "first_doc": ref.firsts, "last_doc": ref.lasts,
+        "max_partial": ref.maxps, "gaps": ref.gaps, "tfs": ref.tfs,
+        "dls": ref.dls, "queries": [[]] * n, "df": 180,
+    })
+    shard = _ShardTerms(pdf, n_docs=600)
+    run = shard.runs("t")
+    assert len(shard.memo) == n
+    (cursor,) = shard.cursors["t"]
+    scorer = dataclasses.replace(cursor, idf=ref.idf, avgdl=AVGDL)
+    assert scorer.cache is shard.memo
+    got = [scorer.decode_cached(bi) for bi in range(n)]
+    assert len(shard.memo) == n
+    want = [ref.decode_cached(bi) for bi in range(n)]
+    assert np.array_equal(np.concatenate([d for d, _ in got]), run["docs"])
+    for (gd, gp), (wd, wp) in zip(got, want):
+        assert np.array_equal(gd, wd) and np.array_equal(gp, wp)

@@ -5,7 +5,8 @@ slice are read on the driver, and the per-shard top-ks merge on the
 driver into a LocalRelation.
 
 Pinned here: the Spark jobs one request runs (score_topk, bool_topk,
-phrase_topk, and score_topk on an upserted and deleted-from index), and
+phrase_topk, and score_topk on an upserted and deleted-from index), the
+answers of every posting-reading entry point on that index, and
 rank identity of the driver merge against `oracle.bm25` on its edge
 cases: ties at the kth score, alias search's index tie, collapse,
 search_after cursors, k above the hit count, and empty answers."""
@@ -20,15 +21,21 @@ import pytest
 from data_prepper_spark.data.transcripts import generate_pandas
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import tombstones
+from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
+from data_prepper_spark.query.explain import explain_hits
+from data_prepper_spark.query.facets import match_docs
 from data_prepper_spark.query.multi import multi_index_topk
+from data_prepper_spark.query.span import span_near_topk
 
 Q_SCHEMA = "query_id string, query_text string, k int"
 TOPK_DTYPES = [("query_id", "string"), ("rank", "bigint"),
                ("doc_id", "bigint"), ("score", "double")]
 _groups = itertools.count()
+# oracle ids of a replaced generation: real doc id + DEAD, never returned
+DEAD = 1 << 52
 
 
 def _jobs(spark, fn):
@@ -148,11 +155,16 @@ def test_phrase_topk_request_runs_three_jobs(spark, index, corpus_pdf):
     assert rows  # the phrase is taken from a document
 
 
-def test_request_after_upsert_and_delete(spark, corpus_pdf, tmp_path):
-    """Tombstones are read on the driver: a request on an upserted and
-    deleted-from index still runs three jobs, and its answer is the
-    oracle's over the merged statistics with the hidden docs dropped."""
-    d = str(tmp_path / "mutated")
+@pytest.fixture(scope="module")
+def mutated(spark, corpus_pdf, tmp_path_factory):
+    """An index with two segments and tombstones: conversations 5 and 12
+    upserted (dead in the old segment, live in the new one), 3 and 44
+    deleted. -> (index dir, the oracle over the merged statistics, the
+    oracle ids no answer may hold, {oracle id: tokens}, query texts).
+
+    Pre-compaction statistics count the old generation too: the oracle
+    keeps it under ids no query can return, and answers drop them."""
+    d = str(tmp_path_factory.mktemp("mutated"))
     ib.build_index(spark, spark.createDataFrame(corpus_pdf), d, n_shards=4,
                    block_size=16)
     serials = corpus_pdf.conv_id.str.slice(5).astype(int)
@@ -164,25 +176,106 @@ def test_request_after_upsert_and_delete(spark, corpus_pdf, tmp_path):
                             snapshot_id=1)
     tombstones.delete_conversations(spark, d, [3, 44])
 
-    # pre-compaction statistics count the old generation too: keep it
-    # in the oracle under ids no query can return, then drop it
-    dead = 1 << 52
-    old_ids = _doc_ids(corpus_pdf) + rewritten.astype("int64") * dead
-    idx = oracle.build_index(list(zip(old_ids, corpus_pdf.text))
-                             + list(zip(_doc_ids(batch), batch.text)))
+    old_ids = _doc_ids(corpus_pdf) + rewritten.astype("int64") * DEAD
+    docs = (list(zip(old_ids, corpus_pdf.text))
+            + list(zip(_doc_ids(batch), batch.text)))
+    idx = oracle.build_index(docs)
     hidden = set(old_ids[rewritten | deleted])
+    tokens = {i: tokenize(t) for i, t in docs}
     # a deleted turn's and a replaced turn's own text: each tops the
     # unfiltered ranking, so the tombstones decide the answer
     texts = [corpus_pdf.text[deleted].iloc[0],
              corpus_pdf.text[rewritten].iloc[0], "error handling"]
+    return d, idx, hidden, tokens, texts
+
+
+def _live(mutated, text: str) -> list[tuple[int, float]]:
+    """The oracle's full match set of `text` with the hidden docs
+    dropped, in rank order."""
+    _, idx, hidden, _, _ = mutated
+    return [h for h in oracle.score_query(idx, text, idx.n_docs)
+            if h[0] not in hidden]
+
+
+def test_request_after_upsert_and_delete(spark, mutated):
+    """Tombstones are read on the driver: a request on an upserted and
+    deleted-from index still runs three jobs, and its answer is the
+    oracle's over the merged statistics with the hidden docs dropped."""
+    d, idx, hidden, _, texts = mutated
     for text in texts:
         rows, jobs = _jobs(spark, lambda: _score(spark, d, text, 10))
         assert jobs <= 3
-        full = oracle.score_query(idx, text, idx.n_docs)
-        want = [h for h in full if h[0] not in hidden][:10]
-        assert _same(_hits(rows), want), text
+        assert _same(_hits(rows), _live(mutated, text)[:10]), text
     for text in texts[:2]:
         assert oracle.score_query(idx, text, 1)[0][0] in hidden
+
+
+def test_entry_points_after_upsert_and_delete(spark, mutated):
+    """Every posting-reading entry point on the same two-segment,
+    tombstoned index: bool (should-only, msm 1: ranks like match),
+    count_matches, match_docs, phrase, span_near and explain answer as
+    the oracle does with the hidden docs dropped. A tombstone applies
+    only to the segments that existed when it was written, so an
+    upserted doc's id is dead in the old segment and live in the new."""
+    d, idx, _, tokens, texts = mutated
+    text = texts[1]
+    live = _live(mutated, text)
+    q = spark.createDataFrame([("q", text)], "query_id string, query_text string")
+
+    bq = spark.createDataFrame(
+        [("b", "", text, "", 1, 10)],
+        "query_id string, must string, should string, must_not string, "
+        "minimum_should_match int, k int")
+    assert _same(_hits(engine.bool_topk(spark, d, bq).collect()), live[:10])
+    assert engine.count_matches(spark, d, q).collect()[0]["total_hits"] \
+        == len(live)
+    assert sorted(r["doc_id"] for r in match_docs(spark, d, q).collect()) \
+        == sorted(doc for doc, _ in live)
+
+    # phrases from a replaced turn's old text, a deleted turn's text and
+    # the replacements: both segments and both kinds of tombstone. With
+    # distinct terms, an in-order span_near at slop 0 is the phrase.
+    phrases = [" ".join(tokenize(t)[:2]) for t in texts[:2]]
+    phrases.append("handling retry")
+    for phrase in phrases:
+        terms = tokenize(phrase)
+        assert len(set(terms)) == len(terms) == 2
+        want = [(doc, s) for doc, s in _live(mutated, phrase)
+                if any(tokens[doc][i:i + 2] == terms
+                       for i in range(len(tokens[doc])))][:10]
+        pq = spark.createDataFrame([("p", phrase, 10)], Q_SCHEMA)
+        assert _same(_hits(engine.phrase_topk(spark, d, pq).collect()),
+                     want), phrase
+        sq = spark.createDataFrame(
+            [("s", phrase, 0, True, 10)],
+            "query_id string, query_text string, slop int, "
+            "in_order boolean, k int")
+        assert _same(_hits(span_near_topk(spark, d, sq).collect()),
+                     want), phrase
+
+    assert want  # the replacements hold "handling retry"
+
+    # explain: a live hit's term scores sum (sorted-term order) to its
+    # oracle score. The top unfiltered hit of a deleted turn's and of a
+    # replaced turn's own text is explained only as far as it lives:
+    # not at all once deleted, by its new text once replaced
+    for text in texts[:2]:
+        scores = dict(_live(mutated, text))
+        top = oracle.score_query(idx, text, 1)[0][0] % DEAD
+        targets = list(dict.fromkeys(
+            [doc for doc, _ in _live(mutated, text)[:5]] + [top]))
+        hits = spark.createDataFrame([("q", doc) for doc in targets],
+                                     "query_id string, doc_id long")
+        q = spark.createDataFrame([("q", text)],
+                                  "query_id string, query_text string")
+        parts: dict[int, list] = {}
+        for r in explain_hits(spark, d, q, hits).collect():
+            parts.setdefault(r["doc_id"], []).append(
+                (r["term"], r["term_score"]))
+        got = {doc: sum(s for _, s in sorted(ts))
+               for doc, ts in parts.items()}
+        assert set(got) == {doc for doc in targets if doc in scores}, text
+        assert all(abs(got[doc] - scores[doc]) <= 1e-9 for doc in got)
 
 
 # ------------------------------------------- rank identity of the merge

@@ -21,7 +21,7 @@ import pytest
 
 from data_prepper_spark.data.transcripts import generate_pandas
 from data_prepper_spark.index import build as ib
-from data_prepper_spark.query import engine
+from data_prepper_spark.query import engine, facets
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
 
 
@@ -140,19 +140,22 @@ def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path,
 
 
 def test_count_matches_scan_pruning(spark, corpus_and_index):
-    """_count (EXPLAIN.md §17): the counting scatter reads ONLY the
-    gaps stream + keys — tfs/dls/poss/max_partial never reach the
-    blocks scan, and the term In-filter is pushed down."""
+    """_count (EXPLAIN.md §17) and the facets match set: the scatter
+    reads ONLY the gaps stream + keys — tfs/dls/poss/max_partial never
+    reach the blocks scan, and the term In-filter is pushed down."""
     _, d = corpus_and_index
     qdf = spark.createDataFrame(
         [("q", "error timeout")], "query_id string, query_text string",
     )
-    plan = _physical(engine.count_matches(spark, d, qdf))
-    assert "PushedFilters: [In(term" in plan
-    for line in plan.splitlines():
-        if "FileScan" in line and "gaps" in line:
+    for entry in (engine.count_matches, facets.match_docs):
+        plan = _physical(entry(spark, d, qdf))
+        assert "PushedFilters: [In(term" in plan
+        scans = [line for line in plan.splitlines()
+                 if "FileScan" in line and "gaps" in line]
+        assert scans, entry
+        for line in scans:
             for col in ("tfs", "dls", "poss", "max_partial"):
-                assert col not in line, (col, line)
+                assert col not in line, (entry, col, line)
 
 
 def test_knn_prefilter_pushdown(spark, tmp_path):
