@@ -104,12 +104,12 @@ def cmd_build_index(args) -> int:
 def cmd_analyze(args) -> int:
     """OpenSearch `_analyze` analog — JVM-free (pure-Python analyzer):
     text in, analyzed tokens with surface offsets + index positions out."""
+    from data_prepper_spark.index.reader import load_stats
     from data_prepper_spark.index.tokenizer import analyze
 
     spec = args.tokenizer
     if args.index:
-        stats_path = os.path.join(args.index, "stats.json")
-        spec = json.load(open(stats_path)).get("tokenizer", "ascii")
+        spec = load_stats(args.index).get("tokenizer", "ascii")
     text = args.text if args.text is not None else sys.stdin.read()
     print(json.dumps({"analyzer": spec, "tokens": analyze(text, spec)}))
     return 0
@@ -469,19 +469,13 @@ def cmd_stats(args) -> int:
 
     from pyspark.sql import functions as _F
 
-    from data_prepper_spark.index import layout
-    from data_prepper_spark.query.engine import load_stats
+    from data_prepper_spark.index.reader import IndexReader
 
-    spark = _get_spark(args)
-    stats = load_stats(args.index)
-    out = {"index": args.index, **stats}
-    blocks_path = layout.resolve(args.index, "blocks")
-    if os.path.exists(blocks_path):
-        blocks = spark.read.parquet(blocks_path)
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", _F.lit(0).cast("long"))
+    r = IndexReader(_get_spark(args), args.index)
+    out = {"index": args.index, **r.stats}
+    if not r.empty:
         per_seg = (
-            blocks.groupBy("seg")
+            r.postings.groupBy("seg")
             .agg(
                 _F.count("*").alias("block_rows"),
                 _F.countDistinct("term").alias("terms"),
@@ -490,10 +484,9 @@ def cmd_stats(args) -> int:
             .orderBy("seg")
             .collect()
         )
-        out["segments"] = [r.asDict() for r in per_seg]
-    tomb_dir = os.path.join(args.index, "tombstones")
-    if os.path.isdir(tomb_dir):
-        out["tombstone_ranges"] = spark.read.parquet(tomb_dir).count()
+        out["segments"] = [row.asDict() for row in per_seg]
+    if r.tomb is not None:
+        out["tombstone_ranges"] = len(r.tomb.starts)
     out["disk_bytes"] = sum(
         os.path.getsize(p)
         for p in _glob.glob(os.path.join(args.index, "**"), recursive=True)

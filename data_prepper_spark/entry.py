@@ -502,12 +502,12 @@ def q_index_dictionary(spark, sf_dir):
     shared first letter, max_edits 2, size 5). Harmonized rows:
     dictionary rows carry kind='dict', suggester rows kind='suggest'
     with the probe token / distance / option_rank filled."""
-    from data_prepper_spark.index import layout
+    from data_prepper_spark.index.reader import IndexReader
     from data_prepper_spark.query.suggest import suggest_terms
 
     d = _built_index(spark, sf_dir)
     dic = (
-        spark.read.parquet(layout.resolve(d, "dictionary"))
+        IndexReader(spark, d).dictionary
         .select(
             "term", F.col("df").cast("long").alias("df"),
             F.lit("dict").alias("kind"), F.lit("").alias("token"),

@@ -456,6 +456,8 @@ def build_index(
 
     A fresh build (neither resume nor incremental) raises
     layout.IndexExistsError when index_dir already holds an index."""
+    from data_prepper_spark.index.reader import load_stats
+
     if not (resume or incremental):
         layout.check_fresh(index_dir)
     stats_path = os.path.join(index_dir, "stats.json")
@@ -463,11 +465,11 @@ def build_index(
     # convmap append below): a refused build leaves the index as it was
     old = None
     if resume and os.path.exists(stats_path):
-        old = json.load(open(stats_path))
+        old = load_stats(index_dir)
         if old["n_shards"] != n_shards:
             raise layout.IndexStateError("resume with different n_shards")
     elif incremental:
-        old = json.load(open(stats_path))
+        old = load_stats(index_dir)
         if old["n_shards"] != n_shards:
             raise layout.IndexStateError("incremental with different n_shards")
         if snapshot_id <= int(old.get("snapshot_id", -1)):
@@ -663,8 +665,9 @@ def upsert_conversations(
     the new one immediately, and compaction physically reconciles.
     Conversations NEW to the index are pure inserts (no tombstone)."""
     from data_prepper_spark.index import tombstones as tomb_mod
+    from data_prepper_spark.index.reader import load_stats
 
-    stats = json.load(open(os.path.join(index_dir, "stats.json")))
+    stats = load_stats(index_dir)
     cur = int(stats.get("snapshot_id", 0))
     if snapshot_id <= cur:
         raise layout.IndexStateError(
@@ -708,8 +711,9 @@ def delete_conversations_by_id(
     table), so UUID-keyed corpora delete exactly like synthetic ones.
     Unknown conv_ids are ignored (nothing to tombstone)."""
     from data_prepper_spark.index import tombstones as tomb_mod
+    from data_prepper_spark.index.reader import load_stats
 
-    stats = json.load(open(os.path.join(index_dir, "stats.json")))
+    stats = load_stats(index_dir)
     scheme = stats.get("id_scheme", "arith")
     df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
     ranges = serials_to_ranges(

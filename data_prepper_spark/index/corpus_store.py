@@ -102,7 +102,8 @@ def write_corpus(
     routing column (derived once here via engine.sharded_docs — the
     same never-guess routing the query paths use), so filter-context
     queries read it instead of re-deriving per query."""
-    from data_prepper_spark.query.engine import load_stats, sharded_docs
+    from data_prepper_spark.index.reader import IndexReader
+    from data_prepper_spark.query.engine import sharded_docs
 
     if "doc_id" not in docs.columns:
         raise ValueError("corpus store input must include doc_id")
@@ -113,11 +114,11 @@ def write_corpus(
             "input already has a 'shard' column; rename it — the store "
             "derives this index's own routing under that name"
         )
-    stats = load_stats(index_dir)
+    r = IndexReader(spark, index_dir)
     if n_buckets is None:
-        n_buckets = int(stats["n_shards"])
+        n_buckets = int(r.stats["n_shards"])
     carry = tuple(c for c in docs.columns if c != "doc_id")
-    routed = sharded_docs(spark, index_dir, docs, stats, carry=carry)
+    routed = sharded_docs(r, docs, carry=carry)
 
     path = _store_path(index_dir)
     tbl = _table_name(index_dir)
@@ -135,8 +136,8 @@ def write_corpus(
     meta = {
         "n_buckets": n_buckets,
         "schema_ddl": _schema_ddl(routed),
-        "n_shards": int(stats["n_shards"]),
-        "id_scheme": stats.get("id_scheme", "arith"),
+        "n_shards": int(r.stats["n_shards"]),
+        "id_scheme": r.stats.get("id_scheme", "arith"),
         "columns": ["shard", "doc_id", *carry],
     }
     with open(_meta_path(index_dir), "w") as f:

@@ -25,6 +25,13 @@ path when no pointer exists, so pre-existing indexes keep working and
 append-only artifacts (segment appends, manifest, tombstones) never
 need a version bump.
 
+Reads resolve through the pyarrow filesystem the path names (``read_text``,
+``exists``, ``read_table``), so an index named by a URI (``file://``,
+``s3://``, ``hdfs://``) reads like a local one; writes (``publish_file``,
+``publish_dir``) are local. This module is the only code that maps an
+artifact name to a path; everything that reads index state goes through
+``index/reader.py``.
+
 Reference parity: the role of Lucene's ``segments_N`` + ``commit
 point`` files behind the reference's opensearch sink — the pointer file
 is the commit point.
@@ -77,8 +84,8 @@ def _ptr_path(index_dir: str, name: str) -> str:
 def current_version(index_dir: str, name: str) -> int:
     """0 = legacy (no pointer); N = pointer names ``<name>__vN``."""
     try:
-        with open(_ptr_path(index_dir, name)) as f:
-            return int(f.read().strip().lstrip("v") or 0)
+        return int(read_text(_ptr_path(index_dir, name)).strip().lstrip("v")
+                   or 0)
     except FileNotFoundError:
         return 0
 
@@ -139,6 +146,14 @@ def exists(path: str) -> bool:
 
     fs, p = _filesystem(path)
     return fs.get_file_info(p).type != pafs.FileType.NotFound
+
+
+def read_text(path: str) -> str:
+    """A small file (stats.json, a pointer) at a local path or a URI.
+    Raises FileNotFoundError when it is absent."""
+    fs, p = _filesystem(path)
+    with fs.open_input_stream(p) as f:
+        return f.read().decode()
 
 
 def read_table(path: str, columns: list[str], filters: list | None = None):

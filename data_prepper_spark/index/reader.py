@@ -1,23 +1,27 @@
 """IndexReader: everything a query needs to know about one index dir.
 
-Every query over the index — score_topk and its siblings in query/,
-the integrity checker and reindex's live-doc view — opens ONE reader
-per call and takes the index state from it:
+Every module that reads an index's state — score_topk and its siblings
+in query/, expansion, suggestions, term vectors, the CLI, the
+integrity checker, rollover, streaming and reindex — opens ONE reader
+per call (or calls ``load_stats``) and takes the index state from it:
 
 - eagerly: ``stats.json`` (corpus statistics n_docs / avgdl, the
   tokenizer mode, the shard count), and the values derived from it;
-- lazily, on first use: the tombstones, the blocks and the dictionary
-  DataFrames, and the dictionary slice (``df_slice``) of a term list.
-  ``postings`` is the blocks scan for whole-shard readers
-  (check_index, compact_index).
+- lazily, on first use: the tombstones, the blocks, the dictionary and
+  the convmap DataFrames, and the dictionary slice (``df_slice``) of a
+  term list. ``postings`` is the blocks scan for whole-shard readers
+  (check_index, compact_index, the stats CLI).
 
 The reader runs no Spark job of its own: the blocks scan carries an
 explicit schema (a pre-segment index's null ``seg`` reads as 0), and
-the driver-small tombstones and dictionary slice are read on the
-driver with pyarrow (``layout.read_table``). Nothing read or decoded
-outlives the call: a reader is not cached across calls, and the
-kernels memoize decoded blocks in a dict that lives for one kernel
-call, so an index rebuilt or mutated in place is never served stale.
+``stats.json``, the pointer files, the driver-small tombstones and the
+dictionary slice are read on the driver with pyarrow
+(``layout.read_text`` / ``layout.read_table``), through the filesystem
+the path names: an index named by a URI (``file://``, ``s3://``,
+``hdfs://``) reads like a local one. Nothing read or decoded outlives
+the call: a reader is not cached across calls, and the kernels memoize
+decoded blocks in a dict that lives for one kernel call, so an index
+rebuilt or mutated in place is never served stale.
 """
 
 from __future__ import annotations
@@ -43,8 +47,8 @@ POS_COLS = MATCH_COLS + ("poss",)
 
 
 def load_stats(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        return json.load(f)
+    """The index's stats.json. Raises FileNotFoundError when absent."""
+    return json.loads(layout.read_text(os.path.join(index_dir, "stats.json")))
 
 
 class IndexReader:
@@ -71,10 +75,8 @@ class IndexReader:
 
     @property
     def empty(self) -> bool:
-        """No blocks were ever written. Only checked on local paths:
-        remote (s3://, hdfs://) indexes always attempt the read."""
-        return "://" not in self.index_dir and not os.path.exists(
-            layout.resolve(self.index_dir, "blocks"))
+        """No blocks were ever written."""
+        return not layout.exists(layout.resolve(self.index_dir, "blocks"))
 
     @cached_property
     def tomb(self) -> tombstones.Tombstones | None:
@@ -98,6 +100,12 @@ class IndexReader:
     def dictionary(self) -> DataFrame:
         return self.spark.read.parquet(
             layout.resolve(self.index_dir, "dictionary"))
+
+    @cached_property
+    def convmap(self) -> DataFrame:
+        """(conv_id, serial) of a convmap-scheme index."""
+        return self.spark.read.parquet(
+            layout.resolve(self.index_dir, "convmap"))
 
     def df_slice(self, terms: list[str]) -> dict[str, int]:
         """{term: global df} for the terms the dictionary holds."""

@@ -25,12 +25,13 @@ driver-cheap, no Spark job.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_prepper_spark.index.reader import load_stats
 
 _GEN_RE = re.compile(r"^idx-(\d{6})$")
 
@@ -77,13 +78,13 @@ def _next_gen_path(base: str) -> str:
 
 
 def should_rollover(index_dir: str, policy: RolloverPolicy) -> bool:
-    stats_path = os.path.join(index_dir, "stats.json")
-    if not os.path.exists(stats_path):
+    try:
+        stats = load_stats(index_dir)
+    except FileNotFoundError:
         return False
-    if policy.max_docs is not None:
-        n_docs = int(json.load(open(stats_path)).get("n_docs", 0))
-        if n_docs >= policy.max_docs:
-            return True
+    if policy.max_docs is not None and \
+            int(stats.get("n_docs", 0)) >= policy.max_docs:
+        return True
     if policy.max_bytes is not None and _dir_bytes(index_dir) >= policy.max_bytes:
         return True
     return False
@@ -114,7 +115,7 @@ def rollover_append(
         build_index(spark, df, cur, n_shards=n_shards,
                     block_size=block_size, tokenizer=tokenizer, **build_kw)
         return cur
-    stats = json.load(open(os.path.join(cur, "stats.json")))
+    stats = load_stats(cur)
     build_index(
         spark, df, cur, n_shards=int(stats["n_shards"]),
         block_size=int(stats.get("block_size", block_size)),

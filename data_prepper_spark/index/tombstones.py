@@ -157,11 +157,10 @@ def _enforce_budget(
 
 
 def _current_seg(index_dir: str) -> int:
-    import json
+    from data_prepper_spark.index.reader import load_stats
 
     try:
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            return int(json.load(f).get("snapshot_id", 0))
+        return int(load_stats(index_dir).get("snapshot_id", 0))
     except FileNotFoundError:
         return 0
 
@@ -261,7 +260,7 @@ def load_tombstones(spark, index_dir: str) -> Tombstones | None:
     (one row per delete-call interval), so it is read on the driver
     (layout.read_table): no Spark job."""
     path = _tomb_path(index_dir)
-    if "://" not in index_dir and not os.path.exists(path):
+    if not layout.exists(path):
         return None
     t = layout.read_table(path, ["start", "end", "upto_seg"])
     if not t.num_rows:

@@ -43,7 +43,6 @@ dfs_query_then_fetch contract.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from typing import Callable
 
@@ -53,13 +52,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import codec
-from data_prepper_spark.index.reader import (  # noqa: F401 (load_stats re-export)
+from data_prepper_spark.index.reader import (
     COUNT_COLS,
     MATCH_COLS,
     POS_COLS,
     SCORE_COLS,
     IndexReader,
-    load_stats,
 )
 from data_prepper_spark.query import wand as wand_mod
 from data_prepper_spark.query import prep
@@ -979,8 +977,7 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
 
 
 def sharded_docs(
-    spark: SparkSession, index_dir: str, docs: DataFrame, stats: dict,
-    carry: tuple = (),
+    reader: IndexReader, docs: DataFrame, carry: tuple = (),
 ) -> DataFrame:
     """(shard, doc_id) for corpus rows — MUST mirror build_index's
     assignment (index/build.py: xxhash64(conv_id) % n_shards). The
@@ -1006,6 +1003,7 @@ def sharded_docs(
     routing at write time — is trusted as-is: no derivation, no convmap
     join, no xxhash at query time. Only pass such a column if it came
     from THIS index's store (the store is keyed by index_dir)."""
+    stats = reader.stats
     n_shards = int(stats["n_shards"])
     if "shard" in docs.columns:
         return docs.select(
@@ -1036,7 +1034,7 @@ def sharded_docs(
             (F.col("doc_id") / DOC_ID_STRIDE).cast("long").cast("string"),
         )
     elif scheme == "convmap":
-        cm = spark.read.parquet(os.path.join(index_dir, "convmap"))
+        cm = reader.convmap
         out = out.withColumn(
             "_serial", (F.col("doc_id") / DOC_ID_STRIDE).cast("long")
         ).join(cm.select(F.col("serial").alias("_serial"), "conv_id"),
@@ -1137,7 +1135,7 @@ def _filtered_topk(spark, index_dir, queries, allowed, boost_mode):
         r, prep.simple_entries(rows, r.mode), prep.SIMPLE_FIELDS,
         lambda: _filtered_kernel(r.avgdl, r.n_docs, r.tomb, boost_mode),
         cols=MATCH_COLS,
-        right=lambda: sharded_docs(spark, index_dir, allowed, r.stats, carry),
+        right=lambda: sharded_docs(r, allowed, carry),
     ), rows)
 
 

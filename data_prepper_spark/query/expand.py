@@ -25,13 +25,17 @@ minimum_should_match=1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import IndexReader
+from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import engine
 
 MAX_EXPANSIONS = 50
+_EMPTY = "query_id string, rank long, doc_id long, score double"
+_BOOL = ("query_id string, must string, should string, must_not string, "
+         "minimum_should_match int, k int")
 
 
 def _cond(kind: str, pattern: str):
@@ -60,14 +64,50 @@ def expand_terms(
 ) -> list[str]:
     """-> the expansion term set for one (kind, pattern), capped at
     max_expansions by (df DESC, term ASC)."""
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
     rows = (
-        d.filter(_cond(kind, pattern))
+        IndexReader(spark, index_dir).dictionary
+        .filter(_cond(kind, pattern))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(max_expansions)
         .collect()
     )
     return [r["term"] for r in rows]
+
+
+def _expand(
+    r: IndexReader, conds: list[tuple[str, Column]], max_expansions: int,
+) -> dict[str, list[str]]:
+    """{query_id: expansion terms} for every (query_id, condition) in ONE
+    dictionary pass (a per-query when() disjunction over the scan — one
+    job for the whole batch, not one per query), each capped at
+    max_expansions by (df DESC, term ASC)."""
+    if not conds:
+        return {}
+    matches = F.array_compact(F.array(*[
+        F.when(c, F.lit(qid)) for qid, c in conds
+    ]))
+    w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
+    out: dict[str, list[str]] = {}
+    for row in (
+        r.dictionary.select("term", "df", F.explode(matches).alias("query_id"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= max_expansions)
+        .select("query_id", "term")
+        .collect()
+    ):
+        out.setdefault(row["query_id"], []).append(row["term"])
+    return out
+
+
+def _prefix_queries(queries: DataFrame, mode: str) -> list[tuple]:
+    """[(query_id, leading tokens, last token, k)] for every query with
+    at least one token: the last token is the prefix to expand."""
+    out = []
+    for r in queries.select("query_id", "query_text", "k").collect():
+        toks = tokenize(r["query_text"], mode=mode)
+        if toks:
+            out.append((r["query_id"], toks[:-1], toks[-1], int(r["k"])))
+    return out
 
 
 def expand_topk(
@@ -80,38 +120,20 @@ def expand_topk(
     score): expand each pattern against the dictionary, then run ONE
     bool query batch (should OR, msm=1, BM25 over terms present).
     Queries whose pattern expands to nothing return no rows (same as an
-    absent term). All patterns expand in ONE dictionary pass (a
-    per-query when() disjunction over the scan — one job for the whole
-    batch, not one per query), then one corpus-side scatter-gather."""
-    from pyspark.sql import Window
-
+    absent term). All patterns expand in ONE dictionary pass, then one
+    corpus-side scatter-gather."""
     qrows = queries.collect()
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    matches = F.array_compact(F.array(*[
-        F.when(_cond(r["kind"], r["pattern"]), F.lit(r["query_id"]))
-        for r in qrows
-    ]))
-    w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-    exp = (
-        d.select("term", "df", F.explode(matches).alias("query_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
-        .groupBy("query_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term"))).alias("should"))
-        .collect()
+    exp = _expand(
+        IndexReader(spark, index_dir),
+        [(r["query_id"], _cond(r["kind"], r["pattern"])) for r in qrows],
+        max_expansions,
     )
-    should_by_q = {r["query_id"]: r["should"] for r in exp}
     brows = [
-        (r["query_id"], "", should_by_q.get(r["query_id"], ""), "", 1,
-         int(r["k"]))
+        (r["query_id"], "", " ".join(sorted(exp.get(r["query_id"], []))),
+         "", 1, int(r["k"]))
         for r in qrows
     ]
-    bq = spark.createDataFrame(
-        brows,
-        "query_id string, must string, should string, must_not string, "
-        "minimum_should_match int, k int",
-    )
-    return engine.bool_topk(spark, index_dir, bq)
+    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))
 
 
 _SEP = "\x1f"
@@ -141,47 +163,21 @@ def match_phrase_prefix_topk(
     MultiPhraseQuery (one weight for the position-OR); here each
     completion scores as its own match_phrase and a doc keeps the max
     — the scoring_boolean-style rewrite used across this module."""
-    from data_prepper_spark.index.tokenizer import tokenize
-    from data_prepper_spark.query.engine import load_stats, phrase_topk
-
-    mode = load_stats(index_dir).get("tokenizer", "ascii")
-    rows = queries.select("query_id", "query_text", "k").collect()
-    parsed = []
-    for r in rows:
-        toks = tokenize(r["query_text"], mode=mode)
-        if toks:
-            parsed.append((r["query_id"], toks[:-1], toks[-1], int(r["k"])))
-    empty = spark.createDataFrame(
-        [], "query_id string, rank long, doc_id long, score double"
+    r = IndexReader(spark, index_dir)
+    parsed = _prefix_queries(queries, r.mode)
+    variants = _expand(
+        r, [(qid, F.col("term").startswith(pref)) for qid, _, pref, _ in parsed],
+        max_expansions,
     )
-    if not parsed:
-        return empty
-
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    matches = F.array_compact(F.array(*[
-        F.when(F.col("term").startswith(pref), F.lit(qid))
-        for qid, _, pref, _ in parsed
-    ]))
-    w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-    exp = (
-        d.select("term", "df", F.explode(matches).alias("query_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
-        .select("query_id", "term")
-        .collect()
-    )
-    variants: dict[str, list[str]] = {}
-    for r in exp:
-        variants.setdefault(r["query_id"], []).append(r["term"])
     prows = []
     for qid, lead, _, k in parsed:
         for i, v in enumerate(variants.get(qid, [])):
             prows.append((f"{qid}{_SEP}{i}", " ".join(lead + [v]), k))
     if not prows:
-        return empty
+        return spark.createDataFrame([], _EMPTY)
     pq = spark.createDataFrame(
         prows, "query_id string, query_text string, k int")
-    hits = phrase_topk(spark, index_dir, pq)
+    hits = engine.phrase_topk(spark, index_dir, pq)
     best = (
         hits.withColumn(
             "query_id", F.substring_index("query_id", _SEP, 1))
@@ -223,10 +219,7 @@ def synonym_topk(
     small, like the reference's), applied AFTER tokenization so keys
     and values are tokenizer-canonical. Multi-word synonyms
     contribute their tokens to the same group."""
-    from data_prepper_spark.index.tokenizer import tokenize
-    from data_prepper_spark.query.engine import load_stats
-
-    mode = load_stats(index_dir).get("tokenizer", "ascii")
+    mode = IndexReader(spark, index_dir).mode
     rows = []
     for r in queries.select("query_id", "query_text", "k").collect():
         groups = []
@@ -238,11 +231,7 @@ def synonym_topk(
             groups.append(" ".join(variants))
         rows.append((r["query_id"], "", "", "", 0, int(r["k"]),
                      " | ".join(groups)))
-    bq = spark.createDataFrame(
-        rows,
-        "query_id string, must string, should string, must_not string, "
-        "minimum_should_match int, k int, must_groups string",
-    )
+    bq = spark.createDataFrame(rows, _BOOL + ", must_groups string")
     return engine.bool_topk(spark, index_dir, bq)
 
 
@@ -257,41 +246,27 @@ def more_like_this_topk(
     queries(query_id, like_text, k) -> docs similar to the text.
 
     Lucene's MLT recipe: select the like-text's most distinctive terms
-    by tf·idf (idf from the GLOBAL dictionary — one pushed In-filter
-    probe), cap at `max_query_terms` (Lucene default 25, ordered score
-    desc then term asc for determinism), then run a bool should query
-    with minimum_should_match = 30% of selected terms (the MLT
-    default). Unindexed terms are dropped before the cap, like Lucene
-    skipping zero-df terms."""
-    from data_prepper_spark.index.tokenizer import tokenize
-    from data_prepper_spark.query.engine import load_stats
-
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    n_docs = int(stats["n_docs"])
-    rows = queries.select("query_id", "like_text", "k").collect()
-    all_terms = sorted({
-        t for r in rows for t in tokenize(r["like_text"], mode=mode)
-    })
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in dictionary.filter(F.col("term").isin(all_terms)).collect()
-    }
+    by tf·idf (idf from the GLOBAL dictionary — the driver-side
+    dictionary slice of the like-texts' terms, no Spark job), cap at
+    `max_query_terms` (Lucene default 25, ordered score desc then term
+    asc for determinism), then run a bool should query with
+    minimum_should_match = 30% of selected terms (the MLT default).
+    Unindexed terms are dropped before the cap, like Lucene skipping
+    zero-df terms."""
     import math
 
+    r = IndexReader(spark, index_dir)
+    rows = queries.select("query_id", "like_text", "k").collect()
+    dfs = r.df_slice(sorted({
+        t for row in rows for t in tokenize(row["like_text"], mode=r.mode)
+    }))
     brows = []
-    for r in rows:
-        toks = tokenize(r["like_text"], mode=mode)
+    for row in rows:
         tf: dict[str, int] = {}
-        for t in toks:
+        for t in tokenize(row["like_text"], mode=r.mode):
             tf[t] = tf.get(t, 0) + 1
         scored = [
-            (tf[t] * math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)), t)
+            (tf[t] * math.log(1.0 + (r.n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5)), t)
             for t in tf if t in dfs
         ]
         scored.sort(key=lambda x: (-x[0], x[1]))
@@ -299,17 +274,11 @@ def more_like_this_topk(
         if not sel:
             continue
         msm = max(1, int(minimum_should_match * len(sel)))
-        brows.append((r["query_id"], "", " ".join(sel), "", msm, int(r["k"])))
+        brows.append((row["query_id"], "", " ".join(sel), "", msm,
+                      int(row["k"])))
     if not brows:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    bq = spark.createDataFrame(
-        brows,
-        "query_id string, must string, should string, must_not string, "
-        "minimum_should_match int, k int",
-    )
-    return engine.bool_topk(spark, index_dir, bq)
+        return spark.createDataFrame([], _EMPTY)
+    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))
 
 
 def match_bool_prefix_topk(
@@ -334,48 +303,17 @@ def match_bool_prefix_topk(
     distinct terms present (Lucene blends the prefix's expansions
     through a SynonymQuery max-df weight; documented divergence, same
     policy as expand_topk/synonym_topk)."""
-    from data_prepper_spark.index.tokenizer import tokenize
-    from data_prepper_spark.query.engine import load_stats
-
-    mode = load_stats(index_dir).get("tokenizer", "ascii")
-    rows = queries.select("query_id", "query_text", "k").collect()
-    parsed = []
-    for r in rows:
-        toks = tokenize(r["query_text"], mode=mode)
-        if toks:
-            parsed.append((r["query_id"], toks[:-1], toks[-1], int(r["k"])))
-    empty = spark.createDataFrame(
-        [], "query_id string, rank long, doc_id long, score double"
+    r = IndexReader(spark, index_dir)
+    parsed = _prefix_queries(queries, r.mode)
+    expansions = _expand(
+        r, [(qid, F.col("term").startswith(pref)) for qid, _, pref, _ in parsed],
+        max_expansions,
     )
-    if not parsed:
-        return empty
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    matches = F.array_compact(F.array(*[
-        F.when(F.col("term").startswith(pref), F.lit(qid))
-        for qid, _, pref, _ in parsed
-    ]))
-    w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-    exp = (
-        d.select("term", "df", F.explode(matches).alias("query_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_expansions)
-        .select("query_id", "term")
-        .collect()
-    )
-    expansions: dict[str, list[str]] = {}
-    for r in exp:
-        expansions.setdefault(r["query_id"], []).append(r["term"])
     brows = []
     for qid, lead, _, k in parsed:
         should = list(dict.fromkeys(lead + sorted(expansions.get(qid, []))))
-        if not should:
-            continue
-        brows.append((qid, "", " ".join(should), "", 1, k))
+        if should:
+            brows.append((qid, "", " ".join(should), "", 1, k))
     if not brows:
-        return empty
-    bq = spark.createDataFrame(
-        brows,
-        "query_id string, must string, should string, must_not string, "
-        "minimum_should_match int, k int",
-    )
-    return engine.bool_topk(spark, index_dir, bq)
+        return spark.createDataFrame([], _EMPTY)
+    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))

@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.index.tokenizer import tokenize
-from data_prepper_spark.query.engine import load_stats
 
 _OUT = ("token string, suggestion string, distance int, df long, "
         "option_rank int")
@@ -55,27 +54,18 @@ def suggest_terms(
     (the API's default: don't second-guess words that match)."""
     if suggest_mode not in ("missing", "popular", "always"):
         raise ValueError(f"unknown suggest_mode {suggest_mode!r}")
-    mode = load_stats(index_dir).get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
     tokens = [
-        t for t in dict.fromkeys(tokenize(text, mode=mode))
+        t for t in dict.fromkeys(tokenize(text, mode=r.mode))
         if len(t) >= min_word_length
     ]
-    schema = _OUT
-    if not tokens:
-        return spark.createDataFrame([], schema)
-
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    # driver-known probe: which tokens exist, and at what df (tiny
-    # In-filter pushed to the term-sorted scan)
-    present = {
-        r["term"]: int(r["df"])
-        for r in d.filter(F.col("term").isin(tokens))
-        .select("term", "df").collect()
-    }
+    # which tokens exist, and at what df: the driver-side dictionary
+    # slice, no Spark job
+    present = r.df_slice(tokens)
     if suggest_mode == "missing":
         tokens = [t for t in tokens if t not in present]
-        if not tokens:
-            return spark.createDataFrame([], schema)
+    if not tokens:
+        return spark.createDataFrame([], _OUT)
 
     def cand_cond(t: str):
         c = (F.levenshtein(F.col("term"), F.lit(t)) <= max_edits) \
@@ -93,7 +83,7 @@ def suggest_terms(
         F.asc("distance"), F.desc("df"), F.asc("suggestion")
     )
     return (
-        d.select(
+        r.dictionary.select(
             F.col("term").alias("suggestion"), "df",
             F.explode(matches).alias("token"),
         )

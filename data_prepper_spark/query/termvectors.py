@@ -7,8 +7,8 @@ Lucene re-analyzes the stored field on the fly — exactly what this
 does: the doc set is tiny and driver-known (the API is per-document),
 so the corpus scan is pruned by a doc_id In-filter, re-analysis runs
 in one narrow mapInPandas over those few rows, and doc_freq comes
-from the dictionary slice for just the terms that appear (broadcast
-join, term In-filter pushed to the dictionary scan).
+from the dictionary slice for just the terms that appear, read on the
+driver (IndexReader.df_slice) and joined as a broadcast literal.
 
 Positions are the index's own convention (post-stop consecutive);
 offsets are surface char spans (the `analyze` convention, shared with
@@ -17,16 +17,14 @@ highlight).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.index.tokenizer import analyze
-from data_prepper_spark.query.engine import load_stats
 
 __all__ = ["term_vectors"]
 
@@ -48,8 +46,8 @@ def term_vectors(
     """-> (doc_id, term, term_freq, positions, start_offsets,
     end_offsets[, doc_freq]) for the requested docs, analyzed with the
     INDEX's pinned analyzer spec."""
-    stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
+    r = IndexReader(spark, index_dir)
+    mode = r.mode
     pruned = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -79,20 +77,13 @@ def term_vectors(
     tv = pruned.mapInPandas(kernel, schema=_OUT)
     if not with_stats:
         return tv
-    # index-wide doc_freq for exactly the terms present: the term set is
-    # NOT driver-known here (it comes from the docs), so join the other
-    # way — broadcast the tiny tv frame is wrong (it's the output);
-    # instead broadcast the dictionary SLICE by semi-joining on tv's
-    # terms. tv is a few docs' vocab — small either way; keep it one
-    # shuffle-free broadcast of the dict slice via a driver collect of
-    # tv's distinct terms (bounded by the requested docs' vocabulary).
-    terms = [r["term"] for r in tv.select("term").distinct().collect()]
-    dictionary = (
-        spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-        .filter(F.col("term").isin(terms))
-        .groupBy("term").agg(F.sum("df").cast("long").alias("doc_freq"))
-    )
-    return tv.join(F.broadcast(dictionary), "term", "left").select(
+    # index-wide doc_freq for exactly the terms present: the requested
+    # docs' vocabulary is collected to the driver and its dictionary
+    # slice read there; the dictionary holds one row per term
+    terms = [row["term"] for row in tv.select("term").distinct().collect()]
+    dfs = spark.createDataFrame(list(r.df_slice(terms).items()),
+                                "term string, doc_freq long")
+    return tv.join(F.broadcast(dfs), "term", "left").select(
         "doc_id", "term", "term_freq", "positions", "start_offsets",
         "end_offsets", F.coalesce("doc_freq", F.lit(0)).alias("doc_freq"),
     )

@@ -208,39 +208,31 @@ def streaming_index_sink(
     query-side block-max pruning keeps latency flat as segments
     accumulate, and ``compact_index`` (CLI ``compact``) is the
     background-merge analog that folds them back down."""
-    import json
-    import os
-
     from data_prepper_spark.index import build as ib
+    from data_prepper_spark.index.reader import load_stats
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         snap = int(epoch_id) + 1
-        stats_path = os.path.join(index_dir, "stats.json")
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                cur = int(json.load(f).get("snapshot_id", 0))
-            if cur >= snap:
-                if cur > snap:
-                    raise RuntimeError(
-                        f"streaming_index_sink: index at snapshot {cur} is "
-                        f"ahead of stream epoch {epoch_id} — the checkpoint "
-                        "was deleted or belongs to another stream; refuse "
-                        "to interleave stale segments"
-                    )
-                return  # replayed batch: segment already committed
-            ib.build_index(
-                batch.sparkSession, batch, index_dir, n_shards=n_shards,
-                incremental=True, snapshot_id=snap,
-                store_positions=store_positions, tokenizer=tokenizer,
+        try:
+            cur = int(load_stats(index_dir).get("snapshot_id", 0))
+        except FileNotFoundError:
+            cur = None  # first batch: a fresh build
+        if cur is not None and cur > snap:
+            raise RuntimeError(
+                f"streaming_index_sink: index at snapshot {cur} is "
+                f"ahead of stream epoch {epoch_id} — the checkpoint "
+                "was deleted or belongs to another stream; refuse "
+                "to interleave stale segments"
             )
-        else:
-            ib.build_index(
-                batch.sparkSession, batch, index_dir, n_shards=n_shards,
-                snapshot_id=snap, store_positions=store_positions,
-                tokenizer=tokenizer,
-            )
+        if cur == snap:
+            return  # replayed batch: segment already committed
+        ib.build_index(
+            batch.sparkSession, batch, index_dir, n_shards=n_shards,
+            incremental=cur is not None, snapshot_id=snap,
+            store_positions=store_positions, tokenizer=tokenizer,
+        )
 
     return sink
 

@@ -15,7 +15,10 @@ text/analysis.py (lang-id, composite quality, fingerprint).
 Scale notes (100 TB): every signal is a per-row expression over one
 column — no shuffle, no UDF, fully inside WholeStageCodegen. The
 duplicate-line and top-n-gram signals are O(L^2) / O(T^2) in the line
-and token counts of ONE document via higher-order functions; for
+and token counts of ONE document via higher-order functions: the line
+or n-gram array is built once per row and bound as a lambda variable
+(``transform(array(<arr>), xs -> ...)[0]``), so the per-distinct-item
+count filters that one array instead of rebuilding it; for
 transcript turns (tens of lines, hundreds of tokens) this is cheap and
 vectorized. For book-length documents swap in the mapInPandas hash
 variant (same signature) — the per-row independence is what matters at
@@ -34,11 +37,12 @@ def _tokens(c: str) -> Column:
     return F.expr(TOKENIZE.format(c=c))
 
 
+# non-empty lines, trimmed (C4 operates on lines after strip)
+_LINES = "filter(transform(split({c}, '\\n'), x -> trim(x)), x -> x <> '')"
+
+
 def _lines(c: str) -> Column:
-    # non-empty lines, trimmed (C4 operates on lines after strip)
-    return F.expr(
-        f"filter(transform(split({c}, '\\n'), x -> trim(x)), x -> x <> '')"
-    )
+    return F.expr(_LINES.format(c=c))
 
 
 def dup_line_frac(text_col: str) -> Column:
@@ -54,33 +58,16 @@ def dup_line_frac(text_col: str) -> Column:
 def dup_line_char_frac(text_col: str) -> Column:
     """Fraction of characters inside duplicate lines (all occurrences
     beyond the first), per Gopher's character-weighted variant."""
-    lines = _lines(text_col)
-    total = F.expr(
-        f"aggregate(filter(transform(split({text_col}, '\\n'), x -> trim(x)),"
-        " x -> x <> ''), 0L, (a, x) -> a + length(x))"
-    )
+    lines = _LINES.format(c=text_col)
+    total = F.expr(f"aggregate({lines}, 0L, (a, x) -> a + length(x))")
     # for each DISTINCT line: (occurrences - 1) * length
     dup_chars = F.expr(
-        "aggregate(array_distinct("
-        f"  filter(transform(split({text_col}, '\\n'), x -> trim(x)), x -> x <> '')), 0L,"
-        " (a, d) -> a + (size(filter("
-        f"   filter(transform(split({text_col}, '\\n'), x -> trim(x)), x -> x <> ''),"
-        "    y -> y = d)) - 1) * length(d))"
+        f"transform(array({lines}), ls -> aggregate(array_distinct(ls), 0L,"
+        " (a, d) -> a + (size(filter(ls, y -> y = d)) - 1) * length(d)))[0]"
     )
-    n = F.size(lines)
+    n = F.size(_lines(text_col))
     return F.when((n <= 0) | (total <= 0), F.lit(0.0)).otherwise(
         dup_chars / total
-    )
-
-
-def _ngrams(text_col: str, n: int) -> Column:
-    """Word n-grams as space-joined strings (empty array when too short)."""
-    toks = TOKENIZE.format(c=text_col)
-    return F.expr(
-        f"CASE WHEN size({toks}) >= {n} THEN "
-        f"transform(sequence(1, size({toks}) - {n} + 1),"
-        f" i -> concat_ws(' ', slice({toks}, i, {n}))) "
-        "ELSE array() END"
     )
 
 
@@ -92,17 +79,19 @@ def top_ngram_char_frac(text_col: str, n: int) -> Column:
     non-space token characters, matching the published definition.
     """
     toks = TOKENIZE.format(c=text_col)
-    # max over distinct grams of count(g) * length-without-spaces(g)
     grams_sql = (
         f"CASE WHEN size({toks}) >= {n} THEN "
         f"transform(sequence(1, size({toks}) - {n} + 1),"
         f" i -> concat_ws(' ', slice({toks}, i, {n}))) "
         "ELSE array() END"
     )
+    # max over distinct grams of count(g) * length-without-spaces(g); the
+    # gram array is bound once as `gs` (Spark lambda names are
+    # case-insensitive, so it must differ from `g`)
     top = F.expr(
-        f"aggregate(array_distinct({grams_sql}), 0L,"
-        f" (a, g) -> greatest(a, size(filter({grams_sql}, y -> y = g))"
-        "   * (length(g) - " + str(n - 1) + ")))"
+        f"transform(array({grams_sql}), gs -> aggregate(array_distinct(gs),"
+        f" 0L, (a, g) -> greatest(a, size(filter(gs, y -> y = g))"
+        f" * (length(g) - {n - 1}))))[0]"
     )
     total_chars = F.expr(f"aggregate({toks}, 0L, (a, x) -> a + length(x))")
     return F.when((F.size(F.expr(grams_sql)) <= 0) | (total_chars <= 0), F.lit(0.0)).otherwise(
@@ -125,8 +114,7 @@ def bullet_line_frac(text_col: str) -> Column:
     """Fraction of lines starting with a bullet marker (Gopher: < 0.9)."""
     lines = _lines(text_col)
     bullets = F.expr(
-        f"size(filter(filter(transform(split({text_col}, '\\n'), x -> trim(x)),"
-        " x -> x <> ''),"
+        f"size(filter({_LINES.format(c=text_col)},"
         " x -> x like '-%' or x like '*%' or x like '•%'))"
     )
     n = F.size(lines)
@@ -137,8 +125,7 @@ def ellipsis_line_frac(text_col: str) -> Column:
     """Fraction of lines ending with an ellipsis (Gopher: < 0.3)."""
     lines = _lines(text_col)
     ell = F.expr(
-        f"size(filter(filter(transform(split({text_col}, '\\n'), x -> trim(x)),"
-        " x -> x <> ''),"
+        f"size(filter({_LINES.format(c=text_col)},"
         " x -> x like '%...' or x like '%…'))"
     )
     n = F.size(lines)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from data_prepper_spark.data.transcripts import generate_pandas
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import corpus_store as cs
+from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.query import engine, facets
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
 
@@ -58,7 +59,7 @@ def test_store_roundtrip_and_routing(spark, built):
     assert list(got.text) == list(want.text)
     # stored routing == the index's own routing (derived fresh)
     fresh = engine.sharded_docs(
-        spark, d, docs, engine.load_stats(d)
+        IndexReader(spark, d), docs
     ).orderBy("doc_id").toPandas()
     assert list(got.shard) == list(fresh.shard)
 

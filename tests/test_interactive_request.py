@@ -6,7 +6,8 @@ driver into a LocalRelation.
 
 Pinned here: the Spark jobs one request runs (score_topk, bool_topk,
 phrase_topk, and score_topk on an upserted and deleted-from index), the
-answers of every posting-reading entry point on that index, and
+answers of every posting-reading entry point on that index, the same
+answers through a file:// URI, and
 rank identity of the driver merge against `oracle.bm25` on its edge
 cases: ties at the kth score, alias search's index tie, collapse,
 search_after cursors, k above the hit count, and empty answers."""
@@ -14,6 +15,7 @@ search_after cursors, k above the hit count, and empty answers."""
 from __future__ import annotations
 
 import itertools
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -276,6 +278,33 @@ def test_entry_points_after_upsert_and_delete(spark, mutated):
                for doc, ts in parts.items()}
         assert set(got) == {doc for doc in targets if doc in scores}, text
         assert all(abs(got[doc] - scores[doc]) <= 1e-9 for doc in got)
+
+
+def test_index_named_by_a_uri(spark, index, mutated, corpus_pdf):
+    """An index named by a file:// URI answers as its local path does, in
+    as many jobs (at most 3 for a top-k request): stats.json, the
+    pointer files and the tombstones are read through the filesystem
+    the URI names. Checked on an index without tombstones and on the
+    two-segment tombstoned one."""
+    def same(request):
+        (want, local_jobs), (got, jobs) = (
+            _jobs(spark, lambda: request(d)), _jobs(spark, lambda: request(uri)))
+        assert got == want and jobs == local_jobs
+        return jobs
+
+    texts = ["error handling timeout", mutated[4][1]]
+    phrases = [" ".join(corpus_pdf.text.iloc[3].split()[:2]), "handling retry"]
+    for d in (index, mutated[0]):
+        uri = Path(d).as_uri()
+        for text in texts:
+            assert same(lambda i: _hits(_score(spark, i, text, 10))) <= 3
+            q = spark.createDataFrame([("q", text)],
+                                      "query_id string, query_text string")
+            same(lambda i: engine.count_matches(spark, i, q).collect())
+        for phrase in phrases:
+            pq = spark.createDataFrame([("p", phrase, 10)], Q_SCHEMA)
+            assert same(lambda i: _hits(
+                engine.phrase_topk(spark, i, pq).collect())) <= 3
 
 
 # ------------------------------------------- rank identity of the merge

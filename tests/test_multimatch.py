@@ -13,6 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
 from data_prepper_spark.query.multimatch import (
@@ -164,7 +165,7 @@ def test_per_field_stats(spark, fidx):
     statistics)."""
     import os
 
-    s = engine.load_stats(os.path.join(fidx, "fields", "tool"))
+    s = load_stats(os.path.join(fidx, "fields", "tool"))
     assert s["n_docs"] == sum(1 for _, _, tl in DOCS if tl)
 
 

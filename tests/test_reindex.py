@@ -16,6 +16,7 @@ import pytest
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import tombstones as tomb
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.index.reindex import live_docs, reindex
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import engine
@@ -93,7 +94,7 @@ def test_analyzer_migration_preserves_ranks_on_ascii(spark, src, tmp_path):
     stats = reindex(spark, d, spark.createDataFrame(pdf), dst,
                     tokenizer="unicode", n_shards=2)
     assert stats["tokenizer"] == "unicode"
-    assert engine.load_stats(dst)["tokenizer"] == "unicode"
+    assert load_stats(dst)["tokenizer"] == "unicode"
     qpdf = generate_queries(8)
     got = _topk(spark, dst, qpdf)
     bare = str(tmp_path / "bare")

@@ -11,6 +11,7 @@ import pytest
 
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.index.rollover import (
     RolloverPolicy, generations, rollover_append, search_all, write_index,
 )
@@ -36,13 +37,13 @@ def test_rollover_by_docs_and_alias_read(spark, tmp_path):
     g2 = rollover_append(spark, spark.createDataFrame(b2), base, pol,
                          n_shards=4, block_size=16)
     assert g2 == g1
-    s1 = engine.load_stats(g1)
+    s1 = load_stats(g1)
     assert s1["n_docs"] == len(b1) + len(b2)
     # now over threshold -> third batch opens gen 2
     g3 = rollover_append(spark, spark.createDataFrame(b3), base, pol,
                          n_shards=4, block_size=16)
     assert os.path.basename(g3) == "idx-000002"
-    assert engine.load_stats(g3)["n_docs"] == len(b3)
+    assert load_stats(g3)["n_docs"] == len(b3)
     assert [os.path.basename(p) for p in generations(base)] == [
         "idx-000001", "idx-000002"]
     assert write_index(base) == g3

@@ -17,6 +17,7 @@ import pytest
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
 from data_prepper_spark.sources import snapshot as snap
@@ -62,7 +63,7 @@ def test_incremental_build_rank_identity(spark, base_pdf, inc_pdf, algo):
                    n_shards=8, snapshot_id=1)
     ib.build_index(spark, snap.read_incremental(spark, table, 1), idx,
                    n_shards=8, snapshot_id=2, incremental=True)
-    stats = engine.load_stats(idx)
+    stats = load_stats(idx)
     assert stats["n_docs"] == len(base_pdf) + len(inc_pdf)
     assert stats["avgdl"] > stats["avgdl_min"]  # drifted up
 
@@ -144,11 +145,11 @@ def test_compaction_rank_identity_and_metadata_refresh(spark, base_pdf, inc_pdf,
                    n_shards=4, snapshot_id=1)
     ib.build_index(spark, snap.read_incremental(spark, table, 1), idx,
                    n_shards=4, snapshot_id=2, incremental=True)
-    pre = engine.load_stats(idx)
+    pre = load_stats(idx)
     assert pre["avgdl"] > pre["avgdl_min"]
 
     ib.compact_index(spark, idx)
-    post = engine.load_stats(idx)
+    post = load_stats(idx)
     assert post["avgdl_min"] == post["avgdl"]  # staleness cleared
     segs = (
         spark.read.parquet(layout.resolve(idx, "blocks"))

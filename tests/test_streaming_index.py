@@ -16,6 +16,7 @@ import pytest
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import layout
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
@@ -80,13 +81,13 @@ p:
     _write_batch(str(src), "b1.json", b1)
     q = run_pipeline_streaming(spark, cfg, checkpoint_dir=str(tmp_path / "ck"))
     q.awaitTermination(120)
-    n1 = engine.load_stats(idx)["n_docs"]
+    n1 = load_stats(idx)["n_docs"]
     assert n1 == int((b1.role != "system").sum())
 
     _write_batch(str(src), "b2.json", b2)
     q = run_pipeline_streaming(spark, cfg, checkpoint_dir=str(tmp_path / "ck"))
     q.awaitTermination(120)
-    assert engine.load_stats(idx)["n_docs"] == n1 + int((b2.role != "system").sum())
+    assert load_stats(idx)["n_docs"] == n1 + int((b2.role != "system").sum())
 
     qdf = spark.createDataFrame(pd.DataFrame(generate_queries(5)))
     assert engine.score_topk(spark, idx, qdf).count() > 0
@@ -102,7 +103,7 @@ def test_streaming_many_batches_then_compact(spark, dirs):
     for i, b in enumerate(batches):
         _write_batch(src, f"b{i}.json", b)
         _run_available(spark, src, ckpt, sink)
-    stats = engine.load_stats(idx)
+    stats = load_stats(idx)
     full = pd.concat(batches, ignore_index=True)
     assert stats["n_docs"] == len(full)
     segs = spark.read.parquet(layout.resolve(idx, "blocks")).select("seg").distinct()
@@ -135,12 +136,12 @@ def test_streaming_index_end_to_end(spark, dirs):
 
     _write_batch(src, "b1.json", b1)
     _run_available(spark, src, ckpt, sink)
-    s1 = engine.load_stats(idx)
+    s1 = load_stats(idx)
     assert s1["n_docs"] == len(b1) and s1["snapshot_id"] >= 1
 
     _write_batch(src, "b2.json", b2)
     _run_available(spark, src, ckpt, sink)
-    s2 = engine.load_stats(idx)
+    s2 = load_stats(idx)
     assert s2["n_docs"] == len(b1) + len(b2)
     assert s2["snapshot_id"] > s1["snapshot_id"]
 
@@ -163,7 +164,7 @@ def test_streaming_index_end_to_end(spark, dirs):
     last_epoch = s2["snapshot_id"] - 1
     segs_before = sorted(os.listdir(idx))
     sink(spark.createDataFrame(b2), last_epoch)
-    assert engine.load_stats(idx)["n_docs"] == s2["n_docs"]
+    assert load_stats(idx)["n_docs"] == s2["n_docs"]
     assert sorted(os.listdir(idx)) == segs_before
 
     # a FRESH checkpoint (epochs restart at 0) against the committed
@@ -173,4 +174,4 @@ def test_streaming_index_end_to_end(spark, dirs):
 
     # empty batch: no new segment
     sink(spark.createDataFrame([], TSCHEMA), 99)
-    assert engine.load_stats(idx)["snapshot_id"] == s2["snapshot_id"]
+    assert load_stats(idx)["snapshot_id"] == s2["snapshot_id"]

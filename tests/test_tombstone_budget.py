@@ -19,10 +19,13 @@ tests pin the contract:
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pytest
 
+from data_prepper_spark import cli
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import tombstones as tomb
@@ -101,10 +104,12 @@ def test_minimize_equivalence_random():
 
 
 def test_coalesce_alone_satisfies_budget_for_contiguous_deletes(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, capsys
 ):
     """Point-deleting a contiguous doc run collapses to ONE range at
-    write time — no compaction triggered, index untouched."""
+    write time — no compaction triggered, index untouched. The
+    coalesced store lives behind its pointer (tombstones__vN), and the
+    `stats` CLI still counts it."""
     d = _build(spark, generate_pandas(0, N_CONVS), str(tmp_path / "idx"))
     monkeypatch.setattr(tomb, "COMPACT_THRESHOLD_RANGES", 50)
     # 200 point deletes inside conv 3, all contiguous turn doc_ids
@@ -113,6 +118,10 @@ def test_coalesce_alone_satisfies_budget_for_contiguous_deletes(
     t = tomb.load_tombstones(spark, d)
     assert t is not None and len(t.starts) == 1
     assert t.starts[0] == base and t.ends[0] == base + 200
+    capsys.readouterr()
+    assert cli.main(["stats", "--index", d]) == 0
+    out = capsys.readouterr().out.splitlines()[-1]
+    assert json.loads(out)["tombstone_ranges"] == 1
 
 
 def test_million_point_deletes_auto_compact_and_rank_identity(

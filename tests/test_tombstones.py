@@ -29,6 +29,7 @@ from data_prepper_spark.data.transcripts import generate_pandas, generate_querie
 from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import layout
 from data_prepper_spark.index import tombstones as tomb
+from data_prepper_spark.index.reader import load_stats
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE as STRIDE
@@ -125,8 +126,8 @@ def test_compaction_physically_removes_and_corrects_stats(
     assert not os.path.exists(os.path.join(deleted_index, "tombstones"))
 
     fresh = _build(spark, live_pdf, str(tmp_path_factory.mktemp("idx_fresh")))
-    s_c = engine.load_stats(deleted_index)
-    s_f = engine.load_stats(fresh)
+    s_c = load_stats(deleted_index)
+    s_f = load_stats(fresh)
     assert s_c["n_docs"] == s_f["n_docs"]
     assert abs(s_c["avgdl"] - s_f["avgdl"]) < 1e-9
 
@@ -195,7 +196,7 @@ def test_upsert_replaces_conversations(spark, corpus_pdf, tmp_path_factory):
     ib.compact_index(spark, d)
     fresh = _build(spark, updated_pdf, str(tmp_path_factory.mktemp("idx_up_fresh")))
     _assert_identical(_topk(spark, fresh, q), _topk(spark, d, q))
-    s_c, s_f = engine.load_stats(d), engine.load_stats(fresh)
+    s_c, s_f = load_stats(d), load_stats(fresh)
     assert s_c["n_docs"] == s_f["n_docs"]
     assert abs(s_c["avgdl"] - s_f["avgdl"]) < 1e-9
 
