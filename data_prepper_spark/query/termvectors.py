@@ -47,7 +47,7 @@ def term_vectors(
     end_offsets[, doc_freq]) for the requested docs, analyzed with the
     INDEX's pinned analyzer spec."""
     r = IndexReader(spark, index_dir)
-    mode = r.mode
+    mode = r.mode  # the kernel closure ships the mode, never the reader
     pruned = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
