@@ -1638,10 +1638,11 @@ def main(argv: list[str] | None = None) -> int:
     kq = sub.add_parser(
         "knn-query", help="cosine top-k over a built HNSW index")
     kq.add_argument("--graphs", required=True, help="knn-build output")
-    kq.add_argument("--queries", default=None,
-                    help="parquet of (query_id, embedding)")
-    kq.add_argument("--vector", default=None,
-                    help="inline query vector: comma-separated floats")
+    kq_in = kq.add_mutually_exclusive_group(required=True)
+    kq_in.add_argument("--queries", default=None,
+                       help="parquet of (query_id, embedding)")
+    kq_in.add_argument("--vector", default=None,
+                       help="inline query vector: comma-separated floats")
     kq.add_argument("--k", type=int, default=10)
     kq.add_argument("--ef-search", type=int, default=64)
     kq.add_argument("--filter", default=None,
@@ -1711,10 +1712,11 @@ def main(argv: list[str] | None = None) -> int:
     pk = sub.add_parser(
         "pq-query", help="ADC cosine top-k over a pq-build index")
     pk.add_argument("--index", required=True, help="pq-build --out dir")
-    pk.add_argument("--queries", default=None,
-                    help="parquet of (query_id, embedding)")
-    pk.add_argument("--vector", default=None,
-                    help="inline query vector: comma-separated floats")
+    pk_in = pk.add_mutually_exclusive_group(required=True)
+    pk_in.add_argument("--queries", default=None,
+                       help="parquet of (query_id, embedding)")
+    pk_in.add_argument("--vector", default=None,
+                       help="inline query vector: comma-separated floats")
     pk.add_argument("--k", type=int, default=10)
     pk.add_argument("--id-col", default="vec_id")
     pk.add_argument("--local-cores", type=int, default=None)
@@ -1879,8 +1881,6 @@ def main(argv: list[str] | None = None) -> int:
     be.set_defaults(fn=cmd_bench)
 
     args = p.parse_args(argv)
-    if args.fn is cmd_pq_query and not (args.queries or args.vector):
-        pk.error("one of the arguments --queries --vector is required")
     try:
         return args.fn(args)
     except IndexExistsError as e:

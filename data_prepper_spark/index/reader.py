@@ -10,12 +10,17 @@ per call (or calls ``load_stats``) and takes the index state from it:
 - lazily, on first use: the tombstones, the blocks, the dictionary and
   the convmap DataFrames, and the dictionary slice (``df_slice``) of a
   term list. ``postings`` is the blocks scan for whole-shard readers
-  (check_index, compact_index, the stats CLI).
+  (check_index, compact_index, the stats CLI);
+- on the driver: ``block_table``, the pruned blocks rows of a term list
+  as a pyarrow Table, which ``query.engine.scatter`` scores in-process
+  when the input is small (``block_estimate`` sizes it from stats.json
+  and a dictionary slice).
 
 The reader runs no Spark job of its own: the blocks scan carries an
 explicit schema (a pre-segment index's null ``seg`` reads as 0), and
-``stats.json``, the pointer files, the driver-small tombstones and the
-dictionary slice are read on the driver with pyarrow
+``stats.json``, the pointer files, the driver-small tombstones, the
+dictionary slice and a small request's pruned blocks are read on the
+driver with pyarrow
 (``layout.read_text`` / ``layout.read_table``), through the filesystem
 the path names: an index named by a URI (``file://``, ``s3://``,
 ``hdfs://``) reads like a local one. Nothing read or decoded outlives
@@ -106,6 +111,40 @@ class IndexReader:
         """(conv_id, serial) of a convmap-scheme index."""
         return self.spark.read.parquet(
             layout.resolve(self.index_dir, "convmap"))
+
+    def block_table(self, terms: list[str], cols: tuple):
+        """The `cols` of the blocks rows of `terms`, read on the driver
+        with pyarrow as one pyarrow Table: the scan `scatter` runs on
+        Spark, for a pruned input small enough to score in-process.
+        The hive `shard`/`seg` directories are the partition columns,
+        `term IN (...)` is pushed into the dataset filter (row-group
+        pruning on the term sort order), only `cols` are read, and a
+        pre-segment layout's absent `seg` reads as 0, as in `blocks`."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        fs, path = layout._filesystem(
+            layout.resolve(self.index_dir, "blocks"))
+        part = ds.partitioning(
+            pa.schema([("shard", pa.int32()), ("seg", pa.int64())]),
+            flavor="hive")
+        t = ds.dataset(path, filesystem=fs, format="parquet",
+                       partitioning=part).to_table(
+            columns=list(cols), filter=ds.field("term").isin(terms))
+        if "seg" in cols and t.column("seg").null_count:
+            t = t.set_column(t.schema.get_field_index("seg"), "seg",
+                             pc.fill_null(t.column("seg"), 0))
+        return t
+
+    def block_estimate(self, dfs: dict[str, int]) -> int:
+        """The blocks rows a scan of the terms of a dictionary slice
+        {term: df} reads, estimated from stats.json alone: a term's
+        postings fill ceil(df / block_size) blocks, plus at most one
+        part-filled block per shard."""
+        bs, n_shards = int(self.stats.get("block_size", 128)), \
+            int(self.stats["n_shards"])
+        return sum(-(-int(df) // bs) + n_shards for df in dfs.values())
 
     def df_slice(self, terms: list[str]) -> dict[str, int]:
         """{term: global df} for the terms the dictionary holds."""

@@ -7,7 +7,8 @@ kernel -> gather:
     IndexReader(index_dir)         stats.json; tombstones and the
       |                            query terms' dictionary slice, read
       |                            on the driver (index/reader.py)
-    scatter(reader, per_term, kernel)
+    scatter(reader, per_term, kernel)          (Spark, or the driver
+      |                                         for a small input)
       |> blocks.select(<the kernel's streams>)   <- ReadSchema pruning:
       |                                            positions only for
       |                                            kernels that read them
@@ -32,10 +33,18 @@ the segment's tombstoned docs dropped. The top-k kernels score the
 cursors directly; `_ShardTerms` serves the others (bool, phrase, span,
 filtered, explain, count and facets) from the same cursors.
 
-A driver-literal request is one pruned scan, one exchange and the
-kernel, all run inside the call. Batches above
+`scatter` has two execution sites. A driver-literal request whose
+pruned input is small (at most LOCAL_MAX_BLOCKS blocks rows, estimated
+from the dictionary slice it already holds) runs on the driver and no
+Spark job: the pruned blocks are read with pyarrow
+(`IndexReader.block_table`), the same kernel closure runs once per
+shard in-process, and the rows become a LocalRelation. Every other
+driver-literal request is one pruned scan, one exchange and the kernel
+on Spark, all run inside the call; so is a filter context, whose
+corpus side is cogrouped by shard. Batches above
 prep.PREP_DISTRIBUTED_THRESHOLD shuffle-join the qmap and dictionary on
-term and rank in a Window instead. No stage materializes a full
+term and rank in a Window instead. Either way the kernel closure is the
+same, so the scores are bit-identical. No stage materializes a full
 per-term posting list. idf uses the GLOBAL df (summed across shards),
 so scores are identical to a single-node oracle — the
 dfs_query_then_fetch contract.
@@ -50,6 +59,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from data_prepper_spark.index import codec
 from data_prepper_spark.index.reader import (
@@ -68,6 +78,17 @@ _KERNEL_OUT = "query_id string, doc_id long, score double"
 _TYPES = {"query_id": "string", "rank": "long", "conv": "long",
           "index": "int", "doc_id": "long", "score": "double"}
 _TOPK_COLS = ("query_id", "rank", "doc_id", "score")
+
+# The largest pruned input, in blocks rows as IndexReader.block_estimate
+# counts them, that `scatter` scores on the driver rather than on Spark.
+# Measured on a 4-vCPU VM (19.5k turns, 16 shards, block size 128; one
+# request of one query): the driver path used less CPU at every size
+# tried, since Spark runs the same kernel plus its per-job and
+# per-task costs (est 3.8k: 0.83 s against 2.9 s; 57k: 9.3 s against
+# 14.2 s), but its single thread loses on wall time once Spark's
+# parallel kernel tasks pay off (3.8k: 0.73 s against 0.96 s; 7.6k:
+# 1.44 s against 1.29 s). Interactive queries estimate a few hundred.
+LOCAL_MAX_BLOCKS = 4096
 
 
 # ------------------------------------------------------ scatter / gather
@@ -98,40 +119,79 @@ def scatter(
     - dictionary: True gives each reader's global df, False none, a
       {term: df} dict replaces it (alias search's union statistics).
 
+    A driver qmap with no `right` whose pruned input is estimated at
+    most LOCAL_MAX_BLOCKS blocks rows runs on the driver instead: the
+    same scan read with pyarrow, the same kernel closure called once
+    per shard, the rows returned as a LocalRelation.
+
     Returns None when no index has blocks or no query term is known."""
     readers = reader if isinstance(reader, dict) else {None: reader}
     readers = {tag: r for tag, r in readers.items() if not r.empty}
     distributed = isinstance(per_term, DataFrame)
     if not readers or not (distributed or per_term):
         return None
-    dfs, parts = {}, []
-    for tag, r in readers.items():
-        part = r.blocks.select(*cols)
-        if distributed:
-            part = part.join(per_term, "term")
+    if distributed:
+        parts = []
+        for tag, r in readers.items():
+            part = r.blocks.select(*cols).join(per_term, "term")
             if dictionary:
                 part = part.join(r.dictionary, "term")
-        else:
-            if dictionary is True:
-                dfs[tag] = r.df_slice(sorted(per_term))
-            elif dictionary is not False:
-                dfs[tag] = dictionary
-            terms = sorted(dfs.get(tag, per_term))
-            if not terms:
-                continue
-            part = part.filter(F.col("term").isin(terms))
-        if tag is not None:
-            part = part.withColumn("field", F.lit(tag))
-        parts.append(part)
-    if not parts:
+            parts.append(_tagged(part, tag))
+        return spread_by_shard(reduce(DataFrame.unionByName, parts)) \
+            .groupBy("shard").applyInPandas(kernel(), schema=schema)
+
+    dfs, terms = {}, {}
+    for tag, r in readers.items():
+        if dictionary is True:
+            dfs[tag] = r.df_slice(sorted(per_term))
+        elif dictionary is not False:
+            dfs[tag] = dictionary
+        if dfs.get(tag, per_term):
+            terms[tag] = sorted(dfs.get(tag, per_term))
+    if not terms:
         return None
-    run = kernel() if distributed else _with_constants(
-        kernel(), per_term, fields, dfs or None, cogroup=right is not None)
-    grouped = spread_by_shard(reduce(DataFrame.unionByName, parts)) \
-        .groupBy("shard")
+    run = _with_constants(kernel(), per_term, fields, dfs or None,
+                          cogroup=right is not None)
+    # the count scatters take no dictionary: their estimate reads one
+    local = right is None and sum(
+        readers[tag].block_estimate(
+            dfs[tag] if tag in dfs else readers[tag].df_slice(ts))
+        for tag, ts in terms.items()) <= LOCAL_MAX_BLOCKS
+    if local:
+        return _scatter_local(
+            {tag: readers[tag].block_table(ts, cols)
+             for tag, ts in terms.items()}, run, schema)
+    grouped = spread_by_shard(reduce(DataFrame.unionByName, [
+        _tagged(readers[tag].blocks.select(*cols)
+                .filter(F.col("term").isin(ts)), tag)
+        for tag, ts in terms.items()])).groupBy("shard")
     if right is not None:
         grouped = grouped.cogroup(spread_by_shard(right()).groupBy("shard"))
     return grouped.applyInPandas(run, schema=schema)
+
+
+def _tagged(part: DataFrame, tag: str | None) -> DataFrame:
+    return part if tag is None else part.withColumn("field", F.lit(tag))
+
+
+def _scatter_local(tables: dict, run: Callable, schema: str) -> DataFrame:
+    """The driver execution site of `scatter`: the pruned blocks rows
+    ({tag: pyarrow Table}) handed to the kernel closure once per shard,
+    in shard order, and its rows returned as a LocalRelation, which
+    collects with no job."""
+    spark = SparkSession.active()
+    struct = _parse_datatype_string(schema)
+    pdf = pd.concat([t.to_pandas() if tag is None else
+                     t.to_pandas().assign(field=tag)
+                     for tag, t in tables.items()], ignore_index=True)
+    out = [run((shard,), rows.reset_index(drop=True))
+           for shard, rows in pdf.groupby("shard", sort=True)]
+    out = [o for o in out if len(o)]
+    if not out:
+        # limit(0) plans as an empty LocalRelation: no job to collect
+        return spark.createDataFrame([], struct).limit(0)
+    return spark.createDataFrame(
+        pd.concat(out, ignore_index=True)[struct.names], struct)
 
 
 def _with_constants(run: Callable, per_term: dict[str, list[tuple]],
@@ -162,17 +222,20 @@ def _with_constants(run: Callable, per_term: dict[str, list[tuple]],
 
 def gather(
     per_shard: DataFrame | None, queries: list[dict] | DataFrame,
-    cols: tuple = _TOPK_COLS, tie: tuple = (),
+    cols: tuple = _TOPK_COLS, tie: tuple = (), best_of: str | None = None,
 ) -> DataFrame:
     """The gather half: each query's global top-k over the per-shard
     winners, ranked (score desc, doc_id asc, *tie asc); the empty
-    answer when the scatter had nothing to scan.
+    answer when the scatter had nothing to scan. With `best_of` (a
+    column, collapse's `conv`) only each value's best row is ranked:
+    a group's global best is the best of its per-shard bests.
 
     Driver-literal queries (the rows prep collected) merge on the
     driver: the per-shard top-ks (at most k x shards rows per query)
-    are ranked in pandas and returned as a LocalRelation, which the
-    caller collects with no job. A queries DataFrame (a distributed
-    batch) merges in a Window."""
+    are collected, ranked in pandas and returned as a LocalRelation,
+    which the caller collects with no job; a driver-scored scatter is a
+    LocalRelation too, so the collect here runs none either. A queries
+    DataFrame (a distributed batch) merges in a Window."""
     schema = ", ".join(f"{c} {_TYPES[c]}" for c in cols)
     spark = SparkSession.active()
     # limit(0) plans as an empty LocalRelation: collecting it runs no job
@@ -180,18 +243,25 @@ def gather(
     if per_shard is None:
         return empty
     if isinstance(queries, DataFrame):
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"), *map(F.asc, tie))
+        by = [F.desc("score"), F.asc("doc_id"), *map(F.asc, tie)]
+        if best_of:
+            per_shard = per_shard.withColumn("_best", F.row_number().over(
+                Window.partitionBy("query_id", best_of).orderBy(*by))) \
+                .filter(F.col("_best") == 1)
         return (
             per_shard.join(queries.select("query_id", "k"), "query_id")
-            .withColumn("rank", F.row_number().over(w))
+            .withColumn("rank", F.row_number().over(
+                Window.partitionBy("query_id").orderBy(*by)))
             .filter(F.col("rank") <= F.col("k"))
             .select(*cols)
         )
     ks = {q["query_id"]: int(q["k"]) for q in queries}
-    pdf = per_shard.toPandas().sort_values(
-        ["query_id", "score", "doc_id", *tie],
-        ascending=[True, False, True, *[True] * len(tie)], kind="stable")
+    pdf = pd.DataFrame(per_shard.collect(), columns=per_shard.columns) \
+        .sort_values(["query_id", "score", "doc_id", *tie],
+                     ascending=[True, False, True, *[True] * len(tie)],
+                     kind="stable")
+    if best_of:
+        pdf = pdf.drop_duplicates(["query_id", best_of])
     pdf["rank"] = pdf.groupby("query_id").cumcount() + 1
     pdf = pdf[pdf["rank"] <= pdf["query_id"].map(ks)]
     return spark.createDataFrame(pdf[list(cols)], schema) if len(pdf) else empty
@@ -417,13 +487,15 @@ def _shard_kernel(
 def score_topk(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame | list[dict],
     algo: str = "bmx",
     collapse: bool = False,
     collapse_stride: int | None = None,
 ) -> DataFrame:
     """queries(query_id, query_text, k[, after_score, after_doc]) ->
-    (query_id, rank, doc_id, score).
+    (query_id, rank, doc_id, score). The queries are a DataFrame or
+    driver rows (a list of dicts, a pandas frame), which cost no job to
+    read (prep.collect_rows).
 
     search_after pagination (the reference opensearch source pages an
     index out with PIT + search_after — opensearch/.../worker/
@@ -442,23 +514,27 @@ def score_topk(
     id schemes (arith and convmap)."""
     r = IndexReader(spark, index_dir)
     stride = int(collapse_stride or DOC_ID_STRIDE)
-    cursor_cols = (
-        [F.col("after_score").cast("double"), F.col("after_doc").cast("long")]
-        if "after_score" in queries.columns
-        else [F.lit(None).cast("double").alias("after_score"),
-              F.lit(None).cast("long").alias("after_doc")]
-    )
-    queries = queries.select("query_id", "query_text", "k", *cursor_cols)
+    if isinstance(queries, DataFrame):
+        cursor_cols = (
+            [F.col("after_score").cast("double"),
+             F.col("after_doc").cast("long")]
+            if "after_score" in queries.columns
+            else [F.lit(None).cast("double").alias("after_score"),
+                  F.lit(None).cast("long").alias("after_doc")]
+        )
+        queries = queries.select("query_id", "query_text", "k", *cursor_cols)
     # interactive batches (<= threshold) prep in pure Python, scatter
     # with closure constants and merge on the driver; LARGE batches
     # (batch scoring) prep distributedly (prep.qmap_df_dist), join on
-    # term and merge in a Window instead. One single-task take() is the
-    # only driver materialization either way
-    head = queries.coalesce(1).take(prep.PREP_DISTRIBUTED_THRESHOLD + 1)
-    if len(head) > prep.PREP_DISTRIBUTED_THRESHOLD:
+    # term and merge in a Window instead. Reading the rows is one
+    # single-task job for a DataFrame and none for driver rows
+    rows = prep.collect_rows(queries,
+                             limit=prep.PREP_DISTRIBUTED_THRESHOLD + 1)
+    if len(rows) > prep.PREP_DISTRIBUTED_THRESHOLD:
         per_term = prep.qmap_df_dist(spark, queries, "score", r.mode)
     else:
-        queries = [x.asDict() for x in head]
+        queries = [{"after_score": None, "after_doc": None, **q}
+                   for q in rows]
         per_term = prep.score_entries(queries, r.mode)
     per_shard = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
         r.avgdl, r.n_docs, algo, r.ub_scale, r.tomb,
@@ -467,23 +543,13 @@ def score_topk(
     if not collapse:
         return gather(per_shard, queries)
     if per_shard is not None:
-        # cross-shard merge of per-shard collapsed top-k: a group's
-        # global best is the max over shards of its per-shard best
-        # ((score desc, doc asc) via struct max on (score, -doc_id)),
-        # then top-k GROUPS per query. The merge input is bounded by
-        # k * n_shards rows per query.
-        per_shard = (
-            per_shard.withColumn("conv", F.expr(f"doc_id div {stride}"))
-            .groupBy("query_id", "conv")
-            .agg(F.max(F.struct(
-                F.col("score"), (-F.col("doc_id")).alias("neg_doc"),
-                F.col("doc_id"),
-            )).alias("b"))
-            .select("query_id", "conv", F.col("b.doc_id").alias("doc_id"),
-                    F.col("b.score").alias("score"))
-        )
+        per_shard = per_shard.withColumn(
+            "conv", F.expr(f"doc_id div {stride}"))
+    # a group's global best is the best of its per-shard bests; the
+    # merge input is bounded by k * n_shards rows per query
     return gather(per_shard, queries,
-                  ("query_id", "rank", "conv", "doc_id", "score"))
+                  ("query_id", "rank", "conv", "doc_id", "score"),
+                  best_of="conv")
 
 
 def match_scores(
@@ -665,7 +731,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
 def phrase_topk(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame | list[dict],
 ) -> DataFrame:
     """match_phrase top-k: queries(query_id, query_text, k) ->
     (query_id, rank, doc_id, score); only documents containing the
@@ -855,7 +921,7 @@ def calculate_min_should_match(optional_count: int, spec) -> int:
 def bool_topk(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame | list[dict],
 ) -> DataFrame:
     """bool query top-k. queries(query_id, must, should, must_not,
     minimum_should_match, k) — each clause a space-separated term string
@@ -1051,7 +1117,7 @@ def sharded_docs(
 def filtered_topk(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | pd.DataFrame | list[dict],
     docs: DataFrame,
     filter_expr: str,
 ) -> DataFrame:
@@ -1152,21 +1218,16 @@ def filtered_topk_multi(
     is part of the plan, so it cannot ride a data column); distinct
     filters each cost one corpus-scan + cogroup, unfiltered queries
     ride a single score_topk."""
-    rows = queries.select("query_id", "query_text", "k", "filter").collect()
+    rows = prep.collect_rows(queries, "query_id", "query_text", "k", "filter")
     groups: dict[str, list] = {}
     for r in rows:
-        groups.setdefault(r["filter"] or "", []).append(
-            (r["query_id"], r["query_text"], int(r["k"]))
-        )
+        groups.setdefault(r.pop("filter") or "", []).append(r)
     out = None
     for filt, qs in sorted(groups.items()):
-        qdf = spark.createDataFrame(
-            qs, "query_id string, query_text string, k int"
-        )
         part = (
-            score_topk(spark, index_dir, qdf)
+            score_topk(spark, index_dir, qs)
             if not filt
-            else filtered_topk(spark, index_dir, qdf, docs, filt)
+            else filtered_topk(spark, index_dir, qs, docs, filt)
         )
         out = part if out is None else out.unionByName(part)
     return out if out is not None else gather(None, [])

@@ -22,12 +22,16 @@ inverse-scaling anomaly where a 10x smaller corpus answered 2.3x
 slower).
 
 The width is the session's shuffle width, not the shard count: a task
-runs the shards its partition holds one after another, and each Python
-task costs about 170 ms of CPU whatever rows it holds (pyspark 4.1,
-Python 3.11, 4-vCPU VM: tasks that converted a few rows cost 140-230
-ms each; most of it is `importlib.invalidate_caches()` in the worker's
-per-task set-up re-reading pyspark.zip). A 16-shard build on 4 cores
-ran its kernel stage as 16 tasks; at the shuffle width it runs 4.
+runs the shards its partition holds one after another, and each round
+trip to a Python worker costs about 220 ms of worker CPU whatever rows
+it carries (pyspark 4.1, Python 3.11, 4-vCPU VM). A kernel task makes
+one; a task reading a `createDataFrame(list)` makes one per
+`parallelize` slice, under `coalesce(1)` too. The worker's
+`importlib.invalidate_caches()` is not the cost: it and the `import
+pyspark.worker` after it take 0.06 ms. A 16-shard build on 4 cores ran
+its kernel stage as 16 tasks; at the shuffle width it runs 4. (A small
+query input skips the exchange altogether: it is scored on the driver,
+query/engine.py.)
 """
 
 from __future__ import annotations

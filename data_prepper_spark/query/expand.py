@@ -30,12 +30,17 @@ from pyspark.sql import functions as F
 
 from data_prepper_spark.index.reader import IndexReader
 from data_prepper_spark.index.tokenizer import tokenize
-from data_prepper_spark.query import engine
+from data_prepper_spark.query import engine, prep
 
 MAX_EXPANSIONS = 50
 _EMPTY = "query_id string, rank long, doc_id long, score double"
-_BOOL = ("query_id string, must string, should string, must_not string, "
-         "minimum_should_match int, k int")
+
+
+def _bool_row(query_id: str, should: str, msm: int, k) -> dict:
+    """A should-only bool_topk query row, passed as a driver row: no
+    query frame for bool_topk to read back."""
+    return {"query_id": query_id, "must": "", "should": should,
+            "must_not": "", "minimum_should_match": msm, "k": int(k)}
 
 
 def _cond(kind: str, pattern: str):
@@ -103,7 +108,7 @@ def _prefix_queries(queries: DataFrame, mode: str) -> list[tuple]:
     """[(query_id, leading tokens, last token, k)] for every query with
     at least one token: the last token is the prefix to expand."""
     out = []
-    for r in queries.select("query_id", "query_text", "k").collect():
+    for r in prep.collect_rows(queries, "query_id", "query_text", "k"):
         toks = tokenize(r["query_text"], mode=mode)
         if toks:
             out.append((r["query_id"], toks[:-1], toks[-1], int(r["k"])))
@@ -122,18 +127,18 @@ def expand_topk(
     Queries whose pattern expands to nothing return no rows (same as an
     absent term). All patterns expand in ONE dictionary pass, then one
     corpus-side scatter-gather."""
-    qrows = queries.collect()
+    qrows = prep.collect_rows(queries)
     exp = _expand(
         IndexReader(spark, index_dir),
         [(r["query_id"], _cond(r["kind"], r["pattern"])) for r in qrows],
         max_expansions,
     )
     brows = [
-        (r["query_id"], "", " ".join(sorted(exp.get(r["query_id"], []))),
-         "", 1, int(r["k"]))
+        _bool_row(r["query_id"], " ".join(sorted(exp.get(r["query_id"], []))),
+                  1, r["k"])
         for r in qrows
     ]
-    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))
+    return engine.bool_topk(spark, index_dir, brows)
 
 
 _SEP = "\x1f"
@@ -221,7 +226,7 @@ def synonym_topk(
     contribute their tokens to the same group."""
     mode = IndexReader(spark, index_dir).mode
     rows = []
-    for r in queries.select("query_id", "query_text", "k").collect():
+    for r in prep.collect_rows(queries, "query_id", "query_text", "k"):
         groups = []
         for t in dict.fromkeys(tokenize(r["query_text"], mode=mode)):
             variants = [t]
@@ -229,10 +234,9 @@ def synonym_topk(
                 variants += [v for v in tokenize(s, mode=mode)
                              if v not in variants]
             groups.append(" ".join(variants))
-        rows.append((r["query_id"], "", "", "", 0, int(r["k"]),
-                     " | ".join(groups)))
-    bq = spark.createDataFrame(rows, _BOOL + ", must_groups string")
-    return engine.bool_topk(spark, index_dir, bq)
+        rows.append(dict(_bool_row(r["query_id"], "", 0, r["k"]),
+                         must_groups=" | ".join(groups)))
+    return engine.bool_topk(spark, index_dir, rows)
 
 
 def more_like_this_topk(
@@ -256,7 +260,7 @@ def more_like_this_topk(
     import math
 
     r = IndexReader(spark, index_dir)
-    rows = queries.select("query_id", "like_text", "k").collect()
+    rows = prep.collect_rows(queries, "query_id", "like_text", "k")
     dfs = r.df_slice(sorted({
         t for row in rows for t in tokenize(row["like_text"], mode=r.mode)
     }))
@@ -274,11 +278,11 @@ def more_like_this_topk(
         if not sel:
             continue
         msm = max(1, int(minimum_should_match * len(sel)))
-        brows.append((row["query_id"], "", " ".join(sel), "", msm,
-                      int(row["k"])))
+        brows.append(_bool_row(row["query_id"], " ".join(sel), msm,
+                               row["k"]))
     if not brows:
         return spark.createDataFrame([], _EMPTY)
-    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))
+    return engine.bool_topk(spark, index_dir, brows)
 
 
 def match_bool_prefix_topk(
@@ -313,7 +317,7 @@ def match_bool_prefix_topk(
     for qid, lead, _, k in parsed:
         should = list(dict.fromkeys(lead + sorted(expansions.get(qid, []))))
         if should:
-            brows.append((qid, "", " ".join(should), "", 1, k))
+            brows.append(_bool_row(qid, " ".join(should), 1, k))
     if not brows:
         return spark.createDataFrame([], _EMPTY)
-    return engine.bool_topk(spark, index_dir, spark.createDataFrame(brows, _BOOL))
+    return engine.bool_topk(spark, index_dir, brows)

@@ -64,11 +64,8 @@ def count_phrase_matches(
     row per (shard, query), never the match list."""
     r = IndexReader(spark, index_dir)
     r.require_positions("count phrase matches")
-    rows = [
-        {"query_id": row["query_id"], "query_text": row["query_text"],
-         "k": int(r.n_docs)}
-        for row in queries.select("query_id", "query_text").collect()
-    ]
+    rows = [dict(row, k=int(r.n_docs)) for row in
+            prep.collect_rows(queries, "query_id", "query_text")]
     per_term = prep.phrase_entries(rows, r.mode)
 
     def kernel():

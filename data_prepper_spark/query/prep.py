@@ -24,6 +24,7 @@ from __future__ import annotations
 import re
 from typing import Any, Iterable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,12 +43,21 @@ _BOOST_EXTRACT = re.compile(r"\^([0-9]+(?:\.[0-9]+)?)$")
 _BOOST_STRIP = re.compile(r"\^[0-9.]+$")
 
 
-def collect_rows(queries: DataFrame, *cols: str) -> list[dict]:
-    """One collect of the (driver-scale) query set. Usually a
-    LocalRelation the caller just created — no cluster work at all."""
-    if cols:
-        queries = queries.select(*cols)
-    return [r.asDict() for r in queries.collect()]
+def collect_rows(queries: DataFrame | pd.DataFrame | list[dict], *cols: str,
+                 limit: int | None = None) -> list[dict]:
+    """The query rows as driver dicts: the one way an entry point reads
+    its queries. A DataFrame costs one single-task job (`coalesce(1)`
+    then `take(limit)`, or `collect` with no limit); a list of dicts or
+    a pandas frame is already on the driver and costs none, and is
+    returned whole (a pandas null reads as None)."""
+    if isinstance(queries, DataFrame):
+        one = (queries.select(*cols) if cols else queries).coalesce(1)
+        return [r.asDict()
+                for r in (one.collect() if limit is None else one.take(limit))]
+    if isinstance(queries, pd.DataFrame):
+        queries = queries.astype(object).where(queries.notna(), None) \
+            .to_dict("records")
+    return [{c: q[c] for c in cols} if cols else dict(q) for q in queries]
 
 
 def units_with_boost(text: str | None) -> list[tuple[str, float]]:

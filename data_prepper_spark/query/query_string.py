@@ -35,7 +35,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_prepper_spark.query import engine
+from data_prepper_spark.query import engine, prep
 
 _TOKEN_RE = re.compile(r'"[^"]*"|\(|\)|[^\s()]+')
 
@@ -131,31 +131,27 @@ def query_string_topk(
     score). Phrase queries and bool queries may be mixed in one batch;
     each lowers to its kernel and the unions share the output schema
     (ONE job per kernel family, not one per query)."""
-    rows = queries.select("query_id", "query_string", "k").collect()
+    rows = prep.collect_rows(queries, "query_id", "query_string", "k")
     phrase_rows, bool_rows = [], []
     for r in rows:
         p = parse_query_string(r["query_string"])
         if p["kind"] == "phrase":
-            phrase_rows.append((r["query_id"], p["phrase"], int(r["k"])))
+            phrase_rows.append({"query_id": r["query_id"],
+                                "query_text": p["phrase"], "k": int(r["k"])})
         else:
             msm = 1 if (p["should"] and not p["must"]) else 0
-            bool_rows.append((
-                r["query_id"], " ".join(p["must"]), " ".join(p["should"]),
-                " ".join(p["must_not"]), msm, int(r["k"]),
-                " | ".join(" ".join(g) for g in p["groups"]),
-            ))
+            bool_rows.append({
+                "query_id": r["query_id"], "must": " ".join(p["must"]),
+                "should": " ".join(p["should"]),
+                "must_not": " ".join(p["must_not"]),
+                "minimum_should_match": msm, "k": int(r["k"]),
+                "must_groups": " | ".join(" ".join(g) for g in p["groups"]),
+            })
     outs = []
     if bool_rows:
-        bq = spark.createDataFrame(
-            bool_rows,
-            "query_id string, must string, should string, must_not string, "
-            "minimum_should_match int, k int, must_groups string",
-        )
-        outs.append(engine.bool_topk(spark, index_dir, bq))
+        outs.append(engine.bool_topk(spark, index_dir, bool_rows))
     if phrase_rows:
-        pq = spark.createDataFrame(
-            phrase_rows, "query_id string, query_text string, k int")
-        outs.append(engine.phrase_topk(spark, index_dir, pq))
+        outs.append(engine.phrase_topk(spark, index_dir, phrase_rows))
     if not outs:
         return spark.createDataFrame(
             [], "query_id string, rank long, doc_id long, score double")

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.query import engine
+from data_prepper_spark.query import engine, prep
 from data_prepper_spark.query.explain import explain_hits
 
 __all__ = ["rescore_topk"]
@@ -50,7 +50,7 @@ def rescore_topk(
     if score_mode not in _MODES:
         raise ValueError(f"unknown rescore score_mode {score_mode!r}")
     ks = {r["query_id"]: int(r["k"])
-          for r in queries.select("query_id", "k").collect()}
+          for r in prep.collect_rows(queries, "query_id", "k")}
     too_big = [q for q, k in ks.items() if k > window_size]
     if too_big:
         raise ValueError(

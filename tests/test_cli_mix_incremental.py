@@ -120,6 +120,23 @@ def test_pq_query_without_queries_or_vector_is_usage_error(tmp_path, capsys):
     assert "--queries" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("argv", [
+    ["knn-query", "--graphs", "g"],
+    ["knn-query", "--graphs", "g", "--queries", "q", "--vector", "1.0"],
+    ["pq-query", "--index", "i", "--queries", "q", "--vector", "1.0"],
+])
+def test_vector_query_takes_exactly_one_query_input(argv, capsys):
+    """knn-query and pq-query take --queries or --vector, exactly one:
+    neither or both exits through argparse (status 2) before a Spark
+    session starts or the index is opened."""
+    from data_prepper_spark import cli
+
+    with pytest.raises(SystemExit) as exc:
+        cli.main(argv)
+    assert exc.value.code == 2
+    assert "--vector" in capsys.readouterr().err
+
+
 def test_dedup_incremental_cli_rebuilds_bloom_for_grown_corpus(
         spark, tmp_path, docs_path, capsys):
     """A bloom artifact built from corpus A must not be reused against

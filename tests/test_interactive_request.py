@@ -1,13 +1,16 @@
-"""A driver-literal request is one pruned blocks scan, one shard
-exchange and the kernel: the query map and the dictionary slice ride
-the kernel as closure constants, the tombstones and the dictionary
-slice are read on the driver, and the per-shard top-ks merge on the
-driver into a LocalRelation.
+"""A driver-literal request with a small pruned input is scored on
+the driver: the query map and the dictionary slice ride the kernel as
+closure constants, the tombstones, the dictionary slice and the pruned
+blocks are read on the driver with pyarrow, the kernel runs once per
+shard in-process, and the per-shard top-ks merge on the driver into a
+LocalRelation. The one Spark job left is reading a query DataFrame;
+driver rows cost none.
 
 Pinned here: the Spark jobs one request runs (score_topk, bool_topk,
 phrase_topk, and score_topk on an upserted and deleted-from index), the
-answers of every posting-reading entry point on that index, the same
-answers through a file:// URI, and
+Spark path's answer when the pruned input is over the driver limit,
+the answers of every posting-reading entry point on that index, the
+same answers through a file:// URI, and
 rank identity of the driver merge against `oracle.bm25` on its edge
 cases: ties at the kth score, alias search's index tie, collapse,
 search_after cursors, k above the hit count, and empty answers."""
@@ -121,40 +124,65 @@ def tie_oracle(tie_docs):
 
 # --------------------------------------------------- Spark jobs per request
 
-def test_score_topk_request_runs_three_jobs(spark, index, oracle_idx):
-    """One take() of the query rows, the scan's shuffle stage and the
-    kernel stage; the returned LocalRelation collects with no job."""
+def test_score_topk_request_runs_one_job(spark, index, oracle_idx):
+    """One take() of the query rows; the scan, the kernel and the merge
+    run on the driver, and the returned LocalRelation collects with no
+    job. Driver rows (a list of dicts or a pandas frame) run none."""
     for text in ("error handling timeout", "retry deploy"):
         rows, jobs = _jobs(spark, lambda: _score(spark, index, text, 10))
-        assert jobs <= 3
+        assert jobs <= 1
         assert _same(_hits(rows), oracle.score_query(oracle_idx, text, 10))
+        want = rows
+        for q in ([{"query_id": "q", "query_text": text, "k": 10}],
+                  pd.DataFrame({"query_id": ["q"], "query_text": [text],
+                                "k": [10]})):
+            rows, jobs = _jobs(
+                spark, lambda: engine.score_topk(spark, index, q).collect())
+            assert jobs == 0
+            assert rows == want
     q = spark.createDataFrame([("q", "error handling", 5)], Q_SCHEMA)
     res = engine.score_topk(spark, index, q)
     _, jobs = _jobs(spark, res.collect)
     assert jobs == 0
 
 
-def test_bool_topk_request_runs_three_jobs(spark, index, oracle_idx):
-    """collect_rows, the scan's shuffle stage and the kernel stage."""
+def test_bool_topk_request_runs_one_job(spark, index, oracle_idx):
+    """collect_rows; the scan and the kernel run on the driver."""
     q = spark.createDataFrame(
         [("b", "", "error handling", "", 0, 7)],
         "query_id string, must string, should string, must_not string, "
         "minimum_should_match int, k int")
     rows, jobs = _jobs(spark, lambda: engine.bool_topk(spark, index, q).collect())
-    assert jobs <= 3
+    assert jobs <= 1
     # a should-only bool with msm 1 ranks exactly like match
     assert _same(_hits(rows),
                  oracle.score_query(oracle_idx, "error handling", 7))
 
 
-def test_phrase_topk_request_runs_three_jobs(spark, index, corpus_pdf):
+def test_phrase_topk_request_runs_one_job(spark, index, corpus_pdf):
     text = corpus_pdf.text.iloc[3]
     phrase = " ".join(text.split()[:2])
     q = spark.createDataFrame([("p", phrase, 5)], Q_SCHEMA)
     rows, jobs = _jobs(spark,
                        lambda: engine.phrase_topk(spark, index, q).collect())
-    assert jobs <= 3
+    assert jobs <= 1
     assert rows  # the phrase is taken from a document
+
+
+def test_request_over_the_driver_limit_runs_on_spark(
+        spark, index, oracle_idx, monkeypatch):
+    """With no pruned input small enough for the driver, the same
+    request runs its scan and kernel as Spark jobs and answers the
+    same, collapse included."""
+    text = "error handling timeout"
+    local = _score(spark, index, text, 10)
+    local_collapsed = _score(spark, index, text, 6, collapse=True)
+    monkeypatch.setattr(engine, "LOCAL_MAX_BLOCKS", 0)
+    rows, jobs = _jobs(spark, lambda: _score(spark, index, text, 10))
+    assert jobs > 1
+    assert rows == local
+    assert _same(_hits(rows), oracle.score_query(oracle_idx, text, 10))
+    assert _score(spark, index, text, 6, collapse=True) == local_collapsed
 
 
 @pytest.fixture(scope="module")
@@ -200,13 +228,14 @@ def _live(mutated, text: str) -> list[tuple[int, float]]:
 
 
 def test_request_after_upsert_and_delete(spark, mutated):
-    """Tombstones are read on the driver: a request on an upserted and
-    deleted-from index still runs three jobs, and its answer is the
-    oracle's over the merged statistics with the hidden docs dropped."""
+    """Tombstones and both segments' blocks are read on the driver: a
+    request on an upserted and deleted-from index still runs one job,
+    and its answer is the oracle's over the merged statistics with the
+    hidden docs dropped."""
     d, idx, hidden, _, texts = mutated
     for text in texts:
         rows, jobs = _jobs(spark, lambda: _score(spark, d, text, 10))
-        assert jobs <= 3
+        assert jobs <= 1
         assert _same(_hits(rows), _live(mutated, text)[:10]), text
     for text in texts[:2]:
         assert oracle.score_query(idx, text, 1)[0][0] in hidden
@@ -282,7 +311,7 @@ def test_entry_points_after_upsert_and_delete(spark, mutated):
 
 def test_index_named_by_a_uri(spark, index, mutated, corpus_pdf):
     """An index named by a file:// URI answers as its local path does, in
-    as many jobs (at most 3 for a top-k request): stats.json, the
+    as many jobs (at most 1 for a top-k request): stats.json, the
     pointer files and the tombstones are read through the filesystem
     the URI names. Checked on an index without tombstones and on the
     two-segment tombstoned one."""
@@ -297,14 +326,14 @@ def test_index_named_by_a_uri(spark, index, mutated, corpus_pdf):
     for d in (index, mutated[0]):
         uri = Path(d).as_uri()
         for text in texts:
-            assert same(lambda i: _hits(_score(spark, i, text, 10))) <= 3
+            assert same(lambda i: _hits(_score(spark, i, text, 10))) <= 1
             q = spark.createDataFrame([("q", text)],
                                       "query_id string, query_text string")
             same(lambda i: engine.count_matches(spark, i, q).collect())
         for phrase in phrases:
             pq = spark.createDataFrame([("p", phrase, 10)], Q_SCHEMA)
             assert same(lambda i: _hits(
-                engine.phrase_topk(spark, i, pq).collect())) <= 3
+                engine.phrase_topk(spark, i, pq).collect())) <= 1
 
 
 # ------------------------------------------- rank identity of the merge

@@ -7,9 +7,15 @@ the call and return the merged answer as a LocalRelation, so their
 guards read the executed scatter plan from Spark's status store
 (the `executed_plans` fixture).
 
+A request whose pruned input is small runs its scatter on the driver
+(engine.LOCAL_MAX_BLOCKS): the Spark-path guards set that limit to 0,
+and the driver path has its own guard on the pyarrow read.
+
 Guarded invariants (EXPLAIN.md §2/§7/§9):
   - query scatter: term In-filter reaches the blocks parquet scan
     (PushedFilters) and the positions column never does (ReadSchema);
+    on the driver path, the pyarrow read filters on the query terms
+    and never projects the positions column;
   - highlight: the top-k doc_id set reaches the corpus scan;
   - filtered_topk: the attribute filter reaches the corpus scan and
     only id + filter columns are read (text never leaves the scan).
@@ -42,7 +48,14 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_score_topk_scan_pruning(spark, corpus_and_index, executed_plans):
+@pytest.fixture
+def spark_path(monkeypatch):
+    """Every scatter runs on Spark: no pruned input fits the driver."""
+    monkeypatch.setattr(engine, "LOCAL_MAX_BLOCKS", 0)
+
+
+def test_score_topk_scan_pruning(spark, corpus_and_index, executed_plans,
+                                 spark_path):
     _, d = corpus_and_index
     qdf = spark.createDataFrame(
         [("q", "error timeout", 5)],
@@ -104,7 +117,7 @@ def test_highlight_docid_pushdown(spark, corpus_and_index, tmp_path):
 
 
 def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path,
-                                  executed_plans):
+                                  executed_plans, spark_path):
     """Alias search keeps the term In-filter pushed into EVERY member
     index's blocks scan (and still prunes positions out of ReadSchema);
     the dictionary slices are read on the driver, query terms only."""
@@ -139,7 +152,7 @@ def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path,
             assert "poss" not in line, line
 
 
-def test_count_matches_scan_pruning(spark, corpus_and_index):
+def test_count_matches_scan_pruning(spark, corpus_and_index, spark_path):
     """_count (EXPLAIN.md §17) and the facets match set: the scatter
     reads ONLY the gaps stream + keys — tfs/dls/poss/max_partial never
     reach the blocks scan, and the term In-filter is pushed down."""
@@ -156,6 +169,44 @@ def test_count_matches_scan_pruning(spark, corpus_and_index):
         for line in scans:
             for col in ("tfs", "dls", "poss", "max_partial"):
                 assert col not in line, (entry, col, line)
+
+
+def test_driver_scan_pruning(spark, corpus_and_index, monkeypatch):
+    """The driver path's pyarrow read (IndexReader.block_table): the
+    SCORE_COLS scan of score_topk and the COUNT_COLS scans of _count
+    and the facets match set filter on the query terms and never read
+    the position stream; the count scans read the gaps stream alone."""
+    from data_prepper_spark.index.reader import (
+        COUNT_COLS, SCORE_COLS, IndexReader,
+    )
+
+    _, d = corpus_and_index
+    reads = []
+    block_table = IndexReader.block_table
+
+    def spy(self, terms, cols):
+        t = block_table(self, terms, cols)
+        reads.append((list(terms), tuple(cols), t.column_names,
+                      set(t.column("term").to_pylist())))
+        return t
+
+    monkeypatch.setattr(IndexReader, "block_table", spy)
+    qdf = spark.createDataFrame(
+        [("q", "error timeout", 5)],
+        "query_id string, query_text string, k int",
+    )
+    engine.score_topk(spark, d, qdf).collect()
+    engine.count_matches(spark, d, qdf.drop("k")).collect()
+    facets.match_docs(spark, d, qdf.drop("k")).collect()
+    assert [cols for _, cols, _, _ in reads] == [
+        SCORE_COLS, COUNT_COLS, COUNT_COLS]
+    for terms, cols, names, seen in reads:
+        assert terms and set(terms) <= {"error", "timeout"}
+        assert seen and seen <= set(terms)
+        assert names == list(cols) and "poss" not in names
+    for _, _, names, _ in reads[1:]:
+        for col in ("tfs", "dls", "poss", "max_partial"):
+            assert col not in names
 
 
 def test_knn_prefilter_pushdown(spark, tmp_path):

@@ -3,6 +3,7 @@ rrf_fuse against a pure-Python oracle over random rankings."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -98,9 +99,14 @@ def _rankings(draw):
 @given(_rankings())
 def test_rrf_fuzz_matches_python(spark, case):
     rankings, weights, rc, k = case
+    # from pandas: Arrow makes each ranking a LocalRelation, while a
+    # list of tuples is a parallelized RDD whose every slice costs a
+    # Python worker round trip when the fused plan runs
     dfs = [
         spark.createDataFrame(
-            [("q", doc, rk) for doc, rk in lst],
+            pd.DataFrame({"query_id": "q",
+                          "doc_id": [doc for doc, _ in lst],
+                          "rank": [rk for _, rk in lst]}),
             "query_id string, doc_id long, rank int",
         )
         for lst in rankings
