@@ -232,10 +232,11 @@ def gather(
 
     Driver-literal queries (the rows prep collected) merge on the
     driver: the per-shard top-ks (at most k x shards rows per query)
-    are collected, ranked in pandas and returned as a LocalRelation,
-    which the caller collects with no job; a driver-scored scatter is a
-    LocalRelation too, so the collect here runs none either. A queries
-    DataFrame (a distributed batch) merges in a Window."""
+    are read, ranked in pandas and returned as a LocalRelation, which
+    the caller collects with no job; a driver-scored scatter is a
+    LocalRelation too, read with collect() and no job (_is_local), and
+    a Spark-scored one with toPandas(). A queries DataFrame (a
+    distributed batch) merges in a Window."""
     schema = ", ".join(f"{c} {_TYPES[c]}" for c in cols)
     spark = SparkSession.active()
     # limit(0) plans as an empty LocalRelation: collecting it runs no job
@@ -256,7 +257,8 @@ def gather(
             .select(*cols)
         )
     ks = {q["query_id"]: int(q["k"]) for q in queries}
-    pdf = pd.DataFrame(per_shard.collect(), columns=per_shard.columns) \
+    pdf = (pd.DataFrame(per_shard.collect(), columns=per_shard.columns)
+           if _is_local(per_shard) else per_shard.toPandas()) \
         .sort_values(["query_id", "score", "doc_id", *tie],
                      ascending=[True, False, True, *[True] * len(tie)],
                      kind="stable")
@@ -265,6 +267,14 @@ def gather(
     pdf["rank"] = pdf.groupby("query_id").cumcount() + 1
     pdf = pdf[pdf["rank"] <= pdf["query_id"].map(ks)]
     return spark.createDataFrame(pdf[list(cols)], schema) if len(pdf) else empty
+
+
+def _is_local(df: DataFrame) -> bool:
+    """Whether df optimizes to a LocalRelation (a driver-scored scatter,
+    collapse's conv column folded in): collect() reads it with no job,
+    while toPandas() runs one. Spark-scored rows are read with Arrow."""
+    return df._jdf.queryExecution().optimizedPlan().getClass() \
+        .getSimpleName() == "LocalRelation"
 
 
 # ------------------------------------------------------- kernel helpers
@@ -531,6 +541,15 @@ def score_topk(
     rows = prep.collect_rows(queries,
                              limit=prep.PREP_DISTRIBUTED_THRESHOLD + 1)
     if len(rows) > prep.PREP_DISTRIBUTED_THRESHOLD:
+        if not isinstance(queries, DataFrame):
+            # driver rows this many take the distributed path as a frame
+            cast = {"query_id": str, "query_text": str, "k": int,
+                    "after_score": float, "after_doc": int}
+            queries = spark.createDataFrame(
+                [tuple(None if q.get(c) is None else t(q[c])
+                       for c, t in cast.items()) for q in rows],
+                "query_id string, query_text string, k int, "
+                "after_score double, after_doc long")
         per_term = prep.qmap_df_dist(spark, queries, "score", r.mode)
     else:
         queries = [{"after_score": None, "after_doc": None, **q}

@@ -28,7 +28,7 @@ from data_prepper_spark.index import build as ib
 from data_prepper_spark.index import tombstones
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.oracle import bm25 as oracle
-from data_prepper_spark.query import engine
+from data_prepper_spark.query import engine, prep
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
 from data_prepper_spark.query.explain import explain_hits
 from data_prepper_spark.query.facets import match_docs
@@ -183,6 +183,51 @@ def test_request_over_the_driver_limit_runs_on_spark(
     assert rows == local
     assert _same(_hits(rows), oracle.score_query(oracle_idx, text, 10))
     assert _score(spark, index, text, 6, collapse=True) == local_collapsed
+
+
+def test_driver_rows_over_the_batch_threshold_run_distributed(
+        spark, index, corpus_pdf, monkeypatch):
+    """Driver rows above prep.PREP_DISTRIBUTED_THRESHOLD take the
+    distributed batch path as a query frame and answer like the same
+    rows as a DataFrame and like the driver path, search_after cursor
+    included; so does filtered_topk_multi's unfiltered group, which
+    hands score_topk its rows."""
+    rows = [{"query_id": f"q{i}", "query_text": t, "k": 5,
+             "after_score": None, "after_doc": None}
+            for i, t in enumerate(["error handling timeout", "retry deploy",
+                                   "database connection"])]
+    first = _hits(engine.score_topk(spark, index, rows[:1]).collect())
+    rows[0]["after_doc"], rows[0]["after_score"] = first[1]
+
+    def ranked(res):
+        return sorted(res.collect(), key=lambda r: (r["query_id"], r["rank"]))
+
+    small = ranked(engine.score_topk(spark, index, rows))
+    monkeypatch.setattr(prep, "PREP_DISTRIBUTED_THRESHOLD", len(rows) - 1)
+    want = ranked(engine.score_topk(spark, index, spark.createDataFrame(
+        pd.DataFrame(rows),
+        Q_SCHEMA + ", after_score double, after_doc long")))
+    assert want == small
+    for q in (rows, pd.DataFrame(rows)):
+        rows_got, jobs = _jobs(
+            spark, lambda: ranked(engine.score_topk(spark, index, q)))
+        assert jobs > 1  # the distributed prep and Window merge ran
+        assert rows_got == want
+
+    docs = spark.createDataFrame(corpus_pdf.assign(
+        doc_id=_doc_ids(corpus_pdf))[["doc_id", "conv_id", "role"]])
+    fq = spark.createDataFrame(
+        [(q["query_id"], q["query_text"], 5, None) for q in rows]
+        + [("f", "error", 5, "role = 'user'")],
+        Q_SCHEMA + ", filter string")
+    multi = ranked(engine.filtered_topk_multi(spark, index, fq, docs))
+    monkeypatch.undo()
+    assert [r for r in multi if r["query_id"] != "f"] == ranked(
+        engine.score_topk(spark, index, [
+            dict(q, after_score=None, after_doc=None) for q in rows]))
+    assert [r for r in multi if r["query_id"] == "f"] == ranked(
+        engine.filtered_topk(spark, index, fq.filter("query_id = 'f'"),
+                             docs, "role = 'user'"))
 
 
 @pytest.fixture(scope="module")
