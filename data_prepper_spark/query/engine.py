@@ -15,11 +15,12 @@ kernel -> gather:
       |> filter term IN known query terms  <- pushed to the parquet
       |                                       scan: row-group pruning
       |                                       via the term sort order
-      |> spread_by_shard |> groupBy(shard).applyInPandas(kernel)
+      |> spread_by_shard |> groupBy(shard).applyInArrow(kernel)
       |                     (.cogroup(right) for a filter context)
-    kernel, per shard (numpy)      the qmap (term -> interested queries)
-      |                            and the GLOBAL df ride the kernel as
-      |                            closure constants; idf (_idf), exact
+    kernel, per shard (numpy)      one input on every site: the shard's
+      |                            blocks as a pyarrow Table, the qmap
+      |                            {term: [entry dict]} and the GLOBAL
+      |                            df {term: df}; idf (_idf), exact
       |                            per-shard top-k (_Hits.topk)
     gather                         global top-k per query: the small
                                    per-shard top-ks collected and ranked
@@ -27,27 +28,27 @@ kernel -> gather:
                                    asc), returned as a LocalRelation
 
 Every kernel reads its blocks one way: `wand.block_runs` cuts the
-shard's rows into per-(term, seg) runs and `wand.TermCursor` decodes a
-block once per kernel call, with the streams the scan projected and
-the segment's tombstoned docs dropped. The top-k kernels score the
-cursors directly; `_ShardTerms` serves the others (bool, phrase, span,
-filtered, explain, count and facets) from the same cursors.
+shard's table into per-(term, seg) runs with one Arrow sort, and
+`wand.TermCursor` decodes a block once per kernel call, with the
+streams the scan projected and the segment's tombstoned docs dropped.
+The top-k kernels score the cursors directly; `_ShardTerms` serves
+the others (bool, phrase, span, filtered, explain, count and facets)
+from the same cursors.
 
 `scatter` has two execution sites. A driver-literal request whose
 pruned input is small (at most LOCAL_MAX_BLOCKS blocks rows, estimated
 from the dictionary slice it already holds) runs on the driver and no
 Spark job: the pruned blocks are read with pyarrow
-(`IndexReader.block_table`), the same kernel closure runs once per
-shard in-process, and the rows become a LocalRelation. Every other
-driver-literal request is one pruned scan, one exchange and the kernel
-on Spark, all run inside the call; so is a filter context, whose
-corpus side is cogrouped by shard. Batches above
-prep.PREP_DISTRIBUTED_THRESHOLD shuffle-join the qmap and dictionary on
-term and rank in a Window instead. Either way the kernel closure is the
-same, so the scores are bit-identical. No stage materializes a full
-per-term posting list. idf uses the GLOBAL df (summed across shards),
-so scores are identical to a single-node oracle — the
-dfs_query_then_fetch contract.
+(`IndexReader.block_table`), sliced per shard for the kernel, and the
+rows become a LocalRelation. Every other driver-literal request is one
+pruned scan, one exchange and the kernel on Spark, all run inside the
+call; so is a filter context, whose corpus side is cogrouped by shard.
+Batches above prep.PREP_DISTRIBUTED_THRESHOLD shuffle-join the qmap
+and dictionary on term and rank in a Window instead. Either way the
+kernel and its input are the same, so the scores are bit-identical.
+No stage materializes a full per-term posting list. idf uses the
+GLOBAL df (summed across shards), so scores are identical to a
+single-node oracle — the dfs_query_then_fetch contract.
 """
 
 from __future__ import annotations
@@ -57,8 +58,11 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 from data_prepper_spark.index import codec
@@ -109,20 +113,25 @@ def scatter(
     - reader: one index, or {field: reader} whose pruned scans (tagged
       with a `field` column) union before the one exchange;
     - per_term: query prep, query/prep.py (term -> entries with struct
-      `fields`). The entries and the terms' global df ride the kernel
-      as closure constants; the known terms are pushed as `term IN
-      (...)` into the blocks scan. A DataFrame is a distributed qmap
-      instead (batches above prep.PREP_DISTRIBUTED_THRESHOLD): it and
-      the dictionary are shuffle-joined on term;
+      `fields`); the known terms are pushed as `term IN (...)` into the
+      blocks scan. A DataFrame is a distributed qmap instead (batches
+      above prep.PREP_DISTRIBUTED_THRESHOLD, one reader): it and the
+      dictionary are shuffle-joined on term;
     - kernel / right: factories, called only when there is something to
       scan; right's rows are cogrouped with the blocks by shard;
     - dictionary: True gives each reader's global df, False none, a
       {term: df} dict replaces it (alias search's union statistics).
 
+    Every site calls the kernel with one input: `run(table, entries,
+    dfs[, right])`, one shard's blocks rows as a pyarrow Table (plus
+    `field` when tagged), the query map {term: [entry dict]}, the
+    global df {term: df} ({field: {term: df}} when tagged, None with no
+    dictionary) and the shard's cogrouped rows. It returns plain
+    columns, which only this function makes rows of `schema`.
+
     A driver qmap with no `right` whose pruned input is estimated at
-    most LOCAL_MAX_BLOCKS blocks rows runs on the driver instead: the
-    same scan read with pyarrow, the same kernel closure called once
-    per shard, the rows returned as a LocalRelation.
+    most LOCAL_MAX_BLOCKS blocks rows runs on the driver: the same scan
+    read with pyarrow, the rows returned as a LocalRelation.
 
     Returns None when no index has blocks or no query term is known."""
     readers = reader if isinstance(reader, dict) else {None: reader}
@@ -130,15 +139,31 @@ def scatter(
     distributed = isinstance(per_term, DataFrame)
     if not readers or not (distributed or per_term):
         return None
+    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+
+    def rows(columns: dict) -> pa.Table:
+        return pa.Table.from_pydict(columns, schema=arrow_schema)
+
     if distributed:
-        parts = []
-        for tag, r in readers.items():
-            part = r.blocks.select(*cols).join(per_term, "term")
-            if dictionary:
-                part = part.join(r.dictionary, "term")
-            parts.append(_tagged(part, tag))
-        return spread_by_shard(reduce(DataFrame.unionByName, parts)) \
-            .groupBy("shard").applyInPandas(kernel(), schema=schema)
+        (r,) = readers.values()
+        run = kernel()
+
+        def joined(table):
+            # the first block row of each term carries its queries and df
+            first = table.append_column(
+                "_row", pa.array(np.arange(table.num_rows))) \
+                .group_by("term", use_threads=False) \
+                .aggregate([("_row", "min")]).column("_row_min")
+            one = table.take(first).select(["term", "queries", "df"]) \
+                .to_pydict()
+            return rows(run(table.drop_columns(["queries", "df"]),
+                            dict(zip(one["term"], one["queries"])),
+                            dict(zip(one["term"], one["df"]))))
+
+        return spread_by_shard(
+            r.blocks.select(*cols).join(per_term, "term")
+            .join(r.dictionary.select("term", "df"), "term")) \
+            .groupBy("shard").applyInArrow(joined, schema=schema)
 
     dfs, terms = {}, {}
     for tag, r in readers.items():
@@ -150,24 +175,35 @@ def scatter(
             terms[tag] = sorted(dfs.get(tag, per_term))
     if not terms:
         return None
-    run = _with_constants(kernel(), per_term, fields, dfs or None,
-                          cogroup=right is not None)
+    run = kernel()
+    names = [f.split(":", 1)[0] for f in fields.split(",")]
+    entries = {t: [dict(zip(names, e)) for e in es]
+               for t, es in per_term.items()}
+    kdfs = (dfs[None] if None in dfs else dfs) or None
     # the count scatters take no dictionary: their estimate reads one
     local = right is None and sum(
         readers[tag].block_estimate(
             dfs[tag] if tag in dfs else readers[tag].df_slice(ts))
         for tag, ts in terms.items()) <= LOCAL_MAX_BLOCKS
+
+    def per_shard(table):
+        return rows(run(table, entries, kdfs))
+
     if local:
         return _scatter_local(
             {tag: readers[tag].block_table(ts, cols)
-             for tag, ts in terms.items()}, run, schema)
+             for tag, ts in terms.items()}, per_shard, schema)
     grouped = spread_by_shard(reduce(DataFrame.unionByName, [
         _tagged(readers[tag].blocks.select(*cols)
                 .filter(F.col("term").isin(ts)), tag)
         for tag, ts in terms.items()])).groupBy("shard")
-    if right is not None:
-        grouped = grouped.cogroup(spread_by_shard(right()).groupBy("shard"))
-    return grouped.applyInPandas(run, schema=schema)
+    if right is None:
+        return grouped.applyInArrow(per_shard, schema=schema)
+
+    def per_shard_cogroup(table, right_rows):
+        return rows(run(table, entries, kdfs, right_rows))
+    return grouped.cogroup(spread_by_shard(right()).groupBy("shard")) \
+        .applyInArrow(per_shard_cogroup, schema=schema)
 
 
 def _tagged(part: DataFrame, tag: str | None) -> DataFrame:
@@ -176,48 +212,22 @@ def _tagged(part: DataFrame, tag: str | None) -> DataFrame:
 
 def _scatter_local(tables: dict, run: Callable, schema: str) -> DataFrame:
     """The driver execution site of `scatter`: the pruned blocks rows
-    ({tag: pyarrow Table}) handed to the kernel closure once per shard,
-    in shard order, and its rows returned as a LocalRelation, which
+    ({tag: pyarrow Table}) sliced per shard and handed to `run` in
+    shard order; its rows are returned as a LocalRelation, which
     collects with no job."""
+    table = pa.concat_tables([
+        t if tag is None else t.append_column("field", pa.repeat(tag, len(t)))
+        for tag, t in tables.items()])
+    shard = table.column("shard")
+    out = [run(table.filter(pc.equal(shard, s)))
+           for s in sorted(set(shard.to_pylist()))]
     spark = SparkSession.active()
-    struct = _parse_datatype_string(schema)
-    pdf = pd.concat([t.to_pandas() if tag is None else
-                     t.to_pandas().assign(field=tag)
-                     for tag, t in tables.items()], ignore_index=True)
-    out = [run((shard,), rows.reset_index(drop=True))
-           for shard, rows in pdf.groupby("shard", sort=True)]
-    out = [o for o in out if len(o)]
-    if not out:
+    if not sum(map(len, out)):
         # limit(0) plans as an empty LocalRelation: no job to collect
-        return spark.createDataFrame([], struct).limit(0)
-    return spark.createDataFrame(
-        pd.concat(out, ignore_index=True)[struct.names], struct)
-
-
-def _with_constants(run: Callable, per_term: dict[str, list[tuple]],
-                    fields: str, dfs: dict | None, cogroup: bool) -> Callable:
-    """`run` fed the `queries` and `df` columns the distributed path
-    joins in, from closure constants: kernels read the same rows."""
-    names = [f.split(":", 1)[0] for f in fields.split(",")]
-    entries = {t: [dict(zip(names, e)) for e in es]
-               for t, es in per_term.items()}
-
-    def add(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.assign(queries=[entries[t] for t in pdf["term"]])
-        if dfs is not None:
-            tags = pdf["field"] if "field" in pdf else [None] * len(pdf)
-            pdf["df"] = [dfs[f][t] for f, t in zip(tags, pdf["term"])]
-        return pdf
-
-    if cogroup:
-        def run_cogroup(key: tuple, left: pd.DataFrame,
-                        right: pd.DataFrame) -> pd.DataFrame:
-            return run(key, add(left), right)
-        return run_cogroup
-
-    def run_grouped(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return run(key, add(pdf))
-    return run_grouped
+        return spark.createDataFrame([], schema).limit(0)
+    # one chunk: createDataFrame drops the rows after an empty batch
+    return spark.createDataFrame(pa.concat_tables(out).combine_chunks(),
+                                 schema)
 
 
 def gather(
@@ -232,11 +242,9 @@ def gather(
 
     Driver-literal queries (the rows prep collected) merge on the
     driver: the per-shard top-ks (at most k x shards rows per query)
-    are read, ranked in pandas and returned as a LocalRelation, which
-    the caller collects with no job; a driver-scored scatter is a
-    LocalRelation too, read with collect() and no job (_is_local), and
-    a Spark-scored one with toPandas(). A queries DataFrame (a
-    distributed batch) merges in a Window."""
+    are read (`_read`), ranked in pandas and returned as a
+    LocalRelation, which the caller collects with no job. A queries
+    DataFrame (a distributed batch) merges in a Window."""
     schema = ", ".join(f"{c} {_TYPES[c]}" for c in cols)
     spark = SparkSession.active()
     # limit(0) plans as an empty LocalRelation: collecting it runs no job
@@ -257,11 +265,9 @@ def gather(
             .select(*cols)
         )
     ks = {q["query_id"]: int(q["k"]) for q in queries}
-    pdf = (pd.DataFrame(per_shard.collect(), columns=per_shard.columns)
-           if _is_local(per_shard) else per_shard.toPandas()) \
-        .sort_values(["query_id", "score", "doc_id", *tie],
-                     ascending=[True, False, True, *[True] * len(tie)],
-                     kind="stable")
+    pdf = _read(per_shard).sort_values(
+        ["query_id", "score", "doc_id", *tie],
+        ascending=[True, False, True, *[True] * len(tie)], kind="stable")
     if best_of:
         pdf = pdf.drop_duplicates(["query_id", best_of])
     pdf["rank"] = pdf.groupby("query_id").cumcount() + 1
@@ -269,12 +275,15 @@ def gather(
     return spark.createDataFrame(pdf[list(cols)], schema) if len(pdf) else empty
 
 
-def _is_local(df: DataFrame) -> bool:
-    """Whether df optimizes to a LocalRelation (a driver-scored scatter,
-    collapse's conv column folded in): collect() reads it with no job,
-    while toPandas() runs one. Spark-scored rows are read with Arrow."""
-    return df._jdf.queryExecution().optimizedPlan().getClass() \
-        .getSimpleName() == "LocalRelation"
+def _read(per_shard: DataFrame) -> pd.DataFrame:
+    """A scatter's rows on the driver. A driver-scored scatter optimizes
+    to a LocalRelation (collapse's conv column folded in), which
+    collect() reads with no job while toPandas() runs one; Spark-scored
+    rows are read with Arrow."""
+    if per_shard._jdf.queryExecution().optimizedPlan().getClass() \
+            .getSimpleName() == "LocalRelation":
+        return pd.DataFrame(per_shard.collect(), columns=per_shard.columns)
+    return per_shard.toPandas()
 
 
 # ------------------------------------------------------- kernel helpers
@@ -300,27 +309,26 @@ class _Hits:
         keep = wand_mod.topk_order(docs, scores, k)
         self.add(qid, docs[keep], scores[keep])
 
-    def frame(self) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"query_id": self.q, "doc_id": self.d, "score": self.s})
+    def columns(self) -> dict:
+        return {"query_id": self.q, "doc_id": self.d, "score": self.s}
 
 
 class _ShardTerms:
     """One shard's posting blocks for the query terms as per-term lists
     of segment cursors (`wand.block_runs`), with each term's global df
-    and idf and its query entries. Every cursor shares one decode memo,
-    so a block decodes once per kernel call, whichever query or path
-    reads it; the streams decoded are the ones the scan projected."""
+    and idf and its query entries (the `scatter` kernel input). Every
+    cursor shares one decode memo, so a block decodes once per kernel
+    call, whichever query or path reads it; the streams decoded are the
+    ones the scan projected."""
 
-    def __init__(self, pdf: pd.DataFrame, n_docs: int = 0, tomb=None):
+    def __init__(self, table: pa.Table, entries: dict, dfs: dict | None = None,
+                 n_docs: int = 0, tomb=None):
         self.memo: dict = {}
         self.cursors, self.df, self.idf, self.entries = {}, {}, {}, {}
-        dfs = pdf["df"].to_numpy() if "df" in pdf else None
-        queries = pdf["queries"].to_numpy()
-        for (term,), (row, runs) in wand_mod.block_runs(pdf).items():
-            self.entries[term] = queries[row]
+        for (term,), runs in wand_mod.block_runs(table).items():
+            self.entries[term] = entries[term]
             if dfs is not None:
-                self.df[term] = int(dfs[row])
+                self.df[term] = int(dfs[term])
                 self.idf[term] = _idf(n_docs, self.df[term])
             self.cursors[term] = [
                 wand_mod.TermCursor(
@@ -401,12 +409,12 @@ class _ShardTerms:
         return scores
 
 
-def _match_sets(pdf: pd.DataFrame, tomb=None):
+def _match_sets(table: pa.Table, entries: dict, tomb=None):
     """(query_id, docs) per query of one shard's kernel call: the live
     docs holding any of the query's terms (match / bool-should msm=1
     semantics), over the gaps stream alone when that is all the scan
     read. Shared by `_count_kernel` and `facets._match_kernel`."""
-    shard = _ShardTerms(pdf, tomb=tomb)
+    shard = _ShardTerms(table, entries, tomb=tomb)
     term_docs = {t: shard.runs(t)["docs"] for t in shard.cursors}
     terms_of: dict[str, list[str]] = {}
     for term, qs in shard.entries.items():
@@ -424,26 +432,25 @@ def _shard_kernel(
     avgdl: float, n_docs: int, algo: str, ub_scale: float = 1.0,
     tomb=None, collapse_stride: int | None = None,
 ):
-    """One call per SHARD: block rows arrive ONCE per term (each row
-    carries the list of (query_id, k) needing that term — no per-query
-    row replication through the shuffle). Per-term block data is
+    """One call per SHARD: block rows arrive ONCE per term, its entries
+    (query_id, k, ...) and global df as dicts — no per-query row
+    replication through the shuffle. Per-term block data is
     materialized once, and each block decodes at most once per call:
     the decode memo is a plain dict that lives for one call, so nothing
     decoded under one index state can serve another."""
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(table: pa.Table, entries: dict, dfs: dict) -> dict:
         cache: dict = {}
         # one cursor per (term, seg): incremental builds append a new
         # SEGMENT of doc-sorted blocks per term (doc sets disjoint across
         # segments), mirroring Lucene's per-segment posting lists
-        runs = wand_mod.block_runs(pdf, ub_scale=ub_scale)
-        dfs, entries = pdf["df"].to_numpy(), pdf["queries"].to_numpy()
+        runs = wand_mod.block_runs(table, ub_scale=ub_scale)
         idf: dict[str, float] = {}
         # qid -> [k, terms, after-cursor]
         queries: dict[str, list] = {}
-        for (term,), (row, _) in runs.items():
-            idf[term] = _idf(n_docs, int(dfs[row]))
-            for q in entries[row]:
+        for (term,) in runs:
+            idf[term] = _idf(n_docs, int(dfs[term]))
+            for q in entries[term]:
                 a_s = q["after_score"]
                 after = (float(a_s), int(q["after_doc"])) if pd.notna(a_s) \
                     else None
@@ -461,7 +468,7 @@ def _shard_kernel(
                     **r,
                 )
                 for (t, b) in terms
-                for r in runs[(t,)][1]
+                for r in runs[(t,)]
             ]
             if collapse_stride:
                 # collapse scores every candidate (exhaustive path);
@@ -482,7 +489,7 @@ def _shard_kernel(
             else:
                 topk = wand_mod.exhaustive_topk(cursors, k, after)
             out.add(qid, [d for d, _ in topk], [s for _, s in topk])
-        return out.frame()
+        return out.columns()
 
     return run
 
@@ -599,19 +606,17 @@ def _count_kernel(tomb=None):
     """Per-shard exact match counting: the live docs of each query's
     `_match_sets`, counted. Only the gaps stream reaches the scan."""
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        sets = dict(_match_sets(pdf, tomb))
-        return pd.DataFrame(
-            {"query_id": list(sets),
-             "total_hits": np.array([len(d) for d in sets.values()],
-                                    dtype=np.int64)}
-        )
+    def run(table: pa.Table, entries: dict, dfs: None) -> dict:
+        sets = dict(_match_sets(table, entries, tomb))
+        return {"query_id": list(sets),
+                "total_hits": [len(d) for d in sets.values()]}
 
     return run
 
 
 def count_matches(
-    spark: SparkSession, index_dir: str, queries: DataFrame,
+    spark: SparkSession, index_dir: str,
+    queries: DataFrame | pd.DataFrame | list[dict],
 ) -> DataFrame:
     """OpenSearch `_count` / `track_total_hits: true`: the EXACT number
     of live documents matching at least one analyzed query term (match-
@@ -623,29 +628,25 @@ def count_matches(
     dictionary join (no idf), ReadSchema is (term, gaps, first_doc)
     plus keys, so the count costs one pruned scan of the SMALLEST
     posting stream. A doc lives in exactly one shard, so the global
-    total is a plain sum of per-shard distinct counts; absent-term
-    queries zero-fill via the left join."""
+    total is a plain sum of per-shard distinct counts, taken on the
+    driver as `gather` merges; a query no shard counted gets 0. The
+    answer is a LocalRelation."""
     r = IndexReader(spark, index_dir)
-    per_term = prep.count_entries(
-        prep.collect_rows(queries, "query_id", "query_text"), r.mode
-    )
-    base = queries.select("query_id").distinct()
+    rows = prep.collect_rows(queries, "query_id", "query_text")
+    schema = "query_id string, total_hits long"
     per_shard = scatter(
-        r, per_term, prep.COUNT_FIELDS, lambda: _count_kernel(r.tomb),
-        "query_id string, total_hits long", cols=COUNT_COLS,
+        r, prep.count_entries(rows, r.mode), prep.COUNT_FIELDS,
+        lambda: _count_kernel(r.tomb), schema, cols=COUNT_COLS,
         dictionary=False,
     )
-    if per_shard is None:
-        return base.select(
-            "query_id", F.lit(0).cast("long").alias("total_hits")
-        )
-    counts = per_shard.groupBy("query_id").agg(
-        F.sum("total_hits").alias("total_hits")
-    )
-    return base.join(counts, "query_id", "left").select(
-        "query_id",
-        F.coalesce("total_hits", F.lit(0)).cast("long").alias("total_hits"),
-    )
+    totals = dict.fromkeys((q["query_id"] for q in rows), 0)
+    if per_shard is not None:
+        for qid, n in _read(per_shard).itertuples(index=False):
+            totals[qid] += int(n)
+    if not totals:
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pd.DataFrame(
+        list(totals.items()), columns=["query_id", "total_hits"]), schema)
 
 
 # ---------------------------------------------------------- match_phrase
@@ -679,8 +680,8 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
     two offsets under slop (Lucene special-cases repeats); slop=0 is
     exact and unchanged."""
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, n_docs, tomb)
+    def run(table: pa.Table, entries: dict, dfs: dict) -> dict:
+        shard = _ShardTerms(table, entries, dfs, n_docs, tomb)
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:
@@ -742,7 +743,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
             out.topk(qid, matched,
                      shard.bm25(matched, terms_here, decoded, avgdl),
                      ent["k"])
-        return out.frame()
+        return out.columns()
 
     return run
 
@@ -780,7 +781,7 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
 
     Shards are doc-disjoint, so clause logic is complete shard-locally:
     candidates = ∩ must-term postings (every must term must appear in
-    this shard's pdf — tracked via n_must — else no shard doc can match),
+    this shard's blocks — tracked via n_must — else no shard doc can match),
     minus ∪ must_not postings, filtered to docs holding >= msm distinct
     should terms. Scoring is the standard BM25 sum over the distinct
     (must ∪ should) terms PRESENT per doc, sorted-term accumulation
@@ -789,8 +790,8 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
     empty = {"docs": np.empty(0, np.int64), "tfs": np.empty(0, np.int64),
              "dls": np.empty(0, np.int64)}
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, n_docs, tomb)
+    def run(table: pa.Table, entries: dict, dfs: dict) -> dict:
+        shard = _ShardTerms(table, entries, dfs, n_docs, tomb)
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:
@@ -899,7 +900,7 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
                 scores = np.where(demote, scores * ent["neg_boost"],
                                   scores)
             out.topk(qid, cand, scores, ent["k"])
-        return out.frame()
+        return out.columns()
 
     return run
 
@@ -1005,7 +1006,7 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
     top-k heap and contributes no score; idf/avgdl stay full-corpus,
     exactly OpenSearch's filter-context semantics).
 
-    Cogroup kernel: `left` = this shard's posting blocks (one row per
+    Cogroup kernel: `table` = this shard's posting blocks (one row per
     (term, seg, block)), `right` = this shard's ALLOWED doc_ids (the
     corpus rows passing the filter, shuffled here on the same
     shard key the index build used). The allowed set acts as the
@@ -1018,15 +1019,17 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
     boost_mode BEFORE the top-k cut — OpenSearch function_score
     semantics (the function changes ranking, so it must precede it)."""
 
-    def run(key: tuple, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def run(table: pa.Table, entries: dict, dfs: dict,
+            right: pa.Table) -> dict:
         out = _Hits()
-        if not len(left) or not len(right):
-            return out.frame()
+        if not table.num_rows or not right.num_rows:
+            return out.columns()
         allowed, first = np.unique(
-            right["doc_id"].to_numpy(np.int64), return_index=True)
+            right.column("doc_id").to_numpy().astype(np.int64),
+            return_index=True)
         if boost_mode is not None:
-            fac = right["factor"].to_numpy(np.float64)[first]
-        shard = _ShardTerms(left, n_docs, tomb)
+            fac = right.column("factor").to_numpy().astype(np.float64)[first]
+        shard = _ShardTerms(table, entries, dfs, n_docs, tomb)
         decoded = {t: shard.runs(t, allowed) for t in shard.cursors}
         queries: dict[str, list] = {}
         for term, qs in shard.entries.items():
@@ -1056,7 +1059,7 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None,
                 else:  # replace — query matches, function alone ranks
                     scores = cf
             out.topk(qid, cand, scores, k)
-        return out.frame()
+        return out.columns()
 
     return run
 

@@ -1,8 +1,8 @@
 """Explicit-width exchange for Python-kernel inputs.
 
-Every query kernel is `groupBy("shard").applyInPandas(...)` over the
-posting-blocks scan, and so are the index build's SPIMI kernel and
-compaction's merge kernel (index/build.py). That inserts an
+Every query kernel on Spark is `groupBy("shard").applyInArrow(...)`
+over the posting-blocks scan, and so (in pandas) are the index build's
+SPIMI kernel and compaction's merge kernel (index/build.py). That inserts an
 ENSURE_REQUIREMENTS exchange whose width AQE sizes by SHUFFLE BYTES —
 and a query's pruned block set is tiny (a few MB even over a huge
 index, that's the point of the term In-filter), so AQE coalesces the
@@ -15,7 +15,7 @@ of ms of numpy work per shard.
 `repartition(N, "shard")`: HashPartitioning(shard, N) already satisfies
 the kernel's ClusteredDistribution, so no second exchange appears, and
 AQE never coalesces a repartition with an explicit partition count.
-Groups (shards) stay atomic — exactly what applyInPandas needs — and
+Groups (shards) stay atomic — exactly what a grouped kernel needs — and
 the kernel keeps shard-level parallelism no matter how small the
 shuffle is. Measured: sf0.01 wand 6.2 s -> 2.5 s on local[32] (the
 inverse-scaling anomaly where a 10x smaller corpus answered 2.3x

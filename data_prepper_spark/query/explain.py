@@ -22,7 +22,6 @@ In-filter pushdown. Cost scales with the target set, not the corpus.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from data_prepper_spark.index.reader import MATCH_COLS, IndexReader
@@ -36,11 +35,11 @@ _OUT = (
 
 
 def _explain_kernel(avgdl: float, n_docs: int, tomb=None):
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(table, entries: dict, dfs: dict) -> dict:
         out = {c: [] for c in
                ("query_id", "doc_id", "term", "tf", "dl", "df",
                 "idf", "tf_norm", "boost", "term_score")}
-        shard = engine._ShardTerms(pdf, n_docs, tomb)
+        shard = engine._ShardTerms(table, entries, dfs, n_docs, tomb)
         for term, qs in shard.entries.items():
             targets_all = np.unique(np.concatenate(
                 [np.asarray(q["targets"], dtype=np.int64) for q in qs]
@@ -70,7 +69,7 @@ def _explain_kernel(avgdl: float, n_docs: int, tomb=None):
                     out["tf_norm"].append(tfn)
                     out["boost"].append(boost)
                     out["term_score"].append(boost * idf * tfn)
-        return pd.DataFrame(out)
+        return out
 
     return run
 

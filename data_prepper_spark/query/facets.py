@@ -24,7 +24,6 @@ join with zero corpus shuffle. The facet agg itself is two-phase
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,12 +39,12 @@ def _match_kernel(tomb=None):
     `engine._match_sets` (OpenSearch `match` / bool-should msm=1 match
     set)."""
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(table, entries: dict, dfs: None) -> dict:
         out_q, out_d = [], []
-        for qid, docs in _match_sets(pdf, tomb):
+        for qid, docs in _match_sets(table, entries, tomb):
             out_q += [qid] * len(docs)
             out_d += list(docs)
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d})
+        return {"query_id": out_q, "doc_id": out_d}
 
     return run
 

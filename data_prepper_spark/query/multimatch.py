@@ -38,7 +38,6 @@ import os
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -118,40 +117,37 @@ def build_fields_index(
     return manifest
 
 
-def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
-               blend: dict | None = None):
+def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float):
     """Per-shard multi_match: exact per-(query, field) exhaustive BM25
     (same sorted-term accumulation as score_topk — float identity per
     field), field-boost scale, dis_max/sum combine, boundary-exact
     top-k. field_conf: field -> dict(n_docs, avgdl, boost, tomb)."""
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(table, entries: dict, dfs: dict) -> dict:
         xf = mm_type == "cross_fields"
         caches = {f: {} for f in field_conf}
-        # pass 1: collect per-(field, term) block runs + per-field df
-        # (cross_fields needs ALL fields' dfs for a term before any idf
-        # is fixed); pass 2 constructs cursors with the mode's idf
-        runs = wand_mod.block_runs(pdf, by=("field", "term"))
-        df_col, entries = pdf["df"].to_numpy(), pdf["queries"].to_numpy()
-        dfs: dict[str, dict[str, int]] = {}
+        # pass 1: collect per-(field, term) block runs and each query's
+        # terms; pass 2 constructs cursors with the mode's idf
+        runs = wand_mod.block_runs(table, by=("field", "term"))
         queries: dict[str, list] = {}
-        for (field, term), (row, _) in runs.items():
-            dfs.setdefault(term, {})[field] = int(df_col[row])
-            for q in entries[row]:
+        for field, term in runs:
+            for q in entries[term]:
                 ent = queries.setdefault(q["query_id"], [int(q["k"]), {}])
                 ent[1].setdefault(term, set()).add(field)
 
         def idf_for(field: str, term: str) -> float:
             if xf:
                 # blended statistics (BlendedTermQuery role): ONE idf
-                # per term across fields — df = max over queried
-                # fields, n_docs likewise. The blend map is DRIVER-
-                # computed from the GLOBAL dictionaries (a shard may
+                # per term across fields — df = max over the queried
+                # fields holding it, n_docs likewise. `dfs` holds every
+                # queried field's GLOBAL dictionary slice (a shard may
                 # hold only one field's postings for a term; blending
                 # from shard-local rows would skew its idf).
-                df_t, nd = blend[term]
+                have = [f for f in dfs if term in dfs[f]]
+                df_t = max(dfs[f][term] for f in have)
+                nd = max(field_conf[f]["n_docs"] for f in have)
             else:
-                df_t = dfs[term][field]
+                df_t = dfs[field][term]
                 nd = field_conf[field]["n_docs"]
             return _idf(nd, df_t)
 
@@ -170,7 +166,7 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
                     tomb=(tomb.for_seg(r["seg"]) if tomb is not None else None),
                     idf=idf, **r,
                 )
-                for r in runs[(field, term)][1]
+                for r in runs[(field, term)]
             ]
             cursor_memo[(field, term)] = cur
             return cur
@@ -240,7 +236,7 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
                     best = S.max(axis=0)
                     combined = best + tie_breaker * (S.sum(axis=0) - best)
             out.topk(qid, all_docs, combined, k)
-        return out.frame()
+        return out.columns()
 
     return run
 
@@ -263,7 +259,8 @@ def multi_match_topk(
     terms sum per doc)."""
     if mm_type not in ("best_fields", "most_fields", "cross_fields"):
         raise ValueError(f"unknown multi_match type {mm_type!r}")
-    manifest = json.load(open(os.path.join(index_dir, "fields.json")))
+    manifest = json.loads(
+        layout.read_text(os.path.join(index_dir, "fields.json")))
     mode = manifest.get("tokenizer", "ascii")
     specs = (
         parse_field_specs(fields) if fields
@@ -286,13 +283,7 @@ def multi_match_topk(
                 "tomb": readers[f].tomb}
             for f, boost in specs
         }
-        blend: dict[str, tuple] = {}
-        if mm_type == "cross_fields":
-            for f, r in readers.items():
-                for t, df in r.df_slice(sorted(per_term)).items():
-                    cur = blend.get(t, (0, 0))
-                    blend[t] = (max(cur[0], df), max(cur[1], int(r.n_docs)))
-        return _mm_kernel(field_conf, mm_type, float(tie_breaker), blend)
+        return _mm_kernel(field_conf, mm_type, float(tie_breaker))
 
     return gather(scatter(readers, per_term, prep.SIMPLE_FIELDS, kernel),
                   rows)

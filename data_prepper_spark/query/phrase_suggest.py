@@ -34,9 +34,9 @@ coordinator-node cost of the API, independent of corpus size.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from itertools import combinations, product
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,13 +71,9 @@ def count_phrase_matches(
     def kernel():
         inner = _phrase_kernel(r.avgdl, r.n_docs, r.tomb)
 
-        def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            hits = inner(key, pdf)
-            if len(hits) == 0:
-                return pd.DataFrame({"query_id": pd.Series([], dtype=object),
-                                     "n": pd.Series([], dtype="int64")})
-            g = hits.groupby("query_id", as_index=False).size()
-            return g.rename(columns={"size": "n"})
+        def run(table, entries: dict, dfs: dict) -> dict:
+            n = Counter(inner(table, entries, dfs)["query_id"])
+            return {"query_id": list(n), "n": list(n.values())}
 
         return run
 

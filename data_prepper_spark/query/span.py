@@ -34,7 +34,6 @@ to decode.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from data_prepper_spark.index.reader import POS_COLS, IndexReader
@@ -115,8 +114,8 @@ def _min_window_ordered(seqs: list[np.ndarray]) -> int:
 
 
 def _span_kernel(avgdl: float, n_docs: int, tomb=None):
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = _ShardTerms(pdf, n_docs, tomb)
+    def run(table, entries: dict, dfs: dict) -> dict:
+        shard = _ShardTerms(table, entries, dfs, n_docs, tomb)
         queries: dict[str, dict] = {}
         for term, qs in shard.entries.items():
             for q in qs:
@@ -154,7 +153,7 @@ def _span_kernel(avgdl: float, n_docs: int, tomb=None):
             out.topk(qid, matched,
                      shard.bm25(matched, terms_in_order, decoded, avgdl),
                      ent["k"])
-        return out.frame()
+        return out.columns()
 
     return run
 

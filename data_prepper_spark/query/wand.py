@@ -1,10 +1,10 @@
 """Posting-block cursors and exact BM25 top-k, one shard at a time.
 
-`block_runs` cuts a shard's block rows into per-(term, seg) runs with
-one sort, and `TermCursor` (a term's blocks in one segment) is the one
-posting decoder of every query kernel: a block decodes once per kernel
-call through a memo, with the streams the scan projected, and its
-tombstoned docs dropped. The scorers below read cursors directly;
+`block_runs` cuts a shard's blocks table (pyarrow) into per-(term,
+seg) runs with one Arrow sort, and `TermCursor` (a term's blocks in
+one segment) is the one posting decoder of every query kernel: a
+block decodes once per kernel call through a memo, with the streams
+the scan projected, and its tombstoned docs dropped. The scorers below read cursors directly;
 `engine._ShardTerms` serves the bool, phrase, span, filter, explain
 and match-set kernels from the same cursors.
 
@@ -35,7 +35,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from data_prepper_spark.index import codec
 from data_prepper_spark.index.tombstones import deleted_mask
@@ -130,54 +130,47 @@ class TermCursor:
         return docs, got
 
 
-# block_runs output name -> (blocks column, dtype); first_doc and gaps
-# are always projected, the others only by some kernels
+# block_runs output name -> blocks column; first_doc and gaps are
+# always projected, the others only by some kernels
 _RUN_COLS = {
-    "firsts": ("first_doc", np.int64), "lasts": ("last_doc", np.int64),
-    "maxps": ("max_partial", np.float64), "gaps": ("gaps", object),
-    "tfs": ("tfs", object), "dls": ("dls", object), "poss": ("poss", object),
+    "firsts": "first_doc", "lasts": "last_doc", "maxps": "max_partial",
+    "gaps": "gaps", "tfs": "tfs", "dls": "dls", "poss": "poss",
 }
+_STREAMS = ("gaps", "tfs", "dls", "poss")  # read as list[bytes]
 
 
 def block_runs(
-    pdf: pd.DataFrame, by: tuple[str, ...] = ("term",), ub_scale: float = 1.0,
-) -> dict[tuple, tuple[int, list[dict]]]:
+    table: pa.Table, by: tuple[str, ...] = ("term",), ub_scale: float = 1.0,
+) -> dict[tuple, list[dict]]:
     """One shard's block rows cut into `TermCursor` inputs.
 
     Rows are sorted once by (*by, seg, block_ord) and cut into runs
-    where the (*by, seg) key changes. Returns {key: (row, runs)} in key
-    order: `row` is the position in `pdf` of one of the key's rows (for
-    per-key columns such as df and the query entries), and `runs` holds
+    where the (*by, seg) key changes. Returns {key: runs} in key order:
     one dict of TermCursor keyword arguments per segment, in seg order,
-    with `maxps` scaled by `ub_scale`. A stream or column the frame
+    with `maxps` scaled by `ub_scale`. A stream or column the table
     does not carry is None in every run."""
-    n = len(pdf)
+    n = table.num_rows
     if not n:
         return {}
-    codes = [pd.factorize(pdf[c], sort=True)[0] for c in by]
-    seg = pdf["seg"].to_numpy(np.int64)
-    order = np.lexsort((pdf["block_ord"].to_numpy(np.int64), seg, *codes[::-1]))
-    seg = seg[order]
+    table = table.sort_by(
+        [(c, "ascending") for c in (*by, "seg", "block_ord")])
+    seg = table.column("seg").to_numpy()
+    keys = [table.column(c).to_numpy(zero_copy_only=False) for c in by]
     change = seg[1:] != seg[:-1]
-    for c in codes:
-        c = c[order]
-        change |= c[1:] != c[:-1]
+    for v in keys:
+        change |= v[1:] != v[:-1]
     cut = np.flatnonzero(change) + 1
-    cols = {name: pdf[c].to_numpy(dt)[order]
-            for name, (c, dt) in _RUN_COLS.items() if c in pdf}
+    cols = {name: table.column(c).to_pylist() if name in _STREAMS
+            else table.column(c).to_numpy()
+            for name, c in _RUN_COLS.items() if c in table.column_names}
     if "maxps" in cols:
         cols["maxps"] = cols["maxps"] * ub_scale
-    keys = [pdf[c].to_numpy(object)[order] for c in by]
-    out: dict[tuple, tuple[int, list[dict]]] = {}
+    out: dict[tuple, list[dict]] = {}
     for lo, hi in zip(np.r_[0, cut], np.r_[cut, n]):
-        key = tuple(v[lo] for v in keys)
-        if key not in out:
-            out[key] = (int(order[lo]), [])
-        run = dict.fromkeys(_RUN_COLS)
-        for name, v in cols.items():
-            run[name] = list(v[lo:hi]) if v.dtype == object else v[lo:hi]
+        run = dict.fromkeys(_RUN_COLS) | {
+            name: v[lo:hi] for name, v in cols.items()}
         run["seg"] = int(seg[lo])
-        out[key][1].append(run)
+        out.setdefault(tuple(v[lo] for v in keys), []).append(run)
     return out
 
 

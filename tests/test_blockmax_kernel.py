@@ -135,13 +135,15 @@ def test_wand_window_prunes():
 
 
 def test_block_runs_match_grouped_rows():
-    """`block_runs` (one sort, runs cut at key changes) yields, per
-    (field, term) key in key order, one run per seg in seg order with
-    its blocks in block_ord order: the nested groupby + sort_values
-    construction it replaces, on shuffled rows. It carries the streams
-    the frame holds — the scoring projection, the gaps-only counting
-    projection, and one with positions — and None for the others."""
+    """`block_runs` (one Arrow sort, runs cut at key changes) yields,
+    per (field, term) key in key order, one run per seg in seg order
+    with its blocks in block_ord order: the nested groupby +
+    sort_values construction it replaces, on shuffled rows. It carries
+    the streams the table holds — the scoring projection, the
+    gaps-only counting projection, and one with positions — and None
+    for the others."""
     import pandas as pd
+    import pyarrow as pa
 
     rng = np.random.default_rng(3)
     rows = [
@@ -161,24 +163,25 @@ def test_block_runs_match_grouped_rows():
         full[keys + ["gaps"]],
         full.drop(columns="max_partial"),
     ):
-        runs = W.block_runs(pdf, by=("field", "term"), ub_scale=2.0)
+        runs = W.block_runs(pa.Table.from_pandas(pdf, preserve_index=False),
+                            by=("field", "term"), ub_scale=2.0)
         grouped = pdf.groupby(["field", "term"], sort=True)
         assert list(runs) == list(grouped.groups)
         for (f, t), tg in grouped:
-            row, got = runs[(f, t)]
-            assert (pdf.loc[row, "field"], pdf.loc[row, "term"]) == (f, t)
+            got = runs[(f, t)]
             want = [g.sort_values("block_ord")
                     for _, g in tg.groupby("seg", sort=True)]
             assert [r["seg"] for r in got] == [int(g["seg"].iloc[0]) for g in want]
             for r, g in zip(got, want):
-                for name, (col, _) in W._RUN_COLS.items():
+                for name, col in W._RUN_COLS.items():
                     if col not in pdf:
                         assert r[name] is None, name
                     elif col == "max_partial":
                         assert r[name].tolist() == (g[col] * 2.0).tolist()
                     else:
                         assert list(r[name]) == list(g[col]), name
-    assert W.block_runs(full.iloc[:0]) == {}
+    assert W.block_runs(
+        pa.Table.from_pandas(full.iloc[:0], preserve_index=False)) == {}
 
 
 def test_one_memo_insert_per_block():
@@ -187,19 +190,19 @@ def test_one_memo_insert_per_block():
     into the memo once, and both see the same postings."""
     import dataclasses
 
-    import pandas as pd
+    import pyarrow as pa
 
     from data_prepper_spark.query.engine import _ShardTerms
 
     ref = _make_cursor(np.random.default_rng(5), "t", 600, density=0.3)
     n = len(ref.firsts)
-    pdf = pd.DataFrame({
-        "term": "t", "seg": 0, "block_ord": np.arange(n),
+    table = pa.table({
+        "term": ["t"] * n, "seg": [0] * n, "block_ord": np.arange(n),
         "first_doc": ref.firsts, "last_doc": ref.lasts,
         "max_partial": ref.maxps, "gaps": ref.gaps, "tfs": ref.tfs,
-        "dls": ref.dls, "queries": [[]] * n, "df": 180,
+        "dls": ref.dls,
     })
-    shard = _ShardTerms(pdf, n_docs=600)
+    shard = _ShardTerms(table, {"t": []}, {"t": 180}, n_docs=600)
     run = shard.runs("t")
     assert len(shard.memo) == n
     (cursor,) = shard.cursors["t"]

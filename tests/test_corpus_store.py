@@ -103,7 +103,7 @@ def test_filtered_topk_uses_stored_routing(spark, built, executed_plans):
     b = [(r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in co]
     assert a == b and len(a) > 0
     # fast path: no xxhash64 derivation in the co-located plan
-    assert "FlatMapCoGroupsInPandas" in plan  # the scatter plan was read
+    assert "FlatMapCoGroupsInArrow" in plan  # the scatter plan was read
     assert "xxhash64" not in plan
 
 

@@ -75,6 +75,22 @@ def _score(spark, d, text, k, **kw):
     return engine.score_topk(spark, d, q, **kw).collect()
 
 
+def _local(spark, rows, schema):
+    """A query frame built from pandas: an Arrow LocalRelation, whose
+    read starts no Python worker per `parallelize` slice."""
+    names = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
+@pytest.fixture(params=["driver", "spark"])
+def site(request, monkeypatch):
+    """The scatter's execution site: the driver, or Spark with no
+    pruned input small enough for the driver."""
+    if request.param == "spark":
+        monkeypatch.setattr(engine, "LOCAL_MAX_BLOCKS", 0)
+    return request.param
+
+
 # ------------------------------------------------------------ fixtures
 
 @pytest.fixture(scope="module")
@@ -167,6 +183,24 @@ def test_phrase_topk_request_runs_one_job(spark, index, corpus_pdf):
                        lambda: engine.phrase_topk(spark, index, q).collect())
     assert jobs <= 1
     assert rows  # the phrase is taken from a document
+
+
+def test_count_matches_request_runs_one_job(spark, index, oracle_idx):
+    """count_matches sums the per-shard counts on the driver: one job to
+    read a query DataFrame, none for a list of dicts, the same answer
+    either way, and a query of unknown terms still counts 0."""
+    texts = {"a": "error handling timeout", "b": "retry deploy",
+             "z": "zzqqxx qqzzyy"}
+    want = {qid: len(oracle.score_query(oracle_idx, t, oracle_idx.n_docs))
+            for qid, t in texts.items()}
+    assert want["z"] == 0 and want["a"] > 0
+    rows = [{"query_id": qid, "query_text": t} for qid, t in texts.items()]
+    q = spark.createDataFrame(rows, "query_id string, query_text string")
+    for queries, most in ((q, 1), (rows, 0)):
+        got, jobs = _jobs(spark, lambda: engine.count_matches(
+            spark, index, queries).collect())
+        assert jobs <= most
+        assert {r["query_id"]: r["total_hits"] for r in got} == want
 
 
 def test_request_over_the_driver_limit_runs_on_spark(
@@ -286,13 +320,14 @@ def test_request_after_upsert_and_delete(spark, mutated):
         assert oracle.score_query(idx, text, 1)[0][0] in hidden
 
 
-def test_entry_points_after_upsert_and_delete(spark, mutated):
+def test_entry_points_after_upsert_and_delete(spark, mutated, site):
     """Every posting-reading entry point on the same two-segment,
-    tombstoned index: bool (should-only, msm 1: ranks like match),
-    count_matches, match_docs, phrase, span_near and explain answer as
-    the oracle does with the hidden docs dropped. A tombstone applies
-    only to the segments that existed when it was written, so an
-    upserted doc's id is dead in the old segment and live in the new."""
+    tombstoned index, on both scatter sites: bool (should-only, msm 1:
+    ranks like match), count_matches, match_docs, phrase, span_near and
+    explain answer as the oracle does with the hidden docs dropped. A
+    tombstone applies only to the segments that existed when it was
+    written, so an upserted doc's id is dead in the old segment and
+    live in the new."""
     d, idx, _, tokens, texts = mutated
     text = texts[1]
     live = _live(mutated, text)
@@ -371,14 +406,43 @@ def test_index_named_by_a_uri(spark, index, mutated, corpus_pdf):
     for d in (index, mutated[0]):
         uri = Path(d).as_uri()
         for text in texts:
-            assert same(lambda i: _hits(_score(spark, i, text, 10))) <= 1
-            q = spark.createDataFrame([("q", text)],
-                                      "query_id string, query_text string")
+            sq = _local(spark, [("q", text, 10)], Q_SCHEMA)
+            assert same(lambda i: _hits(
+                engine.score_topk(spark, i, sq).collect())) <= 1
+            q = _local(spark, [("q", text)],
+                       "query_id string, query_text string")
             same(lambda i: engine.count_matches(spark, i, q).collect())
         for phrase in phrases:
-            pq = spark.createDataFrame([("p", phrase, 10)], Q_SCHEMA)
+            pq = _local(spark, [("p", phrase, 10)], Q_SCHEMA)
             assert same(lambda i: _hits(
                 engine.phrase_topk(spark, i, pq).collect())) <= 1
+
+
+def test_count_phrase_matches_on_both_sites(spark, mutated, monkeypatch):
+    """count_phrase_matches answers the same on the driver site and on
+    the Spark site, and counts the oracle's live phrase matches."""
+    from data_prepper_spark.query.phrase_suggest import count_phrase_matches
+
+    d, _, _, tokens, texts = mutated
+    phrases = {f"p{i}": p for i, p in enumerate(
+        [" ".join(tokenize(t)[:2]) for t in texts[:2]] + ["handling retry"])}
+    q = spark.createDataFrame(list(phrases.items()),
+                              "query_id string, query_text string")
+
+    def counts():
+        return {r["query_id"]: r["n"]
+                for r in count_phrase_matches(spark, d, q).collect()}
+
+    driver = counts()
+    monkeypatch.setattr(engine, "LOCAL_MAX_BLOCKS", 0)
+    assert counts() == driver
+    for qid, phrase in phrases.items():
+        terms = tokenize(phrase)
+        want = sum(1 for doc, _ in _live(mutated, phrase)
+                   if any(tokens[doc][i:i + 2] == terms
+                          for i in range(len(tokens[doc]))))
+        assert driver.get(qid, 0) == want, phrase
+    assert driver
 
 
 # ------------------------------------------- rank identity of the merge

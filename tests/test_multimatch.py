@@ -306,3 +306,23 @@ def test_cross_fields_field_list_does_not_alias(spark, tmp_path):
     for i, name in enumerate(XF_ORDER):
         got = run(d, lists[name])
         pd.testing.assert_frame_equal(got, want[name], obj=f"call {i} {name}")
+
+
+@pytest.mark.parametrize("mm_type", ["best_fields", "cross_fields"])
+def test_both_sites_and_a_uri_answer_alike(spark, fidx, mm_type, monkeypatch):
+    """multi_match answers the same on the driver scatter site, on the
+    Spark site (no pruned input small enough for the driver) and over
+    the fields index named by a file:// URI: fields.json and every
+    field's sub-index are read through the filesystem the URI names."""
+    from pathlib import Path
+
+    def ranked(idx):
+        return _got(spark, idx, fields=["text", "tool^2"], mm_type=mm_type,
+                    tie_breaker=0.3).sort_values(["query_id", "rank"]) \
+            .reset_index(drop=True)
+
+    driver = ranked(fidx)
+    assert len(driver)
+    pd.testing.assert_frame_equal(ranked(Path(fidx).as_uri()), driver)
+    monkeypatch.setattr(engine, "LOCAL_MAX_BLOCKS", 0)
+    pd.testing.assert_frame_equal(ranked(fidx), driver)

@@ -63,7 +63,7 @@ def test_score_topk_scan_pruning(spark, corpus_and_index, executed_plans,
     )
     _, plan = executed_plans(
         lambda: engine.score_topk(spark, d, qdf, algo="wand").collect())
-    assert "FlatMapGroupsInPandas" in plan  # the scatter plan was read
+    assert "FlatMapGroupsInArrow" in plan  # the scatter plan was read
     # term In-filter pushed into the blocks scan
     assert "PushedFilters: [In(term" in plan
     # the position stream must not reach the scan (largest column)
@@ -85,7 +85,7 @@ def test_filtered_topk_corpus_scan_pruning(spark, corpus_and_index, tmp_path,
     docs = spark.read.parquet(p)
     _, plan = executed_plans(lambda: engine.filtered_topk(
         spark, d, qdf, docs, "role = 'user'").collect())
-    assert "FlatMapCoGroupsInPandas" in plan  # the scatter plan was read
+    assert "FlatMapCoGroupsInArrow" in plan  # the scatter plan was read
     # blocks scan still term-pruned
     assert "PushedFilters: [In(term" in plan
     # corpus-side filter evaluated at the scan, not post-load
@@ -152,19 +152,22 @@ def test_multi_index_scan_pruning(spark, corpus_and_index, tmp_path,
             assert "poss" not in line, line
 
 
-def test_count_matches_scan_pruning(spark, corpus_and_index, spark_path):
+def test_count_matches_scan_pruning(spark, corpus_and_index, spark_path,
+                                    executed_plans):
     """_count (EXPLAIN.md §17) and the facets match set: the scatter
     reads ONLY the gaps stream + keys — tfs/dls/poss/max_partial never
-    reach the blocks scan, and the term In-filter is pushed down."""
+    reach the blocks scan, and the term In-filter is pushed down.
+    count_matches merges on the driver inside the call, so its guard
+    reads the plan that ran."""
     _, d = corpus_and_index
     qdf = spark.createDataFrame(
         [("q", "error timeout")], "query_id string, query_text string",
     )
     for entry in (engine.count_matches, facets.match_docs):
-        plan = _physical(entry(spark, d, qdf))
+        _, plan = executed_plans(lambda: entry(spark, d, qdf).collect())
         assert "PushedFilters: [In(term" in plan
         scans = [line for line in plan.splitlines()
-                 if "FileScan" in line and "gaps" in line]
+                 if "ReadSchema" in line and "gaps" in line]
         assert scans, entry
         for line in scans:
             for col in ("tfs", "dls", "poss", "max_partial"):
