@@ -223,8 +223,7 @@ def _scatter_local(tables: dict, run: Callable, schema: str) -> DataFrame:
            for s in sorted(set(shard.to_pylist()))]
     spark = SparkSession.active()
     if not sum(map(len, out)):
-        # limit(0) plans as an empty LocalRelation: no job to collect
-        return spark.createDataFrame([], schema).limit(0)
+        return _empty(spark, schema)
     # one chunk: createDataFrame drops the rows after an empty batch
     return spark.createDataFrame(pa.concat_tables(out).combine_chunks(),
                                  schema)
@@ -247,10 +246,8 @@ def gather(
     DataFrame (a distributed batch) merges in a Window."""
     schema = ", ".join(f"{c} {_TYPES[c]}" for c in cols)
     spark = SparkSession.active()
-    # limit(0) plans as an empty LocalRelation: collecting it runs no job
-    empty = spark.createDataFrame([], schema).limit(0)
     if per_shard is None:
-        return empty
+        return _empty(spark, schema)
     if isinstance(queries, DataFrame):
         by = [F.desc("score"), F.asc("doc_id"), *map(F.asc, tie)]
         if best_of:
@@ -272,7 +269,14 @@ def gather(
         pdf = pdf.drop_duplicates(["query_id", best_of])
     pdf["rank"] = pdf.groupby("query_id").cumcount() + 1
     pdf = pdf[pdf["rank"] <= pdf["query_id"].map(ks)]
-    return spark.createDataFrame(pdf[list(cols)], schema) if len(pdf) else empty
+    if not len(pdf):
+        return _empty(spark, schema)
+    return spark.createDataFrame(pdf[list(cols)], schema)
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """limit(0) plans as an empty LocalRelation: collecting it runs no job."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def _read(per_shard: DataFrame) -> pd.DataFrame:
@@ -644,7 +648,7 @@ def count_matches(
         for qid, n in _read(per_shard).itertuples(index=False):
             totals[qid] += int(n)
     if not totals:
-        return spark.createDataFrame([], schema).limit(0)
+        return _empty(spark, schema)
     return spark.createDataFrame(pd.DataFrame(
         list(totals.items()), columns=["query_id", "total_hits"]), schema)
 

@@ -2,7 +2,8 @@
 
 Local-mode testing (local[N]) but configured the way a 1000-executor
 cluster job would be: AQE on, shuffle partitions sized to parallelism,
-Arrow enabled for all pandas-UDF exchange, UTC session time.
+Arrow enabled for all pandas-UDF exchange, UTC session time. Python
+tasks run under this package's worker daemon (`pyworker`).
 """
 
 from __future__ import annotations
@@ -10,6 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package: the workers' import path for it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -31,6 +35,9 @@ def get_spark(
     ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) or all cores.
     ``shuffle_partitions`` defaults to max(cores, 32) — on a real cluster
     this is set to ~2-3x total executor cores instead.
+    Python workers start from `pyworker` and find this package from any
+    working directory: its parent directory leads
+    ``spark.executorEnv.PYTHONPATH``, ahead of any value in ``extra_conf``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -56,10 +63,14 @@ def get_spark(
         # un-fused automatically — see operators/enrich.py::_cascade) —
         # without this the ERROR log carries the full multi-MB source
         .config("spark.sql.codegen.logging.maxLines", "20")
+        .config("spark.python.daemon.module", "data_prepper_spark.pyworker")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH"))
+        if p)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

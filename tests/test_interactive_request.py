@@ -162,6 +162,18 @@ def test_score_topk_request_runs_one_job(spark, index, oracle_idx):
     assert jobs == 0
 
 
+def test_driver_request_builds_two_frames(spark, index, monkeypatch):
+    """A driver-site request creates the scatter's rows frame and the
+    ranked answer, no unused empty frame beside them."""
+    calls = []
+    create = type(spark).createDataFrame
+    monkeypatch.setattr(type(spark), "createDataFrame",
+                        lambda *a, **kw: calls.append(1) or create(*a, **kw))
+    q = [{"query_id": "q", "query_text": "error handling", "k": 5}]
+    assert len(engine.score_topk(spark, index, q).collect()) == 5
+    assert len(calls) == 2
+
+
 def test_bool_topk_request_runs_one_job(spark, index, oracle_idx):
     """collect_rows; the scan and the kernel run on the driver."""
     q = spark.createDataFrame(
