@@ -12,9 +12,10 @@ Cluster usage (north rule: "runs via spark-submit --py-files"):
 
 Local smoke (this sandbox): python -m data_prepper_spark <subcommand>.
 
-The session comes from SparkSession.builder.getOrCreate(): under
-spark-submit the cluster master/conf win; standalone it falls back to
-data_prepper_spark.session.get_spark (local[N]).
+Under spark-submit the session comes from SparkSession.builder
+.getOrCreate(), so the cluster master/conf win; standalone (or with
+--local-cores) it is data_prepper_spark.session.get_spark (local[N]),
+whose Python workers run the package's worker daemon.
 """
 
 from __future__ import annotations
@@ -43,13 +44,14 @@ def _get_spark(args):
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    # under spark-submit this getOrCreate picks up --master/--conf;
-    # standalone it builds the tuned local session
-    if getattr(args, "local_cores", None):
-        from data_prepper_spark.session import get_spark
+    cores = getattr(args, "local_cores", None)
+    # spark-submit's launcher sets PYSPARK_GATEWAY_PORT: there getOrCreate
+    # picks up --master/--conf; elsewhere it is the tuned local session
+    if not cores and "PYSPARK_GATEWAY_PORT" in os.environ:
+        return SparkSession.builder.appName("data_prepper_spark").getOrCreate()
+    from data_prepper_spark.session import get_spark
 
-        return get_spark(cores=args.local_cores)
-    return SparkSession.builder.appName("data_prepper_spark").getOrCreate()
+    return get_spark(cores=cores)
 
 
 def cmd_build_index(args) -> int:

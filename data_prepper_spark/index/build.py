@@ -38,9 +38,9 @@ Why this scales to 10^12 turns / 1000 executors:
 - the session's shuffle width sets the kernel tasks, and shards bound
   kernel memory: each kernel call holds exactly one shard, and a task
   runs the shards its partition holds one after another. A Python task
-  costs worker CPU whatever it holds (about 40 ms on a 4-vCPU host with
-  `pyworker`'s stamped zip cache, 190 ms without it), so a task per
-  shard would add that cost per shard;
+  costs worker CPU whatever it holds (about 19 ms on a 4-vCPU host with
+  `pyworker`'s stamped zip cache and frozen heap, 190 ms with neither),
+  so a task per shard would add that cost per shard;
 - resume skips completed shards entirely (manifest-gated), so a failed
   10-hour build restarts with only missing shards (mirrors the
   reference's LeaseBasedSourceCoordinator per-partition progress,

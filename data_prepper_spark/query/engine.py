@@ -53,7 +53,7 @@ single-node oracle — the dfs_query_then_fetch contract.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import lru_cache, reduce
 from typing import Callable
 
 import numpy as np
@@ -63,7 +63,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import _parse_datatype_string
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from data_prepper_spark.index import codec
 from data_prepper_spark.index.reader import (
@@ -139,7 +139,8 @@ def scatter(
     distributed = isinstance(per_term, DataFrame)
     if not readers or not (distributed or per_term):
         return None
-    arrow_schema = to_arrow_schema(_parse_datatype_string(schema))
+    struct = _struct(schema)
+    arrow_schema = to_arrow_schema(struct)
 
     def rows(columns: dict) -> pa.Table:
         return pa.Table.from_pydict(columns, schema=arrow_schema)
@@ -163,7 +164,7 @@ def scatter(
         return spread_by_shard(
             r.blocks.select(*cols).join(per_term, "term")
             .join(r.dictionary.select("term", "df"), "term")) \
-            .groupBy("shard").applyInArrow(joined, schema=schema)
+            .groupBy("shard").applyInArrow(joined, schema=struct)
 
     dfs, terms = {}, {}
     for tag, r in readers.items():
@@ -198,12 +199,12 @@ def scatter(
                 .filter(F.col("term").isin(ts)), tag)
         for tag, ts in terms.items()])).groupBy("shard")
     if right is None:
-        return grouped.applyInArrow(per_shard, schema=schema)
+        return grouped.applyInArrow(per_shard, schema=struct)
 
     def per_shard_cogroup(table, right_rows):
         return rows(run(table, entries, kdfs, right_rows))
     return grouped.cogroup(spread_by_shard(right()).groupBy("shard")) \
-        .applyInArrow(per_shard_cogroup, schema=schema)
+        .applyInArrow(per_shard_cogroup, schema=struct)
 
 
 def _tagged(part: DataFrame, tag: str | None) -> DataFrame:
@@ -226,7 +227,7 @@ def _scatter_local(tables: dict, run: Callable, schema: str) -> DataFrame:
         return _empty(spark, schema)
     # one chunk: createDataFrame drops the rows after an empty batch
     return spark.createDataFrame(pa.concat_tables(out).combine_chunks(),
-                                 schema)
+                                 _struct(schema))
 
 
 def gather(
@@ -271,12 +272,19 @@ def gather(
     pdf = pdf[pdf["rank"] <= pdf["query_id"].map(ks)]
     if not len(pdf):
         return _empty(spark, schema)
-    return spark.createDataFrame(pdf[list(cols)], schema)
+    return spark.createDataFrame(pdf[list(cols)], _struct(schema))
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     """limit(0) plans as an empty LocalRelation: collecting it runs no job."""
-    return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame([], _struct(schema)).limit(0)
+
+
+@lru_cache(maxsize=None)
+def _struct(ddl: str) -> StructType:
+    """An output schema's DDL string parsed once per process: each parse
+    is a JVM round trip. Every caller shares the struct: never mutate it."""
+    return _parse_datatype_string(ddl)
 
 
 def _read(per_shard: DataFrame) -> pd.DataFrame:
@@ -601,7 +609,7 @@ def match_scores(
             queries, "query_id", "query_text")], r.mode)
     out = scatter(r, per_term, prep.SCORE_FIELDS, lambda: _shard_kernel(
         r.avgdl, r.n_docs, "all", r.ub_scale, r.tomb))
-    return out if out is not None else spark.createDataFrame([], _KERNEL_OUT)
+    return out if out is not None else _empty(spark, _KERNEL_OUT)
 
 
 # -------------------------------------------------- _count / total hits
@@ -650,7 +658,8 @@ def count_matches(
     if not totals:
         return _empty(spark, schema)
     return spark.createDataFrame(pd.DataFrame(
-        list(totals.items()), columns=["query_id", "total_hits"]), schema)
+        list(totals.items()), columns=["query_id", "total_hits"]),
+        _struct(schema))
 
 
 # ---------------------------------------------------------- match_phrase

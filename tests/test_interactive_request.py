@@ -8,6 +8,7 @@ driver rows cost none.
 
 Pinned here: the Spark jobs one request runs (score_topk, bool_topk,
 phrase_topk, and score_topk on an upserted and deleted-from index), the
+output-schema parses a repeated request makes (none), the
 Spark path's answer when the pruned input is over the driver limit,
 the answers of every posting-reading entry point on that index, the
 same answers through a file:// URI, and
@@ -172,6 +173,19 @@ def test_driver_request_builds_two_frames(spark, index, monkeypatch):
     q = [{"query_id": "q", "query_text": "error handling", "k": 5}]
     assert len(engine.score_topk(spark, index, q).collect()) == 5
     assert len(calls) == 2
+
+
+def test_repeated_driver_request_parses_no_schema(spark, index, monkeypatch):
+    """The output schemas' DDL strings are parsed once per process: each
+    parse is a JVM round trip."""
+    q = [{"query_id": "q", "query_text": "error handling", "k": 5}]
+    want = engine.score_topk(spark, index, q).collect()
+    calls = []
+    parse = type(spark.sparkContext)._parse_ddl
+    monkeypatch.setattr(type(spark.sparkContext), "_parse_ddl",
+                        lambda *a: calls.append(a[1:]) or parse(*a))
+    assert engine.score_topk(spark, index, q).collect() == want
+    assert calls == []
 
 
 def test_bool_topk_request_runs_one_job(spark, index, oracle_idx):

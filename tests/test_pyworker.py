@@ -3,11 +3,15 @@
 Pinned here: on Python < 3.12 the stamped `zipimporter.invalidate_caches`
 re-reads an unchanged archive 0 times and a rewritten one once, after
 which the importer serves the new source; the session names the daemon
-module and its workers run the stamped invalidation; and the workers
-import this package from any working directory with no PYTHONPATH."""
+module and its workers run the stamped invalidation; a worker's heap
+from before the fork is frozen, while the garbage its tasks make is
+still collected; the workers import this package from any working
+directory with no PYTHONPATH; and the CLI builds its session with
+`get_spark` everywhere but under spark-submit."""
 
 from __future__ import annotations
 
+import argparse
 import os
 import subprocess
 import sys
@@ -18,8 +22,9 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 
-from data_prepper_spark import pyworker
+from data_prepper_spark import cli, pyworker, session
 
 ROOT = Path(__file__).resolve().parents[1]
 OLD_PYTHON = pytest.mark.skipif(
@@ -81,6 +86,28 @@ def test_session_runs_the_engine_daemon(spark):
         [pyworker._stamped_invalidate_caches.__qualname__]
 
 
+def test_worker_heap_is_frozen_and_task_garbage_is_collected(spark):
+    def probe(batches):
+        import gc
+        import weakref
+
+        class Node:
+            pass
+
+        for _ in batches:
+            a, b = Node(), Node()
+            a.other, b.other = b, a  # a cycle only the collector frees
+            alive = weakref.ref(a)
+            del a, b
+            gc.collect()
+            yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                                "freed": [alive() is None]})
+    (row,) = spark.range(1, numPartitions=1) \
+        .mapInPandas(probe, "frozen long, freed boolean").collect()
+    assert row.frozen > 0
+    assert row.freed
+
+
 def test_workers_find_the_package_from_any_directory(tmp_path):
     script = textwrap.dedent(f"""
         import sys
@@ -106,3 +133,25 @@ def test_workers_find_the_package_from_any_directory(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     assert "ROWS ['retry the deploy', 'retry the deploy', 'retry the deploy']" \
         in out.stdout
+
+
+@pytest.mark.parametrize("submitted, cores, want", [
+    (False, None, ("get_spark", None)),
+    (False, 3, ("get_spark", 3)),
+    (True, None, ("getOrCreate",)),
+    (True, 3, ("get_spark", 3)),
+])
+def test_cli_session_runs_the_engine_daemon_unless_submitted(
+        monkeypatch, submitted, cores, want):
+    built = []
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: None)
+    monkeypatch.setattr(session, "get_spark",
+                        lambda cores=None: built.append(("get_spark", cores)))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: built.append(("getOrCreate",)))
+    if submitted:  # what spark-submit's launcher sets for the driver
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    else:
+        monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    cli._get_spark(argparse.Namespace(local_cores=cores))
+    assert built == [want]
