@@ -6,7 +6,7 @@ shard owns a complete Lucene index; reference:
 data-prepper-plugins/opensearch/.../OpenSearchSink.java:132-141 routing,
 index/AbstractIndexManager.java):
 
-    transcripts --ONE narrow agg: id scheme + {n_docs, avgdl}
+    transcripts --ONE narrow agg: id scheme + row count (no tokenizing)
                --assign doc_id (arithmetic, NO shuffle)
                --shard = xxhash64(conv_id) % n_shards   (conv-sticky)
                --ONE shuffle at the session's shuffle width
@@ -14,19 +14,26 @@ index/AbstractIndexManager.java):
                --applyInPandas SPIMI kernel per shard:
                     tokenize (vectorized) -> (term, doc, tf) -> sort ->
                     128-posting blocks -> delta+varint gaps, varint tf/dl,
-                    float64 block-max partial scores
+                    float64 block-max partial scores against the
+                    shard's own mean dl (n_tokens / n_docs)
                --write parquet partitioned by shard, sorted by term
                  (row-group pruning on term at query time)
-    dictionary  = per-term global df (term-level agg; partial-agg safe)
-    stats.json  = {n_docs, avgdl, ...}
     manifest/   = per-shard checkpoint: lineage + build metrics + status;
                   the kernel reports its per-shard metrics through a
                   Spark accumulator, so the blocks table holds postings
-                  only
+                  only; the driver appends the rows with pyarrow
+    dictionary  = per-term global df (term-level agg; partial-agg safe)
+    stats.json  = {n_docs, avgdl, avgdl_min, ...}, published LAST, from
+                  the manifest: n_docs = sum of rows, avgdl = sum of
+                  n_tokens / sum of rows, avgdl_min = the smallest
+                  shard mean, which keeps block-max bounds provable
+                  (IndexReader.ub_scale)
 
-A fresh build of a conv-N corpus is 7 Spark jobs: the corpus agg (2),
-the kernel stage and its write (2), the manifest append (1) and the
-dictionary (2).
+A fresh build of a conv-N corpus is 6 Spark jobs: the corpus agg (2),
+the kernel stage and its write (2) and the dictionary (2). It tokenizes
+the corpus once, in the kernel; incremental appends still count tokens
+in a JVM pass first (compute_stats), since their blocks are encoded
+against the merged avgdl.
 
 Why this scales to 10^12 turns / 1000 executors:
 - postings for a hot term are split across ALL shards by doc — no
@@ -60,8 +67,9 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.accumulators import Accumulator, AccumulatorParam
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import codec, layout
@@ -87,14 +95,16 @@ BLOCK_SCHEMA = (
     "last_doc long, n int, gaps binary, tfs binary, dls binary, "
     "poss binary, max_partial double"
 )
-MANIFEST_SCHEMA = (
-    "shard long, status string, rows long, n_postings long, n_tokens long, "
-    "wall_ms long, input_desc string, snapshot_id long"
-)
+# the build manifest, appended on the driver with pyarrow
+MANIFEST_SCHEMA = pa.schema([
+    ("shard", pa.int64()), ("status", pa.string()), ("rows", pa.int64()),
+    ("n_postings", pa.int64()), ("n_tokens", pa.int64()),
+    ("wall_ms", pa.int64()), ("input_desc", pa.string()),
+    ("snapshot_id", pa.int64()),
+])
 
 K1 = 1.2
 B = 0.75
-_TOKEN_RE = r"[a-z0-9]+"
 
 
 class ShardMetrics(AccumulatorParam):
@@ -182,12 +192,25 @@ def _encode_posting_blocks(
     }
 
 
+def shard_avgdl(n_tokens: int, n_docs: int) -> float:
+    """The mean dl a fresh build encodes one shard's block-max partials
+    against. The kernel and the driver's `avgdl_min` both call this on
+    the same two integers (the manifest's `n_tokens` and `rows`), so
+    `avgdl_min` is never above a shard's encode avgdl, not even by an
+    ulp."""
+    return n_tokens / n_docs
+
+
 def _spimi_kernel(
-    avgdl: float, block_size: int, metrics: Accumulator, seg: int = 0,
+    avgdl: float | None, block_size: int, metrics: Accumulator, seg: int = 0,
     store_positions: bool = True, tokenizer: str = "ascii",
 ):
     """Per-shard SPIMI: one pandas DataFrame in (all docs of the shard),
     compressed block rows out. All vectorized numpy/pandas.
+
+    Block-max partials are encoded against `avgdl`, or, when it is None
+    (a fresh build, which has no corpus avgdl before its blocks), the
+    shard's own `shard_avgdl`.
 
     `seg` tags every block with the build that produced it (Lucene's
     segment concept): incremental builds append a NEW segment per
@@ -209,6 +232,7 @@ def _spimi_kernel(
         # memory-bus load — tokenizer.token_spans)
         arr, tstarts, tends, tok_doc, dls = token_spans(pdf["text"], tokenizer)
         n_tok = int(len(tstarts))
+        enc_avgdl = avgdl if avgdl is not None else shard_avgdl(n_tok, len(pdf))
         # within-doc token position per token (token_spans emits tokens
         # doc-major position-minor): global index minus the doc's first
         # token offset
@@ -249,7 +273,7 @@ def _spimi_kernel(
             rows = dsorted[pstart]      # doc row per posting
             darr = doc_ids[rows]
             larr = dls[rows]
-            partial = codec.bm25_partial(farr, larr, avgdl, K1, B)
+            partial = codec.bm25_partial(farr, larr, enc_avgdl, K1, B)
             n_postings += len(term_b)
 
             # occurrence positions in sorted-posting order: the lexsort
@@ -321,33 +345,41 @@ def _spimi_kernel(
 def compute_stats(
     df_docs: DataFrame, text_col: str = "text", tokenizer: str = "ascii",
 ) -> dict:
-    """Corpus (n_docs, avgdl) in one narrow pass. Token COUNT via
-    regexp_count — identical to size(filter(split(...))) for the shared
-    tokenizer's pattern but without materializing a token array per row,
-    which at profile time was ~25% of build wall clock in allocation +
-    memory traffic. A '+stop' analyzer changes dl (stopwords don't
+    """Corpus (n_docs, avgdl) in one narrow pass, for an incremental
+    append, which encodes its blocks against the merged avgdl (a fresh
+    build takes both from its kernel's token counts instead). Token
+    COUNT via regexp_count — identical to size(filter(split(...))) for
+    the shared tokenizer's pattern but without materializing a token
+    array per row. A '+stop' analyzer changes dl (stopwords don't
     count), so that case pays for the materialized filtered array;
-    '+stem' never changes token COUNT and keeps the fast path."""
-    return _stats_of(df_docs.agg(*_stats_aggs(text_col, tokenizer)).first())
-
-
-def _stats_aggs(text_col: str, tokenizer: str) -> list[Column]:
-    """compute_stats' two aggregates, for a fresh build to fold into its
-    id-scheme agg (one narrow pass over the corpus instead of two)."""
+    '+stem' never changes token COUNT and keeps the fast path. A null
+    text is a document with no tokens, as in the kernel."""
     base, stop, _stem = parse_analyzer(tokenizer)
+    text = f"coalesce({text_col}, '')"
     dl_sql = (
-        f"size({spark_tokenize_sql(text_col, base + '+stop')})"
+        f"size({spark_tokenize_sql(text, base + '+stop')})"
         if stop else (
-            f"regexp_count(lower({text_col}), '[a-z0-9]+')"
+            f"regexp_count(lower({text}), '[a-z0-9]+')"
             if base != "unicode" else
-            f"regexp_count(lower({text_col}), '[\\\\p{{L}}\\\\p{{N}}]+')"
+            f"regexp_count(lower({text}), '[\\\\p{{L}}\\\\p{{N}}]+')"
         )
     )
-    return [F.count(F.lit(1)).alias("n_docs"), F.avg(F.expr(dl_sql)).alias("avgdl")]
-
-
-def _stats_of(row) -> dict:
+    row = df_docs.agg(F.count(F.lit(1)).alias("n_docs"),
+                      F.avg(F.expr(dl_sql)).alias("avgdl")).first()
     return {"n_docs": row["n_docs"], "avgdl": float(row["avgdl"] or 0.0)}
+
+
+def _corpus_stats(rows: list[dict]) -> dict:
+    """A fresh build's stats.json numbers from its manifest rows: n_docs
+    and avgdl over every row, and avgdl_min, the smallest `shard_avgdl`
+    any row's blocks were encoded against (the corpus avgdl when that is
+    smaller), so `avgdl / avgdl_min` bounds every block's staleness."""
+    n_docs = sum(r["rows"] for r in rows)
+    n_tokens = sum(r["n_tokens"] for r in rows)
+    avgdl = n_tokens / n_docs if n_docs else 0.0
+    return {"n_docs": n_docs, "avgdl": avgdl, "avgdl_min": min(
+        [avgdl] + [shard_avgdl(r["n_tokens"], r["rows"])
+                   for r in rows if r["n_tokens"]])}
 
 
 def _assign_doc_ids_convmap(
@@ -456,7 +488,14 @@ def build_index(
     conv_id lineage column is synthesized from doc_id if absent.
 
     A fresh build (neither resume nor incremental) raises
-    layout.IndexExistsError when index_dir already holds an index."""
+    layout.IndexExistsError when index_dir already holds an index.
+
+    A fresh or resumed build publishes stats.json LAST, after its
+    blocks, manifest rows and dictionary, with the numbers of every
+    shard done so far (`_corpus_stats`): a build that fails before it
+    leaves no stats.json, so a retry sees no index instead of an index
+    with stats and no blocks. An incremental build publishes its merged
+    stats first, before its segment."""
     from data_prepper_spark.index.reader import load_stats
 
     if not (resume or incremental):
@@ -484,23 +523,35 @@ def build_index(
     ext_shard_from_doc = not assign_ids and "conv_id" not in transcripts.columns
     if ext_shard_from_doc:
         transcripts = transcripts.withColumn("conv_id", F.col("doc_id").cast("string"))
+    if assign_ids:
+        # rows without a conv_id have no doc_id under either id scheme:
+        # they are not documents of the index
+        transcripts = transcripts.filter(F.col("conv_id").isNotNull())
     os.makedirs(index_dir, exist_ok=True)
-    # id scheme: fresh builds detect it (arithmetic conv-N packing when
-    # it applies, persisted convmap for arbitrary — UUID — schemes) in
-    # the same narrow agg that computes the corpus stats; resume and
-    # incremental builds reuse the persisted decision, since mixing
-    # schemes would fork the doc_id space.
-    corpus_stats = None
+    manifest_path = os.path.join(index_dir, "manifest")
+    done_rows: list[dict] = []
+    if resume and os.path.exists(manifest_path):
+        done_rows = layout.read_table(
+            manifest_path, MANIFEST_SCHEMA.names, [("status", "==", "done")],
+        ).to_pylist()
+    # one narrow pass before the kernel, only when no stats.json holds
+    # its answers: the id scheme (arithmetic conv-N packing when it
+    # applies, a persisted convmap for arbitrary — UUID — schemes) and
+    # the row count, for the empty corpus. It tokenizes nothing: the
+    # kernel counts the tokens. Resume and incremental builds reuse the
+    # persisted id scheme, since mixing schemes would fork the doc_id
+    # space.
+    n_rows = None
+    if old is None:
+        row = transcripts.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *(arith_scheme_aggs() if assign_ids else [])).first()
+        n_rows = row["n_rows"]
     if assign_ids:
         if old is not None:
             id_scheme = old.get("id_scheme", "arith")
         else:
-            # the convmap join drops rows without a conv_id: they are
-            # not documents of the index
-            row = transcripts.filter(F.col("conv_id").isNotNull()).agg(
-                *arith_scheme_aggs(), *_stats_aggs("text", tokenizer)).first()
             id_scheme = "arith" if arith_scheme_ok(row) else "convmap"
-            corpus_stats = _stats_of(row)
         docs_assigned = (
             assign_doc_ids(transcripts) if id_scheme == "arith"
             else _assign_doc_ids_convmap(spark, transcripts, index_dir)
@@ -509,7 +560,7 @@ def build_index(
         id_scheme = "external"
         docs_assigned = transcripts
     if resume and old is not None:
-        stats = old
+        stats = dict(old)
         tokenizer = stats.get("tokenizer", "ascii")
     elif incremental:
         # CDC append (snapshots-between semantics of the reference's
@@ -539,29 +590,16 @@ def build_index(
         )
         layout.publish_file(stats_path, json.dumps(stats))
     else:
-        stats = corpus_stats or compute_stats(docs_assigned, tokenizer=tokenizer)
-        stats.update(
-            n_shards=n_shards, block_size=block_size, k1=K1, b=B,
-            snapshot_id=snapshot_id, avgdl_min=stats["avgdl"],
+        # n_docs, avgdl and avgdl_min come from the manifest rows once
+        # the blocks are written
+        stats = dict(
+            n_docs=0, avgdl=0.0, n_shards=n_shards, block_size=block_size,
+            k1=K1, b=B, snapshot_id=snapshot_id, avgdl_min=0.0,
             positions=store_positions, id_scheme=id_scheme,
             tokenizer=tokenizer,
             shard_key=("doc_id" if ext_shard_from_doc else "conv_id"),
         )
-        layout.publish_file(stats_path, json.dumps(stats))
-
-    done: set[int] = set()
-    manifest_path = os.path.join(index_dir, "manifest")
-    if resume and os.path.exists(manifest_path):
-        mdf = spark.read.parquet(manifest_path)
-        done = {r["shard"] for r in mdf.filter(F.col("status") == "done").collect()}
-
-    docs = docs_assigned.withColumn(
-        "shard", F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)).cast("int")
-    )
-    target = [s for s in (shards_subset or range(n_shards)) if s not in done]
-    if not target:
-        return stats
-    if stats["n_docs"] == 0 and not incremental:
+    if n_rows == 0:
         # empty corpus: persist an empty (but schema-complete) dictionary
         # so the query engine opens cleanly and returns zero hits
         empty = spark.createDataFrame([], "term string, df long")
@@ -569,47 +607,57 @@ def build_index(
             index_dir, "dictionary",
             lambda p: empty.write.mode("overwrite").parquet(p),
         )
+        layout.publish_file(stats_path, json.dumps(stats))
         return stats
-    docs = docs.filter(F.col("shard").isin(target))
 
-    metrics = spark.sparkContext.accumulator({}, ShardMetrics())
-    blocks = (
-        spread_by_shard(docs.select("shard", "doc_id", "conv_id", "text"))
-        .groupBy("shard")
-        .applyInPandas(
-            _spimi_kernel(
-                stats["avgdl"], block_size, metrics, seg=snapshot_id,
-                store_positions=store_positions, tokenizer=tokenizer,
-            ),
-            schema=BLOCK_SCHEMA,
+    done = {int(r["shard"]) for r in done_rows}
+    target = [s for s in (shards_subset or range(n_shards)) if s not in done]
+    new_rows: list[dict] = []
+    if target:
+        docs = docs_assigned.withColumn(
+            "shard", F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)).cast("int")
+        ).filter(F.col("shard").isin(target))
+        metrics = spark.sparkContext.accumulator({}, ShardMetrics())
+        blocks = (
+            spread_by_shard(docs.select("shard", "doc_id", "conv_id", "text"))
+            .groupBy("shard")
+            .applyInPandas(
+                _spimi_kernel(
+                    stats["avgdl"] if incremental else None, block_size,
+                    metrics, seg=snapshot_id,
+                    store_positions=store_positions, tokenizer=tokenizer,
+                ),
+                schema=BLOCK_SCHEMA,
+            )
         )
-    )
-    # rows already arrive grouped per shard from applyInPandas — no
-    # extra shuffle before the partitioned write; kernel emits rows
-    # sorted by term (row-group pruning on term at query time).
-    # Partitioning by (shard, seg) makes a segment's files addressable
-    # by directory, so incremental maintenance below never lists or
-    # opens historical segments' files.
-    (
-        blocks.write.mode("append")
-        .partitionBy("shard", "seg")
-        .parquet(layout.resolve(index_dir, "blocks"))
-    )
-
-    # checkpoint manifest: lineage + metrics per shard (FIXTURES.md §4),
-    # as the kernel tasks reported them to the accumulator. A pandas
-    # frame goes to the JVM through Arrow; a list of rows would run
-    # Python tasks to convert it.
-    mrows = pd.DataFrame(
-        [(shard, "done", m["n_docs"], m["n_postings"], m["n_tokens"],
-          m["wall_ms"],
-          f"conv_id in [{m['min_conv']}, {m['max_conv']}] (hash-sharded)",
-          snapshot_id)
-         for shard, m in sorted(ShardMetrics.drain(metrics).items())],
-        columns=[f.split()[0] for f in MANIFEST_SCHEMA.split(", ")],
-    )
-    spark.createDataFrame(mrows, MANIFEST_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(manifest_path)
+        # rows already arrive grouped per shard from applyInPandas — no
+        # extra shuffle before the partitioned write; kernel emits rows
+        # sorted by term (row-group pruning on term at query time).
+        # Partitioning by (shard, seg) makes a segment's files
+        # addressable by directory, so incremental maintenance below
+        # never lists or opens historical segments' files.
+        (
+            blocks.write.mode("append")
+            .partitionBy("shard", "seg")
+            .parquet(layout.resolve(index_dir, "blocks"))
+        )
+        # checkpoint manifest: lineage + metrics per shard (FIXTURES.md
+        # §4), as the kernel tasks reported them to the accumulator,
+        # appended on the driver: a few rows need no Spark job
+        new_rows = [
+            {"shard": shard, "status": "done", "rows": m["n_docs"],
+             "n_postings": m["n_postings"], "n_tokens": m["n_tokens"],
+             "wall_ms": m["wall_ms"],
+             "input_desc": f"conv_id in [{m['min_conv']}, {m['max_conv']}] "
+                           "(hash-sharded)",
+             "snapshot_id": snapshot_id}
+            for shard, m in sorted(ShardMetrics.drain(metrics).items())
+        ]
+        if new_rows:
+            layout.append_table(
+                manifest_path, pa.Table.from_pylist(new_rows, MANIFEST_SCHEMA))
+    elif old is not None:
+        return stats
 
     # global dictionary (term -> df). Incremental appends aggregate ONLY
     # the new segment's partition directories (seg is a partition column,
@@ -646,6 +694,9 @@ def build_index(
             index_dir, "dictionary",
             lambda p: dic.write.mode("overwrite").parquet(p),
         )
+    if not incremental and (new_rows or old is None):
+        stats.update(_corpus_stats(done_rows + new_rows))
+        layout.publish_file(stats_path, json.dumps(stats))
     return stats
 
 
@@ -716,7 +767,14 @@ def delete_conversations_by_id(
 
     stats = load_stats(index_dir)
     scheme = stats.get("id_scheme", "arith")
-    df = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
+    if not conv_ids:
+        return
+    # a pandas frame goes to the JVM through Arrow as a LocalRelation; a
+    # list of tuples would run Python tasks to convert it (and so would
+    # an empty frame, hence the return above)
+    df = spark.createDataFrame(
+        pd.DataFrame({"conv_id": pd.Series(conv_ids, dtype=object)}),
+        "conv_id string")
     ranges = serials_to_ranges(
         resolve_conv_serials(spark, index_dir, df, scheme)
     )

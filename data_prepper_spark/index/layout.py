@@ -23,7 +23,8 @@ re-resolves per action, so immediate GC is safe here.)
 ``resolve`` falls back to the legacy un-versioned ``<index>/<name>``
 path when no pointer exists, so pre-existing indexes keep working and
 append-only artifacts (segment appends, manifest, tombstones) never
-need a version bump.
+need a version bump; ``append_table`` adds one file to such a table
+from the driver.
 
 Reads resolve through the pyarrow filesystem the path names (``read_text``,
 ``exists``, ``read_table``), so an index named by a URI (``file://``,
@@ -42,6 +43,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import uuid
 from typing import Callable
 
 
@@ -105,6 +107,26 @@ def publish_file(path: str, content: str) -> None:
     with open(tmp, "w") as f:
         f.write(content)
     os.rename(tmp, path)
+
+
+def append_table(path: str, table) -> str:
+    """Add one parquet file holding pyarrow `table` to the append-only
+    table directory `path` (the build manifest), under a name no other
+    append takes. It is written under a hidden temp name and renamed,
+    so a reader (Spark and pyarrow both skip names starting with '.')
+    never lists a partial file. The table is a few rows, so neither
+    dictionary pages nor column statistics would pay for their bytes.
+    Local paths, like publish_file. Returns the file's path."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp, compression="snappy", store_schema=False,
+                   use_dictionary=False, write_statistics=False)
+    final = os.path.join(path, name)
+    os.rename(tmp, final)
+    return final
 
 
 def publish_dir(

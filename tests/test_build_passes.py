@@ -1,13 +1,16 @@
 """The build's passes and what they leave behind.
 
-A fresh build is one narrow corpus agg, the SPIMI kernel stage at the
-session's shuffle width, the manifest append and the dictionary. The
-kernel reports its per-shard metrics through an accumulator, so the
-blocks table holds postings only and the manifest is exact. Indexes
+A fresh build is one narrow corpus agg (the id scheme and a row count),
+the SPIMI kernel stage at the session's shuffle width and the
+dictionary; the driver appends the manifest rows with pyarrow, and
+stats.json comes from them. The kernel reports its per-shard metrics
+through an accumulator, so the blocks table holds postings only and the
+manifest is exact. Indexes
 written by older builds, whose blocks carry one metrics row per (shard,
 seg), stay readable, checkable and compactable.
 
-Pinned here: the Spark jobs of a fresh build and of an upsert, the
+Pinned here: the Spark jobs of a fresh build, of an upsert and of a
+delete by conv_id (whose id frame is a LocalRelation), the
 kernel stage's task count, postings-only blocks and an exact manifest
 after a fresh build, a crash-and-resume, an upsert and a compaction,
 and the old layout under check_index, compact_index and score_topk."""
@@ -17,6 +20,7 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+import uuid
 
 import pandas as pd
 import pyarrow.parquet as pq
@@ -25,7 +29,7 @@ from pyspark.sql import functions as F
 
 from data_prepper_spark.data.transcripts import generate_pandas, generate_queries
 from data_prepper_spark.index import build as ib
-from data_prepper_spark.index import layout
+from data_prepper_spark.index import layout, tombstones
 from data_prepper_spark.index.check import check_index
 from data_prepper_spark.oracle import bm25 as oracle
 from data_prepper_spark.query import engine
@@ -123,16 +127,16 @@ def test_fresh_build_and_upsert_job_counts(spark, corpus_pdf, tmp_path):
     corpus = spark.createDataFrame(corpus_pdf)
     _stats, jobs = _jobs(spark, lambda: ib.build_index(
         spark, corpus, d, n_shards=N_SHARDS, block_size=16))
-    # corpus agg (2), kernel stage + blocks write (2), manifest (1),
-    # dictionary (2)
-    assert jobs <= 7
+    # corpus agg (2), kernel stage + blocks write (2), dictionary (2);
+    # the manifest is appended on the driver
+    assert jobs <= 6
     # the upsert's id check, serial ranges and tombstones, then an
-    # incremental build (its stats agg, kernel stage, manifest and
-    # dictionary merge)
+    # incremental build (its stats agg, kernel stage and dictionary
+    # merge; the manifest is appended on the driver)
     batch = spark.createDataFrame(_upsert_batch())
     _stats, jobs = _jobs(spark, lambda: ib.upsert_conversations(
         spark, batch, d, snapshot_id=1))
-    assert jobs <= 18
+    assert jobs <= 17
     # the merge kernel stage and its write (2), the dictionary (2)
     _stats, jobs = _jobs(spark, lambda: ib.compact_index(spark, d))
     assert jobs <= 4
@@ -296,3 +300,48 @@ def test_legacy_meta_rows_compact_like_fresh_build(spark, legacy_meta_index,
     got, ref = _topk(spark, d, qpdf), _topk(spark, fresh, qpdf)
     assert len(ref) and list(got.doc_id) == list(ref.doc_id)
     assert (abs(got.score - ref.score) < 1e-9).all()
+
+
+def _uuid(conv_id: str) -> str:
+    return str(uuid.uuid5(uuid.NAMESPACE_URL, conv_id))
+
+
+@pytest.mark.parametrize("scheme", ["arith", "convmap"])
+def test_delete_by_conv_id_frame_is_local(spark, corpus_pdf, tmp_path,
+                                          monkeypatch, scheme):
+    """delete_conversations_by_id turns its conv_ids into a frame the
+    optimizer sees as a LocalRelation (a pandas frame through Arrow, no
+    Python tasks), and tombstones the same doc_id ranges as a frame
+    built from a list of rows, under either id scheme."""
+    pdf = corpus_pdf if scheme == "arith" else \
+        corpus_pdf.assign(conv_id=corpus_pdf.conv_id.map(_uuid))
+    d = str(tmp_path / "idx")
+    stats = ib.build_index(spark, spark.createDataFrame(pdf), d,
+                           n_shards=N_SHARDS, block_size=16)
+    assert stats["id_scheme"] == scheme
+    convs = sorted(pdf.conv_id.unique())
+    victims = [convs[i] for i in (3, 4, 5, 40)] + ["never-seen"]
+    want = sorted(ib.serials_to_ranges(ib.resolve_conv_serials(
+        spark, d, spark.createDataFrame([(c,) for c in victims],
+                                        "conv_id string"), scheme)))
+    assert len(want) == 2
+
+    plans, written = [], []
+    resolve, write = ib.resolve_conv_serials, tombstones.write_tombstones
+
+    def spy_resolve(spark_, d_, df, scheme_):
+        plans.append(df._jdf.queryExecution().optimizedPlan()
+                     .getClass().getSimpleName())
+        return resolve(spark_, d_, df, scheme_)
+
+    def spy_write(spark_, d_, ranges, *a, **k):
+        written.append(sorted(ranges))
+        return write(spark_, d_, ranges, *a, **k)
+
+    monkeypatch.setattr(ib, "resolve_conv_serials", spy_resolve)
+    monkeypatch.setattr(tombstones, "write_tombstones", spy_write)
+    ib.delete_conversations_by_id(spark, d, victims)
+    assert plans == ["LocalRelation"]
+    assert written == [want]
+    tomb = tombstones.load_tombstones(spark, d)
+    assert sorted(zip(tomb.starts.tolist(), tomb.ends.tolist())) == want

@@ -175,3 +175,35 @@ def test_streaming_index_end_to_end(spark, dirs):
     # empty batch: no new segment
     sink(spark.createDataFrame([], TSCHEMA), 99)
     assert load_stats(idx)["snapshot_id"] == s2["snapshot_id"]
+
+
+def test_failed_first_batch_replays_into_a_full_index(spark, dirs, monkeypatch):
+    """The first micro-batch is a fresh build. If it fails after its
+    index dir exists, the replay of that epoch must build the batch
+    again: stats.json is published last, so a failed build leaves none
+    behind to mark the epoch committed, and no index that holds stats
+    and no blocks answers queries with zero hits."""
+    _src, _ckpt, idx = dirs
+    pdf = generate_pandas(0, 40)
+    batch = spark.createDataFrame(pdf)
+    sink = streaming_index_sink(idx, n_shards=4)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected build failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(ib, "spread_by_shard", boom)
+        with pytest.raises(RuntimeError, match="injected build failure"):
+            sink(batch, 0)
+
+    sink(batch, 0)  # the replay
+    assert load_stats(idx)["n_docs"] == len(pdf)
+    doc_ids = pdf.conv_id.str.slice(5).astype(int) * DOC_ID_STRIDE + pdf.turn_idx
+    oidx = oracle.build_index(list(zip(doc_ids, pdf.text)))
+    qpdf = pd.DataFrame(generate_queries(10))
+    orc = pd.DataFrame(oracle.score_queries(
+        oidx, list(qpdf.itertuples(index=False, name=None))))
+    got = engine.score_topk(spark, idx, qpdf.to_dict("records")).toPandas()
+    assert len(orc) and len(got) == len(orc)
+    assert list(got.sort_values(["query_id", "rank"]).doc_id) == \
+        list(orc.sort_values(["query_id", "rank"]).doc_id)
