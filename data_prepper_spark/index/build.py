@@ -16,24 +16,34 @@ index/AbstractIndexManager.java):
                     128-posting blocks -> delta+varint gaps, varint tf/dl,
                     float64 block-max partial scores against the
                     shard's own mean dl (n_tokens / n_docs)
-               --write parquet partitioned by shard, sorted by term
-                 (row-group pruning on term at query time)
+                 -> writes the shard's blocks itself, with pyarrow, as
+                    blocks/shard=S/seg=G/part-<S>-<G>.snappy.parquet,
+                    sorted by term (row-group pruning on term at query
+                    time; write_segment), and returns the shard's
+                    (term, n) df partials
+               --groupBy(term).sum(n) -> dictionary
+    dictionary  = per-term global df, summed from the kernel's partials
+                  in the same job chain (partial-agg safe); a resume adds
+                  the blocks of the shards already done, an incremental
+                  append the old dictionary
     manifest/   = per-shard checkpoint: lineage + build metrics + status;
                   the kernel reports its per-shard metrics through a
                   Spark accumulator, so the blocks table holds postings
-                  only; the driver appends the rows with pyarrow
-    dictionary  = per-term global df (term-level agg; partial-agg safe)
+                  only; the driver appends the rows with pyarrow after
+                  the dictionary
     stats.json  = {n_docs, avgdl, avgdl_min, ...}, published LAST, from
                   the manifest: n_docs = sum of rows, avgdl = sum of
                   n_tokens / sum of rows, avgdl_min = the smallest
                   shard mean, which keeps block-max bounds provable
                   (IndexReader.ub_scale)
 
-A fresh build of a conv-N corpus is 6 Spark jobs: the corpus agg (2),
-the kernel stage and its write (2) and the dictionary (2). It tokenizes
-the corpus once, in the kernel; incremental appends still count tokens
-in a JVM pass first (compute_stats), since their blocks are encoded
-against the merged avgdl.
+A fresh build of a conv-N corpus is 5 Spark jobs: the corpus agg (2)
+and one chain (3) of the exchange, the kernel stage and the dictionary
+write. No Spark parquet writer sees a block and no job re-reads one
+(except a resume's scan of its done shards). It tokenizes the corpus
+once, in the kernel; incremental appends still count tokens in a JVM
+pass first (compute_stats), since their blocks are encoded against the
+merged avgdl.
 
 Why this scales to 10^12 turns / 1000 executors:
 - postings for a hot term are split across ALL shards by doc — no
@@ -51,18 +61,24 @@ Why this scales to 10^12 turns / 1000 executors:
 - resume skips completed shards entirely (manifest-gated), so a failed
   10-hour build restarts with only missing shards (mirrors the
   reference's LeaseBasedSourceCoordinator per-partition progress,
-  data-prepper-core/.../LeaseBasedSourceCoordinator.java:157-349).
+  data-prepper-core/.../LeaseBasedSourceCoordinator.java:157-349); a
+  segment file's name is a function of (shard, seg), and a build
+  clears its target shards' segment dirs first, so a retried task or a
+  resume replaces a shard's postings, never adds a second copy.
 
-Iceberg note: this sandbox has no Iceberg runtime jar, so tables are
-parquet dirs + a manifest side table with snapshot/lineage columns (the
-layout the SURVEY §7.3 fallback specifies). On a real cluster swap
-`.parquet(...)` for `.format("iceberg")` — the logical plan is unchanged.
+Iceberg note: with no Iceberg runtime jar available, tables are parquet
+dirs + a manifest side table with snapshot/lineage columns (the layout
+the SURVEY §7.3 fallback specifies). The kernels write the block files
+with pyarrow; an Iceberg table would register them as data files
+(Iceberg's add_files) once the job ends.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 import time
 
 import numpy as np
@@ -95,6 +111,17 @@ BLOCK_SCHEMA = (
     "last_doc long, n int, gaps binary, tfs binary, dls binary, "
     "poss binary, max_partial double"
 )
+# the columns of a segment file: `shard` and `seg` are the hive
+# directories it sits in (blocks/shard=S/seg=G/)
+BLOCK_FILE_SCHEMA = pa.schema([
+    ("term", pa.string()), ("block_ord", pa.int32()),
+    ("first_doc", pa.int64()), ("last_doc", pa.int64()), ("n", pa.int32()),
+    ("gaps", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary()),
+    ("poss", pa.binary()), ("max_partial", pa.float64()),
+])
+# what a build or merge kernel returns to Spark: its shard's postings per
+# term, the partial sums of the dictionary's df
+DF_PARTIAL_SCHEMA = "term string, n long"
 # the build manifest, appended on the driver with pyarrow
 MANIFEST_SCHEMA = pa.schema([
     ("shard", pa.int64()), ("status", pa.string()), ("rows", pa.int64()),
@@ -192,6 +219,51 @@ def _encode_posting_blocks(
     }
 
 
+def segment_dir(blocks_dir: str, shard: int, seg: int) -> str:
+    """The directory of one shard's blocks of segment `seg`."""
+    return os.path.join(blocks_dir, f"shard={shard}", f"seg={seg}")
+
+
+def write_segment(
+    blocks_dir: str, shard: int, seg: int, cols: dict,
+) -> pd.DataFrame:
+    """The one blocks writer, called by the SPIMI and merge kernels in
+    their Spark task: `cols` (BLOCK_FILE_SCHEMA's columns, rows sorted by
+    term) become the file `part-<shard>-<seg>.snappy.parquet` of
+    `segment_dir`. The name is a function of (shard, seg) and the file
+    is replaced atomically (`layout.write_table`), so a retried or
+    speculative task, or a resume, replaces it instead of adding a second
+    copy of the shard's postings. A shard with no blocks writes no file.
+
+    Dictionary pages pay on every column but the near-unique `term` and
+    `gaps`; only `term` carries min/max statistics, which is what
+    `term IN (...)` row-group pruning reads.
+
+    Returns the shard's df partials (DF_PARTIAL_SCHEMA): its postings
+    per term, which the caller sums over shards into the dictionary."""
+    table = pa.table(cols, schema=BLOCK_FILE_SCHEMA)
+    if table.num_rows:
+        layout.write_table(
+            os.path.join(segment_dir(blocks_dir, shard, seg),
+                         f"part-{shard}-{seg}.snappy.parquet"),
+            table,
+            use_dictionary=[c for c in BLOCK_FILE_SCHEMA.names
+                            if c not in ("term", "gaps")],
+            write_statistics=["term"])
+    partials = table.group_by("term").aggregate([("n", "sum")])
+    return pd.DataFrame({
+        "term": partials.column("term").to_numpy(zero_copy_only=False),
+        "n": partials.column("n_sum").to_numpy(zero_copy_only=False)
+        .astype(np.int64),
+    })
+
+
+def _sum_partials(parts: DataFrame) -> DataFrame:
+    """The dictionary (term, df) from (term, n) df partials: doc sets
+    are disjoint across shards and segments, so df adds exactly."""
+    return parts.groupBy("term").agg(F.sum("n").alias("df"))
+
+
 def shard_avgdl(n_tokens: int, n_docs: int) -> float:
     """The mean dl a fresh build encodes one shard's block-max partials
     against. The kernel and the driver's `avgdl_min` both call this on
@@ -202,11 +274,14 @@ def shard_avgdl(n_tokens: int, n_docs: int) -> float:
 
 
 def _spimi_kernel(
-    avgdl: float | None, block_size: int, metrics: Accumulator, seg: int = 0,
-    store_positions: bool = True, tokenizer: str = "ascii",
+    avgdl: float | None, block_size: int, metrics: Accumulator,
+    blocks_dir: str, seg: int = 0, store_positions: bool = True,
+    tokenizer: str = "ascii",
 ):
     """Per-shard SPIMI: one pandas DataFrame in (all docs of the shard),
-    compressed block rows out. All vectorized numpy/pandas.
+    compressed block rows written as the shard's file of segment `seg`
+    under `blocks_dir` (`write_segment`), the shard's df partials out.
+    All vectorized numpy/pandas.
 
     Block-max partials are encoded against `avgdl`, or, when it is None
     (a fresh build, which has no corpus avgdl before its blocks), the
@@ -295,25 +370,17 @@ def _spimi_kernel(
             # block-row table (thousands of rows, not millions of
             # postings) keeps the parquet term-sorted
             final = np.argsort(term_all, kind="stable")
-            byte_cols = {"gaps": [], "tfs": [], "dls": [], "poss": []}
-            for k in byte_cols:
-                flat = []
-                for p in parts:
-                    flat.extend(p[k])
-                byte_cols[k] = [flat[i] for i in final]
-            c_term = term_all[final]
-            c_ord = np.concatenate([p["ord"] for p in parts])[final]
-            c_first = np.concatenate([p["first"] for p in parts])[final]
-            c_last = np.concatenate([p["last"] for p in parts])[final]
-            c_n = np.concatenate([p["n"] for p in parts])[final]
-            c_maxp = np.concatenate([p["maxp"] for p in parts])[final]
-            c_gaps, c_tfs, c_dls, c_poss = (
-                byte_cols["gaps"], byte_cols["tfs"], byte_cols["dls"],
-                byte_cols["poss"],
-            )
+            cols = {"term": term_all[final]}
+            for col, key in (("block_ord", "ord"), ("first_doc", "first"),
+                             ("last_doc", "last"), ("n", "n"),
+                             ("max_partial", "maxp")):
+                cols[col] = np.concatenate([p[key] for p in parts])[final]
+            for col in ("gaps", "tfs", "dls", "poss"):
+                flat = [b for p in parts for b in p[col]]
+                cols[col] = [flat[i] for i in final]
         else:
-            c_term, c_ord, c_first, c_last, c_n = [], [], [], [], []
-            c_gaps, c_tfs, c_dls, c_poss, c_maxp = [], [], [], [], []
+            cols = {col: [] for col in BLOCK_FILE_SCHEMA.names}
+        partials = write_segment(blocks_dir, shard, seg, cols)
         metrics.add({shard: {
             "n_docs": int(len(pdf)),
             "n_postings": int(n_postings),
@@ -322,22 +389,7 @@ def _spimi_kernel(
             "min_conv": str(pdf["conv_id"].min()),
             "max_conv": str(pdf["conv_id"].max()),
         }})
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(c_term), shard, dtype=np.int32),
-                "seg": np.full(len(c_term), seg, dtype=np.int64),
-                "term": c_term,
-                "block_ord": np.array(c_ord, dtype=np.int32),
-                "first_doc": np.array(c_first, dtype=np.int64),
-                "last_doc": np.array(c_last, dtype=np.int64),
-                "n": np.array(c_n, dtype=np.int32),
-                "gaps": c_gaps,
-                "tfs": c_tfs,
-                "dls": c_dls,
-                "poss": c_poss,
-                "max_partial": np.array(c_maxp, dtype=np.float64),
-            }
-        )
+        return partials
 
     return build
 
@@ -491,7 +543,8 @@ def build_index(
     layout.IndexExistsError when index_dir already holds an index.
 
     A fresh or resumed build publishes stats.json LAST, after its
-    blocks, manifest rows and dictionary, with the numbers of every
+    blocks and dictionary (one job chain) and its manifest rows, with
+    the numbers of every
     shard done so far (`_corpus_stats`): a build that fails before it
     leaves no stats.json, so a retry sees no index instead of an index
     with stats and no blocks. An incremental build publishes its merged
@@ -612,35 +665,54 @@ def build_index(
 
     done = {int(r["shard"]) for r in done_rows}
     target = [s for s in (shards_subset or range(n_shards)) if s not in done]
-    new_rows: list[dict] = []
+    if not target and old is not None:
+        return stats
+    blocks_dir = layout.resolve(index_dir, "blocks")
+    # the dictionary is the sum of (term, n) df partials: the kernel's
+    # for the target shards, plus the blocks of the shards a resume
+    # finds done (a partition-pruned scan; none on a fresh build), or
+    # the old dictionary of an incremental append
+    parts: list[DataFrame] = []
     if target:
+        # a resume rewrites its target shards whole: an earlier
+        # attempt's files of this segment (of any name) go first
+        for shard in target:
+            shutil.rmtree(segment_dir(blocks_dir, shard, snapshot_id),
+                          ignore_errors=True)
         docs = docs_assigned.withColumn(
             "shard", F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)).cast("int")
         ).filter(F.col("shard").isin(target))
         metrics = spark.sparkContext.accumulator({}, ShardMetrics())
-        blocks = (
+        parts.append(
             spread_by_shard(docs.select("shard", "doc_id", "conv_id", "text"))
             .groupBy("shard")
             .applyInPandas(
                 _spimi_kernel(
                     stats["avgdl"] if incremental else None, block_size,
-                    metrics, seg=snapshot_id,
+                    metrics, blocks_dir, seg=snapshot_id,
                     store_positions=store_positions, tokenizer=tokenizer,
                 ),
-                schema=BLOCK_SCHEMA,
+                schema=DF_PARTIAL_SCHEMA,
             )
         )
-        # rows already arrive grouped per shard from applyInPandas — no
-        # extra shuffle before the partitioned write; kernel emits rows
-        # sorted by term (row-group pruning on term at query time).
-        # Partitioning by (shard, seg) makes a segment's files
-        # addressable by directory, so incremental maintenance below
-        # never lists or opens historical segments' files.
-        (
-            blocks.write.mode("append")
-            .partitionBy("shard", "seg")
-            .parquet(layout.resolve(index_dir, "blocks"))
+    if incremental:
+        parts.append(spark.read.parquet(layout.resolve(index_dir, "dictionary"))
+                     .select("term", F.col("df").alias("n")))
+    elif done:
+        parts.append(
+            spark.read.schema(BLOCK_SCHEMA).parquet(blocks_dir)
+            .filter(F.col("shard").isin(sorted(done)) & (F.col("block_ord") >= 0))
+            .select("term", F.col("n").cast("long"))
         )
+    dic = _sum_partials(functools.reduce(DataFrame.unionByName, parts))
+    # the pointer-flip publish (index/layout.py) keeps a readable
+    # dictionary at every instant — on object stores too
+    layout.publish_dir(index_dir, "dictionary",
+                       lambda p: dic.write.parquet(p))
+    new_rows: list[dict] = []
+    if target:
+        # a corpus whose texts hold no token wrote no segment file
+        os.makedirs(blocks_dir, exist_ok=True)
         # checkpoint manifest: lineage + metrics per shard (FIXTURES.md
         # §4), as the kernel tasks reported them to the accumulator,
         # appended on the driver: a few rows need no Spark job
@@ -656,44 +728,6 @@ def build_index(
         if new_rows:
             layout.append_table(
                 manifest_path, pa.Table.from_pylist(new_rows, MANIFEST_SCHEMA))
-    elif old is not None:
-        return stats
-
-    # global dictionary (term -> df). Incremental appends aggregate ONLY
-    # the new segment's partition directories (seg is a partition column,
-    # so historical segments are pruned at file-listing time — a 100 TB
-    # index's CDC append reads zero old blocks) and union-merge with the
-    # previous dictionary. Fresh/resume builds rebuild from all blocks
-    # (resume may have added shards the old dictionary never saw).
-    all_blocks = spark.read.schema(BLOCK_SCHEMA).parquet(
-        layout.resolve(index_dir, "blocks"))
-    dict_path = layout.resolve(index_dir, "dictionary")
-    if incremental and os.path.exists(dict_path):
-        new_agg = (
-            all_blocks
-            .filter(F.col("shard").isin(target) & (F.col("seg") == snapshot_id))
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
-        )
-        merged = (
-            spark.read.parquet(dict_path)
-            .unionByName(new_agg)
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
-        # doc sets are disjoint across segments, so df adds exactly.
-        # The pointer-flip publish (index/layout.py) keeps a readable
-        # dictionary at every instant — on object stores too.
-        layout.publish_dir(
-            index_dir, "dictionary",
-            lambda p: merged.write.mode("overwrite").parquet(p),
-        )
-    else:
-        dic = all_blocks.groupBy("term").agg(F.sum("n").alias("df"))
-        layout.publish_dir(
-            index_dir, "dictionary",
-            lambda p: dic.write.mode("overwrite").parquet(p),
-        )
     if not incremental and (new_rows or old is None):
         stats.update(_corpus_stats(done_rows + new_rows))
         layout.publish_file(stats_path, json.dumps(stats))
@@ -782,10 +816,12 @@ def delete_conversations_by_id(
 
 
 def _compact_kernel(avgdl: float, block_size: int, deleted: Accumulator,
-                    tomb=None, merged_seg: int = 0):
+                    blocks_dir: str, tomb=None, merged_seg: int = 0):
     """Per-shard segment merge (Lucene's merge policy analog): decode
     every (term, seg) posting run, k-way merge to one doc-sorted run per
-    term, re-encode as `merged_seg` blocks (a NEW segment id greater
+    term, re-encode as `merged_seg` blocks written under `blocks_dir`
+    (`write_segment`; the shard's df partials are the kernel's output;
+    `merged_seg` is a NEW segment id greater
     than any tombstone's upto_seg, like Lucene naming a merged segment
     fresh — so a crash before clear_tombstones cannot make stale
     tombstones hide the merged docs). Block-max partials are RECOMPUTED
@@ -852,7 +888,8 @@ def _compact_kernel(avgdl: float, block_size: int, deleted: Accumulator,
                 }})
                 keep_idx = np.flatnonzero(~del_mask)
         if keep_idx is not None and not len(keep_idx):
-            return pdf.head(0)
+            return write_segment(blocks_dir, shard, merged_seg, {
+                c: [] for c in BLOCK_FILE_SCHEMA.names})
         docs_f = docs[keep_idx] if keep_idx is not None else docs
         tfs_f = tfs[keep_idx] if keep_idx is not None else tfs
         dls_f = dls[keep_idx] if keep_idx is not None else dls
@@ -878,22 +915,13 @@ def _compact_kernel(avgdl: float, block_size: int, deleted: Accumulator,
         enc = _encode_posting_blocks(
             tcg, docs, tfs, dls, partial, block_size, positions=positions
         )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(enc["ord"]), shard, dtype=np.int32),
-                "seg": np.full(len(enc["ord"]), merged_seg, dtype=np.int64),
-                "term": uniq_terms[enc["term_key"]],
-                "block_ord": enc["ord"],
-                "first_doc": enc["first"],
-                "last_doc": enc["last"],
-                "n": enc["n"],
-                "gaps": enc["gaps"],
-                "tfs": enc["tfs"],
-                "dls": enc["dls"],
-                "poss": enc["poss"],
-                "max_partial": enc["maxp"],
-            }
-        )
+        return write_segment(blocks_dir, shard, merged_seg, {
+            "term": uniq_terms[enc["term_key"]], "block_ord": enc["ord"],
+            "first_doc": enc["first"], "last_doc": enc["last"],
+            "n": enc["n"], "gaps": enc["gaps"], "tfs": enc["tfs"],
+            "dls": enc["dls"], "poss": enc["poss"],
+            "max_partial": enc["maxp"],
+        })
 
     return run
 
@@ -913,14 +941,16 @@ def compact_index(
     refreshed against the current avgdl (stats.avgdl_min resets, so the
     query engine stops inflating upper bounds). Plan: one narrow read of
     each shard's blocks -> one exchange at the session's shuffle width ->
-    applyInPandas merge kernel, one shard per call -> rewrite; shards
-    are independent, so a 1000-executor cluster compacts 1000 shards at
+    applyInPandas merge kernel, one shard per call, which writes the
+    shard's merged segment file (write_segment) -> groupBy(term) sum of
+    the kernels' df partials -> dictionary: one job chain; shards are
+    independent, so a 1000-executor cluster compacts 1000 shards at
     once.
 
     Tombstones (delete/upsert, Lucene merge semantics): tombstoned
     postings are physically removed, (n_docs, avgdl) are corrected by
     the EXACT deleted (doc, dl) deltas observed during the merge, the
-    dictionary is rebuilt from the compacted blocks (df shrinks; terms
+    dictionary is summed from the merged postings (df shrinks; terms
     whose postings all died disappear), and the tombstone set is cleared
     — a post-compaction query is rank-identical to a fresh build over
     the reduced corpus. One caveat: a tombstoned doc that had ZERO
@@ -928,11 +958,15 @@ def compact_index(
     observed or reclaimed here (Lucene has the same blind spot only for
     fully-empty docs; compute_stats on a rebuild would count them).
 
-    Commit protocol (index/layout.py): the compacted blocks and rebuilt
-    dictionary are published as versioned dirs behind pointer files —
-    a crash at ANY step leaves the index readable, on a path-style
-    object store as well as a local FS. Crash windows: after the blocks
-    flip but before the stats write, queries run with slightly stale
+    Commit protocol (index/layout.py publish_dirs): the one job writes
+    the compacted blocks and the dictionary into new versioned dirs;
+    only then do the pointer files flip, `blocks` before `dictionary`,
+    and the old versions go — a crash at ANY step leaves the index
+    readable, on a path-style object store as well as a local FS. The
+    dictionary is published on every run. Crash windows: between the
+    two flips, compacted blocks with the old dictionary (whose df is
+    stale only where tombstoned postings were dropped); after the flips
+    but before the stats write, queries run with slightly stale
     (n_docs, avgdl) — the same staleness class incremental appends
     already have; after stats but before clear_tombstones, the stale
     tombstones are inert (their upto_seg predates the merged segment
@@ -945,20 +979,23 @@ def compact_index(
     bs = block_size or int(stats.get("block_size", 128))
     merged_seg = int(stats.get("snapshot_id", 0)) + 1
     deleted = spark.sparkContext.accumulator({}, ShardMetrics())
-    compacted = (
-        spread_by_shard(reader.postings)
-        .groupBy("shard")
-        .applyInPandas(
-            _compact_kernel(stats["avgdl"], bs, deleted, tomb=tomb,
-                            merged_seg=merged_seg),
-            schema=BLOCK_SCHEMA,
+
+    def merge(paths: dict[str, str]) -> None:
+        # the merge kernels write the blocks; the job's output is the
+        # dictionary, summed from their df partials
+        os.makedirs(paths["blocks"])
+        partials = (
+            spread_by_shard(reader.postings)
+            .groupBy("shard")
+            .applyInPandas(
+                _compact_kernel(stats["avgdl"], bs, deleted, paths["blocks"],
+                                tomb=tomb, merged_seg=merged_seg),
+                schema=DF_PARTIAL_SCHEMA,
+            )
         )
-    )
-    layout.publish_dir(
-        index_dir, "blocks",
-        lambda p: compacted.write.mode("overwrite")
-        .partitionBy("shard", "seg").parquet(p),
-    )
+        _sum_partials(partials).write.parquet(paths["dictionary"])
+
+    layout.publish_dirs(index_dir, ["blocks", "dictionary"], merge)
     if tomb is not None:
         # exact stats correction from the per-shard deltas the merge saw
         per_shard = ShardMetrics.drain(deleted).values()
@@ -975,17 +1012,6 @@ def compact_index(
         # correction moved avgdl (partial is monotone in avgdl)
         stats["avgdl_min"] = min(stats["avgdl"], avgdl_new)
         stats["n_docs"], stats["avgdl"] = n_new, avgdl_new
-        # df changed -> rebuild the dictionary from the compacted blocks
-        # (published through the same pointer-flip protocol)
-        dic = (
-            spark.read.schema(BLOCK_SCHEMA)
-            .parquet(layout.resolve(index_dir, "blocks"))
-            .groupBy("term").agg(F.sum("n").alias("df"))
-        )
-        layout.publish_dir(
-            index_dir, "dictionary",
-            lambda p: dic.write.mode("overwrite").parquet(p),
-        )
     else:
         stats["avgdl_min"] = stats["avgdl"]
     stats["snapshot_id"] = merged_seg

@@ -24,12 +24,16 @@ re-resolves per action, so immediate GC is safe here.)
 path when no pointer exists, so pre-existing indexes keep working and
 append-only artifacts (segment appends, manifest, tombstones) never
 need a version bump; ``append_table`` adds one file to such a table
-from the driver.
+from the driver. ``write_table`` is the one pyarrow file write (temp
+name, then an atomic replace): the manifest's appends and the build
+kernels' segment files both go through it. ``publish_dirs`` commits
+several directory-artifacts that one job writes (a compaction's blocks
+and dictionary), flipping their pointers in a fixed order.
 
 Reads resolve through the pyarrow filesystem the path names (``read_text``,
 ``exists``, ``read_table``), so an index named by a URI (``file://``,
 ``s3://``, ``hdfs://``) reads like a local one; writes (``publish_file``,
-``publish_dir``) are local. This module is the only code that maps an
+``publish_dir(s)``, ``write_table``) are local. This module is the only code that maps an
 artifact name to a path; everything that reads index state goes through
 ``index/reader.py``.
 
@@ -48,9 +52,10 @@ from typing import Callable
 
 
 class IndexExistsError(FileExistsError):
-    """A fresh build into a directory that already holds an index. The
-    blocks table is written in append mode, so building over it would
-    leave a second copy of every posting (doubled df, wrong scores)."""
+    """A fresh build into a directory that already holds an index.
+    Building over it would mix the new build's segments, manifest rows
+    and convmap with the old index's (an older writer appended a second
+    copy of every posting: doubled df, wrong scores)."""
 
 
 class IndexStateError(ValueError):
@@ -109,46 +114,68 @@ def publish_file(path: str, content: str) -> None:
     os.rename(tmp, path)
 
 
+def write_table(path: str, table, **options) -> str:
+    """Write pyarrow `table` as the parquet file `path`, replacing any
+    file of that name. It is written under a unique hidden temp name in
+    the same directory and then renamed over `path`, so a reader (Spark
+    and pyarrow both skip names starting with '.') never lists a partial
+    file, and two writers of the same file leave one whole copy.
+    `options` go to `pq.write_table`. Local paths, like publish_file.
+    Returns `path`."""
+    import pyarrow.parquet as pq
+
+    head, name = os.path.split(path)
+    os.makedirs(head, exist_ok=True)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    pq.write_table(table, tmp, compression="snappy", store_schema=False,
+                   **options)
+    os.replace(tmp, path)
+    return path
+
+
 def append_table(path: str, table) -> str:
     """Add one parquet file holding pyarrow `table` to the append-only
     table directory `path` (the build manifest), under a name no other
-    append takes. It is written under a hidden temp name and renamed,
-    so a reader (Spark and pyarrow both skip names starting with '.')
-    never lists a partial file. The table is a few rows, so neither
+    append takes (`write_table`). The table is a few rows, so neither
     dictionary pages nor column statistics would pay for their bytes.
-    Local paths, like publish_file. Returns the file's path."""
-    import pyarrow.parquet as pq
+    Returns the file's path."""
+    return write_table(
+        os.path.join(path, f"part-{uuid.uuid4()}.snappy.parquet"), table,
+        use_dictionary=False, write_statistics=False)
 
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4()}.snappy.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
-    pq.write_table(table, tmp, compression="snappy", store_schema=False,
-                   use_dictionary=False, write_statistics=False)
-    final = os.path.join(path, name)
-    os.rename(tmp, final)
-    return final
+
+def publish_dirs(
+    index_dir: str, names: list[str],
+    write_fn: Callable[[dict[str, str]], None],
+) -> dict[str, str]:
+    """Commit a new version of each directory-artifact in `names`.
+
+    write_fn({name: new_path}) must create every new path fully (one
+    job may write them all); only then are the pointers flipped, in the
+    order of `names`, and old versions removed. Returns {name: new_path}."""
+    version = {n: current_version(index_dir, n) + 1 for n in names}
+    new = {n: os.path.join(index_dir, f"{n}__v{v}") for n, v in version.items()}
+    for path in new.values():
+        # a crashed previous attempt at this same version never got its
+        # pointer flip, so its partial output is dead weight — reclaim it
+        shutil.rmtree(path, ignore_errors=True)
+    write_fn(new)
+    for name, v in version.items():
+        publish_file(_ptr_path(index_dir, name), f"v{v}\n")
+    for name, path in new.items():
+        for stale in glob.glob(os.path.join(index_dir, f"{name}__v*")):
+            if os.path.abspath(stale) != os.path.abspath(path):
+                shutil.rmtree(stale, ignore_errors=True)
+        shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
+    return new
 
 
 def publish_dir(
     index_dir: str, name: str, write_fn: Callable[[str], None]
 ) -> str:
-    """Commit a new version of directory-artifact `name`.
-
-    write_fn(new_path) must create `new_path` fully; only then is the
-    pointer flipped and old versions removed. Returns the new path."""
-    v = current_version(index_dir, name) + 1
-    new = os.path.join(index_dir, f"{name}__v{v}")
-    # a crashed previous attempt at this same version never got its
-    # pointer flip, so its partial output is dead weight — reclaim it
-    shutil.rmtree(new, ignore_errors=True)
-    write_fn(new)
-    publish_file(_ptr_path(index_dir, name), f"v{v}\n")
-    for stale in glob.glob(os.path.join(index_dir, f"{name}__v*")):
-        if os.path.abspath(stale) != os.path.abspath(new):
-            shutil.rmtree(stale, ignore_errors=True)
-    legacy = os.path.join(index_dir, name)
-    shutil.rmtree(legacy, ignore_errors=True)
-    return new
+    """Commit a new version of directory-artifact `name` (publish_dirs
+    of one name): write_fn(new_path) must create `new_path` fully."""
+    return publish_dirs(index_dir, [name], lambda p: write_fn(p[name]))[name]
 
 
 def _filesystem(path: str):

@@ -52,10 +52,12 @@ def test_snapshot_restore_identity_and_incremental(spark, env, tmp_path):
     assert len(after) < len(before)
 
     r2 = backup.create_snapshot(d, repo, "snap2")
-    # incremental: only the tombstone artifact's files are new — far
-    # fewer than a full copy of the index
-    assert 0 < r2["new_blobs"] < r1["files"] // 2
-    assert r2["files"] >= r1["files"]
+    # incremental: only the tombstone artifact's files are new — not a
+    # full copy of the index
+    tomb_files = sum(len(files) for _r, _d, files in
+                     os.walk(os.path.join(d, "tombstones")))
+    assert 0 < r2["new_blobs"] <= tomb_files < r1["files"]
+    assert r2["files"] == r1["files"] + tomb_files
 
     t1 = str(tmp_path / "restore1")
     backup.restore_snapshot(repo, "snap1", t1)

@@ -1,9 +1,10 @@
 """The build's passes and what they leave behind.
 
-A fresh build is one narrow corpus agg (the id scheme and a row count),
-the SPIMI kernel stage at the session's shuffle width and the
-dictionary; the driver appends the manifest rows with pyarrow, and
-stats.json comes from them. The kernel reports its per-shard metrics
+A fresh build is one narrow corpus agg (the id scheme and a row count)
+and one job chain: the SPIMI kernel stage at the session's shuffle
+width, whose kernels write the blocks files themselves, and the
+dictionary summed from their df partials; the driver appends the
+manifest rows with pyarrow, and stats.json comes from them. The kernel reports its per-shard metrics
 through an accumulator, so the blocks table holds postings only and the
 manifest is exact. Indexes
 written by older builds, whose blocks carry one metrics row per (shard,
@@ -127,19 +128,22 @@ def test_fresh_build_and_upsert_job_counts(spark, corpus_pdf, tmp_path):
     corpus = spark.createDataFrame(corpus_pdf)
     _stats, jobs = _jobs(spark, lambda: ib.build_index(
         spark, corpus, d, n_shards=N_SHARDS, block_size=16))
-    # corpus agg (2), kernel stage + blocks write (2), dictionary (2);
-    # the manifest is appended on the driver
-    assert jobs <= 6
+    # corpus agg (2), then one chain (3): the exchange to the kernel, the
+    # kernel stage (it writes the blocks) and its df partials' sum, the
+    # dictionary; the manifest is appended on the driver
+    assert jobs <= 5
     # the upsert's id check, serial ranges and tombstones, then an
-    # incremental build (its stats agg, kernel stage and dictionary
-    # merge; the manifest is appended on the driver)
+    # incremental build (its stats agg, and the kernel chain whose
+    # output merges into the old dictionary; the manifest is appended
+    # on the driver)
     batch = spark.createDataFrame(_upsert_batch())
     _stats, jobs = _jobs(spark, lambda: ib.upsert_conversations(
         spark, batch, d, snapshot_id=1))
-    assert jobs <= 17
-    # the merge kernel stage and its write (2), the dictionary (2)
+    assert jobs <= 15
+    # one chain (3): the exchange, the merge kernel stage (it writes the
+    # blocks) and the dictionary summed from its df partials
     _stats, jobs = _jobs(spark, lambda: ib.compact_index(spark, d))
-    assert jobs <= 4
+    assert jobs <= 3
 
 
 def test_kernel_stage_runs_at_shuffle_width(spark, corpus_pdf, tmp_path):
