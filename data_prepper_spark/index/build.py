@@ -6,7 +6,8 @@ shard owns a complete Lucene index; reference:
 data-prepper-plugins/opensearch/.../OpenSearchSink.java:132-141 routing,
 index/AbstractIndexManager.java):
 
-    transcripts --ONE narrow agg: id scheme + row count (no tokenizing)
+    transcripts --ONE narrow agg: the id scheme (no tokenizing), only
+                 when no stats.json records it and ids are assigned
                --assign doc_id (arithmetic, NO shuffle)
                --shard = xxhash64(conv_id) % n_shards   (conv-sticky)
                --ONE shuffle at the session's shuffle width
@@ -15,7 +16,8 @@ index/AbstractIndexManager.java):
                     tokenize (vectorized) -> (term, doc, tf) -> sort ->
                     128-posting blocks -> delta+varint gaps, varint tf/dl,
                     float64 block-max partial scores against the
-                    shard's own mean dl (n_tokens / n_docs)
+                    index's avgdl before the build, or the shard's own
+                    mean dl (n_tokens / n_docs) when it holds no token
                  -> writes the shard's blocks itself, with pyarrow, as
                     blocks/shard=S/seg=G/part-<S>-<G>.snappy.parquet,
                     sorted by term (row-group pruning on term at query
@@ -26,24 +28,22 @@ index/AbstractIndexManager.java):
                   in the same job chain (partial-agg safe); a resume adds
                   the blocks of the shards already done, an incremental
                   append the old dictionary
-    manifest/   = per-shard checkpoint: lineage + build metrics + status;
-                  the kernel reports its per-shard metrics through a
-                  Spark accumulator, so the blocks table holds postings
-                  only; the driver appends the rows with pyarrow after
-                  the dictionary
-    stats.json  = {n_docs, avgdl, avgdl_min, ...}, published LAST, from
-                  the manifest: n_docs = sum of rows, avgdl = sum of
-                  n_tokens / sum of rows, avgdl_min = the smallest
-                  shard mean, which keeps block-max bounds provable
-                  (IndexReader.ub_scale)
+    stats.json  = {n_docs, avgdl, avgdl_min, dictionary_version, ...},
+                  after the dictionary flip, from the kernel's per-shard
+                  metrics (a Spark accumulator; plus the old stats for
+                  an append): avgdl = sum of n_tokens / sum of rows,
+                  avgdl_min = the smallest avgdl any block was encoded
+                  against (block-max bounds: IndexReader.ub_scale)
+    manifest/   = per-shard checkpoint (lineage, metrics, status): the
+                  same rows, appended LAST with pyarrow
 
-A fresh build of a conv-N corpus is 5 Spark jobs: the corpus agg (2)
-and one chain (3) of the exchange, the kernel stage and the dictionary
-write. No Spark parquet writer sees a block and no job re-reads one
-(except a resume's scan of its done shards). It tokenizes the corpus
-once, in the kernel; incremental appends still count tokens in a JVM
-pass first (compute_stats), since their blocks are encoded against the
-merged avgdl.
+Fresh, resumed and incremental builds publish in this one order (only
+compaction keeps its own). A fresh build of a conv-N corpus is 5 Spark
+jobs: the id agg (2), which no build with a stats.json runs, and the
+chain (3) of the exchange, the kernel stage and the dictionary write;
+an append adds the old dictionary's schema read to the chain. No Spark
+parquet writer sees a block, no job re-reads one (except a resume's
+scan of its done shards), and the kernel tokenizes the corpus once.
 
 Why this scales to 10^12 turns / 1000 executors:
 - postings for a hot term are split across ALL shards by doc — no
@@ -265,11 +265,11 @@ def _sum_partials(parts: DataFrame) -> DataFrame:
 
 
 def shard_avgdl(n_tokens: int, n_docs: int) -> float:
-    """The mean dl a fresh build encodes one shard's block-max partials
-    against. The kernel and the driver's `avgdl_min` both call this on
-    the same two integers (the manifest's `n_tokens` and `rows`), so
-    `avgdl_min` is never above a shard's encode avgdl, not even by an
-    ulp."""
+    """The mean dl a build with no index avgdl encodes one shard's
+    block-max partials against. The kernel and the driver's `avgdl_min`
+    both call this on the same two integers (the manifest's `n_tokens`
+    and `rows`), so `avgdl_min` is never above a shard's encode avgdl,
+    not even by an ulp."""
     return n_tokens / n_docs
 
 
@@ -284,8 +284,8 @@ def _spimi_kernel(
     All vectorized numpy/pandas.
 
     Block-max partials are encoded against `avgdl`, or, when it is None
-    (a fresh build, which has no corpus avgdl before its blocks), the
-    shard's own `shard_avgdl`.
+    (no corpus avgdl before the blocks: a fresh build, or an append into
+    an index with no token), the shard's own `shard_avgdl`.
 
     `seg` tags every block with the build that produced it (Lucene's
     segment concept): incremental builds append a NEW segment per
@@ -397,9 +397,9 @@ def _spimi_kernel(
 def compute_stats(
     df_docs: DataFrame, text_col: str = "text", tokenizer: str = "ascii",
 ) -> dict:
-    """Corpus (n_docs, avgdl) in one narrow pass, for an incremental
-    append, which encodes its blocks against the merged avgdl (a fresh
-    build takes both from its kernel's token counts instead). Token
+    """Corpus (n_docs, avgdl) in one narrow JVM pass: the reference that
+    the kernel's token counts, from which every build takes both, are
+    tested against (and a probe of perfbench's). Token
     COUNT via regexp_count — identical to size(filter(split(...))) for
     the shared tokenizer's pattern but without materializing a token
     array per row. A '+stop' analyzer changes dl (stopwords don't
@@ -421,17 +421,40 @@ def compute_stats(
     return {"n_docs": row["n_docs"], "avgdl": float(row["avgdl"] or 0.0)}
 
 
-def _corpus_stats(rows: list[dict]) -> dict:
-    """A fresh build's stats.json numbers from its manifest rows: n_docs
-    and avgdl over every row, and avgdl_min, the smallest `shard_avgdl`
-    any row's blocks were encoded against (the corpus avgdl when that is
+def _corpus_stats(rows: list[dict], old: dict | None = None,
+                  enc_avgdl: float | None = None) -> dict:
+    """stats.json's numbers from a build's manifest rows plus the `old`
+    stats an append extends, summed from integer token counts, and
+    avgdl_min: the smallest avgdl any block was encoded against
+    (`enc_avgdl`, else each row's `shard_avgdl`; the corpus avgdl when
     smaller), so `avgdl / avgdl_min` bounds every block's staleness."""
     n_docs = sum(r["rows"] for r in rows)
     n_tokens = sum(r["n_tokens"] for r in rows)
+    encoded = ([enc_avgdl] if enc_avgdl is not None else
+               [shard_avgdl(r["n_tokens"], r["rows"])
+                for r in rows if r["n_tokens"]])
+    if old is not None:
+        n_docs += old["n_docs"]
+        n_tokens += round(old["avgdl"] * old["n_docs"])
+        if old["avgdl"]:
+            encoded.append(old.get("avgdl_min", old["avgdl"]))
     avgdl = n_tokens / n_docs if n_docs else 0.0
-    return {"n_docs": n_docs, "avgdl": avgdl, "avgdl_min": min(
-        [avgdl] + [shard_avgdl(r["n_tokens"], r["rows"])
-                   for r in rows if r["n_tokens"]])}
+    return {"n_docs": n_docs, "avgdl": avgdl,
+            "avgdl_min": min([avgdl] + encoded)}
+
+
+def check_dictionary_version(index_dir: str, stats: dict) -> None:
+    """Raise IndexStateError when the dictionary pointer is not at the
+    version stats.json records: a build that failed after its flip left
+    a dictionary that stats.json does not describe (an append's counts
+    its segment, so another append would count it twice). An index that
+    records no version passes."""
+    version = layout.current_version(index_dir, "dictionary")
+    if stats.get("dictionary_version", version) != version:
+        raise layout.IndexStateError(
+            f"dictionary at v{version} but stats.json records "
+            f"v{stats['dictionary_version']}: an earlier build failed "
+            "after publishing its dictionary; rebuild the index")
 
 
 def _assign_doc_ids_convmap(
@@ -542,13 +565,13 @@ def build_index(
     A fresh build (neither resume nor incremental) raises
     layout.IndexExistsError when index_dir already holds an index.
 
-    A fresh or resumed build publishes stats.json LAST, after its
-    blocks and dictionary (one job chain) and its manifest rows, with
-    the numbers of every
-    shard done so far (`_corpus_stats`): a build that fails before it
-    leaves no stats.json, so a retry sees no index instead of an index
-    with stats and no blocks. An incremental build publishes its merged
-    stats first, before its segment."""
+    Every build publishes in one order: its segment files and a new
+    dictionary version (one job chain), the dictionary pointer flip,
+    stats.json (`_corpus_stats`), then the manifest rows. A build that
+    fails before stats.json can be retried: with the same snapshot_id
+    for an append, which rewrites its segment. After a failure between
+    the flip and stats.json an append raises IndexStateError
+    (`check_dictionary_version`) instead of counting the segment twice."""
     from data_prepper_spark.index.reader import load_stats
 
     if not (resume or incremental):
@@ -570,6 +593,7 @@ def build_index(
                 f"incremental snapshot_id {snapshot_id} must exceed the index's "
                 f"current {old.get('snapshot_id')} (compaction consumes an id too)"
             )
+        check_dictionary_version(index_dir, old)
     # external-id corpora without a conv_id shard by doc_id-string; the
     # choice is RECORDED in stats.json (shard_key) so query-side shard
     # derivation (engine.sharded_docs) can mirror it instead of guessing
@@ -587,24 +611,16 @@ def build_index(
         done_rows = layout.read_table(
             manifest_path, MANIFEST_SCHEMA.names, [("status", "==", "done")],
         ).to_pylist()
-    # one narrow pass before the kernel, only when no stats.json holds
-    # its answers: the id scheme (arithmetic conv-N packing when it
-    # applies, a persisted convmap for arbitrary — UUID — schemes) and
-    # the row count, for the empty corpus. It tokenizes nothing: the
-    # kernel counts the tokens. Resume and incremental builds reuse the
-    # persisted id scheme, since mixing schemes would fork the doc_id
-    # space.
-    n_rows = None
-    if old is None:
-        row = transcripts.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            *(arith_scheme_aggs() if assign_ids else [])).first()
-        n_rows = row["n_rows"]
     if assign_ids:
+        # arithmetic conv-N packing when it applies, else a persisted
+        # convmap (UUIDs): decided by one narrow pass, no tokenizing, only
+        # without a stats.json, whose scheme every later build reuses
+        # (mixing schemes would fork the doc_id space)
         if old is not None:
             id_scheme = old.get("id_scheme", "arith")
         else:
-            id_scheme = "arith" if arith_scheme_ok(row) else "convmap"
+            id_scheme = ("arith" if arith_scheme_ok(
+                transcripts.agg(*arith_scheme_aggs()).first()) else "convmap")
         docs_assigned = (
             assign_doc_ids(transcripts) if id_scheme == "arith"
             else _assign_doc_ids_convmap(spark, transcripts, index_dir)
@@ -612,39 +628,21 @@ def build_index(
     else:
         id_scheme = "external"
         docs_assigned = transcripts
-    if resume and old is not None:
-        stats = dict(old)
-        tokenizer = stats.get("tokenizer", "ascii")
-    elif incremental:
+    enc_avgdl = None
+    if incremental:
         # CDC append (snapshots-between semantics of the reference's
-        # iceberg source): merge corpus stats with the existing index.
-        # New blocks are encoded with the MERGED avgdl; `avgdl_min`
-        # tracks the smallest avgdl any persisted block was built with,
-        # so the query engine can scale block-max bounds by
-        # avgdl_now / avgdl_min — a provable upper bound on how much any
-        # stale block's true max partial can exceed its stored one
-        # (partial is monotone in avgdl with ratio <= avgdl2/avgdl1).
-        # an index has ONE analyzer for its whole life (same contract as
-        # an OpenSearch index mapping): incremental appends reuse it
-        tokenizer = old.get("tokenizer", "ascii")
-        inc = compute_stats(docs_assigned, tokenizer=tokenizer)
-        n_total = old["n_docs"] + inc["n_docs"]
-        avgdl = (
-            old["avgdl"] * old["n_docs"] + inc["avgdl"] * inc["n_docs"]
-        ) / max(n_total, 1)
-        stats = dict(
-            old,
-            n_docs=n_total,
-            avgdl=avgdl,
-            avgdl_min=min(old.get("avgdl_min", old["avgdl"]), avgdl),
-            snapshot_id=snapshot_id,
-            # phrase queries need positions in EVERY segment
-            positions=bool(old.get("positions", False)) and store_positions,
-        )
-        layout.publish_file(stats_path, json.dumps(stats))
+        # iceberg source): block-max partials are encoded against the
+        # index's avgdl before the append (the shard's own mean when it
+        # holds no token), which is at least avgdl_min, so the engine's
+        # scale avgdl_now / avgdl_min still bounds every stale block
+        # (partial is monotone in avgdl with ratio <= avgdl2/avgdl1)
+        enc_avgdl = old["avgdl"] or None
+        # phrase queries need positions in EVERY segment
+        stats = dict(old, snapshot_id=snapshot_id, positions=bool(
+            old.get("positions", False)) and store_positions)
+    elif old is not None:
+        stats = dict(old)
     else:
-        # n_docs, avgdl and avgdl_min come from the manifest rows once
-        # the blocks are written
         stats = dict(
             n_docs=0, avgdl=0.0, n_shards=n_shards, block_size=block_size,
             k1=K1, b=B, snapshot_id=snapshot_id, avgdl_min=0.0,
@@ -652,16 +650,9 @@ def build_index(
             tokenizer=tokenizer,
             shard_key=("doc_id" if ext_shard_from_doc else "conv_id"),
         )
-    if n_rows == 0:
-        # empty corpus: persist an empty (but schema-complete) dictionary
-        # so the query engine opens cleanly and returns zero hits
-        empty = spark.createDataFrame([], "term string, df long")
-        layout.publish_dir(
-            index_dir, "dictionary",
-            lambda p: empty.write.mode("overwrite").parquet(p),
-        )
-        layout.publish_file(stats_path, json.dumps(stats))
-        return stats
+    # an index has ONE analyzer for its whole life (same contract as an
+    # OpenSearch index mapping): resumes and appends reuse it
+    tokenizer = stats.get("tokenizer", "ascii")
 
     done = {int(r["shard"]) for r in done_rows}
     target = [s for s in (shards_subset or range(n_shards)) if s not in done]
@@ -672,25 +663,25 @@ def build_index(
     # for the target shards, plus the blocks of the shards a resume
     # finds done (a partition-pruned scan; none on a fresh build), or
     # the old dictionary of an incremental append
+    metrics = spark.sparkContext.accumulator({}, ShardMetrics())
     parts: list[DataFrame] = []
     if target:
-        # a resume rewrites its target shards whole: an earlier
-        # attempt's files of this segment (of any name) go first
+        # a resume or a retried append rewrites its target shards
+        # whole: an earlier attempt's files of this segment go first
         for shard in target:
             shutil.rmtree(segment_dir(blocks_dir, shard, snapshot_id),
                           ignore_errors=True)
         docs = docs_assigned.withColumn(
             "shard", F.pmod(F.xxhash64("conv_id"), F.lit(n_shards)).cast("int")
         ).filter(F.col("shard").isin(target))
-        metrics = spark.sparkContext.accumulator({}, ShardMetrics())
         parts.append(
             spread_by_shard(docs.select("shard", "doc_id", "conv_id", "text"))
             .groupBy("shard")
             .applyInPandas(
                 _spimi_kernel(
-                    stats["avgdl"] if incremental else None, block_size,
-                    metrics, blocks_dir, seg=snapshot_id,
-                    store_positions=store_positions, tokenizer=tokenizer,
+                    enc_avgdl, block_size, metrics, blocks_dir,
+                    seg=snapshot_id, store_positions=store_positions,
+                    tokenizer=tokenizer,
                 ),
                 schema=DF_PARTIAL_SCHEMA,
             )
@@ -709,28 +700,30 @@ def build_index(
     # dictionary at every instant — on object stores too
     layout.publish_dir(index_dir, "dictionary",
                        lambda p: dic.write.parquet(p))
-    new_rows: list[dict] = []
-    if target:
-        # a corpus whose texts hold no token wrote no segment file
+    # checkpoint manifest rows: lineage + metrics per shard (FIXTURES.md
+    # §4), as the kernel tasks reported them to the accumulator
+    new_rows = [
+        {"shard": shard, "status": "done", "rows": m["n_docs"],
+         "n_postings": m["n_postings"], "n_tokens": m["n_tokens"],
+         "wall_ms": m["wall_ms"],
+         "input_desc": f"conv_id in [{m['min_conv']}, {m['max_conv']}] "
+                       "(hash-sharded)",
+         "snapshot_id": snapshot_id}
+        for shard, m in sorted(ShardMetrics.drain(metrics).items())
+    ]
+    if new_rows:
+        # a shard whose texts hold no token wrote no segment file; an
+        # empty corpus leaves no blocks dir (IndexReader.empty)
         os.makedirs(blocks_dir, exist_ok=True)
-        # checkpoint manifest: lineage + metrics per shard (FIXTURES.md
-        # §4), as the kernel tasks reported them to the accumulator,
-        # appended on the driver: a few rows need no Spark job
-        new_rows = [
-            {"shard": shard, "status": "done", "rows": m["n_docs"],
-             "n_postings": m["n_postings"], "n_tokens": m["n_tokens"],
-             "wall_ms": m["wall_ms"],
-             "input_desc": f"conv_id in [{m['min_conv']}, {m['max_conv']}] "
-                           "(hash-sharded)",
-             "snapshot_id": snapshot_id}
-            for shard, m in sorted(ShardMetrics.drain(metrics).items())
-        ]
-        if new_rows:
-            layout.append_table(
-                manifest_path, pa.Table.from_pylist(new_rows, MANIFEST_SCHEMA))
-    if not incremental and (new_rows or old is None):
-        stats.update(_corpus_stats(done_rows + new_rows))
-        layout.publish_file(stats_path, json.dumps(stats))
+    stats.update(
+        _corpus_stats(done_rows + new_rows, old if incremental else None,
+                      enc_avgdl),
+        dictionary_version=layout.current_version(index_dir, "dictionary"))
+    layout.publish_file(stats_path, json.dumps(stats))
+    # last: a resume rebuilds the shards the manifest does not name
+    if new_rows:
+        layout.append_table(
+            manifest_path, pa.Table.from_pylist(new_rows, MANIFEST_SCHEMA))
     return stats
 
 
@@ -759,6 +752,7 @@ def upsert_conversations(
         raise layout.IndexStateError(
             f"upsert snapshot_id {snapshot_id} must be newer than current {cur}"
         )
+    check_dictionary_version(index_dir, stats)
     scheme = stats.get("id_scheme", "arith")
     if scheme == "arith":
         bad = transcripts.agg(
@@ -956,7 +950,7 @@ def compact_index(
     the reduced corpus. One caveat: a tombstoned doc that had ZERO
     tokens never appears in any posting, so its n_docs slot cannot be
     observed or reclaimed here (Lucene has the same blind spot only for
-    fully-empty docs; compute_stats on a rebuild would count them).
+    fully-empty docs; a rebuild would count them).
 
     Commit protocol (index/layout.py publish_dirs): the one job writes
     the compacted blocks and the dictionary into new versioned dirs;
@@ -1015,6 +1009,7 @@ def compact_index(
     else:
         stats["avgdl_min"] = stats["avgdl"]
     stats["snapshot_id"] = merged_seg
+    stats["dictionary_version"] = layout.current_version(index_dir, "dictionary")
     layout.publish_file(
         os.path.join(index_dir, "stats.json"), json.dumps(stats)
     )

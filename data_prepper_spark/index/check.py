@@ -13,8 +13,8 @@ Verifies, in ONE distributed scan of the blocks table:
     (tombstones are NOT subtracted — like Lucene, deleted docs stay in
     the postings until a merge; the report carries the tombstone count
     separately);
-  - sum of per-shard distinct docs equals stats.json's n_docs (shards
-    are doc-disjoint).
+  - sum of distinct docs per (shard, segment) equals stats.json's
+    n_docs (n_docs counts each upserted generation until compaction).
 
 Returns a JSON-able report; `ok` is True iff no violations.
 """
@@ -35,7 +35,7 @@ def _check_kernel():
         shard = int(key[0])
         violations = []
         term_counts: dict[str, int] = {}
-        all_docs = []
+        seg_docs: dict[int, list] = {}
         for (term, seg), tg in pdf.groupby(["term", "seg"], sort=True):
             tg = tg.sort_values("block_ord")
             ords = tg["block_ord"].to_numpy()
@@ -75,11 +75,10 @@ def _check_kernel():
                     violations.append((term, int(seg), "tf <= 0"))
                 prev_last = int(docs[-1])
                 n += len(docs)
-                all_docs.append(docs)
+                seg_docs.setdefault(int(seg), []).append(docs)
             term_counts[term] = term_counts.get(term, 0) + n
-        n_distinct = (
-            int(len(np.unique(np.concatenate(all_docs)))) if all_docs else 0
-        )
+        n_distinct = sum(int(len(np.unique(np.concatenate(d))))
+                         for d in seg_docs.values())
         rows = [(shard, t, int(c), -1, "") for t, c in term_counts.items()]
         rows.append((shard, "\x00distinct_docs", n_distinct, -1, ""))
         rows += [(shard, t, -1, int(s), v) for t, s, v in violations]

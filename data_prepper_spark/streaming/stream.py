@@ -198,10 +198,11 @@ def streaming_index_sink(
     foreachBatch's native at-least-once window) sees its own segment
     already committed and returns without writing: the same
     idempotent-batchId pattern as idempotent_file_sink, with
-    stats.json as the commit marker. The first batch's fresh build
-    publishes stats.json after its blocks, so a batch that failed
-    before then is built again on replay; an incremental append still
-    publishes its stats before its segment. Restarting
+    stats.json as the commit marker. Every batch's build publishes
+    stats.json after its segment and dictionary, so a batch that failed
+    before then is built again on replay (a batch that failed between
+    its dictionary flip and stats.json is refused on replay with
+    IndexStateError rather than counted twice). Restarting
     with a FRESH checkpoint against an existing index raises (epochs
     would restart at 0 below the committed snapshot) instead of
     silently interleaving stale segments.

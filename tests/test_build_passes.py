@@ -1,20 +1,22 @@
 """The build's passes and what they leave behind.
 
-A fresh build is one narrow corpus agg (the id scheme and a row count)
-and one job chain: the SPIMI kernel stage at the session's shuffle
-width, whose kernels write the blocks files themselves, and the
-dictionary summed from their df partials; the driver appends the
-manifest rows with pyarrow, and stats.json comes from them. The kernel reports its per-shard metrics
+A fresh build of a conv-N corpus is one narrow corpus agg (the id
+scheme) and one job chain: the SPIMI kernel stage at the session's
+shuffle width, whose kernels write the blocks files themselves, and the
+dictionary summed from their df partials. An incremental append and an
+external-id fresh build run the chain without the agg. stats.json and
+the manifest rows come from the per-shard metrics the kernel reports
 through an accumulator, so the blocks table holds postings only and the
-manifest is exact. Indexes
-written by older builds, whose blocks carry one metrics row per (shard,
-seg), stay readable, checkable and compactable.
+manifest is exact. Indexes written by older builds, whose blocks carry
+one metrics row per (shard, seg), stay readable, checkable and
+compactable.
 
-Pinned here: the Spark jobs of a fresh build, of an upsert and of a
-delete by conv_id (whose id frame is a LocalRelation), the
-kernel stage's task count, postings-only blocks and an exact manifest
-after a fresh build, a crash-and-resume, an upsert and a compaction,
-and the old layout under check_index, compact_index and score_topk."""
+Pinned here: the Spark jobs of a fresh build, of an incremental append,
+of an external-id fresh build, of an upsert and of a delete by conv_id
+(whose id frame is a LocalRelation), the kernel stage's task count,
+postings-only blocks and an exact manifest after a fresh build, a
+crash-and-resume, an upsert and a compaction, and the old layout under
+check_index, compact_index and score_topk."""
 
 from __future__ import annotations
 
@@ -128,21 +130,44 @@ def test_fresh_build_and_upsert_job_counts(spark, corpus_pdf, tmp_path):
     corpus = spark.createDataFrame(corpus_pdf)
     _stats, jobs = _jobs(spark, lambda: ib.build_index(
         spark, corpus, d, n_shards=N_SHARDS, block_size=16))
-    # corpus agg (2), then one chain (3): the exchange to the kernel, the
-    # kernel stage (it writes the blocks) and its df partials' sum, the
-    # dictionary; the manifest is appended on the driver
+    # id-scheme agg (2), then one chain (3): the exchange to the kernel,
+    # the kernel stage (it writes the blocks) and its df partials' sum,
+    # the dictionary; stats.json and the manifest are written on the
+    # driver
     assert jobs <= 5
     # the upsert's id check, serial ranges and tombstones, then an
-    # incremental build (its stats agg, and the kernel chain whose
-    # output merges into the old dictionary; the manifest is appended
-    # on the driver)
+    # incremental build (the kernel chain, whose output merges into the
+    # old dictionary; no stats pass: stats.json comes from the kernel's
+    # token counts)
     batch = spark.createDataFrame(_upsert_batch())
     _stats, jobs = _jobs(spark, lambda: ib.upsert_conversations(
         spark, batch, d, snapshot_id=1))
-    assert jobs <= 15
+    assert jobs <= 13
     # one chain (3): the exchange, the merge kernel stage (it writes the
     # blocks) and the dictionary summed from its df partials
     _stats, jobs = _jobs(spark, lambda: ib.compact_index(spark, d))
+    assert jobs <= 3
+
+
+def test_append_and_external_id_job_counts(spark, corpus_pdf, tmp_path):
+    """Neither an incremental append nor a fresh build of external ids
+    runs a pass before the kernel chain: the append takes n_docs and
+    avgdl from the kernel's token counts and its id scheme from
+    stats.json, and external ids need no id scheme."""
+    d = str(tmp_path / "idx")
+    ib.build_index(spark, spark.createDataFrame(corpus_pdf), d,
+                   n_shards=N_SHARDS, block_size=16)
+    more = spark.createDataFrame(generate_pandas(N_CONVS, N_CONVS + 30))
+    _stats, jobs = _jobs(spark, lambda: ib.build_index(
+        spark, more, d, n_shards=N_SHARDS, block_size=16, incremental=True,
+        snapshot_id=1))
+    # the chain (3), and the schema read of the old dictionary
+    assert jobs <= 4
+    ext = spark.createDataFrame(corpus_pdf.assign(
+        doc_id=range(len(corpus_pdf)))[["doc_id", "text"]])
+    _stats, jobs = _jobs(spark, lambda: ib.build_index(
+        spark, ext, str(tmp_path / "ext"), n_shards=N_SHARDS, block_size=16,
+        assign_ids=False))
     assert jobs <= 3
 
 

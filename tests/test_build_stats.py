@@ -1,13 +1,16 @@
-"""What a fresh build says about its corpus, and the bounds it stores.
+"""What a build says about its corpus, and the bounds it stores.
 
-A fresh build takes n_docs and avgdl from its kernel's token counts
-(the manifest's `rows` and `n_tokens`); an incremental append still
-counts tokens with `compute_stats` in the JVM. Both must mean the same
-dl, or a fresh and an appended segment would score the same text
-differently. Each shard's block-max partials are encoded against that
-shard's own mean dl, and `IndexReader.ub_scale` must keep every stored
-bound at or above the partial a query computes at the index's avgdl:
-after a fresh build, a crash-and-resume and an incremental append."""
+Every build takes n_docs and avgdl from its kernel's token counts (the
+manifest's `rows` and `n_tokens`), an incremental append added to the
+index's old stats. They must mean the dl `compute_stats`, the JVM
+reference, counts, and an append must say what a fresh build of the
+same rows says. A fresh build encodes each shard's block-max partials
+against that shard's own mean dl, an append against the index's avgdl
+before it (its shards' own means when the index holds no token), and
+`IndexReader.ub_scale` must keep every stored bound at or above the
+partial a query computes at the index's avgdl: after a fresh build, a
+crash-and-resume, and an append that raises avgdl, lowers it, or lands
+in an index built from an empty corpus."""
 
 from __future__ import annotations
 
@@ -116,3 +119,39 @@ def test_block_max_bounds_hold_fresh_resume_incremental(spark, tmp_path):
     assert np.isclose(after["avgdl"] / after["avgdl_min"],
                       after["avgdl"] / min(shard_means))
     assert _assert_bounds_hold(spark, fresh)
+
+
+@pytest.mark.parametrize("base_convs", [120, 0])
+def test_append_stats_match_a_fresh_build(spark, tmp_path, base_convs):
+    """An append of shorter turns lowers avgdl; an append into an index
+    built from an empty corpus encodes against its shards' own means.
+    Either way the bounds hold and the merged n_docs and avgdl are a
+    fresh build's of the same rows."""
+    base = generate_pandas(0, 120)
+    inc = generate_pandas(120, 160, seed=3)
+    if base_convs:
+        inc["text"] = inc["text"].str.split().str[:3].str.join(" ")
+    base_df = spark.createDataFrame(base).limit(base_convs and len(base))
+    d = str(tmp_path / "appended")
+    before = ib.build_index(spark, base_df, d, n_shards=N_SHARDS,
+                            block_size=16)
+    after = ib.build_index(spark, spark.createDataFrame(inc), d,
+                           n_shards=N_SHARDS, incremental=True, snapshot_id=1)
+    assert _assert_bounds_hold(spark, d)
+    if base_convs:
+        assert after["avgdl"] < before["avgdl"]
+        assert after["avgdl_min"] == after["avgdl"]
+    else:
+        assert before["n_docs"] == 0
+        shard_means = [ib.shard_avgdl(int(t), int(r)) for t, r in zip(
+            *pq.read_table(f"{d}/manifest", columns=["n_tokens", "rows"])
+            .to_pydict().values())]
+        assert after["avgdl_min"] == min(shard_means) < after["avgdl"]
+
+    rows = pd.concat([base.head(base_convs and len(base)), inc],
+                     ignore_index=True)
+    fresh = ib.build_index(spark, spark.createDataFrame(rows),
+                           str(tmp_path / "fresh"), n_shards=N_SHARDS,
+                           block_size=16)
+    assert (after["n_docs"], after["avgdl"]) == \
+        (fresh["n_docs"], fresh["avgdl"]) == (len(rows), fresh["avgdl"])

@@ -48,6 +48,23 @@ def test_incremental_and_tombstones_still_ok(spark, built):
     assert rep["tombstone_ranges"] == 2
 
 
+def test_upsert_generations_check_ok(spark, tmp_path):
+    """An upsert's new generation of a doc lives in a new segment, and
+    n_docs counts every generation until a compaction: distinct docs are
+    counted per (shard, segment), so a plain upsert checks ok."""
+    d = str(tmp_path / "idx")
+    base = generate_pandas(0, 120)
+    ib.build_index(spark, spark.createDataFrame(base), d, n_shards=4,
+                   block_size=32)
+    batch = pd.concat([generate_pandas(40, 60, seed=7),
+                       generate_pandas(120, 140)], ignore_index=True)
+    ib.upsert_conversations(spark, spark.createDataFrame(batch), d,
+                            snapshot_id=1)
+    rep = check_index(spark, d)
+    assert rep["ok"], rep
+    assert rep["docs_seen"] == rep["stats_n_docs"] == len(base) + len(batch)
+
+
 def test_dictionary_drift_detected(spark, built):
     """A dictionary df that disagrees with the postings is flagged."""
     from data_prepper_spark.index import layout

@@ -6,7 +6,7 @@ a hidden temp name and then renamed over the final one
 (`build.write_segment`). Its Spark output is the shard's (term, n) df
 partials, which the build sums into the dictionary.
 
-Pinned here: a resume after a build that failed once its blocks landed
+Pinned here: a resume after a build that failed in its manifest append
 rewrites each shard's segment instead of adding a second copy of it
 (and removes a stray legacy-named file), the writer is idempotent, and
 the files read back through Spark and through `IndexReader.block_table`
@@ -80,9 +80,11 @@ def _topk(spark, d, qpdf) -> pd.DataFrame:
 @pytest.mark.parametrize("stray", [False, True])
 def test_resume_after_failed_manifest_rewrites_each_segment_once(
         spark, corpus_pdf, tmp_path, monkeypatch, stray):
-    """A fresh build fails after its blocks land, before its manifest is
-    written; the resume must not add a second copy of any shard's
-    postings (it once did: 2 files per dir, every df doubled)."""
+    """A fresh build fails after its blocks land, in its manifest
+    append, which comes after stats.json: the index is committed, and
+    the manifest names no shard done. The resume must not add a second
+    copy of any shard's postings (it once did: 2 files per dir, every df
+    doubled)."""
     d = str(tmp_path / "idx")
     corpus = spark.createDataFrame(corpus_pdf)
 
@@ -95,7 +97,7 @@ def test_resume_after_failed_manifest_rewrites_each_segment_once(
             ib.build_index(spark, corpus, d, n_shards=N_SHARDS, block_size=16)
     files = _data_files(d)
     assert len(files) == N_SHARDS
-    assert not os.path.exists(os.path.join(d, "stats.json"))
+    assert IndexReader(spark, d).n_docs == len(corpus_pdf)
     if stray:
         # a file an older build named its own way, in a target shard's dir
         seg_dir = os.path.join(d, next(iter(files)))

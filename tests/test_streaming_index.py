@@ -207,3 +207,30 @@ def test_failed_first_batch_replays_into_a_full_index(spark, dirs, monkeypatch):
     assert len(orc) and len(got) == len(orc)
     assert list(got.sort_values(["query_id", "rank"]).doc_id) == \
         list(orc.sort_values(["query_id", "rank"]).doc_id)
+
+
+def test_failed_second_batch_replays_into_a_full_index(spark, dirs,
+                                                       monkeypatch):
+    """A later micro-batch is an incremental append. If it fails before
+    its stats.json, the replay of that epoch must append the batch: an
+    append that published its stats first marked the epoch committed,
+    and the replay skipped a batch the index never got."""
+    from data_prepper_spark.index.check import check_index
+
+    _src, _ckpt, idx = dirs
+    b1, b2 = generate_pandas(0, 40), generate_pandas(40, 70)
+    sink = streaming_index_sink(idx, n_shards=4)
+    sink(spark.createDataFrame(b1), 0)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected build failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(ib, "spread_by_shard", boom)
+        with pytest.raises(RuntimeError, match="injected build failure"):
+            sink(spark.createDataFrame(b2), 1)
+
+    sink(spark.createDataFrame(b2), 1)  # the replay
+    assert load_stats(idx)["n_docs"] == len(b1) + len(b2)
+    rep = check_index(spark, idx)
+    assert rep["ok"], rep
